@@ -24,73 +24,16 @@ object Explain {
     // declared queries consume through Materialized — the declared
     // plan is just a parquet scan, so the interesting shape lives here.
     val internal: Map[String, () => org.apache.spark.sql.DataFrame] = Map(
-      "kmeans_portable_chain" -> (() => graft.similarity.Ann
-        .kmeansCentroidsPortable(Tables.load(spark, sfDir, "embeddings"), 8, 5)),
-      // ONE Lloyd's round, old (r14) vs new (r15) shape, pre-checkpoint
-      // (the committed chains truncate at per-round checkpoint leaves,
-      // so the round structure is invisible in their explain output;
-      // these reconstruct the round plan for the Exchange-count diff).
-      "kmeans_round_r14_shape" -> (() => {
-        import org.apache.spark.sql.functions._
-        import graft.linalg.Distances
-        val pts = Tables.load(spark, sfDir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val cent = graft.similarity.Ann
-          .kmeansCentroidsPortable(pts, 8, 1, "id", "vec")
-        val assigned = pts.join(broadcast(cent))
-          .select(col("id"), struct(
-            Distances.euclidean(col("vec"), col("cvec")).as("d"),
-            col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-          .groupBy(col("id")).agg(min(col("cand")).as("m"))
-          .select(col("id"), col("m.cid").as("cid"), col("m.vec").as("vec"))
-        assigned
-          .select(col("id"), col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
-          .groupBy(col("cid"), col("pos"))
-          .agg(count(lit(1)).as("n"),
-            array_sort(collect_list(struct(col("id"), col("x")))).as("s"))
-          .withColumn("m", expr(
-            "aggregate(s, CAST(0 AS DOUBLE), (acc, e) -> acc + CAST(e.x AS DOUBLE)) / n"))
-          .groupBy(col("cid"))
-          .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("dims"))
-          .select(col("cid"), transform(col("dims"), e => e("m").cast("float")).as("cvec"))
-      }),
-      "kmeans_round_r15_shape" -> (() => {
-        import org.apache.spark.sql.functions._
-        import graft.linalg.Distances
-        val pts = Tables.load(spark, sfDir, "embeddings")
-          .select(col("vec_id").as("id"), col("embedding").as("vec"))
-        val cent = graft.similarity.Ann
-          .kmeansCentroidsPortable(pts, 8, 1, "id", "vec")
-          .agg(array_sort(collect_list(struct(col("cid"), col("cvec")))).as("cents"))
-        val assigned = pts.crossJoin(broadcast(cent))
-          .select(col("id"), col("vec"),
-            array_min(transform(col("cents"), c => struct(
-              Distances.euclidean(col("vec"), c.getField("cvec")).as("d"),
-              c.getField("cid").as("cid")))).getField("cid").as("cid"))
-        assigned
-          .agg(array_sort(collect_list(
-            struct(col("cid"), col("id"), col("vec")))).as("all"))
-          .select(col("all"),
-            array_distinct(transform(col("all"), e => e.getField("cid")))
-              .as("cids"))
-          .select(col("cids"),
-            transform(col("cids"),
-              c => filter(col("all"), e => e.getField("cid") === c))
-              .as("groups"))
-          .select(zip_with(col("cids"), col("groups"), (c, g) =>
-            struct(c.as("cid"),
-              transform(
-                sequence(lit(0), size(element_at(g, 1).getField("vec")) - 1),
-                pos => (aggregate(g, lit(0.0), (acc, e) =>
-                  acc + element_at(e.getField("vec"), pos + 1).cast("double"))
-                  / size(g)).cast("float")).as("cvec"))).as("cents"))
-      }),
+      // the trained router is a driver-local table; each Lloyd's round
+      // is one job whose shape KmeansSpec pins
+      "kmeans_portable_chain" -> (() => graft.similarity.Kmeans.centroids(
+        Tables.load(spark, sfDir, "embeddings"), 8, 5, portable = true)),
       "cluster_seeds" -> (() => {
         val emb = Tables.load(spark, sfDir, "embeddings")
         graft.knn.GraphSearch.clusterSeeds(
           emb.select(org.apache.spark.sql.functions.col("vec_id"),
             org.apache.spark.sql.functions.col("embedding")),
-          graft.similarity.Ann.kmeansCentroidsPortable(emb, 8, 5), 4)
+          graft.similarity.Kmeans.centroids(emb, 8, 5, portable = true), 4)
       }))
     names.foreach { n =>
       println(s"\n======== $n ========")

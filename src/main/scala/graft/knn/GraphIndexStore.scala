@@ -174,8 +174,8 @@ object GraphIndexStore {
         (pair._1, pair._2)
       case None =>
         val c = timed("router_train") {
-          graft.similarity.Ann.kmeansCentroidsPortable(
-            trainSet, nlist, kmeansIters)
+          graft.similarity.Kmeans.centroids(
+            trainSet, nlist, kmeansIters, portable = true)
         }
         val cs = timed("cluster_seeds") {
           GraphSearch.clusterSeeds(pts, c, seedsPerList).localCheckpoint()
@@ -183,27 +183,22 @@ object GraphIndexStore {
         (c, cs)
     }
     val spark = emb.sparkSession
-    // Component writes are INDEPENDENT jobs over a fresh dir — run them
-    // concurrently (guide §2.6, round-15: the serial chain paid one
-    // commit wait per component; overlapping them hides the small
-    // components entirely behind the edges write, the dominant one).
-    // meta/ stays strictly AFTER the group: it is the index's commit
-    // point — a tear anywhere above leaves no meta, never a valid index.
-    // (the q224 navigability shortcuts persist with the rest of the
-    // serving artifacts — round-12 verdict #4 named all three: router,
+    // Component writes run one after another; meta/ stays strictly
+    // AFTER them: it is the index's commit point — a tear anywhere above
+    // leaves no meta, never a valid index. (the q224 navigability
+    // shortcuts persist with the rest of the serving artifacts — round-12 verdict #4 named all three: router,
     // seeds, long links; deterministic from the node set, stored so
     // serving never recomputes the pool ranking)
     timed("component_writes") {
-      graft.Concurrent.awaitAll(Seq(
-        () => pts.write.mode("overwrite").parquet(s"$dir/nodes"),
-        () => edges.select(col("id"), col("nbr"), col("dist"))
-          .write.mode("overwrite").parquet(s"$dir/edges"),
-        () => cent.write.mode("overwrite").parquet(s"$dir/centroids"),
-        () => cseeds.write.mode("overwrite").parquet(s"$dir/cseeds")) ++
-        longLinks.map { case (poolSize, perNode) =>
-          () => GraphSearch.longLinks(pts, poolSize, perNode)
-            .write.mode("overwrite").parquet(s"$dir/links")
-        })
+      pts.write.mode("overwrite").parquet(s"$dir/nodes")
+      edges.select(col("id"), col("nbr"), col("dist"))
+        .write.mode("overwrite").parquet(s"$dir/edges")
+      cent.write.mode("overwrite").parquet(s"$dir/centroids")
+      cseeds.write.mode("overwrite").parquet(s"$dir/cseeds")
+      longLinks.foreach { case (poolSize, perNode) =>
+        GraphSearch.longLinks(pts, poolSize, perNode)
+          .write.mode("overwrite").parquet(s"$dir/links")
+      }
     }
     import spark.implicits._
     Seq((n, dim, k, nlist, kmeansIters, fp, mod, trainN, seedsPerList))
@@ -383,16 +378,11 @@ object GraphIndexStore {
     val pts = delta.select(col("vec_id"), col("embedding")).localCheckpoint()
     val nodes = spark.read.parquet(s"$dir/nodes")
     // the three validation reads (meta row, dup-check semi-join, delta
-    // fingerprint) are independent jobs — overlap them (guide §2.6);
-    // all must pass before anything is written
-    var m: org.apache.spark.sql.Row = null
-    var dupN = -1L
-    var fp: (Long, Long, Int) = null
-    graft.Concurrent.awaitAll(Seq(
-      () => m = spark.read.parquet(s"$dir/meta").collect()(0),
-      () => dupN = nodes.select(col("vec_id"))
-        .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count(),
-      () => fp = fingerprintOf(pts)))
+    // fingerprint) all pass before anything is written
+    val m = spark.read.parquet(s"$dir/meta").collect()(0)
+    val dupN = nodes.select(col("vec_id"))
+      .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
+    val fp = fingerprintOf(pts)
     require(k == m.getAs[Int]("k"),
       s"upsert k=$k does not match the index's build k=${m.getAs[Int]("k")} " +
         "(a smaller k would silently truncate every stored adjacency list)")
@@ -418,12 +408,10 @@ object GraphIndexStore {
     val newEdges = patched.unionByName(
       deltaRows.select(col("id"), col("nbr"), col("dist"))).localCheckpoint()
     // the edge set is materialized above BEFORE any file mutation (a
-    // failure cannot leave a half-written index); the two surviving
-    // writes read only checkpointed blocks, so they overlap (§2.6) —
-    // meta below stays the commit point
-    graft.Concurrent.awaitAll(Seq(
-      () => pts.write.mode("append").parquet(s"$dir/nodes"),
-      () => newEdges.write.mode("overwrite").parquet(s"$dir/edges")))
+    // failure cannot leave a half-written index); meta below stays the
+    // commit point
+    pts.write.mode("append").parquet(s"$dir/nodes")
+    newEdges.write.mode("overwrite").parquet(s"$dir/edges")
     import spark.implicits._
     Seq((m.getAs[Long]("n_vectors") + dn, m.getAs[Int]("dim"),
         m.getAs[Int]("k"), m.getAs[Int]("nlist"),
@@ -473,15 +461,11 @@ object GraphIndexStore {
       beam: Int = 8, hops: Int = 4, nprobe: Int = Nprobe): Unit = {
     val pts = delta.select(col("vec_id"), col("embedding")).localCheckpoint()
     val nodes = spark.read.parquet(s"$dir/nodes")
-    // overlapped validation jobs (meta row included), as in [[upsert]]
-    var m: org.apache.spark.sql.Row = null
-    var dupN = -1L
-    var fp: (Long, Long, Int) = null
-    graft.Concurrent.awaitAll(Seq(
-      () => m = spark.read.parquet(s"$dir/meta").collect()(0),
-      () => dupN = nodes.select(col("vec_id"))
-        .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count(),
-      () => fp = fingerprintOf(pts)))
+    // validation jobs (meta row included), as in [[upsert]]
+    val m = spark.read.parquet(s"$dir/meta").collect()(0)
+    val dupN = nodes.select(col("vec_id"))
+      .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
+    val fp = fingerprintOf(pts)
     val k = m.getAs[Int]("k")
     require(dupN == 0L,
       s"ingest requires disjoint vec_ids: $dupN already indexed")
@@ -494,11 +478,9 @@ object GraphIndexStore {
     val edges = spark.read.parquet(s"$dir/edges")
     val patched = patchGraphApprox(nodes, edges, pts, k, beam, hops,
       router = Some((cent, cseeds)), nprobe = nprobe).localCheckpoint()
-    // materialize-before-mutate as in [[upsert]]; the two writes then
-    // consume only checkpointed blocks and overlap (§2.6)
-    graft.Concurrent.awaitAll(Seq(
-      () => pts.write.mode("append").parquet(s"$dir/nodes"),
-      () => patched.write.mode("overwrite").parquet(s"$dir/edges")))
+    // materialize-before-mutate as in [[upsert]]
+    pts.write.mode("append").parquet(s"$dir/nodes")
+    patched.write.mode("overwrite").parquet(s"$dir/edges")
     import spark.implicits._
     Seq((m.getAs[Long]("n_vectors") + dn, m.getAs[Int]("dim"),
         m.getAs[Int]("k"), m.getAs[Int]("nlist"),

@@ -51,8 +51,8 @@ object GraphPatchDecayScale {
 
     // router trained ONCE on the base (the add-after-train contract the
     // decay curve stresses: entries, like lists, go stale under growth)
-    val cent = graft.similarity.Ann.kmeansCentroids(base, 1024, iters = 3)
-      .localCheckpoint()
+    val cent = graft.similarity.Kmeans.centroids(base, 1024, iters = 3,
+      portable = false)
     val cseeds = GraphSearch.clusterSeeds(base, cent, seedsPerList = 8)
       .localCheckpoint()
 

@@ -199,19 +199,17 @@ object GraphSearch {
     * plus ≤ nprobe·seedsPerList scored entries — and the per-hop
     * anti-joins run against a state that starts 100× smaller.
     *
-    * `portableQuantizer` = true uses the ordered-fold Lloyd's
-    * ([[Ann.kmeansCentroidsPortable]]) so the whole pipeline —
-    * training, routing, entries, every hop — replays as the q223
-    * oracle; false uses the order-free [[Ann.kmeansCentroids]], the
-    * shape you want at scale (the q175/q36b convention). */
+    * `portableQuantizer` = true trains the portable
+    * [[graft.similarity.Kmeans]] (md5 init, ordered-fold means) so the
+    * whole pipeline — training, routing, entries, every hop — replays
+    * as the q223 oracle; false trains its order-free form (xxhash init,
+    * avg), the shape you want at scale (the q175/q36b convention). */
   def routedBeamSearch(vectors: DataFrame, edges: DataFrame,
       queries: DataFrame, k: Int = K, beam: Int = Beam, hops: Int = Hops,
       nlist: Int = 8, nprobe: Int = 2, seedsPerList: Int = 4,
       kmeansIters: Int = 5, portableQuantizer: Boolean = true): DataFrame = {
-    val cent =
-      if (portableQuantizer)
-        graft.similarity.Ann.kmeansCentroidsPortable(vectors, nlist, kmeansIters)
-      else graft.similarity.Ann.kmeansCentroids(vectors, nlist, kmeansIters)
+    val cent = graft.similarity.Kmeans
+      .centroids(vectors, nlist, kmeansIters, portableQuantizer)
     routedWithCentroids(vectors, edges, queries, cent,
       clusterSeeds(vectors, cent, seedsPerList), k, beam, hops, nprobe)
   }
@@ -585,8 +583,8 @@ object GraphSearchScale {
         if (sampleMod > 1)
           vecs.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
         else vecs
-      val cent = graft.similarity.Ann.kmeansCentroids(trainSet, nlist,
-        iters = routerIters).localCheckpoint()
+      val cent = graft.similarity.Kmeans.centroids(trainSet, nlist,
+        routerIters, portable = false)
       val trainSec = (System.nanoTime() - t2) / 1e9
       val cseeds = GraphSearch.clusterSeeds(vecs, cent, seedsPerList)
         .localCheckpoint()

@@ -46,8 +46,8 @@ object GraphUpsertScale {
     // GraphIndexStore.write next to the adjacency) — trained once,
     // measured apart, reused by every serving batch AND every patch
     val tR = System.nanoTime()
-    val cent = graft.similarity.Ann.kmeansCentroids(base, 1024, iters = 3)
-      .localCheckpoint()
+    val cent = graft.similarity.Kmeans.centroids(base, 1024, iters = 3,
+      portable = false)
     val cseeds = GraphSearch.clusterSeeds(base, cent, seedsPerList = 8)
       .localCheckpoint()
     val routerSec = (System.nanoTime() - tR) / 1e9

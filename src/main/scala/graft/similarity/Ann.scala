@@ -72,122 +72,6 @@ object Ann {
     rerank(cands, k)
   }
 
-  /** Distributed Lloyd's k-means — the IVF coarse quantizer. Seeded
-    * deterministic init (bottom-k by hash, the same order-independent
-    * sampler as MRDF's centroid pick); each round is one broadcast
-    * argmin join + one per-(cluster, dim) mean. Centroid tables are k
-    * rows — driver-free and broadcast-sized at any data scale. */
-  def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = 5, seed: Long = 42L,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val pts = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // orderBy+limit is a distributed TakeOrdered; the (unpartitioned)
-    // row_number window then only ever sees k rows
-    // LAZY localCheckpoint chain (round-14): every round's plan sees a
-    // truncated LogicalRDD leaf, but the eager variant paid one
-    // driver-synced job per round (iters+1 jobs of latency per
-    // training); the lazy chain materializes every round inside the
-    // consumer's single action. Superseded rounds' blocks (k rows
-    // each) are released by the harness sweep after the action.
-    var cent = pts
-      .withColumn("h", xxhash64(lit(seed), col("id")))
-      .orderBy(col("h"), col("id")).limit(k)
-      .withColumn("cid", row_number().over(
-        Window.orderBy(col("h"), col("id"))) - 1)
-      .select(col("cid"), col("vec").as("cvec"))
-      .localCheckpoint(eager = false)
-    (1 to iters).foreach { _ =>
-      // argmin as min(struct(d, cid, vec)): map-side partial agg → one
-      // row per point crosses the shuffle, vs N×k for a window argmin
-      val assigned = pts.join(broadcast(cent))
-        .select(col("id"), struct(
-          Distances.euclidean(col("vec"), col("cvec")).as("d"),
-          col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-        .groupBy(col("id")).agg(min(col("cand")).as("m"))
-        .select(col("m.cid").as("cid"), col("m.vec").as("vec"))
-      cent = assigned
-        .select(col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
-        .select(col("cid"), transform(col("s"), e => e("m").cast("float")).as("cvec"))
-        .localCheckpoint(eager = false)
-    }
-    cent
-  }
-
-  /** Cross-engine-exact distributed Lloyd's — [[kmeansCentroids]]'
-    * oracle-mirrorable twin (the generated-mirror doctrine applied to
-    * an ITERATIVE float algorithm): init is bottom-k by the portable
-    * md5 rank (not xxhash64, which DuckDB lacks), and each round's
-    * centroid mean is a SEQUENTIAL double fold over member values in
-    * id order — `avg`'s partial aggregation is order-free and thus not
-    * bit-reproducible across engines. Every argmin ties on (d, cid).
-    * [[kmeansCentroids]] (xxhash init, plain avg — the order-free
-    * shapes you want at 100 TB) remains the scale path. */
-  def kmeansCentroidsPortable(emb: DataFrame, k: Int, iters: Int = 5,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val pts = emb.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    // PACKED single-row rounds (round-15, guide §2/§5): the training
-    // corpus is bounded (the TrainTargetN sample rule) and the centroid
-    // table is k rows, yet the unpacked loop paid THREE shuffles per
-    // round (argmin groupBy(id), mean groupBy(cid,pos), repack
-    // groupBy(cid)) — ~18 shuffle stages of pure scheduling latency per
-    // training at any scale. Each round is now ONE global aggregation:
-    // centroids ride in a single packed row (cents: array<struct<cid,
-    // cvec>>), the argmin is a narrow broadcast projection over the
-    // point scan, and the member-sorted mean folds run as HOFs inside
-    // the aggregated row. Every numeric shape is IDENTICAL to the
-    // unpacked form (and thus to the DuckDB oracle texts): same md5
-    // bottom-k init ordered by (hk, id), same (d, cid) argmin
-    // tie-break, same sequential CAST-to-DOUBLE fold over members in
-    // id order per dim, same double/count division, same final FLOAT
-    // cast. LAZY localCheckpoint chain per round as before (round-14):
-    // all rounds execute inside the consumer's one action.
-    def packedMeans(assigned: DataFrame): DataFrame =
-      assigned
-        .agg(array_sort(collect_list(
-          struct(col("cid"), col("id"), col("vec")))).as("all"))
-        // `all` is sorted by (cid, id): cids come out ascending and
-        // each filtered group keeps id order — the fold order the
-        // oracle replays
-        .select(col("all"),
-          array_distinct(transform(col("all"), e => e.getField("cid")))
-            .as("cids"))
-        .select(col("cids"),
-          transform(col("cids"),
-            c => filter(col("all"), e => e.getField("cid") === c))
-            .as("groups"))
-        .select(zip_with(col("cids"), col("groups"), (c, g) =>
-          struct(c.as("cid"),
-            transform(
-              sequence(lit(0), size(element_at(g, 1).getField("vec")) - 1),
-              pos => (aggregate(g, lit(0.0), (acc, e) =>
-                acc + element_at(e.getField("vec"), pos + 1).cast("double"))
-                / size(g)).cast("float")).as("cvec"))).as("cents"))
-    var cent = pts
-      .withColumn("hk", conv(substring(
-        md5(concat(lit("km|"), col("id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"))
-      .agg(array_sort(collect_list(
-        struct(col("hk"), col("id"), col("vec")))).as("all"))
-      .select(slice(col("all"), 1, k).as("top"))
-      .select(transform(col("top"), (e, i) =>
-        struct(i.cast("int").as("cid"), e.getField("vec").as("cvec")))
-        .as("cents"))
-      .localCheckpoint(eager = false)
-    (1 to iters).foreach { _ =>
-      val assigned = pts.crossJoin(broadcast(cent))
-        .select(col("id"), col("vec"),
-          array_min(transform(col("cents"), c => struct(
-            Distances.euclidean(col("vec"), c.getField("cvec")).as("d"),
-            c.getField("cid").as("cid")))).getField("cid").as("cid"))
-      cent = packedMeans(assigned).localCheckpoint(eager = false)
-    }
-    cent.select(explode(col("cents")).as("c"))
-      .select(col("c.cid").as("cid"), col("c.cvec").as("cvec"))
-  }
-
   /** Per-(process, sfDir) MATERIALIZED portable router (round-14
     * optimization): several declared queries train the IDENTICAL
     * portable Lloyd's quantizer over the same corpus each invocation —
@@ -210,52 +94,25 @@ object Ann {
     // dominated by tiny-task setup and per-stage planning, not compute)
     graft.Tuning.withIterativeBuild(spark) {
       graft.Materialized.table(spark, sfDir, s"kmpc-$corpusKey-n$nlist-i$iters")(
-        kmeansCentroidsPortable(corpus, nlist, iters))
+        Kmeans.centroids(corpus, nlist, iters, portable = true))
     }
 
-  /** [[ivfKmeansTopK]] over the portable quantizer — the variant the
-    * q175 oracle replays end to end (init, every Lloyd's round, list
-    * assignment, probes, exact re-rank). `cent` supplies a precomputed
-    * router (it must equal `kmeansCentroidsPortable(emb, nlist,
-    * kmeansIters)` — the [[sharedPortableCentroids]] hook). */
-  def ivfKmeansTopKPortable(emb: DataFrame, k: Int, queryPred: Column,
-      nlist: Int = 8, nprobe: Int = 3, kmeansIters: Int = 5,
-      cent0: Option[DataFrame] = None): DataFrame = {
-    val cent = cent0.getOrElse(kmeansCentroidsPortable(emb, nlist, kmeansIters))
-    val pts = emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val lists = pts.join(broadcast(cent))
-      .select(col("nbr"), struct(
-        Distances.euclidean(col("cv"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("cv").as("cv")).as("cand"))
-      .groupBy(col("nbr")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("nbr"), col("m.cv").as("cv"))
-    val q = emb.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    val cands = probes.join(lists, Seq("cid"))
-      .filter(col("qid") =!= col("nbr"))
-      .select(col("qid"), col("qv"), col("nbr"), col("cv"))
-    rerank(cands, k)
-  }
-
-  /** IVF with the k-means quantizer: build inverted lists by nearest
-    * centroid, probe the nprobe nearest lists per query, exact re-rank. */
+  /** IVF with the k-means quantizer ([[Kmeans]]): inverted lists by
+    * nearest centroid ([[IvfIndexStore.assignToCentroids]]), the nprobe
+    * nearest lists probed per query, exact re-rank. `portable` = true is
+    * the variant the q175 oracle replays end to end (init, every
+    * Lloyd's round, list assignment, probes, re-rank); false is the
+    * order-free scale form (q36b). `cent0` supplies a precomputed
+    * router (it must equal `Kmeans.centroids(emb, nlist, kmeansIters,
+    * portable)` — the [[sharedPortableCentroids]] hook). */
   def ivfKmeansTopK(emb: DataFrame, k: Int, queryPred: Column,
-                    nlist: Int = 16, nprobe: Int = 4, kmeansIters: Int = 5,
-                    seed: Long = 42L): DataFrame = {
-    val cent = kmeansCentroids(emb, nlist, kmeansIters, seed)
-    val pts = emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val lists = pts.join(broadcast(cent))
-      .select(col("nbr"), struct(
-        Distances.euclidean(col("cv"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("cv").as("cv")).as("cand"))
-      .groupBy(col("nbr")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("nbr"), col("m.cv").as("cv"))
+      nlist: Int = 8, nprobe: Int = 3, kmeansIters: Int = 5,
+      portable: Boolean = false, cent0: Option[DataFrame] = None): DataFrame = {
+    val cent = cent0.getOrElse(
+      Kmeans.centroids(emb, nlist, kmeansIters, portable))
+    val lists = IvfIndexStore
+      .assignToCentroids(emb.select(col("vec_id"), col("embedding")), cent)
+      .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
     val q = emb.filter(queryPred)
       .select(col("vec_id").as("qid"), col("embedding").as("qv"))
     val probes = q.join(broadcast(cent))
@@ -342,7 +199,7 @@ object Ann {
   }
 
   /** IVF-blocked semantic near-dup pairs — the 100 TB dedup path for
-    * the embedding space: the k-means coarse quantizer ([[kmeansCentroids]])
+    * the embedding space: the k-means coarse quantizer ([[Kmeans]])
     * assigns every vector to its `nassign` nearest lists (multi-assign
     * so near-boundary pairs still share a list), and candidate pairs
     * form ONLY within a list — Σ B² work instead of N², with B bounded
@@ -352,9 +209,8 @@ object Ann {
     * the real vectors), so output ⊆ q54's rows with identical scores —
     * only recall, never precision, is approximate. */
   def ivfBlockedPairs(emb: DataFrame, threshold: Double, nlist: Int = 16,
-                      nassign: Int = 2, kmeansIters: Int = 5,
-                      seed: Long = 42L): DataFrame = {
-    val cent = kmeansCentroids(emb, nlist, kmeansIters, seed)
+                      nassign: Int = 2, kmeansIters: Int = 5): DataFrame = {
+    val cent = Kmeans.centroids(emb, nlist, kmeansIters, portable = false)
     val pts = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
     val assign = pts.join(broadcast(cent))
       .withColumn("d", Distances.euclidean(col("v"), col("cvec")))

@@ -30,8 +30,8 @@ import graft.linalg.Distances
   * q175's in-memory pipeline — floats round-trip parquet bit-exactly,
   * so the persisted search must hash-match the never-persisted one.
   *
-  * Scale shape: build = one broadcast-argmin assignment over the
-  * corpus + the k-means rounds (both the q36b/q175 shapes); the lists
+  * Scale shape: build = the [[Kmeans]] rounds + one codegen-argmin
+  * assignment over the corpus (both the q36b/q175 shapes); the lists
   * sink partitions by cid naturally; search broadcasts the nlist-row
   * centroid table, probes explode to nprobe equi-join keys against
   * the lists, and the re-rank is the TopKByWeight partial aggregation
@@ -40,31 +40,10 @@ object IvfIndexStore {
 
   private val K = 10
 
-  /** Nearest-centroid assignment of (vec_id, embedding) points — the
-    * broadcast argmin-as-min(struct) shape shared by build, upsert and
-    * list splits: the centroid table broadcasts (≤ nlist rows), the
-    * per-point reduction is a map-side-combined aggregation, so ONE
-    * row per point crosses the shuffle, never N×nlist (plan-gated). */
-  /** The centroid table as a driver-local argmin payload. BOUNDED by
-    * construction: the coarse quantizer is nlist rows (8 at test SFs,
-    * 1024 in the 1M sweep) — the same a-priori-bounded driver transfer
-    * as MRDF's smallLevel arm, and exactly how FAISS-family systems
-    * hold the coarse quantizer. Rows sorted by cid so the expression's
-    * first-wins tie rule equals the min(struct(d, cid)) tie-break. */
-  private def centArgminPayload(cent: DataFrame)
-      : (Seq[Int], java.util.HashMap[
-        org.apache.spark.unsafe.types.UTF8String, Array[Array[Float]]]) = {
-    val rows = cent.select(col("cid"), col("cvec")).collect()
-      .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
-    val cmap = new java.util.HashMap[
-      org.apache.spark.unsafe.types.UTF8String, Array[Array[Float]]]()
-    cmap.put(org.apache.spark.unsafe.types.UTF8String.fromString(""),
-      rows.map(_._2))
-    (rows.map(_._1).toSeq, cmap)
-  }
-
-  /** Nearest-centroid assignment as ONE narrow codegen projection —
-    * round-15, measured at 1M×1024 (GraphIndexScale): the former
+  /** Nearest-centroid assignment of (vec_id, embedding) points — shared
+    * by build, upsert, list splits, the IVF/SemDeDup lists and the
+    * graph router's cluster seeds — as ONE narrow codegen projection.
+    * Round-15, measured at 1M×1024 (GraphIndexScale): the former
     * broadcast-join + per-id argmin aggregation streamed N×nlist
     * candidate rows (cluster_seeds 851.8 s of a 937.5 s index write
     * with the vector inside each candidate struct; 471.7 s with the
@@ -73,11 +52,11 @@ object IvfIndexStore {
     * join, no aggregation, no shuffle. Assignments are bit-identical:
     * the expression computes the same strict-fold Euclidean doubles as
     * [[Distances.euclidean]] and its first-wins-on-tie rule over the
-    * cid-sorted array equals the min(struct(d, cid)) tie-break (the
+    * cid-sorted array equals the lowest-(d, cid) tie-break (the
     * MRDF divide-arm equivalence, asserted in PlanSpecs). */
   private[graft] def assignToCentroids(pts: DataFrame,
       cent: DataFrame): DataFrame = {
-    val (cids, cmap) = centArgminPayload(cent)
+    val (cids, cmap) = Kmeans.centArgminPayload(cent)
     if (cids.isEmpty)
       return pts.filter(lit(false))
         .select(lit(0).as("cid"), col("vec_id"), col("embedding"))
@@ -94,8 +73,8 @@ object IvfIndexStore {
     assignToCentroids(pts, cent).select(col("cid"), col("vec_id"))
 
   /** Build the portable IVF index over `emb` and write it under `dir`.
-    * Deterministic for a given corpus (md5 bottom-k init, ordered-fold
-    * means — [[Ann.kmeansCentroidsPortable]]). `trainedCent` supplies a
+    * Deterministic for a given corpus (the portable [[Kmeans]]: md5
+    * bottom-k init, ordered-fold means). `trainedCent` supplies a
     * precomputed router (must equal the training this write would run —
     * the [[Ann.sharedPortableCentroids]] hook; round-14: q218/q220
     * re-trained the identical quantizer the other full-corpus queries
@@ -104,7 +83,7 @@ object IvfIndexStore {
             kmeansIters: Int = 5,
             trainedCent: Option[DataFrame] = None): Unit = {
     val cent = trainedCent.getOrElse(
-      Ann.kmeansCentroidsPortable(emb, nlist, kmeansIters))
+      Kmeans.centroids(emb, nlist, kmeansIters, portable = true))
     val pts = emb.select(col("vec_id"), col("embedding"))
     val lists = assignToCentroids(pts, cent)
     // coalesce: bit_xor over zero rows is NULL — an empty corpus must
@@ -117,12 +96,10 @@ object IvfIndexStore {
         .as("fingerprint"))
       .select(col("n_vectors"), col("dim"), lit(nlist).as("nlist"),
         lit(kmeansIters).as("kmeans_iters"), col("fingerprint"))
-    // centroids and lists are independent jobs over a fresh dir — run
-    // them concurrently (guide §2.6); meta stays strictly last as the
-    // commit point (no meta ⇒ never a readable index)
-    graft.Concurrent.awaitAll(Seq(
-      () => cent.write.mode("overwrite").parquet(s"$dir/centroids"),
-      () => lists.write.mode("overwrite").parquet(s"$dir/lists")))
+    // meta stays strictly last as the commit point (no meta ⇒ never a
+    // readable index)
+    cent.write.mode("overwrite").parquet(s"$dir/centroids")
+    lists.write.mode("overwrite").parquet(s"$dir/lists")
     meta.write.mode("overwrite").parquet(s"$dir/meta")
   }
 
@@ -140,7 +117,8 @@ object IvfIndexStore {
   /** Search the PERSISTED index: `queries` = (vec_id, embedding) rows;
     * output (qid, nbr, sim, rn) — identical contract (and, for the
     * same build params, identical rows) to
-    * [[Ann.ivfKmeansTopKPortable]]. Reads only the index dir. */
+    * [[Ann.ivfKmeansTopK]] with `portable` = true. Reads only the
+    * index dir. */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int = K, nprobe: Int = 3): DataFrame = {
     val cent = spark.read.parquet(s"$dir/centroids")
@@ -216,9 +194,11 @@ object IvfIndexStore {
     * see it (duplicate xxhash64 values cancel pairwise, so isFreshFor
     * would validate the doubled corpus). Updates are delete + insert,
     * the FAISS `add` contract. The guard costs one id-column scan of
-    * lists/ (a single pruned Long column, not a corpus rescan).
+    * lists/ (a single pruned Long column, not a corpus rescan). A delta
+    * that repeats an id is refused too: the assignment emits one list
+    * row per input row, so the id would land in lists/ twice.
     *
-    * Scale shape: one broadcast-argmin pass over delta only (base
+    * Scale shape: one codegen-argmin pass over delta only (base
     * vectors are never re-read — the whole point), an append write
     * partitioned like the original lists, and a single-row meta
     * rewrite. */
@@ -226,27 +206,23 @@ object IvfIndexStore {
              maxListSize: Long = 0L): Unit = {
     val cent = spark.read.parquet(s"$dir/centroids")
     val pts = delta.select(col("vec_id"), col("embedding"))
-    // dup-check, delta fingerprint and the meta row are independent
-    // read-only jobs — overlap them (guide §2.6); the append waits on
-    // the dup guard
-    var dupN = -1L
-    var d: org.apache.spark.sql.Row = null
-    var m: org.apache.spark.sql.Row = null
-    graft.Concurrent.awaitAll(Seq(
-      () => dupN = spark.read.parquet(s"$dir/lists").select(col("vec_id"))
-        .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count(),
-      () => d = pts.agg(count(lit(1)),
+    val d = pts.agg(count(lit(1)), countDistinct(col("vec_id")),
         coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)))
-        .collect()(0),
-      () => m = spark.read.parquet(s"$dir/meta").collect()(0)))
+      .collect()(0)
+    require(d.getLong(0) == d.getLong(1),
+      s"upsert requires unique vec_ids within the delta: ${d.getLong(0)} " +
+        s"rows carry ${d.getLong(1)} distinct ids")
+    val dupN = spark.read.parquet(s"$dir/lists").select(col("vec_id"))
+      .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
     require(dupN == 0L,
       s"upsert requires disjoint vec_ids: $dupN already indexed " +
         "(insert-only contract; updates need delete+insert)")
+    val m = spark.read.parquet(s"$dir/meta").collect()(0)
     assignToCentroids(pts, cent).write.mode("append").parquet(s"$dir/lists")
     import spark.implicits._
     Seq((m.getAs[Long]("n_vectors") + d.getLong(0), m.getAs[Int]("dim"),
         m.getAs[Int]("nlist"), m.getAs[Int]("kmeans_iters"),
-        m.getAs[Long]("fingerprint") ^ d.getLong(1)))
+        m.getAs[Long]("fingerprint") ^ d.getLong(2)))
       .toDF("n_vectors", "dim", "nlist", "kmeans_iters", "fingerprint")
       .write.mode("overwrite").parquet(s"$dir/meta")
     if (maxListSize > 0L) splitOversized(spark, dir, maxListSize)
@@ -254,8 +230,8 @@ object IvfIndexStore {
 
   /** Split every inverted list larger than `maxListSize`: the list's
     * members are re-quantized by a portable 2-means over just that
-    * list ([[Ann.kmeansCentroidsPortable]] — deterministic md5 init,
-    * ordered folds), the parent centroid is replaced by the two
+    * list (the portable [[Kmeans]] — deterministic md5 init, ordered
+    * folds), the parent centroid is replaced by the two
     * children (fresh cids above the current max, parent order then
     * child cid — deterministic), and the split lists rewrite. The
     * fingerprint is untouched: a split moves vectors between lists but
@@ -320,7 +296,7 @@ object IvfIndexStore {
     oversized.foreach { cid =>
       val members = lists.filter(col("cid") === cid)
         .select(col("vec_id"), col("embedding"))
-      val sub = Ann.kmeansCentroidsPortable(members, 2, iters = 3)
+      val sub = Kmeans.centroids(members, 2, iters = 3, portable = true)
         .withColumn("cid", col("cid") + lit(nextCid))
       keepLists = keepLists.unionByName(assignToCentroids(members, sub))
       keepCent = keepCent.unionByName(sub.select(col("cid"), col("cvec")))

@@ -1,7 +1,6 @@
 package graft.similarity
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.linalg.Distances
@@ -14,11 +13,11 @@ import graft.linalg.Distances
   * distance computation, Jégou et al., TPAMI 2011).
   *
   * Scale design (the part that matters at 100 TB):
-  *  - Training: ONE grouped Lloyd's loop trains all `m` subspace
-  *    codebooks simultaneously — per-iteration cost is one broadcast
-  *    join + one partial-agg shuffle over the subvector table,
-  *    independent of `m` (m sequential k-means runs would scan the
-  *    data m× per round).
+  *  - Training: ONE grouped [[Kmeans]] run trains all `m` subspace
+  *    codebooks simultaneously (grp = subspace) — per-iteration cost is
+  *    one codegen-argmin scan + one partial-agg shuffle over the
+  *    subvector table, independent of `m` (m sequential k-means runs
+  *    would scan the data m× per round).
   *  - The trained codebook is m·ks rows (64 here) — a driver-side
   *    scalar in the same legitimacy class as a k-means centroid
   *    broadcast; it becomes LITERALS in the encode expression.
@@ -38,56 +37,6 @@ import graft.linalg.Distances
   */
 object Pq {
 
-  /** Grouped distributed Lloyd's: trains an independent k-means per
-    * `grp` over `(grp, id, vec)` points, all groups in the same rounds.
-    * Init is the order-independent bottom-k-by-hash per group (the
-    * MRDF/IVF sampler); each round is one broadcast argmin join + one
-    * per-(grp, cid, dim) mean. Returns (grp, cid, cvec). */
-  def groupedKmeans(pts: DataFrame, k: Int, iters: Int = 5,
-                    seed: Long = 42L): DataFrame = {
-    // bottom-k by hash per group: the aggregator ships ≤ k candidates
-    // per group out of each map task, never the full point set
-    val ids = graft.agg.TopKByWeight.perId(
-        pts.select(col("grp").cast("long").as("id"), col("id").as("nbr"),
-          xxhash64(lit(seed), col("id")).cast("double").as("dist")), k)
-      .select(col("id").as("grp"), col("nbr").as("id"), col("dist").as("h"))
-    var cent = pts.join(ids.select(col("grp"), col("id"), col("h")),
-        Seq("grp", "id"))
-      .withColumn("cid", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("h"), col("id"))) - 1)
-      .select(col("grp"), col("cid"), col("vec").as("cvec"))
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      val assigned = pts.join(broadcast(cent), Seq("grp"))
-        .select(col("grp"), col("id"), struct(
-          Distances.euclidean(col("vec"), col("cvec")).as("d"),
-          col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-        .groupBy(col("grp"), col("id")).agg(min(col("cand")).as("m"))
-        .select(col("grp"), col("m.cid").as("cid"), col("m.vec").as("vec"))
-      val moved = assigned
-        .select(col("grp"), col("cid"), posexplode(col("vec")).as(Seq("pos", "x")))
-        .groupBy(col("grp"), col("cid"), col("pos"))
-        .agg(avg(col("x")).as("mn"))
-        .groupBy(col("grp"), col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mn")))).as("s"))
-        .select(col("grp"), col("cid"),
-          transform(col("s"), e => e("mn").cast("float")).as("cvec"))
-      // a centroid that won no points this round keeps its position —
-      // dropping it would shrink the codebook below ks (empty-cluster
-      // hole) and leave null cells in the collected books array. One
-      // left-outer from the (tiny, checkpointed) cent table references
-      // `moved` once — a union+anti pair would recompute its DAG twice.
-      val next = cent.select(col("grp"), col("cid"), col("cvec").as("prev"))
-        .join(moved, Seq("grp", "cid"), "left_outer")
-        .select(col("grp"), col("cid"),
-          coalesce(col("cvec"), col("prev")).as("cvec"))
-        .localCheckpoint()
-      graft.Checkpoints.release(cent)
-      cent = next
-    }
-    cent
-  }
-
   /** (grp, id, vec) subvector table: vector j-th slice under group j. */
   def subspacePoints(emb: DataFrame, m: Int, dim: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
@@ -101,14 +50,10 @@ object Pq {
   /** Train the m×ks codebook and collect it (m·ks rows — the k-row
     * driver-scalar class). books(j)(c) = centroid c of subspace j. */
   def trainCodebooks(emb: DataFrame, m: Int, ks: Int, dim: Int,
-      iters: Int = 5, seed: Long = 42L): Array[Array[Array[Float]]] = {
-    val cent = groupedKmeans(subspacePoints(emb, m, dim), ks, iters, seed)
-      .collect()
+      iters: Int = 5, portable: Boolean = false): Array[Array[Array[Float]]] = {
     val books = Array.ofDim[Array[Float]](m, ks)
-    cent.foreach { r =>
-      books(r.getInt(0))(r.getInt(1)) =
-        r.getSeq[Float](2).toArray
-    }
+    Kmeans.train(subspacePoints(emb, m, dim), ks, iters, portable).collect()
+      .foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
     books
   }
 
@@ -131,79 +76,18 @@ object Pq {
       (array_position(d, array_min(d)) - 1).cast("int")
     }: _*)
 
-  /** ADC approximate top-k with exact cosine re-rank.
+  /** ADC approximate top-k with exact cosine re-rank. `portable` =
+    * true trains the codebooks the q177 oracle replays end to end
+    * (md5 init shared across subspaces, ordered-fold means, empty-
+    * cluster carry); false is the order-free scale form (q126).
     *
     * @param rerank candidate multiplier: ADC keeps rerank·k per query,
     *               exact cosine keeps the final k. */
   def adcTopK(emb: DataFrame, k: Int, queryPred: Column, m: Int = 4,
-      ks: Int = 16, dim: Int = 64, iters: Int = 3, seed: Long = 42L,
-      rerank: Int = 3): DataFrame = {
+      ks: Int = 16, dim: Int = 64, iters: Int = 3, rerank: Int = 3,
+      portable: Boolean = false): DataFrame = {
     val subDim = dim / m
-    val books = trainCodebooks(emb, m, ks, dim, iters, seed)
-    adcFromBooks(emb, books, k, queryPred, subDim, rerank)
-  }
-
-  /** Cross-engine-exact grouped Lloyd's — [[groupedKmeans]]' oracle-
-    * mirrorable twin (the q175 doctrine, per subspace): md5 bottom-k
-    * init (shared ids across groups, as the seeded init also picks),
-    * ordered-fold means, argmin ties on (d, cid), empty-cluster carry
-    * via the same left-outer coalesce. [[groupedKmeans]] (xxhash init,
-    * plain avg) stays the scale path. */
-  def groupedKmeansPortable(pts: DataFrame, k: Int, iters: Int = 3): DataFrame = {
-    val sel = pts.select(col("id")).distinct()
-      .withColumn("hk", conv(substring(
-        md5(concat(lit("km|"), col("id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"))
-      .orderBy(col("hk"), col("id")).limit(k)
-    var cent = pts.join(broadcast(sel), Seq("id"))
-      .withColumn("cid", row_number().over(
-        Window.partitionBy(col("grp")).orderBy(col("hk"), col("id"))) - 1)
-      .select(col("grp"), col("cid"), col("vec").as("cvec"))
-      .localCheckpoint()
-    (1 to iters).foreach { _ =>
-      val assigned = pts.join(broadcast(cent), Seq("grp"))
-        .select(col("grp"), col("id"), struct(
-          Distances.euclidean(col("vec"), col("cvec")).as("d"),
-          col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-        .groupBy(col("grp"), col("id")).agg(min(col("cand")).as("m"))
-        .select(col("grp"), col("id"), col("m.cid").as("cid"), col("m.vec").as("vec"))
-      val moved = assigned
-        .select(col("grp"), col("cid"), col("id"),
-          posexplode(col("vec")).as(Seq("pos", "x")))
-        .groupBy(col("grp"), col("cid"), col("pos"))
-        .agg(count(lit(1)).as("n"),
-          array_sort(collect_list(struct(col("id"), col("x")))).as("s"))
-        .withColumn("mn", expr(
-          "aggregate(s, CAST(0 AS DOUBLE), (acc, e) -> acc + CAST(e.x AS DOUBLE)) / n"))
-        .groupBy(col("grp"), col("cid"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("mn")))).as("dims"))
-        .select(col("grp"), col("cid"),
-          transform(col("dims"), e => e("mn").cast("float")).as("cvec"))
-      val next = cent.select(col("grp"), col("cid"), col("cvec").as("prev"))
-        .join(moved, Seq("grp", "cid"), "left_outer")
-        .select(col("grp"), col("cid"),
-          coalesce(col("cvec"), col("prev")).as("cvec"))
-        .localCheckpoint()
-      graft.Checkpoints.release(cent)
-      cent = next
-    }
-    cent
-  }
-
-  /** [[adcTopK]] over the portable codebooks — the variant the q177
-    * oracle replays end to end. */
-  def adcTopKPortable(emb: DataFrame, k: Int, queryPred: Column, m: Int = 4,
-      ks: Int = 16, dim: Int = 64, iters: Int = 3, rerank: Int = 3): DataFrame = {
-    val subDim = dim / m
-    val cent = groupedKmeansPortable(subspacePoints(emb, m, dim), ks, iters)
-      .collect()
-    val books = Array.ofDim[Array[Float]](m, ks)
-    cent.foreach(r => books(r.getInt(0))(r.getInt(1)) = r.getSeq[Float](2).toArray)
-    adcFromBooks(emb, books, k, queryPred, subDim, rerank)
-  }
-
-  private def adcFromBooks(emb: DataFrame, books: Array[Array[Array[Float]]],
-      k: Int, queryPred: Column, subDim: Int, rerank: Int): DataFrame = {
+    val books = trainCodebooks(emb, m, ks, dim, iters, portable)
     // one row-local pass: corpus → (id, codes)
     val codes = emb.select(col("vec_id").as("nbr"),
       encodeExpr(col("embedding"), books, subDim).as("codes"))

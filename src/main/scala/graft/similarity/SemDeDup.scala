@@ -14,15 +14,16 @@ import graft.linalg.Distances
   * in its cluster — the keep-lowest-index rule of the reference
   * implementation.
   *
-  * Scale shape: the quantizer is the distributed Lloyd's loop (one
-  * broadcast join + one partial-agg argmin + one mean per round); the
-  * pair stream is Σ_c B² within clusters, never N² (q102's blocked
-  * shape with LEARNED blocks instead of given labels); the keep rule
+  * Scale shape: the quantizer is the distributed [[Kmeans]] loop (one
+  * codegen-argmin scan + one partial-agg mean per round), and the lists
+  * are one codegen-argmin projection; the pair stream is Σ_c B² within
+  * clusters, never N² (q102's blocked shape with LEARNED blocks
+  * instead of given labels); the keep rule
   * is one distinct + one broadcastable left join. The declared query
   * runs the oracle-mirrorable portable quantizer (md5 init,
   * ordered-fold means) so the WHOLE pipeline — training included — is
-  * driver-verified; [[Ann.kmeansCentroids]] (xxhash init, order-free
-  * avg) is the same code shape on the throughput path. */
+  * oracle-verified; `portable = false` (xxhash init, order-free avg)
+  * is the same loop on the throughput path. */
 object SemDeDup {
 
   /** Per-vector semantic-dedup verdict: (vec_id, cid, keep). `keep` is
@@ -30,16 +31,10 @@ object SemDeDup {
     * 6-dp-rounded cosine similarity ≥ `tau`. */
   def semDedup(emb: DataFrame, tau: Double = 0.35,
                nlist: Int = 16, iters: Int = 3): DataFrame = {
-    val cent = Ann.kmeansCentroidsPortable(emb, nlist, iters)
-    val pts = emb.select(col("vec_id").as("id"), col("embedding").as("vec"))
-    // nearest-centroid assignment — argmin as min(struct(d, cid, vec)):
-    // map-side partial agg, one row per id crosses the shuffle
-    val lists = pts.join(broadcast(cent))
-      .select(col("id"), struct(
-        Distances.euclidean(col("vec"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("vec").as("vec")).as("cand"))
-      .groupBy(col("id")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("id"), col("m.vec").as("vec"))
+    val cent = Kmeans.centroids(emb, nlist, iters, portable = true)
+    val lists = IvfIndexStore
+      .assignToCentroids(emb.select(col("vec_id"), col("embedding")), cent)
+      .select(col("cid"), col("vec_id").as("id"), col("embedding").as("vec"))
       .localCheckpoint() // feeds the pair join twice + the output join
     val dropped = lists.as("a").join(lists.as("b"),
         col("a.cid") === col("b.cid") && col("a.id") < col("b.id"))

@@ -193,17 +193,14 @@ object SimilarityQueries {
        |GROUP BY method, n_exact ORDER BY method""".stripMargin
   }
 
-  /** Generated mirror of [[Ann.ivfKmeansTopKPortable]]: the md5
-    * bottom-k init, every Lloyd's round (argmin with (d, cid) ties,
-    * ordered-fold centroid means), list assignment, probes, and the
-    * 6-dp-rounded exact re-rank — all replayed as SQL CTEs. The
-    * iterative-float-algorithm analogue of the BPE/PageRank replay
-    * oracles: only the pinned fold order makes the rounds
-    * bit-reproducible across engines. */
   /** The portable distributed-Lloyd's CTE chain (`pts`, `k0`,
-    * `a1..aN`, `k1..kN` — final centroids in `k<iters>`), shared by
-    * the q175 oracle and the SemDeDup oracle. Returned WITHOUT the
-    * leading `WITH`. */
+    * `a1..aN`, `k1..kN` — final centroids in `k<iters>`), the SQL
+    * replay of the portable [[Kmeans]] loop shared by the q175 oracle,
+    * the index-store oracles and the SemDeDup oracle. Returned WITHOUT
+    * the leading `WITH`. A round's `k<r>` keeps only centroids that won
+    * members, where [[Kmeans]] carries an empty centroid over; the two
+    * agree while no centroid empties, which the oracles check on the
+    * testdata. */
   private[graft] def kmeansPortableCtes(nlist: Int, iters: Int,
       ptsWhere: String = ""): String = {
     def eucl(a: String, b: String) = DuckSql.euclidean(a, b)
@@ -241,6 +238,13 @@ object SimilarityQueries {
     sb.toString
   }
 
+  /** Generated mirror of [[Ann.ivfKmeansTopK]] with `portable` = true:
+    * the md5 bottom-k init, every Lloyd's round (argmin with (d, cid)
+    * ties, ordered-fold centroid means), list assignment, probes, and
+    * the 6-dp-rounded exact re-rank — all replayed as SQL CTEs. The
+    * iterative-float-algorithm analogue of the BPE/PageRank replay
+    * oracles: only the pinned fold order makes the rounds
+    * bit-reproducible across engines. */
   private[similarity] def ivfKmeansPortableOracle(k: Int, nlist: Int, nprobe: Int,
                                       iters: Int): String = {
     def eucl(a: String, b: String) = DuckSql.euclidean(a, b)
@@ -275,9 +279,10 @@ object SimilarityQueries {
     sb.toString
   }
 
-  /** Generated mirror of [[Pq.adcTopKPortable]]: subspace slicing, the
-    * grouped Lloyd's loop (md5 init shared across subspaces, ordered-
-    * fold means, empty-cluster carry), literal-free encode as the same
+  /** Generated mirror of [[Pq.adcTopK]] with `portable` = true:
+    * subspace slicing, the grouped [[Kmeans]] loop (md5 init shared
+    * across subspaces, ordered-fold means, empty-cluster carry),
+    * literal-free encode as the same
     * argmin, the ADC sum in PINNED j-order (Spark's reduce is a left
     * fold; an SQL sum() aggregates in arbitrary order, so the mirror
     * pivots the m terms and adds them explicitly), shortlist by
@@ -402,16 +407,16 @@ object SimilarityQueries {
 
     Declared(
       "q177_ann_pq_portable",
-      (s, dir) => Pq.adcTopKPortable(Tables.load(s, dir, "embeddings"),
-        K, queryPred = col("vec_id") < 20)
+      (s, dir) => Pq.adcTopK(Tables.load(s, dir, "embeddings"),
+        K, queryPred = col("vec_id") < 20, portable = true)
         .orderBy(col("qid"), col("rn")),
       Some(pqPortableOracle(K, m = 4, ks = 16, dim = 64, iters = 3, rerank = 3)),
       doc = "Product-quantization ANN on portable codebooks — grouped Lloyd's training, PQ encode, pinned-order ADC scan and exact re-rank all replayed in the oracle; q126's seeded form stays the scale path"),
 
     Declared(
       "q175_ann_ivf_kmeans_portable",
-      (s, dir) => Ann.ivfKmeansTopKPortable(Tables.load(s, dir, "embeddings"),
-        K, queryPred = col("vec_id") < 20,
+      (s, dir) => Ann.ivfKmeansTopK(Tables.load(s, dir, "embeddings"),
+        K, queryPred = col("vec_id") < 20, portable = true,
         cent0 = Some(Ann.sharedPortableCentroids(s, dir, "emb",
           nlist = 8, iters = 5)(Tables.load(s, dir, "embeddings"))))
         .orderBy(col("qid"), col("rn")),

@@ -333,8 +333,9 @@ object VectorSearch {
   def composedSearch(emb: DataFrame, kCand: Int = 2 * K, kSel: Int = 5,
                      lambda: Double = 0.7): DataFrame = {
     val cands = emb.filter(col("label") % 2 === 0)
-    val shortlist = Ann.ivfKmeansTopKPortable(cands, kCand,
-      queryPred = col("vec_id") < 20, nlist = 8, nprobe = 3, kmeansIters = 5)
+    val shortlist = Ann.ivfKmeansTopK(cands, kCand,
+      queryPred = col("vec_id") < 20, nlist = 8, nprobe = 3, kmeansIters = 5,
+      portable = true)
     mmrRerankFrom(cands, shortlist, kSel, lambda)
   }
 

@@ -968,20 +968,16 @@ object StreamingPipelines {
       nlist: Int = 8, kmeansIters: Int = 3, k: Int = 5): DataFrame = {
     val emb = graft.Tables.load(spark, dir, "embeddings")
     val static = emb.filter(col("vec_id") % 10 =!= 0)
-    val cent = graft.similarity.Ann
-      .kmeansCentroidsPortable(static, nlist, kmeansIters)
+    val cent = graft.similarity.Kmeans
+      .centroids(static, nlist, kmeansIters, portable = true)
     val centRows = cent.orderBy(col("cid")).collect()
     val centArr = array(centRows.map { r =>
       struct(lit(r.getInt(0)).as("cid"),
         array(r.getSeq[Float](1).map(lit(_)): _*).as("cvec"))
     }: _*)
-    val lists = static.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
-      .join(broadcast(cent))
-      .select(col("nbr"), struct(
-        graft.linalg.Distances.euclidean(col("cv"), col("cvec")).as("d"),
-        col("cid").as("cid"), col("cv").as("cv")).as("cand"))
-      .groupBy(col("nbr")).agg(min(col("cand")).as("m"))
-      .select(col("m.cid").as("cid"), col("nbr"), col("m.cv").as("cv"))
+    val lists = graft.similarity.IvfIndexStore
+      .assignToCentroids(static.select(col("vec_id"), col("embedding")), cent)
+      .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
       .localCheckpoint() // the static index the stream probes
     val name = s"ann_ingest_${declaredRuns.incrementAndGet()}"
     withReplayPartitions(spark) {

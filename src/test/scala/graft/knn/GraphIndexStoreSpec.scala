@@ -118,7 +118,7 @@ class GraphIndexStoreSpec extends SparkSpec {
     val served = GraphIndexStore.search(spark, dir, queries)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2),
         r.getInt(3))).toSet
-    val cent = graft.similarity.Ann.kmeansCentroidsPortable(vecs, 8, 5)
+    val cent = graft.similarity.Kmeans.centroids(vecs, 8, 5, portable = true)
     val inflight = GraphSearch.routedWithCentroids(vecs,
         GraphSearch.withLongLinks(vecs, edges, poolSize = 16, perNode = 2),
         queries, cent, GraphSearch.clusterSeeds(vecs, cent, 4))
@@ -212,8 +212,8 @@ class GraphIndexStoreSpec extends SparkSpec {
       "a 1/4 md5 sample of 400 points must be well under half the corpus")
     val storedCent = spark.read.parquet(s"$dirS/centroids")
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).toSet
-    val expectCent = graft.similarity.Ann
-      .kmeansCentroidsPortable(sample, 8, 5)
+    val expectCent = graft.similarity.Kmeans
+      .centroids(sample, 8, 5, portable = true)
       .collect().map(r => (r.getInt(0), r.getSeq[Float](1))).toSet
     assert(storedCent == expectCent,
       "the persisted router must be the portable Lloyd's over the sample")

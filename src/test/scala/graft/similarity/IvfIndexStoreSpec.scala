@@ -18,7 +18,7 @@ class IvfIndexStoreSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSet
     val inMemory = Ann
-      .ivfKmeansTopKPortable(emb, 10, queryPred = col("vec_id") < 20)
+      .ivfKmeansTopK(emb, 10, queryPred = col("vec_id") < 20, portable = true)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
       .toSet
     assert(persisted == inMemory,
@@ -87,7 +87,7 @@ class IvfIndexStoreSpec extends SparkSpec {
     // lists + probes + re-rank over the FULL corpus — the state upsert
     // must leave behind
     val base = emb.filter(col("vec_id") % 4 =!= 3)
-    val cent = Ann.kmeansCentroidsPortable(base, 8, 5)
+    val cent = Kmeans.centroids(base, 8, 5, portable = true)
     val pts = emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"))
     val lists = pts.join(broadcast(cent))
       .select(col("nbr"), struct(
@@ -129,6 +129,24 @@ class IvfIndexStoreSpec extends SparkSpec {
     assert(!IvfIndexStore.isFreshFor(spark, dir.toString, base),
       "after upsert the index is no longer fresh for base alone")
     assert(!IvfIndexStore.isFreshFor(spark, dir.toString, delta))
+  }
+
+  test("upsert refuses a delta that repeats a vec_id and leaves the index untouched") {
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val base = emb.filter(col("vec_id") % 4 =!= 3)
+    val delta = emb.filter(col("vec_id") % 4 === 3)
+    val dir = Files.createTempDirectory("graft-ivfidx-spec-dupdelta-")
+    dir.toFile.deleteOnExit()
+    IvfIndexStore.write(base, dir.toString)
+    val listsBefore = spark.read.parquet(s"${dir.toString}/lists").count()
+    // every id is new to the index, but one arrives twice
+    val repeated = delta.unionByName(delta.orderBy(col("vec_id")).limit(1))
+    val e = intercept[IllegalArgumentException](
+      IvfIndexStore.upsert(spark, dir.toString, repeated))
+    assert(e.getMessage.contains("unique vec_ids"), e.getMessage)
+    assert(spark.read.parquet(s"${dir.toString}/lists").count() == listsBefore)
+    assert(IvfIndexStore.isFreshFor(spark, dir.toString, base),
+      "a refused upsert must not touch lists/ or meta/")
   }
 
   test("list split: oversized list splits in two, corpus and fingerprint unchanged, full-probe search identical") {

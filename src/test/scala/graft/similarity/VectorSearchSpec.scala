@@ -269,9 +269,10 @@ class VectorSearchSpec extends SparkSpec {
     assert(out.nonEmpty)
     val evenIds = emb.filter(col("label") % 2 === 0)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val shortlist = Ann.ivfKmeansTopKPortable(
+    val shortlist = Ann.ivfKmeansTopK(
         emb.filter(col("label") % 2 === 0), 20,
-        queryPred = col("vec_id") < 20, nlist = 8, nprobe = 3, kmeansIters = 5)
+        queryPred = col("vec_id") < 20, nlist = 8, nprobe = 3, kmeansIters = 5,
+        portable = true)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     val shortSet = shortlist.map(t => (t._1, t._2)).toSet

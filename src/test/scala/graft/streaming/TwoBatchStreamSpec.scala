@@ -189,7 +189,7 @@ class TwoBatchStreamSpec extends SparkSpec {
     // independent batch composition of the same index + routing
     val emb = graft.Tables.load(spark, sf0001, "embeddings")
     val static = emb.filter(col("vec_id") % 10 =!= 0)
-    val cent = graft.similarity.Ann.kmeansCentroidsPortable(static, 8, 3)
+    val cent = graft.similarity.Kmeans.centroids(static, 8, 3, portable = true)
     def assign(df: org.apache.spark.sql.DataFrame, idc: String, vc: String) =
       df.select(col(idc).as("id"), col(vc).as("v"))
         .join(broadcast(cent))
