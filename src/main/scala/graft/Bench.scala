@@ -98,21 +98,6 @@ object Bench {
       projectedSec: Double): Boolean =
     elapsedSec + math.max(0.0, projectedSec) * DeadlineSafety <= deadlineSec
 
-  /** Silence the localCheckpoint lineage WARN class (round-13 verdict
-    * #1c): `WARN MapPartitionsRDD: ... locally checkpointed` floods
-    * the ~2000-char stdout tail the driver parses — on r13's run the
-    * ENTIRE tail window was this one warning, scrolling out any
-    * previously printed summary line. Per-logger level survives the
-    * later root-level `setLogLevel("WARN")`; ERROR keeps real RDD
-    * failures visible. */
-  private[graft] def silenceCheckpointWarns(): Unit =
-    try org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.rdd.MapPartitionsRDD",
-      org.apache.logging.log4j.Level.ERROR)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] logger silence failed: ${e.getMessage}")
-    }
-
   private def waitForQuiet(spark: SparkSession, cpus: Int,
       bestProbe: Double, bestDisk: Double,
       mayContinue: () => Boolean): Unit = {
@@ -378,11 +363,6 @@ object Bench {
     def allows(projectedSec: Double): Boolean =
       deadlineAllows(elapsedSec, deadlineSec, projectedSec)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the machine's core count: the driver invokes this
-    // without SPARK_GRAFT_CPUS, and a hardcoded small default would
-    // run the whole suite at a fraction of available parallelism.
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
     // Single pass opt-out for fast local iteration. Default THREE
     // passes (round-9 finding): on this host, full-suite runs hit
     // noisy windows where ONE pass degrades 1.5–1.7× broadly. The
@@ -396,16 +376,8 @@ object Bench {
     // kill budget (the least valuable work in the plan per the r14
     // verdict). Env override wins either way.
     val passesEnv = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt)
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceCheckpointWarns()
-    val nCpus = cpus.toInt
+    val nCpus = SessionTuning.cpus
+    val spark = SessionTuning.session("graft-bench", nCpus)
 
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -449,7 +421,7 @@ object Bench {
     // builds at the sweep's α=12000, so the MULTI-BLOCK recall
     // regression class (divide + merge quality at realistic block
     // counts) surfaces every round instead of only when someone
-    // re-runs Scalability by hand. Two corpora, two failure modes:
+    // re-runs the `mrdf` scale point by hand. Two corpora, two failure modes:
     //  - MIXTURE (round-9 verdict #4): the representative clustered
     //    regime — measured 0.9794 on round-10 HEAD, gate 0.95;
     //  - UNIFORM (round-10 verdict #6): the adversarial no-structure
@@ -476,7 +448,7 @@ object Bench {
           val edges = graft.Tuning.withIterativeBuild(spark) {
             mrdf.Mrdf.buildGraph(vecs, params)
           }
-          val recall = Scalability.recallVsTruth(vecs, edges, params.k, g.vectors)
+          val recall = Scale.recallVsTruth(vecs, edges, params.k, g.vectors)
           val wall = (System.nanoTime() - t0) / 1e9
           Checkpoints.release(edges)
           if (recall < g.min)
@@ -676,7 +648,7 @@ object Bench {
         def env(noiseJson: String) = envString(passes, passTotalsJson,
           passLoadsJson, pub.probeMin, pub.probeMax, extra.size,
           pub.publishedCleanN, noiseJson, lockWait, pub.cpuTotal, loadStart,
-          osBean.getSystemLoadAverage, attemptFields + gateFields, cpus)
+          osBean.getSystemLoadAverage, attemptFields + gateFields, nCpus.toString)
         val qs = pub.pmin.map { case (k, v) => jq(k) + ":" + fmt(v) }
           .mkString("{", ",", "}")
         // full line only (the compact line is length-budgeted):
@@ -1031,36 +1003,26 @@ object Bench {
     * desynchronize from the gate actually applied). */
   private[graft] final case class PinnedRecallGate(
       stampKey: String, jsonPrefix: String, label: String,
-      corpusPath: String, vectors: Int, dim: Int, seed: Long, clusters: Int,
-      min: Double) {
+      vectors: Int, clusters: Int, min: Double) {
     def params: mrdf.Mrdf.Params = mrdf.Mrdf.Params(alpha = 12000)
     /** The pinned FvecsGen corpus, regenerated on demand and
       * size-checked. */
-    def corpus(spark: SparkSession): org.apache.spark.sql.DataFrame = {
-      val f = new java.io.File(corpusPath)
-      val expectBytes = vectors.toLong * (4L + 4L * dim)
-      if (!f.exists() || f.length() != expectBytes) {
-        Option(f.getParentFile).foreach(_.mkdirs())
-        io.FvecsGen.write(corpusPath, vectors.toLong, dim, seed, clusters)
-      }
-      io.Fvecs.readAuto(spark, corpusPath).toDF("vec_id", "embedding")
-    }
+    def corpus(spark: SparkSession): org.apache.spark.sql.DataFrame =
+      Scale.pinnedCorpus(spark, vectors, clusters)
   }
 
   private[graft] object PinnedRecallGate {
     /** The representative clustered regime (round-9 verdict #4). */
     val Mixture20k: PinnedRecallGate = PinnedRecallGate(
       "round_gate_20k", "scaled_recall", "20k mixture",
-      "/root/repo/target/scaling/mix20k_seed42.fvecs",
-      20000, 64, 42L, 1000, min = 0.95)
+      20000, 1000, min = 0.95)
     /** The adversarial no-structure regime (round-10 verdict #6):
       * uniform high-dim noise, every locality method's failure mode —
       * pinned against regression instead of informational-only.
       * Measured 0.9097 on round-11 HEAD at 20k / α=12000. */
     val Uniform20k: PinnedRecallGate = PinnedRecallGate(
       "round_gate_uniform_20k", "uniform_recall", "20k uniform",
-      "/root/repo/target/scaling/uni20k_seed42.fvecs",
-      20000, 64, 42L, 0, min = 0.85)
+      20000, 0, min = 0.85)
   }
 
   /** Stamp a per-round gate into SCALING.json (at `g.stampKey`),
@@ -1081,12 +1043,12 @@ object Bench {
       n.put("what", "per-round multi-block recall gate, stamped by graft.Bench " +
         s"on every full-suite run: MRDF at k=${p.k}/rho=${p.rho}/alpha=${p.alpha} " +
         s"over the pinned FvecsGen ${g.label} corpus (${g.vectors} x " +
-        s"${g.dim}-dim, seed ${g.seed}, " +
+        s"${Scale.PinnedDim}-dim, seed ${Scale.PinnedSeed}, " +
         (if (g.clusters > 0) s"${g.clusters} clusters" else "uniform noise") +
         "), recall vs 256 sampled exact queries (fused TopKJoin)")
       n.put("vectors", g.vectors)
-      n.put("dim", g.dim)
-      n.put("seed", g.seed)
+      n.put("dim", Scale.PinnedDim)
+      n.put("seed", Scale.PinnedSeed)
       n.put("clusters", g.clusters)
       n.put("alpha", p.alpha)
       n.put("recall", math.rint(recall * 10000) / 10000)

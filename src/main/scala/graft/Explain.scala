@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan inspection main: prints `explain("formatted")` for declared
   * queries — the scale-readiness review loop (pushdown reached the
   * scan? small side broadcast? codegen spans wide?). */
@@ -12,13 +10,8 @@ object Explain {
       if (args.length > 1) args(1).split(",").toSeq
       else Seq("knn_bruteforce", "q01_pricing_summary", "q02_filter_project",
         "q15_multi_join", "q25_ngram_jaccard", "q30_cosine_topk", "q07_range_join")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // plans are read against 8 partitions
+    val spark = SessionTuning.session("graft-explain", cpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
     // Internal (non-declared) plans: shared build fragments that
     // declared queries consume through Materialized — the declared

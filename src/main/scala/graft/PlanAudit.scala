@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot audit: flags declared queries whose physical plans contain
   * single-partition funnels that would serialize at scale — a Window
   * with no partition spec, or an Exchange SinglePartition feeding
@@ -10,11 +8,8 @@ import org.apache.spark.sql.SparkSession
 object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    // plans are audited against 8 partitions
+    val spark = SessionTuning.session("graft-plan-audit", cpus = 8)
     spark.sparkContext.setLogLevel("ERROR")
     Registry.all.foreach { d =>
       // Streaming-executed declared queries (q167/q168/q169/q170) run a

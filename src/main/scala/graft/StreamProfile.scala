@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev tool (round-15 optimization): per-micro-batch duration breakdown
@@ -18,17 +17,7 @@ object StreamProfile {
       if (args.length > 1) args(1).split(",").toSeq
       else Seq("q206_stream_inc_dedup", "q168_stream_tumbling",
         "q184_stream_max_gap", "q222_stream_substr_spans")
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors().toString)
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.silenceCheckpointWarns()
+    val spark = SessionTuning.session("graft-stream-profile")
     spark.range(1000).selectExpr("sum(id)").collect()
     Tables.load(spark, sfDir, "region").count()
 

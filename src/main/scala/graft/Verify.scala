@@ -1,26 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Default to every core on the box: the driver's correctness phase has a
-    // wall-clock budget, and running 155+ queries at local[4] on a 32-CPU
-    // host wastes 8× of it (round-4 lesson: the gate timed out and recorded
-    // an empty scoreboard). Env override kept for constrained environments.
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.silenceCheckpointWarns()
+    // Every core on the box by default (SessionTuning.cpus): running
+    // 155+ queries at local[4] on a 32-CPU host wastes 8× of the
+    // correctness phase's wall-clock budget.
+    val spark = SessionTuning.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Optional subset for local iteration: GRAFT_ONLY=q20,q21 tools/check.py
     val only = sys.env.get("GRAFT_ONLY").map(_.split(",").toSet)

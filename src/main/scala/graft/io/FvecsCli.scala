@@ -3,7 +3,6 @@ package graft.io
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthetic fixed-dim fvecs generator — streams records to disk, so
@@ -72,14 +71,7 @@ object FvecsGen {
   * Usage: `runMain graft.io.FvecsCount <path>` */
 object FvecsCount {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("FvecsCount")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SessionTuning.session("FvecsCount")
     val t0 = System.nanoTime()
     val ds = Fvecs.readAuto(spark, args(0)).toDF("vec_id", "embedding")
     val row = ds.agg(

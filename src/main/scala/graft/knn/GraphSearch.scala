@@ -510,105 +510,3 @@ object GraphSearch {
       doc = "LONG-LINKED graph search (the HNSW upper layer flattened / Watts-Strogatz shortcuts): every node gains 2 hash-chosen edges into a 16-node md5 hub pool, making the kNN graph navigable from a handful of seeds - component bridging on clustered corpora (pool >> clusters) and diameter shortcuts on connected ones, both gated in GraphSearchSpec; pool, links, union and every hop replayed in the oracle")
   )
 }
-
-/** Scale measurement for the serving path (SCALING.json): build the
-  * MRDF graph over the pinned mixture corpus at the sweep's α=12000,
-  * then serve 256 sampled queries through [[GraphSearch.beamSearch]]
-  * with coverage-sized entry seeds, reporting build wall, search wall
-  * and recall@10 vs the fused exact top-k.
-  *
-  * Usage: `runMain graft.knn.GraphSearchScale [n] [nSeeds] [beam]
-  * [hops]` */
-object GraphSearchScale {
-  def main(args: Array[String]): Unit = {
-    {
-      val n = if (args.nonEmpty) args(0).toLong else 200000L
-      val nSeeds = if (args.length > 1) args(1).toInt else 4096
-      val beam = if (args.length > 2) args(2).toInt else 8
-      val hops = if (args.length > 3) args(3).toInt else 4
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .appName("GraphSearchScale")
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      val path = s"/root/repo/target/scaling/mix${n / 1000}k_seed42.fvecs"
-      val f = new java.io.File(path)
-      if (!f.exists() || f.length() != n * (4L + 4L * 64)) {
-        Option(f.getParentFile).foreach(_.mkdirs())
-        graft.io.FvecsGen.write(path, n, 64, 42L, 1000)
-      }
-      val vecs = graft.io.Fvecs.readAuto(spark, path)
-        .toDF("vec_id", "embedding").localCheckpoint()
-      val params = graft.mrdf.Mrdf.Params(alpha = 12000)
-      val t0 = System.nanoTime()
-      val edges = graft.mrdf.Mrdf.buildGraph(vecs, params)
-      val nEdges = edges.count()
-      val buildSec = (System.nanoTime() - t0) / 1e9
-      val step = math.max(1L, n / 256L)
-      val queries = vecs.filter(col("vec_id") % step === 0).localCheckpoint()
-      val t1 = System.nanoTime()
-      val got = GraphSearch.beamSearch(vecs, edges, queries,
-        k = 10, beam = beam, hops = hops, nSeeds = nSeeds)
-        .select(col("qid"), col("nbr")).collect()
-      val searchSec = (System.nanoTime() - t1) / 1e9
-      val gotSet = got.map(r => (r.getLong(0), r.getLong(1))).toSet
-      val truth = org.apache.spark.sql.graft.TopKJoin.knn(queries, vecs, 10)
-        .select(col("id"), col("nbr")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      val recall = truth.count(gotSet.contains).toDouble / truth.length
-      println(f"[graph-search-scale] n=$n edges=$nEdges buildSec=$buildSec%.1f " +
-        f"queries=${queries.count()} nSeeds=$nSeeds beam=$beam hops=$hops " +
-        f"searchSec=$searchSec%.1f recall@10=$recall%.4f")
-      // ROUTED arm on the same graph: the router AND its seed table
-      // are index-build artifacts (trained + corpus-assigned once,
-      // measured apart); serving pays only probe + entries + hops.
-      // args(4) sweeps seedsPerList (round-12 verdict #5: the 0.9650
-      // ceiling at seedsPerList=4 was entry-quality-limited), args(5)
-      // the router's Lloyd's iterations.
-      val seedsPerList = if (args.length > 4) args(4).toInt else 4
-      val routerIters = if (args.length > 5) args(5).toInt else 3
-      // args(6) > 1 trains the router on a 1/mod HASH SAMPLE of the
-      // corpus (round-13 finding: full-corpus Lloyd's at 1M cost
-      // 3010 s — 6.8× the graph build; coarse centroids don't need
-      // every point). clusterSeeds still assigns the FULL corpus —
-      // the seed table needs real members — so the floor is one
-      // assignment pass, not routerIters of them.
-      val sampleMod = if (args.length > 6) args(6).toInt else 1
-      val nlist = 1024
-      val t2 = System.nanoTime()
-      val trainSet =
-        if (sampleMod > 1)
-          vecs.filter(pmod(xxhash64(col("vec_id")), lit(sampleMod)) === 0)
-        else vecs
-      val cent = graft.similarity.Kmeans.centroids(trainSet, nlist,
-        routerIters, portable = false)
-      val trainSec = (System.nanoTime() - t2) / 1e9
-      val cseeds = GraphSearch.clusterSeeds(vecs, cent, seedsPerList)
-        .localCheckpoint()
-      val routerSec = (System.nanoTime() - t2) / 1e9
-      System.err.println(f"[graph-search-scale] router train(sampleMod=" +
-        f"$sampleMod)=$trainSec%.1f s, train+seeds=$routerSec%.1f s")
-      // one untimed warmup pays the routed plan's codegen, so the
-      // per-nprobe numbers measure steady-state serving
-      GraphSearch.routedWithCentroids(vecs, edges, queries, cent, cseeds,
-        k = 10, beam = beam, hops = hops, nprobe = 2).count()
-      Seq(2, 3).foreach { nprobe =>
-        val t3 = System.nanoTime()
-        val got2 = GraphSearch.routedWithCentroids(vecs, edges, queries,
-            cent, cseeds, k = 10, beam = beam, hops = hops, nprobe = nprobe)
-          .select(col("qid"), col("nbr")).collect()
-        val routedSec = (System.nanoTime() - t3) / 1e9
-        val got2Set = got2.map(r => (r.getLong(0), r.getLong(1))).toSet
-        val recall2 = truth.count(got2Set.contains).toDouble / truth.length
-        println(f"[graph-search-scale] routed: nlist=$nlist nprobe=$nprobe " +
-          f"seedsPerList=$seedsPerList routerIters=$routerIters " +
-          f"routerBuildSec=$routerSec%.1f " +
-          f"searchSec=$routedSec%.1f recall@10=$recall2%.4f")
-      }
-      spark.stop()
-    }
-  }
-}

@@ -68,8 +68,8 @@ object MrdfQueries {
       // by the fixed-seed spec on testParams. maxIter=2: determinism is
       // a property of every round (sampling, join order, heap merges),
       // so two rounds assert it as strongly as ten — the full-
-      // convergence run is the separately-benchmarked Scalability
-      // path, and rebuilding it here per bench run cost 11 s for a
+      // convergence run is the separately-benchmarked `graft.Scale
+      // mrdf` point, and rebuilding it here per bench run cost 11 s for a
       // 1-row self-oracle (round-4 verdict #3).
       "mrdf_graph_hash",
       (s, dir) => graft.Tuning.withIterativeBuild(s) {

@@ -43,7 +43,7 @@ object IvfIndexStore {
   /** Nearest-centroid assignment of (vec_id, embedding) points — shared
     * by build, upsert, list splits, the IVF/SemDeDup lists and the
     * graph router's cluster seeds — as ONE narrow codegen projection.
-    * Round-15, measured at 1M×1024 (GraphIndexScale): the former
+    * Round-15, measured at 1M×1024 (`graft.Scale graph_index`): the former
     * broadcast-join + per-id argmin aggregation streamed N×nlist
     * candidate rows (cluster_seeds 851.8 s of a 937.5 s index write
     * with the vector inside each candidate struct; 471.7 s with the

@@ -42,7 +42,8 @@ import graft.knn.GraphIndexStore
   * contract; the HIGH-RATE path is [[GraphIndexStore.ingestBatchApprox]]
   * (arrivals enter through the STORED router, beam-bounded candidates,
   * never a corpus rescan), measured per batch at 200k in
-  * [[StreamGraphIngestScale]] / SCALING `round14_stream_graph_ingest`. */
+  * the `stream_graph_ingest` point of [[graft.Scale]] / SCALING
+  * `round14_stream_graph_ingest`. */
 object StreamGraphIngest {
 
   private val K = 10

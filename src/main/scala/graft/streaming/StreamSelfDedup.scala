@@ -124,7 +124,7 @@ object StreamSelfDedup {
     * earlier batch. Empty waves are skipped (the q222 empty-chunk
     * rule); two far-future sentinel arrivals close the stream (the
     * two-sentinel timer contract). Returns (src, data parts). */
-  private def buildWaveReplay(spark: SparkSession,
+  private[graft] def buildWaveReplay(spark: SparkSession,
       docs: DataFrame): (String, Int) = {
     val src = StreamingPipelines.tempDirCleanedOnExit("graft-stream-selfdedup")
     val epochUs = StreamingPipelines.DocsEpochUs
@@ -158,12 +158,8 @@ object StreamSelfDedup {
 
   private val waveReplaySrc = TrieMap.empty[String, (String, Int)]
 
-  /** Spec hook: build the wave replay for a custom corpus. */
-  private[streaming] def buildWaveReplayForTest(spark: SparkSession,
-      docs: DataFrame): (String, Int) = buildWaveReplay(spark, docs)
-
   /** Full replay for the declared row and specs. */
-  private[streaming] def runReplay(spark: SparkSession, docs: DataFrame,
+  private[graft] def runReplay(spark: SparkSession, docs: DataFrame,
       srcDir: Option[(String, Int)] = None,
       onProgress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress]
         => Unit = _ => ()): DataFrame = {

@@ -179,7 +179,7 @@ object StreamSubstr {
     * the hard `Chunks + 2` expectation, erroring on VALID input).
     * Returns (src dir, number of DATA parts written) so the caller
     * derives the expected batch count from what actually exists. */
-  private def buildChunkReplay(spark: SparkSession,
+  private[graft] def buildChunkReplay(spark: SparkSession,
       docs: DataFrame): (String, Int) = {
     val src = StreamingPipelines.tempDirCleanedOnExit("graft-stream-substr")
     val epochUs = StreamingPipelines.DocsEpochUs
@@ -235,16 +235,11 @@ object StreamSubstr {
 
   private val chunkReplaySrc = TrieMap.empty[String, (String, Int)]
 
-  /** Spec hook: build the chunked replay source for a custom corpus;
-    * returns (src dir, data parts written). */
-  private[streaming] def buildChunkReplayForTest(spark: SparkSession,
-      docs: DataFrame): (String, Int) = buildChunkReplay(spark, docs)
-
   /** Full replay for the declared row and specs: `corpus` = the static
     * reference slice, `arriving` = the streamed documents. Asserts the
     * chunk arrivals actually written + the two sentinels all executed
     * as real micro-batches. */
-  private[streaming] def runReplay(spark: SparkSession, corpus: DataFrame,
+  private[graft] def runReplay(spark: SparkSession, corpus: DataFrame,
       arriving: DataFrame, srcDir: Option[(String, Int)] = None): DataFrame = {
     val (src, nParts) = srcDir.getOrElse(buildChunkReplay(spark, arriving))
     val posting = staticGramTable(corpus).localCheckpoint()

@@ -576,16 +576,20 @@ object StreamingPipelines {
     * cache leaked one dir per JVM run). Within-process staleness is
     * impossible by contract — testdata dirs are immutable for a
     * process lifetime (driver regenerates them only between rounds). */
-  private[streaming] def tempDirCleanedOnExit(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(d.toFile)
-    }))
+  private[graft] def tempDirCleanedOnExit(prefix: String,
+      parent: Option[String] = None): String = {
+    val d = parent match {
+      case Some(p) => java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(p), prefix)
+      case None => java.nio.file.Files.createTempDirectory(prefix)
+    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(d.toFile)))
     d.toString
+  }
+
+  private def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
+    f.delete(); ()
   }
 
   /** One events-replay source dir per (process, sfDir), written as a
@@ -614,7 +618,7 @@ object StreamingPipelines {
     * arrivals by mtime, and the multi-batch replay oracles depend on
     * batch k sorting strictly before batch k+1, so a refused mtime
     * change must fail loudly, not silently reorder the batches. */
-  private[streaming] def writeReplayBatch(part: DataFrame, srcDir: String, n: Int): Unit = {
+  private[graft] def writeReplayBatch(part: DataFrame, srcDir: String, n: Int): Unit = {
     val tmp = java.nio.file.Files.createTempDirectory("graft-replay-stage")
     part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val f = tmp.toFile.listFiles()
@@ -687,31 +691,35 @@ object StreamingPipelines {
     * AvailableNow backfills into a MEMORY sink: their checkpoint is
     * ephemeral by construction (the result dies with the JVM; a crash
     * means rerun, never resume), so checkpoint durability buys
-    * nothing. Default to the RAM-backed tmpfs when the host has one;
-    * `SPARK_GRAFT_STREAM_SCRATCH` overrides (a production deployment
-    * of a CONTINUOUS pipeline points the same knob — Spark's
-    * checkpointLocation — at durable storage instead; this default is
-    * scoped to the replay harness, not baked into any query). */
+    * nothing. Default to the RAM-backed tmpfs when the host has one
+    * with room ([[scratchBase]]); `SPARK_GRAFT_STREAM_SCRATCH`
+    * overrides (a production deployment of a CONTINUOUS pipeline
+    * points the same knob — Spark's checkpointLocation — at durable
+    * storage instead; this default is scoped to the replay harness,
+    * not baked into any query). Each query's checkpoint subdir is
+    * deleted once the query stops ([[awaitOrFail]]); the root itself
+    * goes at JVM exit. */
   private[streaming] lazy val scratchRoot: String = {
-    val base = sys.env.get("SPARK_GRAFT_STREAM_SCRATCH").orElse {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) Some("/dev/shm") else None
-    }
-    base match {
-      case Some(b) =>
-        val d = java.nio.file.Files.createTempDirectory(
-          java.nio.file.Paths.get(b), "graft-stream-scratch")
-        Runtime.getRuntime.addShutdownHook(new Thread(() => {
-          def rm(f: java.io.File): Unit = {
-            Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-            f.delete(); ()
-          }
-          rm(d.toFile)
-        }))
-        d.toString
-      case None => tempDirCleanedOnExit("graft-stream-scratch")
-    }
+    val shm = new java.io.File(ShmDir)
+    tempDirCleanedOnExit("graft-stream-scratch", scratchBase(
+      sys.env.get("SPARK_GRAFT_STREAM_SCRATCH"),
+      if (shm.isDirectory && shm.canWrite) Some(shm.getUsableSpace) else None))
   }
+
+  private[streaming] val ShmDir = "/dev/shm"
+
+  /** Least usable space for [[ShmDir]] to host the replay scratch. A
+    * container's default tmpfs is 64 MiB, which a few concurrent
+    * replays' state-store files can fill. */
+  private[streaming] val ShmMinUsableBytes: Long = 1L << 30
+
+  /** Where [[scratchRoot]] lives: the override when set, else the
+    * tmpfs when it is writable (`shmUsableBytes` defined) with at least
+    * [[ShmMinUsableBytes]] free, else the JVM temp dir (`None`). */
+  private[streaming] def scratchBase(overrideDir: Option[String],
+      shmUsableBytes: Option[Long]): Option[String] =
+    overrideDir.orElse(
+      shmUsableBytes.filter(_ >= ShmMinUsableBytes).map(_ => ShmDir))
 
   /** A fresh checkpoint dir under [[scratchRoot]]. */
   private[streaming] def scratchCheckpointDir(prefix: String): String =
@@ -765,9 +773,22 @@ object StreamingPipelines {
     // A timed-out replay would hand a TRUNCATED memory table to the
     // oracle diff — fail loudly instead of producing a confusing
     // row-mismatch (or a coincidental pass).
-    val finished = try q.awaitTermination(timeoutMs) finally q.stop()
+    val finished =
+      try q.awaitTermination(timeoutMs)
+      finally { q.stop(); dropScratchCheckpoint(q) }
     if (!finished)
       sys.error(s"streaming replay did not finish within ${timeoutMs} ms")
+  }
+
+  /** Delete a stopped query's checkpoint dir when it lies under
+    * [[scratchRoot]]; a checkpoint anywhere else is left alone. */
+  private def dropScratchCheckpoint(
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = q match {
+    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
+      val dir = java.nio.file.Paths.get(
+        new java.net.URI(w.streamingQuery.resolvedCheckpointRoot).getPath)
+      if (dir.startsWith(java.nio.file.Paths.get(scratchRoot))) deleteRecursively(dir.toFile)
+    case _ => ()
   }
 
   /** [[awaitOrFail]] + an executed-batch-count assertion: a multi-batch

@@ -230,85 +230,6 @@ object ExactSubstr {
     graft.Materialized.table(s, dir, "substr_spans")(
       sharedSubstrings(Tables.load(s, dir, "documents")))
 
-  /** SCALING.json measurement at ≥ 1M tokens with REALISTIC (non-
-    * replica) duplication (round-11 verdict #7): the sf0.1 documents
-    * plus `nDerived` synthetic "quoting" documents, each embedding one
-    * seeded 55–200-token slice of a partner document between unique
-    * filler tokens — the partial-copy-at-arbitrary-offset pattern real
-    * corpora exhibit (quotations, boilerplate reuse), nothing
-    * replicated whole. Reports corpus size, span-find and remove-span
-    * walls, span/removed-token counts and the droppedHeavyGrams cap
-    * effect.
-    *
-    * Usage: `runMain graft.text.ExactSubstrScale [sfDir] [nDerived]`
-    * (the top-level runner object at the end of this file). */
-  /** The "quote web" stress corpus shared by the batch and streamed
-    * scale harnesses: the real documents plus `nDerived` synthetic
-    * docs, each quoting a hash-chosen 55–200-token slice of a
-    * hash-chosen real doc between unique filler — heavy genuine
-    * sharing, deterministic, no RNG. */
-  private[graft] def quoteWebCorpus(
-      spark: org.apache.spark.sql.SparkSession, sfDir: String,
-      nDerived: Int): DataFrame = {
-    val docs = Tables.load(spark, sfDir, "documents")
-      .select(col("doc_id"), col("text"))
-    val nDocs = docs.count()
-    val gen = spark.range(nDerived.toLong)
-      .select(col("id"),
-        pmod(xxhash64(lit("base"), col("id")), lit(nDocs)).as("pid"),
-        xxhash64(lit("len"), col("id")).as("lh"),
-        xxhash64(lit("off"), col("id")).as("oh"))
-    val quoted = gen
-      .join(docs.select(col("doc_id").as("pid"), col("text")), "pid")
-      .select(col("id"), split(col("text"), " ").as("ws"), col("lh"), col("oh"))
-      .withColumn("t", size(col("ws")))
-      .filter(col("t") >= 60)
-      .withColumn("qlen",
-        least(pmod(col("lh"), lit(146)) + 55, col("t").cast("long")).cast("int"))
-      .withColumn("qoff",
-        (pmod(col("oh"), greatest(col("t") - col("qlen") + 1, lit(1)).cast("long"))
-          + 1).cast("int"))
-      .select(col("id"),
-        concat_ws(" ", slice(col("ws"), col("qoff"), col("qlen"))).as("quote"))
-    def filler(tag: String) = concat_ws(" ",
-      transform(sequence(lit(0), lit(29)),
-        i => concat(lit(tag), col("id"), lit("x"), i)))
-    val derived = quoted.select((col("id") + 1000000L).as("doc_id"),
-      concat_ws(" ", filler("fa"), col("quote"), filler("fb")).as("text"))
-    docs.unionByName(derived)
-  }
-
-  private[text] def runScale(args: Array[String]): Unit = {
-    val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val nDerived = if (args.length > 1) args(1).toInt else 15000
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("ExactSubstrScale")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val corpus = quoteWebCorpus(spark, sfDir, nDerived).localCheckpoint()
-    val stats = corpus.agg(count(lit(1)),
-      sum(size(split(col("text"), " ")))).collect()(0)
-    println(s"[substr-scale] corpus docs=${stats.getLong(0)} " +
-      s"tokens=${stats.getLong(1)}")
-    val t0 = System.nanoTime()
-    val spans = sharedSubstrings(corpus).localCheckpoint()
-    val nSpans = spans.count()
-    val spanSec = (System.nanoTime() - t0) / 1e9
-    val dropped = droppedHeavyGrams(corpus).collect()(0)
-    val t1 = System.nanoTime()
-    val removed = substrDedupTextFrom(corpus, spans)
-      .agg(sum(col("n_removed"))).collect()(0).getLong(0)
-    val dedupSec = (System.nanoTime() - t1) / 1e9
-    println(f"[substr-scale] spans=$nSpans spanSec=$spanSec%.1f " +
-      f"removedTokens=$removed dedupSec=$dedupSec%.1f " +
-      s"droppedHeavyGrams=(${dropped.getLong(0)}, ${dropped.get(1)})")
-    spark.stop()
-  }
-
   val declared: Seq[Declared] = Seq(
     Declared(
       "q213_shared_substrings",
@@ -324,9 +245,4 @@ object ExactSubstr {
       Some(substrDedupTextOracle(MinTokens, MaxOcc)),
       doc = "Remove-span output of exact substring dedup: per-document surviving text after cutting every non-canonical (non-corpus-first) occurrence of each shared >= 50-token substring, overlapping ranges merged; shares q213's materialized span table")
   )
-}
-
-/** CLI for [[ExactSubstr.runScale]]. */
-object ExactSubstrScale {
-  def main(args: Array[String]): Unit = ExactSubstr.runScale(args)
 }

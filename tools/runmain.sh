@@ -1,6 +1,11 @@
 #!/bin/bash
 # Run a graft main without sbt (no project lock): same JDK17 add-opens
-# and heap as build.sbt's forked run.
+# and heap as build.sbt's forked run. Session settings (master, UI,
+# timezone) come from graft.SessionTuning.session.
+#
+# Usage: tools/runmain.sh <main class> [args...]
+#   e.g. tools/runmain.sh graft.Scale graph_search n=200000 seedsPerList=8
+#        (one scale point, one JSON line; see graft.Scale for the points)
 CLS="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -16,7 +21,6 @@ exec java \
   --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*:$(ls -d /root/.cache/coursier/v1/https/*/scala-lang/* 2>/dev/null | head -0)" \
   "$CLS" "$@"
