@@ -23,14 +23,18 @@ import graft.linalg.Distances
   *  - centroid sampling is a deterministic per-path bottom-ρ by
   *    xxhash64(seed, iter, id) — order-independent, cluster-safe,
   *    replacing the reference's driver-side reservoir;
-  *  - nearest-centroid assignment is a broadcast join + per-id argmin
-  *    window (the centroid set is ≤ ρ × #oversized-paths rows);
+  *  - nearest-centroid assignment extends each oversized row's path:
+  *    on small levels by the `NearestCentroidIdx` codegen map over the
+  *    driver-collected centroids (narrow, no join), past the driver
+  *    payload bound by a join + per-id `min(struct(d, cidx, …))` hash
+  *    aggregate (the centroid set is ≤ ρ × #oversized-paths rows);
   *  - block-local NN-Descent runs inside `flatMapGroups` per path —
   *    blocks ≤ α by construction, so they fit an executor, and all
   *    blocks run in parallel (the reference collected every block to
   *    the driver and looped sequentially, mrdf.py:148-153);
-  *  - graph merge is union + per-id k-min window; convergence is one
-  *    anti-join count. `localCheckpoint` truncates lineage per round
+  *  - graph merge is union + the per-id `TaggedTopKByWeight` top-k
+  *    aggregate; convergence Δ is one count of its `!is_old` rows (the
+  *    edges new to the graph). `localCheckpoint` truncates lineage per round
   *    (replacing collect+parallelize at mrdf.py:159,192).
   *
   * At 100 TB the same plan holds: division is O(iterations) broadcast
