@@ -126,7 +126,9 @@ object Bench {
   private[graft] final case class History(total: Double, n: Int,
       cleanN: Int, queries: Map[String, Double])
 
-  private val HistoryPath = "/root/repo/target/bench_history.json"
+  // Artifacts resolve against the working directory (the checkout that
+  // runs the bench), so a second checkout never writes into this one.
+  private val HistoryPath = "target/bench_history.json"
 
   /** Load the history file; bootstrap from the repo's last full-line
     * artifact (bench_out.json) when absent — accepting its values as
@@ -143,7 +145,7 @@ object Bench {
     * artifacts never qualify as a baseline. */
   private[graft] def loadHistory(sfDir: String,
       historyPath: String = HistoryPath,
-      fallbackPath: String = "/root/repo/bench_out.json"): Option[History] = {
+      fallbackPath: String = "bench_out.json"): Option[History] = {
     def parse(path: String, requireClean: Boolean): Option[History] =
       try {
         val f = new java.io.File(path)
@@ -664,7 +666,7 @@ object Bench {
         val line = fullLine(pub.total, qs,
           env(noiseListJson(pub.noiseSuspect)) + scalingNote,
           errJsonFull(errors.toSeq), sfDir)
-        Files.writeString(Paths.get("/root/repo/bench_out.json"), line)
+        Files.writeString(Paths.get("bench_out.json"), line)
         println(line)
         println(renderCompact(pub.pmin, pub.total, env, errors.toSeq, sfDir,
           pub.noiseSuspect))
@@ -853,7 +855,7 @@ object Bench {
             // queries timed via full row materialization because count()
             // eliminated their declared joins (action visible per artifact)
             rowMaterialized.map(jq).mkString(""""row_materialized":[""", ",", "]}"))
-      Files.writeString(Paths.get("/root/repo/bench_detail.json"), detail)
+      Files.writeString(Paths.get("bench_detail.json"), detail)
     }
 
     spark.stop()
@@ -1033,7 +1035,7 @@ object Bench {
   private def stampScaling(g: PinnedRecallGate, recall: Double,
       wallSec: Double, pass: Boolean): Unit = {
     try {
-      val f = new java.io.File("/root/repo/SCALING.json")
+      val f = new java.io.File("SCALING.json")
       if (!f.exists()) return
       val p = g.params
       val om = new com.fasterxml.jackson.databind.ObjectMapper()

@@ -35,8 +35,8 @@ object Main {
     val bruteforce = a.getOrElse("--bruteforce", "false").toBoolean
     val maxIter = if (maxIter0 <= 0) Int.MaxValue else maxIter0
 
-    // Size-dispatched: large fixed-dim files stream in as record-aligned
-    // chunks across executors (no whole-file driver ingest).
+    // Fixed-dim files stream in as record-aligned splits across
+    // executors at any size (no whole-file driver ingest).
     val vecs = io.Fvecs.readAuto(spark, input, inputMax)
       .toDF("vec_id", "embedding")
 
@@ -75,8 +75,8 @@ object GetRecallIvecs {
     val gtPath = a.getOrElse("--groundtruth", sys.error("--groundtruth required"))
     val graphPath = a.getOrElse("--graph", sys.error("--graph required"))
     val k = a.getOrElse("--k", "0").toInt
-    // readAutoIvecs: driver codec for small gt files, the splittable
-    // distributed read past the size threshold (bigann-scale gt)
+    // readAutoIvecs: the splittable scan at any size (bigann-scale gt);
+    // only a variable-dim file falls back to the driver codec
     val truth = io.Fvecs.readAutoIvecs(spark, gtPath, k = k)
       .map { case (id, nbrs) => (id, nbrs.map(_.toLong).toSeq) }
       .toDF("id", "nbrs")

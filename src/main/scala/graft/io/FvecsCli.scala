@@ -64,9 +64,9 @@ object FvecsGen {
 }
 
 /** Ingest check: reads an fvecs file through [[Fvecs.readAuto]] (the
-  * distributed chunked path for large files) and prints record count,
-  * dim, and a content checksum — the driver-OOM-free ingest proof for
-  * files far larger than the driver heap.
+  * record-aligned DataSource V2 scan) and prints record count, dim, and
+  * a content checksum — the driver-OOM-free ingest proof for files far
+  * larger than the driver heap.
   *
   * Usage: `runMain graft.io.FvecsCount <path>` */
 object FvecsCount {

@@ -8,6 +8,21 @@ import graft.SparkSpec
 
 class IoSpecs extends SparkSpec {
 
+  /** Runs `f` with SQL confs set, restoring the previous values. */
+  private def withConf[T](kvs: (String, String)*)(f: => T): T = {
+    val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Splits of at most `bytes` each: Spark's file-split rule caps every
+    * split at `spark.sql.files.maxPartitionBytes`. */
+  private def withMaxSplit[T](bytes: Long)(f: => T): T =
+    withConf("spark.sql.files.maxPartitionBytes" -> bytes.toString)(f)
+
   test("graph text format round-trips the reference's (id, [nbrs]) lines") {
     import spark.implicits._
     val adj = Seq((0L, Seq(1L, 2L)), (1L, Seq(0L)), (2L, Seq.empty[Long]))
@@ -121,18 +136,24 @@ class IoSpecs extends SparkSpec {
     val vecs = (0 until 5000).map(_ => Array.fill(dim)(rnd.nextFloat()))
     val f = Files.createTempFile("graft-dist", ".fvecs").toString
     Fvecs.writeFvecsFile(f, vecs)
-    // chunkBytes small enough to force many record-aligned chunks
-    val dist = Fvecs.readDistributed(spark, f, chunkBytes = 16L * (4 + 4 * dim))
-      .collect().sortBy(_._1)
-    assert(dist.length == 5000)
-    dist.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt)), s"id $id") }
-    // inputMax caps records, same convention as the driver codec
-    assert(Fvecs.readDistributed(spark, f, inputMax = 37,
-      chunkBytes = 16L * (4 + 4 * dim)).count() == 37)
-    // variable-dim files are rejected (readAuto falls back to driver)
+    // splits small enough to force many record-aligned chunks
+    withMaxSplit(16L * (4 + 4 * dim)) {
+      val ds = Fvecs.readAuto(spark, f)
+      assert(ds.rdd.getNumPartitions > 1)
+      val dist = ds.collect().sortBy(_._1)
+      assert(dist.length == 5000)
+      dist.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt)), s"id $id") }
+      // inputMax caps records, same convention as the driver codec
+      val capped = Fvecs.readAuto(spark, f, inputMax = 37).collect().sortBy(_._1)
+      assert(capped.length == 37)
+      capped.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt)), s"id $id") }
+    }
+    // variable-dim files are rejected by the scan; readAuto falls back
+    // to the driver codec
     val vf = Files.createTempFile("graft-vardim", ".fvecs").toString
     Fvecs.writeFvecsFile(vf, Seq(Array.fill(8)(1f), Array.fill(9)(2f)))
-    intercept[IllegalArgumentException](Fvecs.readDistributed(spark, vf).collect())
+    intercept[IllegalArgumentException](
+      v2.VecsKind.Fvecs.probe(vf, spark.sparkContext.hadoopConfiguration))
     assert(Fvecs.readAuto(spark, vf).count() == 2)
   }
 
@@ -143,27 +164,28 @@ class IoSpecs extends SparkSpec {
     val f = Files.createTempFile("graft-dsv2", ".fvecs").toString
     Fvecs.writeFvecsFile(f, vecs)
     val stride = 4 + 4 * dim
-    val df = spark.read.format("fvecs")
-      .option("chunkbytes", (100 * stride).toString).load(f)
-    // full read equals the driver codec, ids intact
-    val rows = df.collect().sortBy(_.getLong(0))
-    assert(rows.length == 3000)
-    rows.foreach { r =>
-      assert(r.getSeq[Float](1).toArray.sameElements(vecs(r.getLong(0).toInt)))
+    withMaxSplit(100L * stride) {
+      val df = spark.read.format("fvecs").load(f)
+      // full read equals the driver codec, ids intact
+      val rows = df.collect().sortBy(_.getLong(0))
+      assert(rows.length == 3000)
+      rows.foreach { r =>
+        assert(r.getSeq[Float](1).toArray.sameElements(vecs(r.getLong(0).toInt)))
+      }
+      // limit pushdown: the scan plans only the partitions the limit needs
+      val limited = df.limit(150)
+      val scanDesc = limited.queryExecution.executedPlan.toString
+      assert(scanDesc.contains("limit=150"), s"limit not pushed:\n$scanDesc")
+      assert(limited.count() == 150)
+      // column pruning: id-only projection decodes no vectors (zero file
+      // IO per the reader contract) and still yields every id
+      val ids = df.select("id")
+      assert(ids.queryExecution.executedPlan.toString.contains("columns=id"))
+      assert(ids.collect().map(_.getLong(0)).sorted.toSeq == (0L until 3000L))
+      // multi-chunk partitioning is record-aligned: no id dup/loss at
+      // chunk boundaries (3000 recs / 100-rec chunks = 30 partitions)
+      assert(df.rdd.getNumPartitions == 30)
     }
-    // limit pushdown: the scan plans only the partitions the limit needs
-    val limited = df.limit(150)
-    val scanDesc = limited.queryExecution.executedPlan.toString
-    assert(scanDesc.contains("limit=150"), s"limit not pushed:\n$scanDesc")
-    assert(limited.count() == 150)
-    // column pruning: id-only projection decodes no vectors (zero file
-    // IO per the reader contract) and still yields every id
-    val ids = df.select("id")
-    assert(ids.queryExecution.executedPlan.toString.contains("columns=id"))
-    assert(ids.collect().map(_.getLong(0)).sorted.toSeq == (0L until 3000L))
-    // multi-chunk partitioning is record-aligned: no id dup/loss at
-    // chunk boundaries (3000 recs / 100-rec chunks = 30 partitions)
-    assert(df.rdd.getNumPartitions == 30)
   }
 
   test("distributed bvecs read equals the driver codec (uint8→float), ids intact") {
@@ -172,19 +194,21 @@ class IoSpecs extends SparkSpec {
     val vecs = (0 until 4000).map(_ => Array.fill(dim)(rnd.nextInt(256)))
     val f = Files.createTempFile("graft-dist", ".bvecs").toString
     Fvecs.writeBvecsFile(f, vecs)
-    // chunkBytes small enough to force many record-aligned chunks
+    // splits small enough to force many record-aligned chunks
     // (stride = 4 + dim for uint8 components, NOT 4 + 4·dim)
-    val dist = Fvecs.readDistributedBvecs(spark, f, chunkBytes = 16L * (4 + dim))
-      .collect().sortBy(_._1)
-    assert(dist.length == 4000)
-    dist.foreach { case (id, v) =>
-      assert(v.sameElements(vecs(id.toInt).map(_.toFloat)), s"id $id")
+    withMaxSplit(16L * (4 + dim)) {
+      // readAuto sniffs the extension: .bvecs scans as uint8
+      val ds = Fvecs.readAuto(spark, f)
+      assert(ds.rdd.getNumPartitions > 1)
+      val dist = ds.collect().sortBy(_._1)
+      assert(dist.length == 4000)
+      dist.foreach { case (id, v) =>
+        assert(v.sameElements(vecs(id.toInt).map(_.toFloat)), s"id $id")
+      }
+      // inputMax caps records, same convention as the driver codec
+      assert(Fvecs.readAuto(spark, f, inputMax = 23).count() == 23)
     }
-    // inputMax caps records, same convention as the driver codec
-    assert(Fvecs.readDistributedBvecs(spark, f, inputMax = 23,
-      chunkBytes = 16L * (4 + dim)).count() == 23)
-    // readAuto sniffs the extension: small file → driver bvecs codec,
-    // same rows either way
+    // one default-sized split, same rows
     val auto = Fvecs.readAuto(spark, f).collect().sortBy(_._1)
     assert(auto.length == 4000)
     auto.foreach { case (id, v) =>
@@ -199,23 +223,24 @@ class IoSpecs extends SparkSpec {
     val f = Files.createTempFile("graft-dsv2", ".bvecs").toString
     Fvecs.writeBvecsFile(f, vecs)
     val stride = 4 + dim
-    val df = spark.read.format("bvecs")
-      .option("chunkbytes", (100 * stride).toString).load(f)
-    val rows = df.collect().sortBy(_.getLong(0))
-    assert(rows.length == 2000)
-    rows.foreach { r =>
-      assert(r.getSeq[Float](1).toArray
-        .sameElements(vecs(r.getLong(0).toInt).map(_.toFloat)))
+    withMaxSplit(100L * stride) {
+      val df = spark.read.format("bvecs").load(f)
+      val rows = df.collect().sortBy(_.getLong(0))
+      assert(rows.length == 2000)
+      rows.foreach { r =>
+        assert(r.getSeq[Float](1).toArray
+          .sameElements(vecs(r.getLong(0).toInt).map(_.toFloat)))
+      }
+      // same pushdown contract as the fvecs source
+      val limited = df.limit(150)
+      assert(limited.queryExecution.executedPlan.toString.contains("limit=150"))
+      assert(limited.count() == 150)
+      val ids = df.select("id")
+      assert(ids.queryExecution.executedPlan.toString.contains("columns=id"))
+      assert(ids.collect().map(_.getLong(0)).sorted.toSeq == (0L until 2000L))
+      // record-aligned partitioning at the uint8 stride
+      assert(df.rdd.getNumPartitions == 20)
     }
-    // same pushdown contract as the fvecs source
-    val limited = df.limit(150)
-    assert(limited.queryExecution.executedPlan.toString.contains("limit=150"))
-    assert(limited.count() == 150)
-    val ids = df.select("id")
-    assert(ids.queryExecution.executedPlan.toString.contains("columns=id"))
-    assert(ids.collect().map(_.getLong(0)).sorted.toSeq == (0L until 2000L))
-    // record-aligned partitioning at the uint8 stride
-    assert(df.rdd.getNumPartitions == 20)
   }
 
   test("distributed ivecs read equals the driver codec, k-truncation intact") {
@@ -224,23 +249,26 @@ class IoSpecs extends SparkSpec {
     val vecs = (0 until 3000).map(_ => Array.fill(dim)(rnd.nextInt()))
     val f = Files.createTempFile("graft-dist", ".ivecs").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f), Fvecs.encodeIvecs(vecs))
-    // chunkBytes small enough to force many record-aligned chunks
-    val dist = Fvecs.readDistributedIvecs(spark, f, chunkBytes = 16L * (4 + 4 * dim))
-      .collect().sortBy(_._1)
-    assert(dist.length == 3000)
-    dist.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt)), s"id $id") }
-    // ground-truth k-truncation, same convention as decodeIvecs
-    val k3 = Fvecs.readDistributedIvecs(spark, f, k = 3,
-        chunkBytes = 16L * (4 + 4 * dim))
-      .collect().sortBy(_._1)
-    k3.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt).take(3))) }
-    // inputMax caps records
-    assert(Fvecs.readDistributedIvecs(spark, f, inputMax = 19,
-      chunkBytes = 16L * (4 + 4 * dim)).count() == 19)
-    // readAutoIvecs: small file → driver codec, same rows either way
-    val auto = Fvecs.readAutoIvecs(spark, f, k = 3).collect().sortBy(_._1)
-    assert(auto.length == 3000)
-    auto.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt).take(3))) }
+    // splits small enough to force many record-aligned chunks
+    withMaxSplit(16L * (4 + 4 * dim)) {
+      val ds = Fvecs.readAutoIvecs(spark, f)
+      assert(ds.rdd.getNumPartitions > 1)
+      val dist = ds.collect().sortBy(_._1)
+      assert(dist.length == 3000)
+      dist.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt)), s"id $id") }
+      // ground-truth k-truncation, same convention as decodeIvecs
+      val k3 = Fvecs.readAutoIvecs(spark, f, k = 3).collect().sortBy(_._1)
+      assert(k3.length == 3000)
+      k3.foreach { case (id, v) => assert(v.sameElements(vecs(id.toInt).take(3))) }
+      // inputMax caps records
+      assert(Fvecs.readAutoIvecs(spark, f, inputMax = 19).count() == 19)
+    }
+    // variable-dim ground truth falls back to the driver codec, k intact
+    val vf = Files.createTempFile("graft-vardim", ".ivecs").toString
+    java.nio.file.Files.write(java.nio.file.Paths.get(vf),
+      Fvecs.encodeIvecs(Seq(Array(1, 2, 3, 4), Array(5, 6, 7))))
+    assert(Fvecs.readAutoIvecs(spark, vf, k = 3).collect().sortBy(_._1)
+      .map(_._2.toSeq).toSeq == Seq(Seq(1, 2, 3), Seq(5, 6, 7)))
   }
 
   test("readAuto mis-extension tripwires: .ivecs never decodes as floats, and vice versa") {
@@ -265,26 +293,54 @@ class IoSpecs extends SparkSpec {
     val f = Files.createTempFile("graft-dsv2", ".ivecs").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(f), Fvecs.encodeIvecs(vecs))
     val stride = 4 + 4 * dim
-    val df = spark.read.format("ivecs")
-      .option("chunkbytes", (100 * stride).toString).load(f)
-    // int-element schema, full read equals the driver codec
-    assert(df.schema("vec").dataType ==
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.IntegerType, containsNull = false))
-    val rows = df.collect().sortBy(_.getLong(0))
-    assert(rows.length == 2000)
-    rows.foreach { r =>
-      assert(r.getSeq[Int](1).toArray.sameElements(vecs(r.getLong(0).toInt)))
+    withMaxSplit(100L * stride) {
+      val df = spark.read.format("ivecs").load(f)
+      // int-element schema, full read equals the driver codec
+      assert(df.schema("vec").dataType ==
+        org.apache.spark.sql.types.ArrayType(
+          org.apache.spark.sql.types.IntegerType, containsNull = false))
+      val rows = df.collect().sortBy(_.getLong(0))
+      assert(rows.length == 2000)
+      rows.foreach { r =>
+        assert(r.getSeq[Int](1).toArray.sameElements(vecs(r.getLong(0).toInt)))
+      }
+      // same pushdown contract as the fvecs/bvecs sources
+      val limited = df.limit(150)
+      assert(limited.queryExecution.executedPlan.toString.contains("limit=150"))
+      assert(limited.count() == 150)
+      val ids = df.select("id")
+      assert(ids.queryExecution.executedPlan.toString.contains("columns=id"))
+      assert(ids.collect().map(_.getLong(0)).sorted.toSeq == (0L until 2000L))
+      // record-aligned partitioning at the int32 stride
+      assert(df.rdd.getNumPartitions == 20)
     }
-    // same pushdown contract as the fvecs/bvecs sources
-    val limited = df.limit(150)
-    assert(limited.queryExecution.executedPlan.toString.contains("limit=150"))
-    assert(limited.count() == 150)
-    val ids = df.select("id")
-    assert(ids.queryExecution.executedPlan.toString.contains("columns=id"))
-    assert(ids.collect().map(_.getLong(0)).sorted.toSeq == (0L until 2000L))
-    // record-aligned partitioning at the int32 stride
-    assert(df.rdd.getNumPartitions == 20)
+  }
+
+  test("readAuto plans the v2 scan at any size: no LocalTableScan, one split per core") {
+    val dim = 8
+    val f = Files.createTempFile("graft-scan", ".fvecs").toString
+    Fvecs.writeFvecsFile(f, Seq.tabulate(50)(i => Array.fill(dim)(i.toFloat)))
+    val b = Files.createTempFile("graft-scan", ".bvecs").toString
+    Fvecs.writeBvecsFile(b, Seq.tabulate(50)(i => Array.fill(dim)(i)))
+    for (path <- Seq(f, b)) {
+      val plan = Fvecs.readAuto(spark, path).toDF("vec_id", "embedding")
+        .queryExecution.executedPlan.toString
+      assert(plan.contains("BatchScan"), s"$path:\n$plan")
+      assert(!plan.contains("LocalTableScan"), s"$path:\n$plan")
+    }
+    // N cores × 1 MiB: Spark's split rule plans one split per core
+    val cores = spark.sparkContext.defaultParallelism
+    val stride = 4 + 4 * 64
+    val recs = (cores.toLong << 20) / stride
+    val big = Files.createTempFile("graft-scan-big", ".fvecs").toString
+    FvecsGen.write(big, recs, 64, seed = 5L, clusters = 0)
+    withConf("spark.sql.files.openCostInBytes" -> (64L << 10).toString) {
+      val ds = Fvecs.readAuto(spark, big)
+      assert(ds.rdd.getNumPartitions >= cores,
+        s"${ds.rdd.getNumPartitions} splits for $cores cores")
+      assert(ds.count() == recs)
+    }
+    new java.io.File(big).delete()
   }
 
   test("salted join equals plain join under key skew") {

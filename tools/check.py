@@ -13,6 +13,8 @@ oracle-cost regressions (the round-4 driver-timeout killer) are visible.
 """
 import duckdb, json, math, os, subprocess, sys, glob, time
 
+# sbt runs in this script's own checkout, whatever the caller's cwd
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sf_dir = "/root/testdata/sf0.01"
 only = None
 run = True
@@ -35,7 +37,7 @@ out = "/tmp/verify_out_" + os.path.basename(sf_dir.rstrip("/"))
 
 if run:
     r = subprocess.run(["sbt", "--batch", f"runMain graft.Verify {sf_dir} {out}"],
-                       cwd="/root/repo", capture_output=True, text=True)
+                       cwd=REPO, capture_output=True, text=True)
     sys.stdout.write(r.stdout[-4000:])
     if r.returncode != 0:
         sys.stderr.write(r.stderr[-4000:])

@@ -6,6 +6,8 @@
 # Usage: tools/runmain.sh <main class> [args...]
 #   e.g. tools/runmain.sh graft.Scale graph_search n=200000 seedsPerList=8
 #        (one scale point, one JSON line; see graft.Scale for the points)
+# The classpath is this script's own checkout, whatever the caller's cwd.
+REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CLS="$1"; shift
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
@@ -22,5 +24,5 @@ exec java \
   --add-opens java.base/sun.security.action=ALL-UNNAMED \
   --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*:$(ls -d /root/.cache/coursier/v1/https/*/scala-lang/* 2>/dev/null | head -0)" \
+  -cp "$REPO/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
