@@ -19,10 +19,36 @@ object Checkpoints {
   /** Unpersist the checkpointed RDDs at the leaves of `df`'s plan.
     * No-op for plans without `LogicalRDD` leaves (e.g. the initial
     * empty graph or an un-checkpointed first iteration). Safe to call
-    * only once the successor checkpoint has eagerly materialized. */
-  def release(df: DataFrame): Unit =
+    * only once the successor checkpoint has eagerly materialized.
+    * `blocking` waits for the blocks to go: a non-blocking removal
+    * still in flight when the session stops races the block manager's
+    * shutdown (WARN "Block rdd_N was not removed normally"). */
+  def release(df: DataFrame, blocking: Boolean = false): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+      case lr: LogicalRDD => lr.rdd.unpersist(blocking)
       case _ => ()
     }
+}
+
+/** Directories that live no longer than the process: replay sources,
+  * served indexes, per-cycle index dirs. */
+object ScratchDirs {
+
+  def deleteRecursively(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRecursively)
+    f.delete(); ()
+  }
+
+  /** A fresh temp dir (under `parent`, else the JVM temp dir), removed
+    * recursively at JVM exit. Within-process staleness is impossible by
+    * contract: testdata dirs are immutable for a process lifetime. */
+  def cleanedOnExit(prefix: String, parent: Option[String] = None): String = {
+    val d = parent match {
+      case Some(p) => java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(p), prefix)
+      case None => java.nio.file.Files.createTempDirectory(prefix)
+    }
+    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(d.toFile)))
+    d.toString
+  }
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.graft.TopKJoin
 import graft.knn.{BruteForceKnn, GraphIndexStore, GraphSearch, Recall}
 import graft.mrdf.Mrdf
 import graft.similarity.Kmeans
-import graft.streaming.{StreamSelfDedup, StreamSubstr, StreamingPipelines}
+import graft.streaming.{Replay, StreamSelfDedup, StreamSubstr}
 import graft.text.{ExactSubstr, SpanDedup}
 
 /** One declared scale measurement: a pipeline run at a chosen size that
@@ -193,7 +193,8 @@ object Scale {
       }
       val recall =
         if (useDefaults) Some(recallVsTruth(vecs, edges, params.k, n)) else None
-      Checkpoints.release(edges)
+      // blocking: the last count's release would otherwise race spark.stop()
+      Checkpoints.release(edges, blocking = true)
       (n, nEdges, sec, recall)
     }
     Seq("n" -> runs.map(_._1), "edges" -> runs.map(_._2),
@@ -408,31 +409,18 @@ object Scale {
     val (_, writeSec) = timed(GraphIndexStore.write(base, edges, dir, k = 10,
       nlist = Nlist, kmeansIters = RouterIters, seedsPerList = 8))
     Checkpoints.release(edges)
-    // arrival waves as single-file replay batches, one micro-batch each
-    val src = StreamingPipelines.tempDirCleanedOnExit("graft-sgi-scale-src")
-    (1 to waves).foreach { w =>
+    // arrival waves as single-file replay arrivals, one micro-batch each
+    val src = Replay.stage(None)(Replay.Arrivals((1 to waves).map { w =>
       val lo = nBase + (w - 1) * deltaN
-      StreamingPipelines.writeReplayBatch(
-        vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + deltaN), src, w)
-    }
-    val ckpt = StreamingPipelines.tempDirCleanedOnExit("graft-sgi-scale-ck")
+      vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + deltaN)
+    }))
     val batchWalls = ArrayBuffer.empty[Double]
-    val apply: (DataFrame, Long) => Unit = (b, _) =>
-      if (!b.isEmpty)
-        batchWalls += timed(GraphIndexStore.ingestBatchApprox(b.sparkSession, dir, b))._2
-    val (finished, streamSec) = timed {
-      spark.readStream
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-        .awaitTermination(3600000)
+    val (_, streamSec) = timed {
+      Replay.run(Replay.read(spark, src), src, Replay.PerBatch((b, _) =>
+        if (!b.isEmpty)
+          batchWalls += timed(GraphIndexStore.ingestBatchApprox(b.sparkSession, dir, b))._2),
+        timeoutMs = 3600000)
     }
-    require(finished, "streamed ingest did not finish within the budget")
     require(batchWalls.size == waves,
       s"expected $waves ingest batches, got ${batchWalls.size}")
     require(GraphIndexStore.isFreshFor(spark, dir, vecs),
@@ -478,10 +466,10 @@ object Scale {
     val static = corpus.filter(col("doc_id") % 10 === 0).localCheckpoint()
     val arriving = corpus.filter(col("doc_id") % 10 =!= 0).localCheckpoint()
     // replay-source build timed apart: an ingest artifact
-    val (src, srcSec) = timed(StreamSubstr.buildChunkReplay(spark, arriving))
+    val (src, srcSec) =
+      timed(Replay.stage(None)(StreamSubstr.chunkArrivals(spark, arriving)))
     val (nSpans, streamSec) = timed {
-      StreamSubstr.runReplay(spark, static, arriving, Some(src))
-        .localCheckpoint().count()
+      StreamSubstr.spans(spark, static, src).localCheckpoint().count()
     }
     val (batchSpans, batchSec) = timed {
       ExactSubstr.sharedSubstrings(corpus)
@@ -504,10 +492,11 @@ object Scale {
       a: Map[String, String]): Seq[(String, Any)] = {
     val (corpus, docs, tokens) = textCorpus(spark, a)
     val n = ExactSubstr.MinTokens
-    val (src, srcSec) = timed(StreamSelfDedup.buildWaveReplay(spark, corpus))
+    val (src, srcSec) =
+      timed(Replay.stage(None)(StreamSelfDedup.waveArrivals(spark, corpus)))
     var progress = Array.empty[org.apache.spark.sql.streaming.StreamingQueryProgress]
     val ((out, nSpans), streamSec) = timed {
-      val o = StreamSelfDedup.runReplay(spark, corpus, Some(src),
+      val o = StreamSelfDedup.spans(spark, src,
         onProgress = p => progress = p).localCheckpoint()
       (o, o.count())
     }

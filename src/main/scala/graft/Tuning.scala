@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-conf scoping helpers for declared queries whose EAGER phase
+/** Session-conf scoping for declared queries whose EAGER phase
   * (iterative loops, streaming replays) runs inside `run()`. */
 object Tuning {
 
@@ -11,45 +11,36 @@ object Tuning {
     * shuffle rounds where per-task setup dominates — the MrdfQueries
     * precedent, shared so every iterative builder scopes the same way.
     * 4 measured best at sf0.1 (MRDF 4-pass minima: 7.88 s at 4 vs
-    * 9.31 s at 8). Env-overridable like the other scale-dependent
-    * harness knobs. */
-  val IterativeBuildPartitions: Int =
-    sys.env.getOrElse("SPARK_GRAFT_BUILD_PARTITIONS", "4").toInt
+    * 9.31 s at 8). */
+  val IterativeBuildPartitions: Int = 4
 
-  /** Run `f` with `spark.sql.shuffle.partitions` set to `n`, restoring
-    * the previous value after. Only meaningful for queries that execute
-    * jobs inside the scope (e.g. an iterative build loop): a lazily
-    * returned DataFrame plans its shuffles at action time, outside.
-    *
-    * Why it exists: an iterative algorithm at test scale runs dozens of
-    * sub-MB shuffle rounds; at the harness's 32 partitions each round
-    * pays 32 task setups for kilobytes of data, and AQE's post-shuffle
-    * coalescing cannot help the many single-stage round-trip jobs a
-    * driver-synced loop issues. A real deployment tunes exactly this
-    * knob per stage (or lets AQE pick it at production data sizes); the
-    * scoped value is the test-scale analogue, and the production-scale
-    * path runs the same code under the cluster's own setting. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, prev)
+  /** Run `f` with each `key -> value` applied to the session conf
+    * (`None` unsets the key), then restore every key to its previous
+    * value, or unset it if it had none. Only meaningful for work that
+    * executes jobs inside the scope: a lazily returned DataFrame plans
+    * its shuffles at action time, outside. */
+  def withConf[T](spark: SparkSession, settings: (String, Option[String])*)(f: => T): T = {
+    def set(key: String, v: Option[String]): Unit = v match {
+      case Some(x) => spark.conf.set(key, x)
+      case None => spark.conf.unset(key)
+    }
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => set(k, v) }
+    try f finally prev.foreach { case (k, v) => set(k, v) }
   }
 
   /** Scope for a BOUNDED-SIZE iterative build (the declared-query test
     * harness shape: router training on the TrainTargetN sample, MRDF at
     * test α): fixed small shuffle width AND adaptive execution off.
-    * AQE re-plans after every shuffle stage — pure driver latency when
-    * each round's data is bounded and sub-MB by construction. Scoped at
-    * the declared-query layer only: the library's scale path (paper α,
-    * full-corpus builds) runs under the cluster's own AQE/partition
-    * settings. Both knobs restore on exit; env-overridable. */
-  def withIterativeBuild[T](spark: SparkSession)(f: => T): T = {
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = spark.conf.get(aqeKey)
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_BUILD_AQE", "false")
-    spark.conf.set(aqeKey, aqe)
-    try withShufflePartitions(spark, IterativeBuildPartitions)(f)
-    finally spark.conf.set(aqeKey, prevAqe)
-  }
+    * An iterative algorithm at test scale runs dozens of sub-MB
+    * shuffle rounds; at the harness's 32 partitions each round pays 32
+    * task setups for kilobytes of data, and AQE re-plans after every
+    * shuffle stage — pure driver latency when each round's data is
+    * bounded and sub-MB by construction. Scoped at the declared-query
+    * layer only: the library's scale path (paper α, full-corpus builds)
+    * runs under the cluster's own AQE/partition settings. */
+  def withIterativeBuild[T](spark: SparkSession)(f: => T): T =
+    withConf(spark,
+      "spark.sql.adaptive.enabled" -> Some("false"),
+      "spark.sql.shuffle.partitions" -> Some(IterativeBuildPartitions.toString))(f)
 }

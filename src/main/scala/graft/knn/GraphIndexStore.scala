@@ -258,16 +258,10 @@ object GraphIndexStore {
       k, beam, hops, nprobe)
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
   /** Reclaim an ephemeral index dir (measurement harnesses + the
     * streamed-ingest cycle). */
   private[graft] def deleteIndexDir(dir: String): Unit =
-    deleteRecursively(new java.io.File(dir))
+    graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
 
   /** Full persisted cycle for the q225 declared row: router + seeds
     * trained, everything written, fingerprint REQUIREd, reloaded,
@@ -296,7 +290,7 @@ object GraphIndexStore {
     require(isFreshFor(s, dir, emb),
       "graph index fingerprint must match the corpus it was just built from")
     val res = search(s, dir, emb.filter(col("vec_id") < 20)).localCheckpoint()
-    deleteRecursively(new java.io.File(dir))
+    deleteIndexDir(dir)
     res
   }
 
@@ -317,7 +311,7 @@ object GraphIndexStore {
       routerFor = Some(sharedFullRouter(s, sfDir)))
     val res = search(s, dir, emb.filter(col("vec_id") < 20),
       checkFresh = true).localCheckpoint()
-    deleteRecursively(new java.io.File(dir))
+    deleteIndexDir(dir)
     res
   }
 
@@ -329,12 +323,10 @@ object GraphIndexStore {
     scala.collection.concurrent.TrieMap.empty[String, String]
   private def servedIndexDir(s: SparkSession, sfDir: String): String =
     servedIdx.getOrElseUpdate(sfDir, {
-      val d = Files.createTempDirectory("graft-gidx-served-")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRecursively(d.toFile)))
+      val d = graft.ScratchDirs.cleanedOnExit("graft-gidx-served-")
       write(Tables.load(s, sfDir, "embeddings"), KnnQueries.knn10(s, sfDir),
-        d.toString, routerFor = Some(sharedFullRouter(s, sfDir)))
-      d.toString
+        d, routerFor = Some(sharedFullRouter(s, sfDir)))
+      d
     })
 
   /** Upsert `delta` (vec_id, embedding) into the persisted graph index
@@ -441,7 +433,7 @@ object GraphIndexStore {
       "chained fingerprint must validate base + delta as the combined corpus")
     val res = s.read.parquet(s"$dir/edges")
       .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint()
-    deleteRecursively(new java.io.File(dir))
+    deleteIndexDir(dir)
     res
   }
 

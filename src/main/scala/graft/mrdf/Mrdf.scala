@@ -80,8 +80,7 @@ object Mrdf {
     buildGraphWithStats(points, p, idCol, vecCol)._1
 
   /** [[buildGraph]] plus the per-iteration telemetry trail. Stats are
-    * also logged via slf4j at INFO (and echoed to stdout when
-    * GRAFT_MRDF_DEBUG is set), so cluster runs get the reference's
+    * also logged via slf4j at INFO, so cluster runs get the reference's
     * run-details log from the driver's standard logging. */
   def buildGraphWithStats(points: DataFrame, p: Params,
                           idCol: String = "vec_id",
@@ -141,11 +140,9 @@ object Mrdf {
         (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
       stats += stat
       log.info(f"[mrdf] iter=${stat.iter} changed=${stat.changedEdges} " +
-        f"ratio=${stat.ratio}%.4f sec=${stat.seconds}%.2f heapMb=${stat.heapUsedMb}")
-      if (sys.env.contains("GRAFT_MRDF_DEBUG"))
-        println(f"[mrdf] iter=$iter ratio=$ratio%.4f sec=${stat.seconds}%.2f " +
-          f"divide=${stat.divideSec}%.2f merge+descent=${stat.mergeSec}%.2f " +
-          f"delta=${stat.deltaSec}%.2f")
+        f"ratio=${stat.ratio}%.4f sec=${stat.seconds}%.2f heapMb=${stat.heapUsedMb} " +
+        f"divide=${stat.divideSec}%.2f merge+descent=${stat.mergeSec}%.2f " +
+        f"delta=${stat.deltaSec}%.2f")
       g = merged
     }
     pts.unpersist()

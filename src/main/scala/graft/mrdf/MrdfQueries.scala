@@ -29,17 +29,17 @@ object MrdfQueries {
   /** The seeded testParams graph feeds both mrdf_knn_graph and
     * mrdf_recall; build it once per process/sf (seeded ⇒ deterministic,
     * so the materialization is observationally identical to a rerun —
-    * the fixed-seed spec asserts exactly that). */
-  /** The divide/descend/merge loop at test α runs ~40 sub-MB shuffle
+    * the fixed-seed spec asserts exactly that).
+    *
+    * The divide/descend/merge loop at test α runs ~40 sub-MB shuffle
     * rounds; scoping the build to the shared iterative-build width
-    * ([[graft.Tuning.IterativeBuildPartitions]], env-overridable) cuts
-    * per-round task-setup overhead without touching the algorithm —
-    * at the paper's α the same code runs under the cluster's own
-    * setting. Output is partition-count independent: sampling is
-    * deterministic bottom-ρ by hash, the merge is an order-free top-k
-    * with a total (w, nbr) tie-break, and NN-Descent blocks are keyed
-    * by path, not partition (the fixed-seed spec asserts this). */
-
+    * ([[graft.Tuning.IterativeBuildPartitions]]) cuts per-round
+    * task-setup overhead without touching the algorithm — at the
+    * paper's α the same code runs under the cluster's own setting.
+    * Output is partition-count independent: sampling is deterministic
+    * bottom-ρ by hash, the merge is an order-free top-k with a total
+    * (w, nbr) tie-break, and NN-Descent blocks are keyed by path, not
+    * partition (the fixed-seed spec asserts this). */
   private def testGraph(s: SparkSession, dir: String): DataFrame =
     Materialized.table(s, dir, "mrdf_test_graph") {
       graft.Tuning.withIterativeBuild(s) {

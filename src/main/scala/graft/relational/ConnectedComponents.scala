@@ -55,10 +55,10 @@ object ConnectedComponents {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
     // Canonical directed form: (hi, lo) with lo < hi, deduped.
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
+    val log = org.slf4j.LoggerFactory.getLogger(getClass)
     def stamp(what: String, t0: Long): Unit =
-      if (debug) System.err.println(
-        f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%6.2f s")
+      if (log.isDebugEnabled)
+        log.debug(f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%6.2f s")
     val tInit = System.nanoTime()
     var e = edges
       .select(greatest(col("a"), col("b")).as("hi"),
@@ -105,8 +105,7 @@ object ConnectedComponents {
       eFp = ssFp
       stamp(s"round $iter", tRound)
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$iter edges=${eFp._1} converged=$converged")
+    log.debug(s"[cc] rounds=$iter edges=${eFp._1} converged=$converged")
     // At the fixpoint every edge is (member, component-min).
     val labels = nodes
       .join(e.select(col("hi").as("id"), col("lo").as("comp")), Seq("id"), "left")

@@ -164,15 +164,9 @@ object IvfIndexStore {
       // localCheckpoint materializes the result off the parquet files,
       // so the temp index dir can be reclaimed immediately
       val out = res.localCheckpoint()
-      deleteRecursively(new java.io.File(dir))
+      graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
       out
     } else res
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
-      .foreach(deleteRecursively)
-    f.delete(); ()
   }
 
   /** Upsert `delta` into the persisted index at `dir` WITHOUT a
@@ -327,7 +321,7 @@ object IvfIndexStore {
       "chained fingerprint must validate base + delta as the combined corpus")
     val res = search(spark, dir, emb.filter(col("vec_id") < 20), k, nprobe)
       .localCheckpoint()
-    deleteRecursively(new java.io.File(dir))
+    graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
     res
   }
 
@@ -345,12 +339,10 @@ object IvfIndexStore {
     scala.collection.concurrent.TrieMap.empty[String, String]
   private def servedIndexDir(spark: SparkSession, dir: String): String =
     servedIdx.getOrElseUpdate(dir, {
-      val d = Files.createTempDirectory("graft-ivfidx-served-")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => deleteRecursively(d.toFile)))
-      write(Tables.load(spark, dir, "embeddings"), d.toString,
+      val d = graft.ScratchDirs.cleanedOnExit("graft-ivfidx-served-")
+      write(Tables.load(spark, dir, "embeddings"), d,
         trainedCent = Some(fullCorpusCent(spark, dir)))
-      d.toString
+      d
     })
 
   /** The shared (nlist=8, iters=5) portable router over the FULL

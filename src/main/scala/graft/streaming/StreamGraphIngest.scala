@@ -49,31 +49,13 @@ object StreamGraphIngest {
   private val K = 10
   private[streaming] val Waves = 3
 
-  /** Write the delta slice as [[Waves]] single-file arrivals (wave =
-    * (vec_id / 4) mod Waves — disjoint, deterministic); empty waves
-    * are skipped like the q228 replay. Returns (srcDir, waves written). */
-  private def buildArrivalWaves(spark: SparkSession,
-      delta: DataFrame): (String, Int) = {
-    val src = StreamingPipelines.tempDirCleanedOnExit("graft-gidx-ingest")
-    var written = 0
-    (0 until Waves).foreach { w =>
-      val part = delta
-        .filter(pmod(floor(col("vec_id") / 4), lit(Waves.toLong)) === w)
-        .select(col("vec_id"), col("embedding"))
-        .localCheckpoint()
-      if (part.limit(1).count() > 0) {
-        written += 1
-        StreamingPipelines.writeReplayBatch(part, src, written)
-      }
-      graft.Checkpoints.release(part)
-    }
-    (src, written)
-  }
-
   /** The q230 declared cycle: build + persist the base index, stream
-    * the delta waves through `foreachBatch` → exact upsert, assert the
-    * micro-batch count and the chained freshness proof, return the
-    * post-ingest adjacency. */
+    * the delta waves through `foreachBatch` → exact upsert (the harness
+    * asserts one micro-batch per wave), check the chained freshness
+    * proof, return the post-ingest adjacency. The delta slice arrives
+    * as [[Waves]] single-file arrivals (wave = (vec_id / 4) mod Waves —
+    * disjoint, deterministic; empty waves skipped like the q228
+    * replay). */
   def ingestAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val base = emb.filter(col("vec_id") % 4 =!= 3)
@@ -82,26 +64,16 @@ object StreamGraphIngest {
     GraphIndexStore.write(base, org.apache.spark.sql.graft.TopKJoin.knn(
       base.repartition(col("vec_id")), base, K), idxDir, k = K,
       routerFor = Some(GraphIndexStore.sharedBaseRouter(spark, sfDir)))
-    val (src, waves) = buildArrivalWaves(spark, delta)
-    // checkpoint on the replay scratch root (round-15): the foreachBatch
-    // stream's durability lives in the INDEX transaction (meta/ commit
-    // point), not in this throwaway replay checkpoint's WAL fsyncs
-    val ckpt = StreamingPipelines.scratchCheckpointDir("graft-gidx-ingest-ck")
-    StreamingPipelines.withReplayPartitions(spark) {
-      val arrivals = spark.readStream
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-      val apply: (DataFrame, Long) => Unit = (batch, _) =>
-        if (!batch.isEmpty)
-          GraphIndexStore.upsert(batch.sparkSession, idxDir, batch, k = K)
-      val q = arrivals.writeStream
-        .foreachBatch(apply)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      StreamingPipelines.awaitBatches(q, 180000, expectDataBatches = waves)
-    }
+    val src = Replay.stage(Some(("gidx-delta", sfDir)))(Replay.Arrivals(
+      (0 until Waves).map { w =>
+        delta.filter(pmod(floor(col("vec_id") / 4), lit(Waves.toLong)) === w)
+          .select(col("vec_id"), col("embedding"))
+      }))
+    // the foreachBatch stream's durability lives in the INDEX
+    // transaction (meta/ commit point), not in the replay checkpoint
+    Replay.run(Replay.read(spark, src), src, Replay.PerBatch((batch, _) =>
+      if (!batch.isEmpty)
+        GraphIndexStore.upsert(batch.sparkSession, idxDir, batch, k = K)))
     require(GraphIndexStore.isFreshFor(spark, idxDir, emb),
       "after the final wave the batch-chained fingerprint must validate " +
         "the full corpus (base + every streamed delta)")

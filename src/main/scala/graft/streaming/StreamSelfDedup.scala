@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -118,84 +116,52 @@ object StreamSelfDedup {
         OutputMode.Append())
   }
 
-  /** Build the WAVE replay source: whole documents, wave = doc_id mod
+  /** The WAVE replay input: whole documents, wave = doc_id mod
     * [[Waves]], one arrival per wave (ts = epoch + wave·1h + doc_id·1ms)
     * — so every cross-wave pair's matches probe state written by an
     * earlier batch. Empty waves are skipped (the q222 empty-chunk
     * rule); two far-future sentinel arrivals close the stream (the
-    * two-sentinel timer contract). Returns (src, data parts). */
-  private[graft] def buildWaveReplay(spark: SparkSession,
-      docs: DataFrame): (String, Int) = {
-    val src = StreamingPipelines.tempDirCleanedOnExit("graft-stream-selfdedup")
+    * two-sentinel timer contract). */
+  private[graft] def waveArrivals(spark: SparkSession, docs: DataFrame): Replay.Arrivals = {
     val epochUs = StreamingPipelines.DocsEpochUs
     val base = docs.select(col("doc_id"), col("text"))
       .filter(size(split(col("text"), " ")) >= N)
-      .localCheckpoint()
-    var written = 0
-    (0 until Waves).foreach { w =>
-      val part = base.filter(pmod(col("doc_id"), lit(Waves.toLong)) === w)
+    val waves = (0 until Waves).map { w =>
+      base.filter(pmod(col("doc_id"), lit(Waves.toLong)) === w)
         .select(col("doc_id"), col("text"),
           timestamp_micros(lit(epochUs) + lit(w * 3600L * 1000000L) +
             col("doc_id") * lit(1000L)).as("ingest_ts"))
-        .localCheckpoint()
-      if (part.limit(1).count() > 0) {
-        written += 1
-        StreamingPipelines.writeReplayBatch(part, src, written)
-      }
-      graft.Checkpoints.release(part)
     }
-    graft.Checkpoints.release(base)
-    Seq(48L, 72L).zipWithIndex.foreach { case (h, j) =>
+    val sentinels = Seq(48L, 72L).zipWithIndex.map { case (h, j) =>
       val sentinelUs = epochUs + h * 3600L * 1000000L
       val filler = (0 until N).map(i => s"zzself${j}w$i").mkString(" ")
-      val sentinel = spark.sql(
+      spark.sql(
         s"""SELECT CAST(${-1L - j} AS BIGINT) AS doc_id,
            |'$filler' AS text, timestamp_micros($sentinelUs) AS ingest_ts""".stripMargin)
-      StreamingPipelines.writeReplayBatch(sentinel, src, written + 1 + j)
     }
-    (src, written)
+    Replay.Arrivals(waves, sentinels)
   }
 
-  private val waveReplaySrc = TrieMap.empty[String, (String, Int)]
-
-  /** Full replay for the declared row and specs. */
-  private[graft] def runReplay(spark: SparkSession, docs: DataFrame,
-      srcDir: Option[(String, Int)] = None,
+  /** Run the self-dedup over a staged wave replay; `onProgress` sees
+    * the run's per-batch progress (the scale harness's state-store
+    * telemetry: "the corpus IS the state" deserves a measured
+    * rows/bytes-per-wave number, not prose). */
+  private[graft] def spans(spark: SparkSession, src: Replay.Staged,
       onProgress: Array[org.apache.spark.sql.streaming.StreamingQueryProgress]
         => Unit = _ => ()): DataFrame = {
-    val (src, nParts) = srcDir.getOrElse(buildWaveReplay(spark, docs))
-    val name = s"selfdedup_declared_${StreamingPipelines.declaredRuns.incrementAndGet()}"
-    StreamingPipelines.withReplayPartitions(spark) {
-      StreamingPipelines.withRocksDbStateStore(spark) {
-        val stream = spark.readStream
-          .schema("doc_id BIGINT, text STRING, ingest_ts TIMESTAMP")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(src)
-        val q = selfDedupSpanStream(stream)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        StreamingPipelines.awaitBatches(q, 180000,
-          expectDataBatches = nParts + 2)
-        // per-batch state-store telemetry for the scale harness
-        // (round-13 verdict #8: "the corpus IS the state" deserves a
-        // measured rows/bytes-per-wave number, not prose)
-        onProgress(q.recentProgress)
-      }
-    }
-    spark.table(name)
+    val q = Replay.run(selfDedupSpanStream(Replay.read(spark, src)).toDF(), src,
+      rocksDb = true)
+    onProgress(q.recentProgress)
+    spark.table(q.name)
       .select(col("doc_a"), col("a_start"), col("a_end"),
         col("doc_b"), col("b_start"), col("b_end"), col("len_tokens"))
       .orderBy(col("doc_a"), col("a_start"), col("doc_b"), col("b_start"))
   }
 
   /** q228 declared: ALL documents stream (self-dedup), three waves. */
-  def selfDedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    val src = waveReplaySrc.getOrElseUpdate(dir, buildWaveReplay(spark, docs))
-    runReplay(spark, docs, Some(src))
-  }
+  def selfDedupAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    spans(spark, Replay.stage(Some(("waves", dir)))(
+      waveArrivals(spark, Tables.load(spark, dir, "documents"))))
 
   /** The streamed rule as SQL: postings ranked per gram by arrival
     * order (wave, doc_id, p) and PREFIX-capped at maxOcc; matches =

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -164,36 +162,30 @@ object StreamSubstr {
       .select(col("g"), col("doc_id").as("doc_a"), col("p").as("pa"))
   }
 
-  /** Build the CHUNKED replay source: every arriving document's
-    * gram-start space [1, T−n+1] cut into [[Chunks]] ranges; arrival i
-    * carries, for every doc, the token slice covering its range plus
-    * the (n−1)-token overlap (`off` = slice start − 1 restores global
+  /** The CHUNKED replay input: every arriving document's gram-start
+    * space [1, T−n+1] cut into [[Chunks]] ranges; arrival i carries,
+    * for every doc, the token slice covering its range plus the
+    * (n−1)-token overlap (`off` = slice start − 1 restores global
     * positions). Chunk i of every doc lands in arrival i, so every
-    * multi-chunk run straddles both batch boundaries. A far-future
-    * sentinel arrival closes the stream (fires the flush timers).
+    * multi-chunk run straddles both batch boundaries. Sentinel
+    * arrivals close the stream (fire the flush timers).
     *
-    * EMPTY chunk ranges are skipped (round-12 advice: a corpus of
-    * barely-N-token docs leaves chunks 2..3 with no gram starts at
-    * all; writing them produced zero-row batches that `awaitBatches` —
-    * which counts only numInputRows > 0 — could never reconcile with
-    * the hard `Chunks + 2` expectation, erroring on VALID input).
-    * Returns (src dir, number of DATA parts written) so the caller
-    * derives the expected batch count from what actually exists. */
-  private[graft] def buildChunkReplay(spark: SparkSession,
-      docs: DataFrame): (String, Int) = {
-    val src = StreamingPipelines.tempDirCleanedOnExit("graft-stream-substr")
+    * EMPTY chunk ranges are skipped when staged (round-12 advice: a
+    * corpus of barely-N-token docs leaves chunks 2..3 with no gram
+    * starts at all; zero-row parts never run as data micro-batches, so
+    * a hard `Chunks + 2` expectation errored on VALID input) — the
+    * expected batch count is derived from what was written. */
+  private[graft] def chunkArrivals(spark: SparkSession, docs: DataFrame): Replay.Arrivals = {
     val epochUs = StreamingPipelines.DocsEpochUs
     val base = docs
       .select(col("doc_id"), split(col("text"), " ").as("ws"))
       .withColumn("t", size(col("ws")))
       .withColumn("sCount", greatest(col("t") - lit(N - 1), lit(0)))
       .filter(col("sCount") >= 1)
-      .localCheckpoint()
-    var written = 0
-    (0 until Chunks).foreach { i =>
+    val chunks = (0 until Chunks).map { i =>
       val lo = (col("sCount") * i / Chunks) + 1
       val hi = col("sCount") * (i + 1) / Chunks
-      val part = base
+      base
         .withColumn("lo", lo.cast("int")).withColumn("hi", hi.cast("int"))
         .filter(col("hi") >= col("lo"))
         .select(col("doc_id"),
@@ -202,14 +194,7 @@ object StreamSubstr {
             col("hi") - col("lo") + lit(N))).as("text"),
           timestamp_micros(lit(epochUs) + lit(i * 3600L * 1000000L) +
             col("doc_id") * lit(1000L)).as("ingest_ts"))
-        .localCheckpoint()
-      if (part.limit(1).count() > 0) {
-        written += 1
-        StreamingPipelines.writeReplayBatch(part, src, written)
-      }
-      graft.Checkpoints.release(part)
     }
-    graft.Checkpoints.release(base)
     // TWO sentinel arrivals: timers are evaluated against the
     // watermark as of each batch's START (the watermark advance from a
     // batch's own rows lands at its end), so the first sentinel pushes
@@ -222,47 +207,25 @@ object StreamSubstr {
     // dropped before its event time is even counted (measured: the
     // watermark froze at the chunk-3 era) — the tokens match nothing,
     // the probe join still discards the row, only the timestamp lands.
-    Seq(48L, 72L).zipWithIndex.foreach { case (h, j) =>
+    val sentinels = Seq(48L, 72L).zipWithIndex.map { case (h, j) =>
       val sentinelUs = epochUs + h * 3600L * 1000000L
       val filler = (0 until N).map(i => s"zzsent${j}w$i").mkString(" ")
-      val sentinel = spark.sql(
+      spark.sql(
         s"""SELECT CAST(${-1L - j} AS BIGINT) AS doc_id, CAST(0 AS BIGINT) AS off,
            |'$filler' AS text, timestamp_micros($sentinelUs) AS ingest_ts""".stripMargin)
-      StreamingPipelines.writeReplayBatch(sentinel, src, written + 1 + j)
     }
-    (src, written)
+    Replay.Arrivals(chunks, sentinels)
   }
 
-  private val chunkReplaySrc = TrieMap.empty[String, (String, Int)]
-
-  /** Full replay for the declared row and specs: `corpus` = the static
-    * reference slice, `arriving` = the streamed documents. Asserts the
-    * chunk arrivals actually written + the two sentinels all executed
-    * as real micro-batches. */
-  private[graft] def runReplay(spark: SparkSession, corpus: DataFrame,
-      arriving: DataFrame, srcDir: Option[(String, Int)] = None): DataFrame = {
-    val (src, nParts) = srcDir.getOrElse(buildChunkReplay(spark, arriving))
+  /** Run the span operator over a staged chunk replay: `corpus` = the
+    * static reference slice. */
+  private[graft] def spans(spark: SparkSession, corpus: DataFrame,
+      src: Replay.Staged): DataFrame = {
     val posting = staticGramTable(corpus).localCheckpoint()
-    val name = s"substr_declared_${StreamingPipelines.declaredRuns.incrementAndGet()}"
     try {
-      StreamingPipelines.withReplayPartitions(spark) {
-        StreamingPipelines.withRocksDbStateStore(spark) {
-          val stream = spark.readStream
-            .schema("doc_id BIGINT, off BIGINT, text STRING, ingest_ts TIMESTAMP")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src)
-          val q = substrSpanStream(stream, posting)
-            .writeStream.format("memory").queryName(name)
-            .outputMode(OutputMode.Append())
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          // the chunk arrivals actually written + the two sentinels
-          // (watermark advance, then timer processing)
-          StreamingPipelines.awaitBatches(q, 180000,
-            expectDataBatches = nParts + 2)
-        }
-      }
-      spark.table(name)
+      val q = Replay.run(substrSpanStream(Replay.read(spark, src), posting).toDF(), src,
+        rocksDb = true)
+      spark.table(q.name)
         .select(col("doc_a"), col("a_start"), col("a_end"),
           col("doc_b"), col("b_start"), col("b_end"), col("len_tokens"))
         .orderBy(col("doc_a"), col("a_start"), col("doc_b"), col("b_start"))
@@ -274,10 +237,9 @@ object StreamSubstr {
     * rest stream through in 3 chunked arrivals. */
   def substrSpansAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
-    val src = chunkReplaySrc.getOrElseUpdate(dir,
-      buildChunkReplay(spark, docs.filter(col("doc_id") % 10 =!= 0)))
-    runReplay(spark, docs.filter(col("doc_id") % 10 === 0),
-      docs.filter(col("doc_id") % 10 =!= 0), Some(src))
+    spans(spark, docs.filter(col("doc_id") % 10 === 0),
+      Replay.stage(Some(("chunks", dir)))(
+        chunkArrivals(spark, docs.filter(col("doc_id") % 10 =!= 0))))
   }
 
   /** q213's span CTEs restricted to (static, arriving) pairs; the

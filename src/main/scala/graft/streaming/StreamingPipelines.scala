@@ -473,18 +473,10 @@ object StreamingPipelines {
     * (w_end ≤ max ts − 2h), ranked — stated directly in the oracle. */
   def windowTopKAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"topk_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      withRocksDbStateStore(spark) {
-        val q = windowTopKStream(readEventsBatches(spark, dir).as[Event])
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitOrFail(q, 180000)
-      }
-    }
-    spark.table(name)
+    val src = eventsReplay(spark, dir, batches = 3)
+    val q = Replay.run(windowTopKStream(Replay.read(spark, src).as[Event]).toDF(),
+      src, rocksDb = true)
+    spark.table(q.name)
       .select(date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
         col("rank"), col("event_type"), col("n"))
       .orderBy(col("w_start"), col("rank"))
@@ -505,8 +497,12 @@ object StreamingPipelines {
     * each batch reads the latest generation — the manifest-swap
     * pattern of table formats, reduced to its core. */
   def upsertStreamSink(changes: DataFrame, stateDir: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    changes.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
+      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
+    changes.writeStream.foreachBatch(upsertBatch(stateDir))
+
+  /** [[upsertStreamSink]]'s per-micro-batch MERGE into `stateDir`. */
+  def upsertBatch(stateDir: String): (DataFrame, Long) => Unit =
+    (batch: DataFrame, batchId: Long) => {
       val spark = batch.sparkSession
       val tagged = batch.select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
@@ -524,9 +520,7 @@ object StreamingPipelines {
           col("w.is_delete").as("is_delete"))
       merged.write.mode("overwrite")
         .parquet(s"$stateDir/gen=${batchId + 1}")
-      ()
     }
-  }
 
   /** Latest `gen=<n>` snapshot under `stateDir`, if any. */
   def latestSnapshot(spark: SparkSession, stateDir: String): Option[DataFrame] = {
@@ -550,19 +544,6 @@ object StreamingPipelines {
       .schema("doc_id BIGINT, lang STRING, text STRING, ingest_ts TIMESTAMP")
       .parquet(dir)
 
-  /** [[readDocsStream]] with one FILE per micro-batch — the reader the
-    * N-batch docs replays must use: without `maxFilesPerTrigger = 1`
-    * an AvailableNow file source drains EVERY available file into one
-    * micro-batch, silently collapsing the multi-batch replay (and its
-    * cross-batch state claim) to a single batch. Mirrors
-    * [[readEventsBatches]]; batch counts are asserted in the replay
-    * executors, not assumed. */
-  def readDocsBatches(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema("doc_id BIGINT, lang STRING, text STRING, ingest_ts TIMESTAMP")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(dir)
-
   /** File-source streaming read of events-shaped parquet. */
   def readEventsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream
@@ -570,75 +551,19 @@ object StreamingPipelines {
         "event_type STRING, value DOUBLE")
       .parquet(dir)
 
-  private[streaming] val declaredRuns = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  /** Temp dir removed recursively at JVM exit (ADVICE r5: the replay
-    * cache leaked one dir per JVM run). Within-process staleness is
-    * impossible by contract — testdata dirs are immutable for a
-    * process lifetime (driver regenerates them only between rounds). */
-  private[graft] def tempDirCleanedOnExit(prefix: String,
-      parent: Option[String] = None): String = {
-    val d = parent match {
-      case Some(p) => java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(p), prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => deleteRecursively(d.toFile)))
-    d.toString
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete(); ()
-  }
-
-  /** One events-replay source dir per (process, sfDir), written as a
-    * SINGLE parquet file. Single-file matters for q167: the EWMA fold
-    * is ordered, and state folds batch-by-batch in arrival order — one
-    * file ⇒ the file source delivers the whole table in one micro-batch
-    * under any maxFilesPerTrigger setting, so the per-key sort inside
-    * that batch IS the global order and the batch-oracle equality is
-    * structural, not an accident of source defaults. Cached so repeated
-    * declared-query invocations (Verify + Bench + PlanAudit in one
-    * process) don't rewrite the table per call. */
-  private val replaySrc = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def eventsReplayDir(spark: SparkSession, dir: String): String =
-    replaySrc.getOrElseUpdate(dir, {
-      val src = tempDirCleanedOnExit("graft-stream-replay")
-      graft.Tables.load(spark, dir, "events")
-        .select(col("event_id"), col("ts"), col("user_id"),
-          col("event_type"), col("value"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(src)
-      src
-    })
-
-  /** One single-file parquet "arrival" under `srcDir`, stamped with a
-    * strictly increasing modification time: the file source orders
-    * arrivals by mtime, and the multi-batch replay oracles depend on
-    * batch k sorting strictly before batch k+1, so a refused mtime
-    * change must fail loudly, not silently reorder the batches. */
-  private[graft] def writeReplayBatch(part: DataFrame, srcDir: String, n: Int): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-replay-stage")
-    part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val f = tmp.toFile.listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part file under $tmp"))
-    val dest = java.nio.file.Paths.get(srcDir, s"batch$n.parquet")
-    java.nio.file.Files.move(f.toPath, dest)
-    if (!dest.toFile.setLastModified(n * 1000000000L))
-      sys.error(s"setLastModified failed for $dest; replay batch order not guaranteed")
-    ()
-  }
-
-  /** N-batch replay source per (process, sfDir, N): the events table
-    * split at its N−1 event-time quantiles (exact `percentile` over
-    * `unix_micros(ts)`) into N single-file parquet "arrivals" with
-    * strictly increasing modification times, read with
-    * `maxFilesPerTrigger = 1` — so an AvailableNow run executes N real
-    * micro-batches with a watermark advance between each (the
-    * single-file source can only ever exercise the one-batch path).
-    * Splitting on TIME boundaries keeps multi-batch runs
+  /** The events table as a `batches`-arrival replay source, staged once
+    * per (process, sfDir, batches).
+    *
+    * ONE arrival is the whole table in a single file — for q167 that
+    * matters: the EWMA fold is ordered, and state folds batch-by-batch
+    * in arrival order, so with one micro-batch the per-key sort inside
+    * it IS the global order and the batch-oracle equality is
+    * structural, not an accident of source defaults.
+    *
+    * N > 1 arrivals split the table at its N−1 event-time quantiles
+    * (exact `percentile` over `unix_micros(ts)`), so an AvailableNow
+    * run executes N real micro-batches with a watermark advance between
+    * each. Splitting on TIME boundaries keeps multi-batch runs
     * deterministic at any N: per-key processing order = batch-1 rows
     * (sorted) then batch-2 rows (sorted) … = the global (ts, event_id)
     * order, and no batch-(k+1) row is ever behind the batch-k
@@ -647,169 +572,31 @@ object StreamingPipelines {
     * advances); their emitted sets are N-invariant by each query's
     * closure rule — pinned by the N=2 → N=3 oracle equality and the
     * three-batch straddle spec. */
-  private val replaySrcN =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), String]
-  private def eventsReplayBatchesDir(spark: SparkSession, dir: String,
-      batches: Int): String =
-    replaySrcN.getOrElseUpdate((dir, batches), {
-      require(batches >= 2, s"replay batches must be >= 2, got $batches")
-      val src = tempDirCleanedOnExit(s"graft-stream-replay${batches}b")
+  private[streaming] def eventsReplay(spark: SparkSession, dir: String,
+      batches: Int): Replay.Staged =
+    Replay.stage(Some(("events", dir, batches))) {
       val ev = graft.Tables.load(spark, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"), col("value"))
-      val fracs = (1 until batches)
-        .map(i => s"CAST(${i.toDouble / batches} AS DOUBLE)").mkString(", ")
-      val cuts = ev
-        .selectExpr(s"percentile(unix_micros(ts), array($fracs)) AS c")
-        .head().getSeq[Double](0).map(_.toLong)
-      val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
-      bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
-        writeReplayBatch(
-          ev.filter(unix_micros(col("ts")) >= lo && unix_micros(col("ts")) < hi),
-          src, i + 1)
-      }
-      src
-    })
-
-  /** [[readEventsStream]] over the N-batch dir, one file per
-    * micro-batch. */
-  private def readEventsBatches(spark: SparkSession, dir: String,
-      batches: Int = 3): DataFrame =
-    spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(eventsReplayBatchesDir(spark, dir, batches))
-
-  /** RAM-backed scratch root for the replay checkpoints (round-15
-    * optimization, guide §5/§6 — measured first: per micro-batch the
-    * offset-WAL + commit-log fsyncs cost ~75 ms and every state-store
-    * commit writes + fsyncs a delta/snapshot file into the checkpoint
-    * dir, 0.5–3 s summed per batch across stores — the dominant term
-    * of the ~2 s/query streaming floor at sf0.1, all of it I/O on
-    * scratch no one ever reads back. The declared replays are bounded
-    * AvailableNow backfills into a MEMORY sink: their checkpoint is
-    * ephemeral by construction (the result dies with the JVM; a crash
-    * means rerun, never resume), so checkpoint durability buys
-    * nothing. Default to the RAM-backed tmpfs when the host has one
-    * with room ([[scratchBase]]); `SPARK_GRAFT_STREAM_SCRATCH`
-    * overrides (a production deployment of a CONTINUOUS pipeline
-    * points the same knob — Spark's checkpointLocation — at durable
-    * storage instead; this default is scoped to the replay harness,
-    * not baked into any query). Each query's checkpoint subdir is
-    * deleted once the query stops ([[awaitOrFail]]); the root itself
-    * goes at JVM exit. */
-  private[streaming] lazy val scratchRoot: String = {
-    val shm = new java.io.File(ShmDir)
-    tempDirCleanedOnExit("graft-stream-scratch", scratchBase(
-      sys.env.get("SPARK_GRAFT_STREAM_SCRATCH"),
-      if (shm.isDirectory && shm.canWrite) Some(shm.getUsableSpace) else None))
-  }
-
-  private[streaming] val ShmDir = "/dev/shm"
-
-  /** Least usable space for [[ShmDir]] to host the replay scratch. A
-    * container's default tmpfs is 64 MiB, which a few concurrent
-    * replays' state-store files can fill. */
-  private[streaming] val ShmMinUsableBytes: Long = 1L << 30
-
-  /** Where [[scratchRoot]] lives: the override when set, else the
-    * tmpfs when it is writable (`shmUsableBytes` defined) with at least
-    * [[ShmMinUsableBytes]] free, else the JVM temp dir (`None`). */
-  private[streaming] def scratchBase(overrideDir: Option[String],
-      shmUsableBytes: Option[Long]): Option[String] =
-    overrideDir.orElse(
-      shmUsableBytes.filter(_ >= ShmMinUsableBytes).map(_ => ShmDir))
-
-  /** A fresh checkpoint dir under [[scratchRoot]]. */
-  private[streaming] def scratchCheckpointDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(scratchRoot), prefix).toString
-
-  /** Run `f` with the replay-scoped session tuning, restoring after:
-    *  - a reduced shuffle-partition count: the declared replays process
-    *    one bounded micro-batch; each stateful operator instantiates
-    *    one state store PER shuffle partition, and at the harness's 32
-    *    partitions the store setup/commit overhead dominates the actual
-    *    work (a stream-stream join keeps four stores per partition) —
-    *    8 partitions is plenty for the testdata batch. At production
-    *    scale this is the same knob a real deployment tunes per
-    *    stateful query.
-    *  - the checkpoint location rooted on [[scratchRoot]] (see its doc:
-    *    WAL + state-store commit fsyncs on throwaway replay checkpoints
-    *    were the measured floor). Each query lands in its own subdir
-    *    (unique queryName per invocation), removed at JVM exit. */
-  /** Stateful-shuffle width of the replay micro-batches (default 4,
-    * env-overridable like every scale-dependent harness setting).
-    * Round-15 A/B at sf0.1/32 cpus (pass-2 walls over the 7 heaviest
-    * replays): 8 → 4 partitions is a consistent −10..20% (26.2 →
-    * 22.3 s summed; q228 6.0 → 4.8, q168 1.9 → 1.3, q195 2.6 → 2.2),
-    * because every stateful operator loads + commits one state store
-    * PER shuffle partition and the testdata micro-batches are far
-    * below one store's worth of work; 2 was not reliably better (q228
-    * regressed). At production state sizes the same knob scales back
-    * up with the data — that is what the env override is for. */
-  private[streaming] def replayPartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_REPLAY_PARTITIONS", "4")
-
-  private[streaming] def withReplayPartitions[T](spark: SparkSession)(f: => T): T = {
-    val pKey = "spark.sql.shuffle.partitions"
-    val cKey = "spark.sql.streaming.checkpointLocation"
-    val prevP = spark.conf.get(pKey)
-    val prevC = spark.conf.getOption(cKey)
-    spark.conf.set(pKey, replayPartitions)
-    spark.conf.set(cKey, scratchRoot)
-    try f finally {
-      spark.conf.set(pKey, prevP)
-      prevC match {
-        case Some(v) => spark.conf.set(cKey, v)
-        case None => spark.conf.unset(cKey)
+      if (batches == 1) Replay.Arrivals(Seq(ev))
+      else {
+        val fracs = (1 until batches)
+          .map(i => s"CAST(${i.toDouble / batches} AS DOUBLE)").mkString(", ")
+        val cuts = ev
+          .selectExpr(s"percentile(unix_micros(ts), array($fracs)) AS c")
+          .head().getSeq[Double](0).map(_.toLong)
+        val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
+        Replay.Arrivals(bounds.map { case (lo, hi) =>
+          ev.filter(unix_micros(col("ts")) >= lo && unix_micros(col("ts")) < hi)
+        })
       }
     }
-  }
-
-  private def awaitOrFail(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long): Unit = {
-    // A timed-out replay would hand a TRUNCATED memory table to the
-    // oracle diff — fail loudly instead of producing a confusing
-    // row-mismatch (or a coincidental pass).
-    val finished =
-      try q.awaitTermination(timeoutMs)
-      finally { q.stop(); dropScratchCheckpoint(q) }
-    if (!finished)
-      sys.error(s"streaming replay did not finish within ${timeoutMs} ms")
-  }
-
-  /** Delete a stopped query's checkpoint dir when it lies under
-    * [[scratchRoot]]; a checkpoint anywhere else is left alone. */
-  private def dropScratchCheckpoint(
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = q match {
-    case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
-      val dir = java.nio.file.Paths.get(
-        new java.net.URI(w.streamingQuery.resolvedCheckpointRoot).getPath)
-      if (dir.startsWith(java.nio.file.Paths.get(scratchRoot))) deleteRecursively(dir.toFile)
-    case _ => ()
-  }
-
-  /** [[awaitOrFail]] + an executed-batch-count assertion: a multi-batch
-    * replay whose source silently drained in fewer data micro-batches
-    * than declared would still produce correct rows (the contracts are
-    * N-invariant) but falsify the cross-batch-state claim — assert it
-    * instead of assuming it. */
-  private[streaming] def awaitBatches(q: org.apache.spark.sql.streaming.StreamingQuery,
-      timeoutMs: Long, expectDataBatches: Int): Unit = {
-    awaitOrFail(q, timeoutMs)
-    val got = q.recentProgress.count(_.numInputRows > 0)
-    if (got != expectDataBatches)
-      sys.error(s"replay executed $got data micro-batches, " +
-        s"declared $expectDataBatches — multi-batch claim violated")
-  }
 
   /** Per-user EWMA computed THROUGH streaming execution: the events
     * table replayed as a file-source stream into [[ewmaStream]] under
-    * `Trigger.AvailableNow`, Update-mode memory sink, then the final
+    * AvailableNow, Update-mode memory sink, then the final
     * update per user (its max-n row — n is strictly monotone per key).
-    * The replay source is a SINGLE parquet file ([[eventsReplayDir]]),
+    * The replay source is a SINGLE parquet file ([[eventsReplay]]),
     * which structurally guarantees one micro-batch: the ordered fold
     * only equals the batch q158 result when no later-ts rows arrive in
     * an earlier batch, and one file cannot be split by the file source.
@@ -818,19 +605,12 @@ object StreamingPipelines {
     * only spec-gated mirrors (round-4 verdict #8). */
   def ewmaAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val src = eventsReplayDir(spark, dir)
-    val name = s"ewma_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = ewmaStream(readEventsStream(spark, src).as[Event])
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
+    val src = eventsReplay(spark, dir, batches = 1)
+    val q = Replay.run(ewmaStream(Replay.read(spark, src).as[Event]).toDF(), src,
+      Replay.Memory(OutputMode.Update()))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    spark.table(name)
+    spark.table(q.name)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
       .select(col("user_id"), col("n_events"), col("ewma_micros"))
@@ -845,17 +625,9 @@ object StreamingPipelines {
     * watermark/state-eviction path the way q167 exercises
     * `flatMapGroupsWithState`. */
   def tumblingAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val src = eventsReplayDir(spark, dir)
-    val name = s"tumbling_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = tumblingCounts(readEventsStream(spark, src))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
-    spark.table(name)
+    val src = eventsReplay(spark, dir, batches = 1)
+    val q = Replay.run(tumblingCounts(Replay.read(spark, src)), src)
+    spark.table(q.name)
       .select(date_format(col("w_start"), "yyyy-MM-dd HH:mm:ss").as("w_start"),
         col("event_type"), col("n"))
       .orderBy(col("w_start"), col("event_type"))
@@ -863,7 +635,7 @@ object StreamingPipelines {
 
   /** One executor for the whole streaming join matrix:
     * [[purchaseClickJoinOf]] over the single-file events replay under
-    * `Trigger.AvailableNow`, with a per-type output projection
+    * AvailableNow, with a per-type output projection
     * (round-10 verdict #7 — the five executor copies collapsed into
     * this runner + thin declarations).
     *
@@ -884,45 +656,36 @@ object StreamingPipelines {
     * to align across engines. Every rule is stated verbatim in the
     * q169/q179/q211/q212/q184 oracle SQL. */
   private def pcJoinAvailableNow(spark: SparkSession, dir: String,
-      joinType: String, prefix: String)(
-      finalize: DataFrame => DataFrame): DataFrame = {
-    val src = eventsReplayDir(spark, dir)
-    val name = s"${prefix}_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = purchaseClickJoinOf(readEventsStream(spark, src), joinType)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
-    finalize(spark.table(name))
+      joinType: String)(finalize: DataFrame => DataFrame): DataFrame = {
+    val src = eventsReplay(spark, dir, batches = 1)
+    val q = Replay.run(purchaseClickJoinOf(Replay.read(spark, src), joinType), src)
+    finalize(spark.table(q.name))
   }
 
   private def delayUs = (unix_micros(col("p_ts")) - unix_micros(col("c_ts"))).as("delay_us")
 
   /** INNER join through streaming execution (q169). */
   def intervalJoinAvailableNow(spark: SparkSession, dir: String): DataFrame =
-    pcJoinAvailableNow(spark, dir, "inner", "ijoin")(
+    pcJoinAvailableNow(spark, dir, "inner")(
       _.select(col("p_id"), col("c_id"), col("p_user"), delayUs)
         .orderBy(col("p_id"), col("c_id")))
 
   /** LEFT OUTER through streaming execution (q179). */
   def leftJoinAvailableNow(spark: SparkSession, dir: String): DataFrame =
-    pcJoinAvailableNow(spark, dir, "left_outer", "ljoin")(
+    pcJoinAvailableNow(spark, dir, "left_outer")(
       _.select(col("p_id"), col("p_user"), col("c_id"), delayUs)
         .orderBy(col("p_id"), col("c_id").asc_nulls_first))
 
   /** FULL OUTER through streaming execution (q211). */
   def fullJoinAvailableNow(spark: SparkSession, dir: String): DataFrame =
-    pcJoinAvailableNow(spark, dir, "full_outer", "fjoin")(
+    pcJoinAvailableNow(spark, dir, "full_outer")(
       _.select(col("p_id"), col("c_id"),
           coalesce(col("p_user"), col("c_user")).as("user_id"), delayUs)
         .orderBy(col("p_id").asc_nulls_first, col("c_id").asc_nulls_first))
 
   /** RIGHT OUTER through streaming execution (q212). */
   def rightJoinAvailableNow(spark: SparkSession, dir: String): DataFrame =
-    pcJoinAvailableNow(spark, dir, "right_outer", "rjoin")(
+    pcJoinAvailableNow(spark, dir, "right_outer")(
       _.select(col("c_id"), col("p_id"),
           coalesce(col("c_user"), col("p_user")).as("user_id"), delayUs)
         .orderBy(col("c_id"), col("p_id").asc_nulls_first))
@@ -937,34 +700,15 @@ object StreamingPipelines {
     * oracle SQL (q112's shape over the full table with the sink's
     * tombstone rule). */
   def upsertSinkAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val src = eventsReplayDir(spark, dir)
-    val stateDir = tempDirCleanedOnExit("graft-upsert-state")
-    withReplayPartitions(spark) {
-      val q = upsertStreamSink(readEventsStream(spark, src), stateDir)
-        .queryName(s"upsert_declared_${declaredRuns.incrementAndGet()}")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
+    val src = eventsReplay(spark, dir, batches = 1)
+    val stateDir = graft.ScratchDirs.cleanedOnExit("graft-upsert-state")
+    Replay.run(Replay.read(spark, src), src, Replay.PerBatch(upsertBatch(stateDir)))
     upsertView(spark, stateDir)
       .getOrElse(sys.error(s"upsert sink wrote no snapshot under $stateDir"))
       .select(col("user_id"), col("event_id"), col("ts"), col("event_type"),
         round(col("value"), 6).as("value"))
       .orderBy(col("user_id"))
   }
-
-  /** One embeddings-replay source dir per (process, sfDir) — single
-    * parquet file, same contract as [[eventsReplayDir]]. */
-  private val replayEmb = scala.collection.concurrent.TrieMap.empty[String, String]
-  private def embeddingsReplayDir(spark: SparkSession, dir: String): String =
-    replayEmb.getOrElseUpdate(dir, {
-      val src = tempDirCleanedOnExit("graft-emb-replay")
-      graft.Tables.load(spark, dir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(src)
-      src
-    })
 
   /** Streaming ANN ingest — the online half of the IVF retrieval
     * index: vectors ARRIVE as a stream (the vec_id ≡ 0 mod 10 slice),
@@ -1000,33 +744,25 @@ object StreamingPipelines {
       .assignToCentroids(static.select(col("vec_id"), col("embedding")), cent)
       .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
       .localCheckpoint() // the static index the stream probes
-    val name = s"ann_ingest_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val src = embeddingsReplayDir(spark, dir)
-      val arrivals = spark.readStream
-        .schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-        .parquet(src)
-        .filter(col("vec_id") % 10 === 0)
-      val zero = struct(lit(Double.MaxValue).as("d"), lit(-1).as("cid"))
-      val routed = arrivals.withColumn("route",
-          aggregate(centArr, zero, (acc, c) => {
-            val d = graft.linalg.Distances.euclidean(col("embedding"), c("cvec"))
-            when(d < acc("d"), struct(d.as("d"), c("cid").as("cid")))
-              .otherwise(acc) // centroids iterate cid-ascending: ties keep the smaller cid
-          }))
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-          col("route.cid").as("cid"))
-      val cands = routed.join(lists, Seq("cid"))
-        .select(col("qid"), col("nbr"),
-          round(graft.linalg.Distances.cosineSimilarity(col("qv"), col("cv")), 6)
-            .as("sim"))
-      val q = cands.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
-    graft.agg.TopKByWeight.topKBySimilarity(spark.table(name), k)
+    // the embeddings table as ONE single-file arrival
+    val src = Replay.stage(Some(("embeddings", dir)))(Replay.Arrivals(Seq(
+      graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding")))))
+    val arrivals = Replay.read(spark, src).filter(col("vec_id") % 10 === 0)
+    val zero = struct(lit(Double.MaxValue).as("d"), lit(-1).as("cid"))
+    val routed = arrivals.withColumn("route",
+        aggregate(centArr, zero, (acc, c) => {
+          val d = graft.linalg.Distances.euclidean(col("embedding"), c("cvec"))
+          when(d < acc("d"), struct(d.as("d"), c("cid").as("cid")))
+            .otherwise(acc) // centroids iterate cid-ascending: ties keep the smaller cid
+        }))
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
+        col("route.cid").as("cid"))
+    val cands = routed.join(lists, Seq("cid"))
+      .select(col("qid"), col("nbr"),
+        round(graft.linalg.Distances.cosineSimilarity(col("qv"), col("cv")), 6)
+          .as("sim"))
+    val q = Replay.run(cands, src)
+    graft.agg.TopKByWeight.topKBySimilarity(spark.table(q.name), k)
       .orderBy(col("qid"), col("rn"))
   }
 
@@ -1042,20 +778,12 @@ object StreamingPipelines {
     * quantized to nano-nats (the q137 idiom — the single ln is the
     * only transcendental). */
   def klDriftAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val src = eventsReplayDir(spark, dir)
-    val name = s"kl_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = tumblingCounts(readEventsStream(spark, src))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
+    val src = eventsReplay(spark, dir, batches = 1)
+    val q = Replay.run(tumblingCounts(Replay.read(spark, src)), src)
     val global = graft.Tables.load(spark, dir, "events")
       .groupBy(col("event_type")).agg(count(lit(1)).as("g"))
     val bigG = global.agg(sum(col("g")).as("big_g"))
-    spark.table(name)
+    spark.table(q.name)
       .join(broadcast(global), Seq("event_type"))
       .groupBy(col("w_start"))
       .agg(sum(col("n")).as("nw"),
@@ -1071,27 +799,6 @@ object StreamingPipelines {
       .orderBy(col("w_start"))
   }
 
-  /** Run `f` with the RocksDB state store provider (required by
-    * `transformWithState`), restoring the previous provider after.
-    * (Round-15 A/B, kept for the record: changelog checkpointing —
-    * the documented commit-latency knob for LARGE RocksDB state —
-    * measured SLOWER here (q228 commit 1.0 → 2.0–5.3 s summed, total
-    * 6.5 → 14.3 s): at kilobyte-sized per-store state the per-commit
-    * changelog writer + background snapshot machinery cost more than
-    * the tiny snapshot upload it replaces. Left OFF.) */
-  private[streaming] def withRocksDbStateStore[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   /** [[hourlyKeyDedupStream]] executed through THREE micro-batches
     * (time-split replay source): batch 1 emits its distinct keys,
     * the watermark advances, batch 2 emits only keys not already in
@@ -1102,44 +809,29 @@ object StreamingPipelines {
     * oracle SQL. The cross-batch suppression is real: batch 2's copies
     * of the straddle hour meet batch 1's state and are dropped. */
   def dedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"dedup_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = hourlyKeyDedupStream(readEventsBatches(spark, dir))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
-    spark.table(name)
+    val src = eventsReplay(spark, dir, batches = 3)
+    val q = Replay.run(hourlyKeyDedupStream(Replay.read(spark, src)), src)
+    spark.table(q.name)
       .select(col("user_id"), col("event_type"),
         date_format(col("ts_h"), "yyyy-MM-dd HH:mm:ss").as("ts_h"))
       .orderBy(col("user_id"), col("event_type"), col("ts_h"))
   }
 
-  /** [[maxGapStream]] (transformWithState) executed through TWO
+  /** [[maxGapStream]] (transformWithState) executed through THREE
     * micro-batches: per-user state (count, last-event micros, max gap)
-    * persists in the RocksDB store across the batch boundary, so the
-    * gap that SPANS the boundary — last event of batch 1 to first
-    * event of batch 2 — is computed from carried state, the path a
+    * persists in the RocksDB store across both batch boundaries, so a
+    * gap that SPANS a boundary — last event of batch k to first event
+    * of batch k+1 — is computed from carried state, the path a
     * single-batch replay never runs. Final row per user = its max-n
     * update (n is strictly monotone per key, q167's convention). */
   def maxGapAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"gap_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      withRocksDbStateStore(spark) {
-        val q = maxGapStream(readEventsBatches(spark, dir).as[Event])
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Update())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        awaitOrFail(q, 180000)
-      }
-    }
+    val src = eventsReplay(spark, dir, batches = 3)
+    val q = Replay.run(maxGapStream(Replay.read(spark, src).as[Event]).toDF(), src,
+      Replay.Memory(OutputMode.Update()), rocksDb = true)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("n_events").desc)
-    spark.table(name)
+    spark.table(q.name)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
       .select(col("user_id"), col("n_events"), col("max_gap_us"))
@@ -1152,38 +844,32 @@ object StreamingPipelines {
     * ONE micro-batch, so the emitted set is exactly the batch
     * EXISTS-semi-join — verbatim in the oracle. */
   def semiJoinAvailableNow(spark: SparkSession, dir: String): DataFrame =
-    pcJoinAvailableNow(spark, dir, "left_semi", "sjoin")(
+    pcJoinAvailableNow(spark, dir, "left_semi")(
       _.select(col("p_id"), col("p_user"), unix_micros(col("p_ts")).as("p_us"))
         .orderBy(col("p_id")))
 
-  /** Native `session_window` aggregation executed through TWO
+  /** Native `session_window` aggregation executed through THREE
     * micro-batches — the session-STATE-STORE path (SessionWindow exec
     * merging adjacent windows in keyed state across batches), distinct
     * from q193's hand-rolled flatMapGroupsWithState fold and from the
-    * batch q23b plan. A session straddling the time-split boundary is
-    * MERGED in the store (batch 2's windows overlap batch 1's stored
+    * batch q23b plan. A session straddling a time-split boundary is
+    * MERGED in the store (batch k+1's windows overlap batch k's stored
     * session); the final watermark closes and emits exactly the
     * sessions whose end (last event + gap) lands at or below it — the
     * closed-window rule, pinned by the planted-boundary spec and
     * stated in the oracle SQL over q23b's gaps-and-islands CTEs. */
   def sessionNativeAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val name = s"snat_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val agg = readEventsBatches(spark, dir)
-        .withWatermark("ts", "2 hours")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(
-          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
-            .as("sess_start"),
-          col("user_id"), col("n_events"))
-      val q = agg.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
-    spark.table(name)
+    val src = eventsReplay(spark, dir, batches = 3)
+    val agg = Replay.read(spark, src)
+      .withWatermark("ts", "2 hours")
+      .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+      .agg(count(lit(1)).as("n_events"))
+      .select(
+        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss.SSSSSS")
+          .as("sess_start"),
+        col("user_id"), col("n_events"))
+    val q = Replay.run(agg, src)
+    spark.table(q.name)
       .select(col("sess_start"), col("user_id"), col("n_events"))
       .orderBy(col("user_id"), col("sess_start"))
   }
@@ -1200,16 +886,9 @@ object StreamingPipelines {
     * watermark ms` — stated verbatim in the oracle SQL. */
   def sessionizeAvailableNow(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val name = s"sess_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = sessionizeEventTime(readEventsBatches(spark, dir).as[Event])
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitOrFail(q, 180000)
-    }
-    spark.table(name)
+    val src = eventsReplay(spark, dir, batches = 3)
+    val q = Replay.run(sessionizeEventTime(Replay.read(spark, src).as[Event]).toDF(), src)
+    spark.table(q.name)
       .select(col("user_id"), col("n_events"), col("start_sec"), col("end_sec"))
       .orderBy(col("user_id"), col("start_sec"))
   }
@@ -1222,7 +901,7 @@ object StreamingPipelines {
     * 1600000000000 ms constant). */
   private[streaming] val DocsEpochUs: Long = 1600000000000000L
 
-  /** Documents as an ingest-timestamped N-batch replay source:
+  /** Documents as ingest-timestamped N-arrival replay input:
     * `ingest_ts = epoch + doc_id · step`, step DERIVED from the corpus
     * (1 ms per id while `(max doc_id + 2) ms` fits inside the 1-hour
     * dedup/watermark horizon — every corpus up to ~3.6 M ids, including
@@ -1235,14 +914,12 @@ object StreamingPipelines {
     * `dropDuplicatesWithinWatermark` must catch it), so the replays
     * oracle against plain batch SQL instead of a data-dependent
     * "within one hour of each other" rule. Split into `batches`
-    * single-file arrivals at doc_id (= ingest-time) quantiles with
-    * ordered mtimes; `sentinelFinalBatch` appends one far-future no-op
-    * doc (content shared with nothing) as its own FINAL arrival, so the
-    * closing watermark advance flushes every real windowed
-    * aggregation. */
-  private[streaming] def buildDocsReplay(spark: SparkSession, docs0: DataFrame,
-      prefix: String, batches: Int, sentinelFinalBatch: Boolean): String = {
-    val src = tempDirCleanedOnExit(prefix)
+    * arrivals at doc_id (= ingest-time) quantiles; `sentinelFinalBatch`
+    * adds one far-future no-op doc (content shared with nothing) as the
+    * FINAL arrival, so the closing watermark advance flushes every real
+    * windowed aggregation. */
+  private[streaming] def docsArrivals(spark: SparkSession, docs0: DataFrame,
+      batches: Int, sentinelFinalBatch: Boolean): Replay.Arrivals = {
     val ids = docs0.agg(min(col("doc_id")), max(col("doc_id"))).head()
     require(!ids.isNullAt(0), "docs replay over an EMPTY documents corpus")
     val (minId, maxId) = (ids.getLong(0), ids.getLong(1))
@@ -1269,38 +946,32 @@ object StreamingPipelines {
       .selectExpr(s"percentile(doc_id, array($fracs)) AS c")
       .head().getSeq[Double](0).map(_.toLong)
     val bounds = (Long.MinValue +: cuts) zip (cuts :+ Long.MaxValue)
-    bounds.zipWithIndex.foreach { case ((lo, hi), i) =>
-      writeReplayBatch(docs.filter(col("doc_id") >= lo && col("doc_id") < hi),
-        src, i + 1)
+    val parts = bounds.map { case (lo, hi) =>
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
     }
-    if (sentinelFinalBatch) {
-      // two days past the epoch ⇒ beyond every real ingest_ts (span <
-      // horizon = 1 h) plus every window end; content collides with
-      // nothing. Asserted, not assumed, against the derived span.
-      val sentinelUs = DocsEpochUs + 48L * 3600L * 1000000L
-      require(sentinelUs > DocsEpochUs + (maxId + 2) * stepUs + DocsHorizonUs,
-        "sentinel must land beyond every real ingest_ts + horizon")
-      val sentinel = spark.sql(
-        s"""SELECT CAST(-1 AS BIGINT) AS doc_id, 'en' AS lang,
-           |'zz1 zz2 zz3' AS text,
-           |timestamp_micros(${sentinelUs}) AS ingest_ts""".stripMargin)
-      writeReplayBatch(sentinel, src, batches + 1)
-    }
-    src
+    // two days past the epoch ⇒ beyond every real ingest_ts (span <
+    // horizon = 1 h) plus every window end; content collides with
+    // nothing. Asserted, not assumed, against the derived span.
+    val sentinelUs = DocsEpochUs + 48L * 3600L * 1000000L
+    require(!sentinelFinalBatch ||
+      sentinelUs > DocsEpochUs + (maxId + 2) * stepUs + DocsHorizonUs,
+      "sentinel must land beyond every real ingest_ts + horizon")
+    Replay.Arrivals(parts, if (!sentinelFinalBatch) Nil else Seq(spark.sql(
+      s"""SELECT CAST(-1 AS BIGINT) AS doc_id, 'en' AS lang,
+         |'zz1 zz2 zz3' AS text,
+         |timestamp_micros(${sentinelUs}) AS ingest_ts""".stripMargin)))
   }
 
-  /** One cached replay dir per FULL parameter tuple — keying only on
-    * (dir, variant) let a future caller reusing a variant name with
-    * different batches/sentinel silently read the wrong replay data
-    * (round-10 advice). */
-  private val docsReplaySrc =
-    scala.collection.concurrent.TrieMap.empty[(String, String, Int, Boolean), String]
-  private def docsReplayDir(spark: SparkSession, dir: String, variant: String,
+  /** The documents replay staged once per FULL parameter tuple — keying
+    * only on (dir, variant) let a future caller reusing a variant name
+    * with different batches/sentinel silently read the wrong replay
+    * data (round-10 advice). */
+  private def docsReplay(spark: SparkSession, dir: String, variant: String,
       select: DataFrame => DataFrame, batches: Int,
-      sentinelFinalBatch: Boolean): String =
-    docsReplaySrc.getOrElseUpdate((dir, variant, batches, sentinelFinalBatch),
-      buildDocsReplay(spark, select(graft.Tables.load(spark, dir, "documents")),
-        s"graft-stream-docs-$variant", batches, sentinelFinalBatch))
+      sentinelFinalBatch: Boolean): Replay.Staged =
+    Replay.stage(Some(("docs", dir, variant, batches, sentinelFinalBatch)))(
+      docsArrivals(spark, select(graft.Tables.load(spark, dir, "documents")),
+        batches, sentinelFinalBatch))
 
   /** [[curateStream]] executed through THREE micro-batches: content
     * dedup runs with real cross-batch state (a batch-2/3 copy of
@@ -1313,21 +984,13 @@ object StreamingPipelines {
     * content emitted twice — would double a row and fail the oracle's
     * row diff). */
   def curateAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val src = docsReplayDir(spark, dir, "all", identity, batches = 3,
+    val src = docsReplay(spark, dir, "all", identity, batches = 3,
       sentinelFinalBatch = false)
-    val name = s"curate_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = curateStream(readDocsBatches(spark, src))
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBatches(q, 180000, expectDataBatches = 3)
-    }
+    val q = Replay.run(curateStream(Replay.read(spark, src)), src)
     val canon = graft.Tables.load(spark, dir, "documents")
       .groupBy(xxhash64(col("text")).as("content_hash"))
       .agg(min(col("doc_id")).as("keep_id"), min(col("lang")).as("lang"))
-    spark.table(name)
+    spark.table(q.name)
       .select(col("content_hash"), col("n_words"), col("est_tokens"))
       .join(canon, Seq("content_hash"))
       .select(col("keep_id"), col("lang"), col("n_words"), col("est_tokens"))
@@ -1341,22 +1004,14 @@ object StreamingPipelines {
     * set = exactly the batch-contaminated ids — deterministic (ids,
     * not survivors), stated verbatim in the oracle. */
   def decontaminateAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val src = docsReplayDir(spark, dir, "all", identity, batches = 3,
+    val src = docsReplay(spark, dir, "all", identity, batches = 3,
       sentinelFinalBatch = false)
     val bench = graft.text.TextQueries.sharedHashedShingles(spark, dir, 5)
       .filter(col("doc_id") % 10 === 0)
       .select(col("shingle")).distinct()
-    val name = s"decon_declared_${declaredRuns.incrementAndGet()}"
-    withReplayPartitions(spark) {
-      val q = decontaminateStream(
-          readDocsBatches(spark, src).filter(col("doc_id") % 10 =!= 0), bench)
-        .writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      awaitBatches(q, 180000, expectDataBatches = 3)
-    }
-    spark.table(name).orderBy(col("doc_id"))
+    val q = Replay.run(decontaminateStream(
+      Replay.read(spark, src).filter(col("doc_id") % 10 =!= 0), bench), src)
+    spark.table(q.name).orderBy(col("doc_id"))
   }
 
   /** [[incrementalDedupStream]] executed through THREE micro-batches
@@ -1369,27 +1024,19 @@ object StreamingPipelines {
     * identical size semantics (arriving = own distinct count, corpus =
     * df-capped posting size). */
   def incrementalDedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val src = docsReplayDir(spark, dir, "arriving",
+    val src = docsReplay(spark, dir, "arriving",
       _.filter(col("doc_id") % 10 === 9), batches = 2, sentinelFinalBatch = true)
     val corpus = graft.Tables.load(spark, dir, "documents")
       .filter(col("doc_id") % 10 =!= 9)
     val posting = graft.text.TextQueries.cappedPostingLists(corpus).localCheckpoint()
     val sizes = graft.text.TextQueries.postingDocSizes(posting)
-    val name = s"incdedup_declared_${declaredRuns.incrementAndGet()}"
     try {
-      withReplayPartitions(spark) {
-        val q = incrementalDedupStream(readDocsBatches(spark, src),
-            posting, sizes, threshold = 0.1)
-          .writeStream.format("memory").queryName(name)
-          .outputMode(OutputMode.Append())
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        // two real arrival splits + the sentinel arrival
-        awaitBatches(q, 180000, expectDataBatches = 3)
-      }
+      // two real arrival splits + the sentinel arrival
+      val q = Replay.run(incrementalDedupStream(Replay.read(spark, src),
+        posting, sizes, threshold = 0.1), src)
       // the memory sink holds the emitted rows; the posting blocks are
       // no longer referenced once the replay has terminated
-      spark.table(name)
+      spark.table(q.name)
         .select(col("doc_id"), col("d_old"), col("jaccard"))
         .orderBy(col("doc_id"), col("d_old"))
     } finally graft.Checkpoints.release(posting)

@@ -11,6 +11,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  /** Specs and plan gates are written against 8 partitions. */
-  lazy val session: SparkSession = SessionTuning.session("graft-test", cpus = 8)
+  private var current: SparkSession = _
+
+  /** Specs and plan gates are written against 8 partitions. A spec
+    * that stops the session (to test a restart) gets a fresh one here,
+    * and so does every suite that starts after it. */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped)
+      current = SessionTuning.session("graft-test", cpus = 8)
+    current
+  }
 }

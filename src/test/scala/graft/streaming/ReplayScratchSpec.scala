@@ -5,7 +5,7 @@ import graft.{Registry, SparkSpec}
 /** The replay checkpoint scratch: where it lives, and that a declared
   * replay removes its own checkpoint once the query stops. */
 class ReplayScratchSpec extends SparkSpec {
-  import StreamingPipelines.{ShmDir, ShmMinUsableBytes, scratchBase}
+  import Replay.{ShmDir, ShmMinUsableBytes, scratchBase}
 
   test("scratch base: the tmpfs only with at least 1 GiB usable; the override wins") {
     assert(ShmMinUsableBytes == (1L << 30))
@@ -18,7 +18,7 @@ class ReplayScratchSpec extends SparkSpec {
   }
 
   test("a declared replay leaves no per-query checkpoint dir under the scratch root") {
-    val root = new java.io.File(StreamingPipelines.scratchRoot)
+    val root = new java.io.File(Replay.scratchRoot)
     def children = Option(root.listFiles()).getOrElse(Array.empty).map(_.getName).toSet
     val before = children
     val n = Registry.byName("q183_stream_dedup").run(spark, sf0001).count()

@@ -28,7 +28,8 @@ class StreamSelfDedupSpec extends SparkSpec {
       (3L, "en", sameWave + " " + toks(0 until 11, "d")),
       (6L, "en", toks(0 until 7, "e") + " " + sameWave))
       .toDF("doc_id", "lang", "text")
-    val out = StreamSelfDedup.runReplay(spark, docs)
+    val out = StreamSelfDedup.spans(spark,
+      Replay.stage(None)(StreamSelfDedup.waveArrivals(spark, docs)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
     assert(out.toSeq == Seq((0L, 6L, 85L, 1L, 13L, 92L, 80L)),
@@ -42,7 +43,8 @@ class StreamSelfDedupSpec extends SparkSpec {
       (3L, "en", shared + " " + toks(0 until 10, "f")), // wave 0
       (5L, "en", toks(0 until 20, "g") + " " + shared)) // wave 2
       .toDF("doc_id", "lang", "text")
-    val out = StreamSelfDedup.runReplay(spark, docs)
+    val out = StreamSelfDedup.spans(spark,
+      Replay.stage(None)(StreamSelfDedup.waveArrivals(spark, docs)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
     assert(out.toSeq == Seq((3L, 1L, 65L, 5L, 21L, 85L, 65L)),

@@ -27,7 +27,8 @@ class StreamSubstrSpec extends SparkSpec {
     val arriving = Seq((1L, "en",
       toks(0 until 30, "b") + " " + shared + " " + toks(0 until 40, "y")))
       .toDF("doc_id", "lang", "text")
-    val out = StreamSubstr.runReplay(spark, corpus, arriving)
+    val out = StreamSubstr.spans(spark, corpus,
+      Replay.stage(None)(StreamSubstr.chunkArrivals(spark, arriving)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
     assert(out.toSeq == Seq((0L, 11L, 160L, 1L, 31L, 180L, 150L)),
@@ -45,7 +46,8 @@ class StreamSubstrSpec extends SparkSpec {
       .toDF("doc_id", "lang", "text")
     val arriving = Seq((2L, "en", s1 + " " + toks(0 until 7, "dfill") + " " + s2))
       .toDF("doc_id", "lang", "text")
-    val out = StreamSubstr.runReplay(spark, corpus, arriving)
+    val out = StreamSubstr.spans(spark, corpus,
+      Replay.stage(None)(StreamSubstr.chunkArrivals(spark, arriving)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6))).toSet
     // s1: corpus 1..60, arriving 1..60; s2: corpus 81..135, arriving 68..122
@@ -67,7 +69,8 @@ class StreamSubstrSpec extends SparkSpec {
     val corpus = Seq((20L, "en", shared)).toDF("doc_id", "lang", "text")
     val arriving = Seq((3L, "en", shared), (4L, "en", toks(0 until 50, "u")))
       .toDF("doc_id", "lang", "text")
-    val out = StreamSubstr.runReplay(spark, corpus, arriving)
+    val out = StreamSubstr.spans(spark, corpus,
+      Replay.stage(None)(StreamSubstr.chunkArrivals(spark, arriving)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
     assert(out.toSeq == Seq((20L, 1L, 50L, 3L, 1L, 50L, 50L)),

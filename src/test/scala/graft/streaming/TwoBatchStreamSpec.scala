@@ -1,13 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tuning}
 
 /** Drives the multi-batch streaming paths with a hand-built two-file
   * source: state carried ACROSS a micro-batch boundary is what the
@@ -16,58 +14,29 @@ class TwoBatchStreamSpec extends SparkSpec {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  /** Write `rows` as N single-file parquet arrivals split at `cuts`
-    * (time boundaries, row goes to the first batch whose upper cut is
-    * strictly above its ts), modification times forcing batch order
-    * (the declared replay source's construction). */
+  /** Stage `rows` as N single-file arrivals split at `cuts` (time
+    * boundaries, row goes to the first batch whose upper cut is
+    * strictly above its ts), through the declared replays' harness. */
   private def filesSource(rows: Seq[(Long, Timestamp, Long, String, Double)],
-                          cuts: Seq[Timestamp]): String = {
+                          cuts: Seq[Timestamp]): Replay.Staged = {
     import spark.implicits._
-    val src = Files.createTempDirectory("graft-nbatch-src").toString
-    def writeBatch(part: DataFrame, n: Int): Unit = {
-      val tmp = Files.createTempDirectory("graft-nbatch-stage")
-      part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val f = tmp.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
-      val dest = Paths.get(src, s"batch$n.parquet")
-      Files.move(f.toPath, dest)
-      dest.toFile.setLastModified(n * 1000000000L)
-      ()
-    }
     val df = rows.toDF("event_id", "ts", "user_id", "event_type", "value")
     val lows = None +: cuts.map(Some(_))
     val highs = cuts.map(Some(_)) :+ None
-    lows.zip(highs).zipWithIndex.foreach { case ((lo, hi), i) =>
-      val part = df
-        .filter(lo.map(c => col("ts") >= lit(c)).getOrElse(lit(true)))
+    Replay.stage(None)(Replay.Arrivals(lows.zip(highs).map { case (lo, hi) =>
+      df.filter(lo.map(c => col("ts") >= lit(c)).getOrElse(lit(true)))
         .filter(hi.map(c => col("ts") < lit(c)).getOrElse(lit(true)))
-      writeBatch(part, i + 1)
-    }
-    src
+    }))
   }
 
   private def twoFileSource(rows: Seq[(Long, Timestamp, Long, String, Double)],
-                            mid: Timestamp): String = filesSource(rows, Seq(mid))
+                            mid: Timestamp): Replay.Staged = filesSource(rows, Seq(mid))
 
   /** transformWithState requires a multi-column-family store provider;
     * scope RocksDB to the replay and restore the previous setting. */
-  private def withRocksDb[T](f: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try f finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
-  private def readTwoBatches(src: String): DataFrame =
-    spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
+  private def withRocksDb[T](f: => T): T =
+    Tuning.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+      Some("org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))(f)
 
   test("transformWithState max-gap: boundary-spanning gap comes from carried state, two data batches run") {
     import spark.implicits._
@@ -82,20 +51,14 @@ class TwoBatchStreamSpec extends SparkSpec {
       (5L, ts("2024-01-01 11:00:00"), 3L, "click", 1.0),
       (6L, ts("2024-01-01 11:05:00"), 3L, "click", 1.0)),
       mid = ts("2024-01-01 10:30:00"))
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val q = StreamingPipelines.maxGapStream(
-          readTwoBatches(src).as[StreamingPipelines.Event])
+          Replay.read(spark, src).as[StreamingPipelines.Event])
         .writeStream.format("memory").queryName("gap2b")
         .outputMode("update").trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000))
       assert(q.recentProgress.count(_.numInputRows > 0) == 2,
         "source must deliver exactly two data micro-batches")
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
     // final update per user (max n)
     val fin = spark.table("gap2b")
@@ -131,7 +94,7 @@ class TwoBatchStreamSpec extends SparkSpec {
     import spark.implicits._
     withRocksDb {
       val q = StreamingPipelines.windowTopKStream(
-          readTwoBatches(src).as[StreamingPipelines.Event])
+          Replay.read(spark, src).as[StreamingPipelines.Event])
         .writeStream.format("memory").queryName("topk3b")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000))
@@ -163,7 +126,7 @@ class TwoBatchStreamSpec extends SparkSpec {
     import spark.implicits._
     withRocksDb {
       val q = StreamingPipelines.windowTopKStream(
-          readTwoBatches(src).as[StreamingPipelines.Event])
+          Replay.read(spark, src).as[StreamingPipelines.Event])
         .writeStream.format("memory").queryName("topkboundary")
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       assert(q.awaitTermination(120000))
@@ -253,10 +216,9 @@ class TwoBatchStreamSpec extends SparkSpec {
       (0L, "en", dupText),
       (3900000L, "en", dupText),
       (3900001L, "en", otherText)).toDF("doc_id", "lang", "text")
-    val src = StreamingPipelines.buildDocsReplay(spark, docs,
-      "graft-horizon-spec", batches = 2, sentinelFinalBatch = false)
-    val q = StreamingPipelines.curateStream(
-        StreamingPipelines.readDocsBatches(spark, src))
+    val src = Replay.stage(None)(StreamingPipelines.docsArrivals(spark, docs,
+      batches = 2, sentinelFinalBatch = false))
+    val q = StreamingPipelines.curateStream(Replay.read(spark, src))
       .writeStream.format("memory").queryName("horizon2b")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000))
@@ -273,8 +235,8 @@ class TwoBatchStreamSpec extends SparkSpec {
     val tooBig = Seq((0L, "en", dupText), (4_000_000_000_000L, "en", otherText))
       .toDF("doc_id", "lang", "text")
     val e = intercept[IllegalArgumentException] {
-      StreamingPipelines.buildDocsReplay(spark, tooBig,
-        "graft-horizon-overflow", batches = 2, sentinelFinalBatch = false)
+      Replay.stage(None)(StreamingPipelines.docsArrivals(spark, tooBig,
+        batches = 2, sentinelFinalBatch = false))
     }
     assert(e.getMessage.contains("watermark horizon"), e.getMessage)
   }
@@ -297,7 +259,7 @@ class TwoBatchStreamSpec extends SparkSpec {
       (5L, ts("2024-01-01 20:00:00"), 98L, "click", 1.0),
       (6L, ts("2024-01-01 20:00:00"), 99L, "purchase", 1.0))
     val src = twoFileSource(rows, mid = ts("2024-01-01 19:30:00"))
-    val q = StreamingPipelines.purchaseClickJoinOf(readTwoBatches(src), "right_outer")
+    val q = StreamingPipelines.purchaseClickJoinOf(Replay.read(spark, src), "right_outer")
       .writeStream.format("memory").queryName("rboundary")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000))
@@ -311,7 +273,7 @@ class TwoBatchStreamSpec extends SparkSpec {
     assert(got == Set((1L, 2L), (3L, -1L)), got.mkString(", "))
     // same boundary rule through the full-outer state machine: the
     // boundary click stays in state there too
-    val q2 = StreamingPipelines.purchaseClickJoinOf(readTwoBatches(src), "full_outer")
+    val q2 = StreamingPipelines.purchaseClickJoinOf(Replay.read(spark, src), "full_outer")
       .writeStream.format("memory").queryName("fboundary")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     assert(q2.awaitTermination(120000))
@@ -332,7 +294,7 @@ class TwoBatchStreamSpec extends SparkSpec {
       // (1, click, hour 11): same user+type, NEW hour → new key
       (5L, ts("2024-01-01 11:30:00"), 1L, "click", 1.0)),
       mid = ts("2024-01-01 10:30:00"))
-    val q = StreamingPipelines.hourlyKeyDedupStream(readTwoBatches(src))
+    val q = StreamingPipelines.hourlyKeyDedupStream(Replay.read(spark, src))
       .writeStream.format("memory").queryName("dedup2b")
       .outputMode("append").trigger(Trigger.AvailableNow()).start()
     assert(q.awaitTermination(120000))
