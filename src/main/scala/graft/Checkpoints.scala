@@ -34,6 +34,27 @@ object Checkpoints {
   * served indexes, per-cycle index dirs. */
 object ScratchDirs {
 
+  /** Run `body` over a fresh temp dir and delete the dir when `body`
+    * returns or throws. A result that outlives the dir must be
+    * materialized off its files inside `body` (`localCheckpoint`). */
+  def withTempDir[T](prefix: String)(body: String => T): T = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(d.toString) finally deleteRecursively(d)
+  }
+
+  private val builtOnce =
+    scala.collection.concurrent.TrieMap.empty[(String, String), String]
+
+  /** The dir `build` filled for `key`, built once per process under a
+    * [[cleanedOnExit]] dir — the served indexes, whose search-only rows
+    * must not re-pay the build. */
+  def onceFor(prefix: String, key: String)(build: String => Unit): String =
+    builtOnce.getOrElseUpdate((prefix, key), {
+      val d = cleanedOnExit(prefix)
+      build(d)
+      d
+    })
+
   def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty[java.io.File]).foreach(deleteRecursively)
     f.delete(); ()

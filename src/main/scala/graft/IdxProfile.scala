@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Dev tool (round-15): phase-level timing of the persisted-index
@@ -23,27 +21,27 @@ object IdxProfile {
       val emb = Tables.load(spark, sfDir, "embeddings")
       val base = emb.filter(col("vec_id") % 4 =!= 3)
       val delta = emb.filter(col("vec_id") % 4 === 3)
-      val dir = Files.createTempDirectory("graft-idxprof-").toString
-      val edges = t("topkjoin.base.build+ckpt") {
-        org.apache.spark.sql.graft.TopKJoin.knn(
-          base.repartition(col("vec_id")), base, 10).localCheckpoint()
+      ScratchDirs.withTempDir("graft-idxprof-") { dir =>
+        val edges = t("topkjoin.base.build+ckpt") {
+          org.apache.spark.sql.graft.TopKJoin.knn(
+            base.repartition(col("vec_id")), base, 10).localCheckpoint()
+        }
+        t("write(index)") {
+          graft.knn.GraphIndexStore.write(base, edges, dir, k = 10,
+            routerFor = Some(graft.knn.GraphIndexStore.sharedBaseRouter(spark, sfDir)),
+            onPhase = (ph, s) => println(f"[idxprof]   phase $ph%-22s $s%7.3f s"))
+        }
+        t("upsert(delta)") {
+          graft.knn.GraphIndexStore.upsert(spark, dir, delta, k = 10)
+        }
+        t("isFreshFor(full)") {
+          require(graft.knn.GraphIndexStore.isFreshFor(spark, dir, emb))
+        }
+        t("read+orderBy+ckpt") {
+          spark.read.parquet(s"$dir/edges")
+            .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint().count()
+        }
       }
-      t("write(index)") {
-        graft.knn.GraphIndexStore.write(base, edges, dir, k = 10,
-          routerFor = Some(graft.knn.GraphIndexStore.sharedBaseRouter(spark, sfDir)),
-          onPhase = (ph, s) => println(f"[idxprof]   phase $ph%-22s $s%7.3f s"))
-      }
-      t("upsert(delta)") {
-        graft.knn.GraphIndexStore.upsert(spark, dir, delta, k = 10)
-      }
-      t("isFreshFor(full)") {
-        require(graft.knn.GraphIndexStore.isFreshFor(spark, dir, emb))
-      }
-      t("read+orderBy+ckpt") {
-        spark.read.parquet(s"$dir/edges")
-          .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint().count()
-      }
-      graft.knn.GraphIndexStore.deleteIndexDir(dir)
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = true))
       spark.catalog.clearCache()

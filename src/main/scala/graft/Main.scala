@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Drop-in CLI for the reference's `main.py` (`main.py:14-48`) — same
   * flags, same fvecs input, same `(id, [n1, n2, ...])` text-graph

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-process cache of expensive shared intermediates ("materialized
@@ -19,8 +17,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    pipeline materializes the graph once to distributed storage and
   *    every downstream query scans it.
   *
-  * Scoped to the JVM process via a fresh temp dir, so reruns after a
-  * code change never see stale results. Correctness is unaffected:
+  * Scoped to the JVM process via a fresh temp dir (removed at exit),
+  * so reruns after a code change never see stale results; each
+  * [[reset]] deletes the snapshots it drops. Correctness is unaffected:
   * producers here are deterministic (brute-force KNN) or seeded-
   * deterministic (MRDF), and a parquet round-trip is lossless for the
   * long/double edge schema — the DuckDB oracle still checks every
@@ -28,24 +27,24 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Materialized {
 
-  private var rootDir: Path = null
-  private def root: Path = synchronized {
-    if (rootDir == null) {
-      rootDir = Files.createTempDirectory("graft-mat-")
-      rootDir.toFile.deleteOnExit()
-    }
-    rootDir
-  }
+  private lazy val root = new java.io.File(ScratchDirs.cleanedOnExit("graft-mat-"))
+  /** Snapshots live under `gen<N>`; a reset deletes the generation it
+    * ends. */
+  private var generation = 0
+  private def genDir = new java.io.File(root, s"gen$generation")
 
   private val built = scala.collection.mutable.HashSet.empty[String]
 
-  /** Drop every cached snapshot: the next `table` call rebuilds from
-    * scratch in a fresh temp dir. Used by Bench between measurement
-    * passes so pass 2 re-pays shared-table construction — otherwise a
-    * min-of-passes headline would silently report warm-cache numbers. */
+  /** Drop and delete every cached snapshot: the next `table` call
+    * rebuilds from scratch. Used by Bench between measurement passes so
+    * pass 2 re-pays shared-table construction — otherwise a
+    * min-of-passes headline would silently report warm-cache numbers.
+    * A DataFrame returned by an earlier `table` call must not be read
+    * after the reset: its files are gone. */
   def reset(): Unit = synchronized {
     built.clear()
-    rootDir = null
+    ScratchDirs.deleteRecursively(genDir)
+    generation += 1
   }
 
   /** Return `name`'s materialized table for `sfDir`, building it on
@@ -55,12 +54,13 @@ object Materialized {
     // Collision-free key: sanitize the full sfDir path (a 32-bit
     // hashCode could, rarely, alias two scale-factor dirs).
     val key = name + "-" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_")
-    val path = root.resolve(key).toString
-    synchronized {
+    val path = synchronized {
+      val p = new java.io.File(genDir, key).toString
       if (!built.contains(key)) {
-        build.write.mode("overwrite").parquet(path)
+        build.write.mode("overwrite").parquet(p)
         built += key
       }
+      p
     }
     spark.read.parquet(path)
   }

@@ -270,31 +270,30 @@ object Scale {
       val e = Mrdf.buildGraph(vecs, SweepParams)
       (e, e.count())
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-gidx-scale-").toString
-    val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
-    val (_, writeSec) = timed {
-      GraphIndexStore.write(vecs, edges, dir, k = 10, nlist = Nlist,
-        kmeansIters = RouterIters, seedsPerList = 8,
-        onPhase = (p, s) => { phases(p) = s; () })
+    ScratchDirs.withTempDir("graft-gidx-scale-") { dir =>
+      val phases = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+      val (_, writeSec) = timed {
+        GraphIndexStore.write(vecs, edges, dir, k = 10, nlist = Nlist,
+          kmeansIters = RouterIters, seedsPerList = 8,
+          onPhase = (p, s) => { phases(p) = s; () })
+      }
+      Checkpoints.release(edges)
+      val meta = IndexManifest.readMeta(spark, dir)
+      val queries = sampledQueries(vecs, n).localCheckpoint()
+      def serve() = GraphIndexStore.search(spark, dir, queries, k = 10,
+        beam = 8, hops = 4, nprobe = 2)
+      // untimed warmup pays the serve plan's codegen
+      serve().count()
+      val (got, serveSec) = timed {
+        serve().select(col("qid"), col("nbr")).localCheckpoint()
+      }
+      Seq("edges" -> nEdges, "build_sec" -> buildSec, "write_sec" -> writeSec,
+        "write_phases" -> ListMap(phases.toSeq: _*),
+        "train_sample_mod" -> meta.getAs[Int]("train_sample_mod"),
+        "train_n" -> meta.getAs[Long]("train_n"),
+        "queries" -> queries.count(), "serve_sec" -> serveSec,
+        "recall" -> recallAt(got, queries, vecs, 10))
     }
-    Checkpoints.release(edges)
-    val meta = spark.read.parquet(s"$dir/meta").collect()(0)
-    val queries = sampledQueries(vecs, n).localCheckpoint()
-    def serve() = GraphIndexStore.search(spark, dir, queries, k = 10,
-      beam = 8, hops = 4, nprobe = 2)
-    // untimed warmup pays the serve plan's codegen
-    serve().count()
-    val (got, serveSec) = timed {
-      serve().select(col("qid"), col("nbr")).localCheckpoint()
-    }
-    val recall = recallAt(got, queries, vecs, 10)
-    GraphIndexStore.deleteIndexDir(dir)
-    Seq("edges" -> nEdges, "build_sec" -> buildSec, "write_sec" -> writeSec,
-      "write_phases" -> ListMap(phases.toSeq: _*),
-      "train_sample_mod" -> meta.getAs[Int]("train_sample_mod"),
-      "train_n" -> meta.getAs[Long]("train_n"),
-      "queries" -> queries.count(), "serve_sec" -> serveSec,
-      "recall" -> recall)
   }
 
   /** Incremental graph maintenance: MRDF over a base slice, the last
@@ -405,35 +404,34 @@ object Scale {
     val base = vecs.filter(col("vec_id") < nBase).localCheckpoint()
     val (edges, buildSec) =
       timed(Mrdf.buildGraph(base, SweepParams).localCheckpoint())
-    val dir = java.nio.file.Files.createTempDirectory("graft-sgi-scale-").toString
-    val (_, writeSec) = timed(GraphIndexStore.write(base, edges, dir, k = 10,
-      nlist = Nlist, kmeansIters = RouterIters, seedsPerList = 8))
-    Checkpoints.release(edges)
-    // arrival waves as single-file replay arrivals, one micro-batch each
-    val src = Replay.stage(None)(Replay.Arrivals((1 to waves).map { w =>
-      val lo = nBase + (w - 1) * deltaN
-      vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + deltaN)
-    }))
-    val batchWalls = ArrayBuffer.empty[Double]
-    val (_, streamSec) = timed {
-      Replay.run(Replay.read(spark, src), src, Replay.PerBatch((b, _) =>
-        if (!b.isEmpty)
-          batchWalls += timed(GraphIndexStore.ingestBatchApprox(b.sparkSession, dir, b))._2),
-        timeoutMs = 3600000)
+    ScratchDirs.withTempDir("graft-sgi-scale-") { dir =>
+      val (_, writeSec) = timed(GraphIndexStore.write(base, edges, dir, k = 10,
+        nlist = Nlist, kmeansIters = RouterIters, seedsPerList = 8))
+      Checkpoints.release(edges)
+      // arrival waves as single-file replay arrivals, one micro-batch each
+      val src = Replay.stage(None)(Replay.Arrivals((1 to waves).map { w =>
+        val lo = nBase + (w - 1) * deltaN
+        vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + deltaN)
+      }))
+      val batchWalls = ArrayBuffer.empty[Double]
+      val (_, streamSec) = timed {
+        Replay.run(Replay.read(spark, src), src, Replay.PerBatch((b, _) =>
+          if (!b.isEmpty)
+            batchWalls += timed(GraphIndexStore.ingestBatchApprox(b.sparkSession, dir, b))._2),
+          timeoutMs = 3600000)
+      }
+      require(batchWalls.size == waves,
+        s"expected $waves ingest batches, got ${batchWalls.size}")
+      require(GraphIndexStore.isFreshFor(spark, dir, vecs),
+        "the batch-chained fingerprint must validate the grown corpus")
+      val patched = spark.read.parquet(s"$dir/edges").select(col("id"), col("nbr"))
+        .localCheckpoint()
+      Seq("build_sec" -> buildSec, "index_write_sec" -> writeSec,
+        "delta_rows" -> deltaN, "batch_sec" -> batchWalls.toSeq,
+        "stream_sec" -> streamSec,
+        "base_recall" -> recallAt(patched, sampledQueries(base, nBase), vecs, 10),
+        "all_recall" -> recallAt(patched, sampledQueries(vecs, nBase), vecs, 10))
     }
-    require(batchWalls.size == waves,
-      s"expected $waves ingest batches, got ${batchWalls.size}")
-    require(GraphIndexStore.isFreshFor(spark, dir, vecs),
-      "the batch-chained fingerprint must validate the grown corpus")
-    val patched = spark.read.parquet(s"$dir/edges").select(col("id"), col("nbr"))
-      .localCheckpoint()
-    val baseRecall = recallAt(patched, sampledQueries(base, nBase), vecs, 10)
-    val allRecall = recallAt(patched, sampledQueries(vecs, nBase), vecs, 10)
-    GraphIndexStore.deleteIndexDir(dir)
-    Seq("build_sec" -> buildSec, "index_write_sec" -> writeSec,
-      "delta_rows" -> deltaN, "batch_sec" -> batchWalls.toSeq,
-      "stream_sec" -> streamSec, "base_recall" -> baseRecall,
-      "all_recall" -> allRecall)
   }
 
   /** Batch exact-substring dedup (q213 spans, q214 remove-span text)

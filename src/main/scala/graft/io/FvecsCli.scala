@@ -3,8 +3,6 @@ package graft.io
 import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.functions._
-
 /** Synthetic fixed-dim fvecs generator — streams records to disk, so
   * multi-GB fixtures cost O(1) memory. Deterministic per (seed, id).
   *
@@ -73,13 +71,10 @@ object FvecsCount {
   def main(args: Array[String]): Unit = {
     val spark = graft.SessionTuning.session("FvecsCount")
     val t0 = System.nanoTime()
-    val ds = Fvecs.readAuto(spark, args(0)).toDF("vec_id", "embedding")
-    val row = ds.agg(
-      count(lit(1)).as("n"),
-      max(size(col("embedding"))).as("dim"),
-      bit_xor(xxhash64(col("vec_id"), col("embedding"))).as("checksum")).collect()(0)
-    println(s"records=${row.getLong(0)} dim=${row.getInt(1)} " +
-      s"checksum=${row.getLong(2)} sec=${(System.nanoTime() - t0) / 1e9}")
+    val fp = graft.IndexManifest.fingerprint(
+      Fvecs.readAuto(spark, args(0)).toDF("vec_id", "embedding"))
+    println(s"records=${fp.n} dim=${fp.dim} " +
+      s"checksum=${fp.xor} sec=${(System.nanoTime() - t0) / 1e9}")
     spark.stop()
   }
 }

@@ -1,11 +1,9 @@
 package graft.knn
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Declared, Tables}
+import graft.{Declared, IndexManifest, ScratchDirs, Tables}
 
 /** Persistent GRAPH ANN index (round-12 verdict #4 + #3): the serving
   * artifacts q219/q223 compute in-flight — the kNN adjacency, the
@@ -22,9 +20,9 @@ import graft.{Declared, Tables}
   *  - `centroids/` (cid, cvec)         — the coarse router;
   *  - `cseeds/`    (cid, node)         — per-cluster entry seeds;
   *  - `meta/`      one row (n_vectors, dim, k, nlist, kmeans_iters,
-  *    fingerprint) — fingerprint = bit_xor of xxhash64(vec_id,
-  *    embedding) over nodes, order-independent, chained on upsert
-  *    exactly like [[graft.similarity.IvfIndexStore]].
+  *    fingerprint, train_sample_mod, train_n, seeds_per_list) — the
+  *    [[IndexManifest]] row over nodes: its fingerprint, delta checks,
+  *    xor chain and meta-last commit rule.
   *
   * Losslessness is driver-PROVEN: q225 builds, writes, reloads and
   * serves, and its oracle is q223's routed-search SQL verbatim —
@@ -117,18 +115,6 @@ object GraphIndexStore {
       md5(concat(lit("smp|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
       .cast("long"), lit(mod.toLong)) === 0)
 
-  private def fingerprintOf(pts: DataFrame): (Long, Long, Int) = {
-    val r = pts.agg(count(lit(1)),
-      coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)),
-      coalesce(max(size(col("embedding"))), lit(0)).cast("int"))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), r.getInt(2))
-  }
-
-  private val MetaCols = Seq("n_vectors", "dim", "k", "nlist",
-    "kmeans_iters", "fingerprint", "train_sample_mod", "train_n",
-    "seeds_per_list")
-
   /** Build the full serving index over `emb` with its built adjacency
     * `edges` (id, nbr, dist) and write it under `dir`. Deterministic
     * for a given corpus (portable Lloyd's router, md5-ranked seeds).
@@ -150,12 +136,12 @@ object GraphIndexStore {
       r
     }
     val pts = emb.select(col("vec_id"), col("embedding"))
-    val (n, fp, dim) = fingerprintOf(pts)
+    val fp = IndexManifest.fingerprint(pts)
     val mod =
       if (trainSampleMod > 0) trainSampleMod
-      else math.max(1L, n / TrainTargetN).toInt
+      else math.max(1L, fp.n / TrainTargetN).toInt
     val trainSet = trainSample(pts, mod)
-    val trainN = if (mod <= 1) n else trainSet.count()
+    val trainN = if (mod <= 1) fp.n else trainSet.count()
     // `routerFor` (round-14): a precomputed (router, seed table) for
     // the applied sample mod — the declared cycles resolve it through
     // [[GraphSearch.sharedRouterAndSeeds]] so the identical training
@@ -183,36 +169,32 @@ object GraphIndexStore {
         (c, cs)
     }
     val spark = emb.sparkSession
-    // Component writes run one after another; meta/ stays strictly
-    // AFTER them: it is the index's commit point — a tear anywhere above
-    // leaves no meta, never a valid index. (the q224 navigability
-    // shortcuts persist with the rest of the serving artifacts — round-12 verdict #4 named all three: router,
-    // seeds, long links; deterministic from the node set, stored so
-    // serving never recomputes the pool ranking)
-    timed("component_writes") {
-      pts.write.mode("overwrite").parquet(s"$dir/nodes")
-      edges.select(col("id"), col("nbr"), col("dist"))
-        .write.mode("overwrite").parquet(s"$dir/edges")
-      cent.write.mode("overwrite").parquet(s"$dir/centroids")
-      cseeds.write.mode("overwrite").parquet(s"$dir/cseeds")
-      longLinks.foreach { case (poolSize, perNode) =>
-        GraphSearch.longLinks(pts, poolSize, perNode)
-          .write.mode("overwrite").parquet(s"$dir/links")
+    import spark.implicits._
+    val meta = Seq((fp.n, fp.dim, k, nlist, kmeansIters, fp.xor, mod, trainN,
+      seedsPerList)).toDF("n_vectors", "dim", "k", "nlist", "kmeans_iters",
+      "fingerprint", "train_sample_mod", "train_n", "seeds_per_list")
+    // the q224 long links persist with the rest of the serving
+    // artifacts — round-12 verdict #4 named all three: router, seeds,
+    // long links; deterministic from the node set, stored so serving
+    // never recomputes the pool ranking
+    IndexManifest.commit(dir, meta) {
+      timed("component_writes") {
+        pts.write.mode("overwrite").parquet(s"$dir/nodes")
+        edges.select(col("id"), col("nbr"), col("dist"))
+          .write.mode("overwrite").parquet(s"$dir/edges")
+        cent.write.mode("overwrite").parquet(s"$dir/centroids")
+        cseeds.write.mode("overwrite").parquet(s"$dir/cseeds")
+        longLinks.foreach { case (poolSize, perNode) =>
+          GraphSearch.longLinks(pts, poolSize, perNode)
+            .write.mode("overwrite").parquet(s"$dir/links")
+        }
       }
     }
-    import spark.implicits._
-    Seq((n, dim, k, nlist, kmeansIters, fp, mod, trainN, seedsPerList))
-      .toDF(MetaCols: _*)
-      .write.mode("overwrite").parquet(s"$dir/meta")
   }
 
-  /** True iff the index under `dir` holds exactly `emb` (count +
-    * order-independent content fingerprint over nodes). */
-  def isFreshFor(spark: SparkSession, dir: String, emb: DataFrame): Boolean = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val (n, fp, _) = fingerprintOf(emb.select(col("vec_id"), col("embedding")))
-    m.getAs[Long]("n_vectors") == n && m.getAs[Long]("fingerprint") == fp
-  }
+  /** True iff the index under `dir` holds exactly `emb`. */
+  def isFreshFor(spark: SparkSession, dir: String, emb: DataFrame): Boolean =
+    IndexManifest.isFresh(spark, dir, emb)
 
   /** Serve the PERSISTED index: routed beam search over the stored
     * adjacency — reads ONLY the index dir (nodes, edges, router,
@@ -224,22 +206,16 @@ object GraphIndexStore {
     * REQUIRE freshness against the corpus they just wrote, but a
     * serve-only caller would silently serve a dir whose `nodes/` were
     * mutated out-of-band — with the check on, the stored nodes are
-    * re-fingerprinted and compared to `meta/` (count + xor content
-    * hash), and a mismatch is refused. One scan of nodes/, off by
-    * default: the serving hot path stays probe + entries + hops. */
+    * re-fingerprinted and compared to `meta/` ([[IndexManifest.isFresh]]),
+    * and a mismatch is refused. One scan of nodes/, off by default: the
+    * serving hot path stays probe + entries + hops. */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
              k: Int = K, beam: Int = Beam, hops: Int = Hops,
              nprobe: Int = Nprobe, checkFresh: Boolean = false): DataFrame = {
     val nodes = spark.read.parquet(s"$dir/nodes")
-    if (checkFresh) {
-      val m = spark.read.parquet(s"$dir/meta").collect()(0)
-      val (n, fp, _) = fingerprintOf(nodes)
-      require(m.getAs[Long]("n_vectors") == n &&
-        m.getAs[Long]("fingerprint") == fp,
-        s"stale graph index at $dir: stored nodes (n=$n) do not match " +
-          s"meta (n=${m.getAs[Long]("n_vectors")}) — the nodes were " +
-          "mutated out-of-band; rebuild or upsert through the store")
-    }
+    require(!checkFresh || IndexManifest.isFresh(spark, dir, nodes),
+      s"stale graph index at $dir: stored nodes do not match meta — the " +
+        "nodes were mutated out-of-band; rebuild or upsert through the store")
     val edges0 = spark.read.parquet(s"$dir/edges")
     // serve over adjacency ∪ persisted long links when the index was
     // written with them (hop columns only — links carry no dist);
@@ -258,16 +234,6 @@ object GraphIndexStore {
       k, beam, hops, nprobe)
   }
 
-  /** Reclaim an ephemeral index dir (measurement harnesses + the
-    * streamed-ingest cycle). */
-  private[graft] def deleteIndexDir(dir: String): Unit =
-    graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
-
-  /** Full persisted cycle for the q225 declared row: router + seeds
-    * trained, everything written, fingerprint REQUIREd, reloaded,
-    * served — a fresh ephemeral dir per invocation (the q218
-    * convention; the adjacency itself comes from the shared
-    * materialized knn10 — its build cost is knn_bruteforce's row). */
   /** The shared-materialized router provider for the full embeddings /
     * 75% base-slice corpora (round-14): one identical training per
     * (process, sf, bench pass) serves q223/q225/q226/q229 (full) and
@@ -282,17 +248,20 @@ object GraphIndexStore {
       p.kmeansIters, p.seedsPerList, p.mod)(
       Tables.load(s, sfDir, "embeddings").filter(col("vec_id") % 4 =!= 3))
 
-  def buildAndSearch(s: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.load(s, sfDir, "embeddings")
-    val dir = Files.createTempDirectory("graft-gidx-").toString
-    write(emb, KnnQueries.knn10(s, sfDir), dir,
-      routerFor = Some(sharedFullRouter(s, sfDir)))
-    require(isFreshFor(s, dir, emb),
-      "graph index fingerprint must match the corpus it was just built from")
-    val res = search(s, dir, emb.filter(col("vec_id") < 20)).localCheckpoint()
-    deleteIndexDir(dir)
-    res
-  }
+  /** Full persisted cycle for the q225 declared row: router + seeds
+    * trained, everything written, fingerprint REQUIREd, reloaded,
+    * served — a fresh ephemeral dir per invocation (the q218
+    * convention; the adjacency itself comes from the shared
+    * materialized knn10 — its build cost is knn_bruteforce's row). */
+  def buildAndSearch(s: SparkSession, sfDir: String): DataFrame =
+    ScratchDirs.withTempDir("graft-gidx-") { dir =>
+      val emb = Tables.load(s, sfDir, "embeddings")
+      write(emb, KnnQueries.knn10(s, sfDir), dir,
+        routerFor = Some(sharedFullRouter(s, sfDir)))
+      require(isFreshFor(s, dir, emb),
+        "graph index fingerprint must match the corpus it was just built from")
+      search(s, dir, emb.filter(col("vec_id") < 20)).localCheckpoint()
+    }
 
   private val LinkPool = 16
   private val LinksPerNode = 2
@@ -303,31 +272,25 @@ object GraphIndexStore {
     * graph, the branch no driver row previously exercised. Served with
     * the opt-in staleness check ON, so the serve-side fingerprint
     * re-verification runs under the driver gate too. */
-  def buildAndSearchLongLinks(s: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.load(s, sfDir, "embeddings")
-    val dir = Files.createTempDirectory("graft-gidx-ll-").toString
-    write(emb, KnnQueries.knn10(s, sfDir), dir,
-      longLinks = Some((LinkPool, LinksPerNode)),
-      routerFor = Some(sharedFullRouter(s, sfDir)))
-    val res = search(s, dir, emb.filter(col("vec_id") < 20),
-      checkFresh = true).localCheckpoint()
-    deleteIndexDir(dir)
-    res
-  }
+  def buildAndSearchLongLinks(s: SparkSession, sfDir: String): DataFrame =
+    ScratchDirs.withTempDir("graft-gidx-ll-") { dir =>
+      val emb = Tables.load(s, sfDir, "embeddings")
+      write(emb, KnnQueries.knn10(s, sfDir), dir,
+        longLinks = Some((LinkPool, LinksPerNode)),
+        routerFor = Some(sharedFullRouter(s, sfDir)))
+      search(s, dir, emb.filter(col("vec_id") < 20),
+        checkFresh = true).localCheckpoint()
+    }
 
   /** Per-(process, sfDir) SERVED index for the q226 search-only row —
     * built + written once, every invocation pays only reload → probe →
     * entries → hops (the q218b build/serve split applied to the graph
     * index; dir reclaimed at JVM exit). */
-  private val servedIdx =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def servedIndexDir(s: SparkSession, sfDir: String): String =
-    servedIdx.getOrElseUpdate(sfDir, {
-      val d = graft.ScratchDirs.cleanedOnExit("graft-gidx-served-")
+    ScratchDirs.onceFor("graft-gidx-served-", sfDir) { d =>
       write(Tables.load(s, sfDir, "embeddings"), KnnQueries.knn10(s, sfDir),
         d, routerFor = Some(sharedFullRouter(s, sfDir)))
-      d
-    })
+    }
 
   /** Upsert `delta` (vec_id, embedding) into the persisted graph index
     * at `dir` WITHOUT a rebuild (round-12 verdict #3): the EXACT
@@ -346,72 +309,41 @@ object GraphIndexStore {
     *
     * The router and entry seeds are NOT retrained (FAISS
     * add-after-train; entry quality degrades gracefully and a
-    * maintenance pass re-trains — documented, not hidden). Duplicate
-    * ids are REFUSED like [[graft.similarity.IvfIndexStore.upsert]]:
-    * the guard is one id-column scan of nodes/. The delta is VALIDATED
-    * against the index's recorded parameters (round-13 advice): its
-    * dimension must equal meta's `dim` and the caller's `k` must equal
-    * meta's `k` — a smaller k would silently truncate every base
-    * adjacency list while meta still claimed the build k, and a
-    * wrong-dim delta would corrupt the graph while the count/xor
-    * freshness proof still validated.
+    * maintenance pass re-trains — documented, not hidden). The delta
+    * is validated by [[IndexManifest.validateDelta]] (unique new ids,
+    * meta's `dim`), and the caller's `k` must equal meta's `k` — a
+    * smaller k would silently truncate every base adjacency list while
+    * meta still claimed the build k.
     *
-    * WRITE ORDER makes `meta/` the commit point (round-13 advice):
-    * nodes append → edges overwrite → meta overwrite. A tear after the
-    * nodes append fails `isFreshFor` on count; a tear after the edges
-    * overwrite fails it too (meta still records the base corpus) — the
-    * previous order (edges first) had the one tear the xor-chain proof
-    * could NOT detect: delta edges present with nodes and meta both
-    * untouched. The edge set is fully materialized (localCheckpoint)
-    * before any file is touched, so the reordering never reads a path
-    * it has overwritten. */
+    * WRITE ORDER: nodes append → edges overwrite → the meta commit. A
+    * tear after the nodes append fails `isFreshFor` on count; a tear
+    * after the edges overwrite fails it too (meta still records the
+    * base corpus) — edges first would leave the one tear the xor-chain
+    * proof could NOT detect: delta edges present with nodes and meta
+    * both untouched. The edge set is fully materialized
+    * (localCheckpoint) before any file is touched, so the writes never
+    * read a path they have overwritten. */
   def upsert(spark: SparkSession, dir: String, delta: DataFrame,
              k: Int = K): Unit = {
     val pts = delta.select(col("vec_id"), col("embedding")).localCheckpoint()
     val nodes = spark.read.parquet(s"$dir/nodes")
-    // the three validation reads (meta row, dup-check semi-join, delta
-    // fingerprint) all pass before anything is written
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val dupN = nodes.select(col("vec_id"))
-      .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
-    val fp = fingerprintOf(pts)
+    val (m, fp) = IndexManifest.validateDelta(spark, dir, pts, nodes)
     require(k == m.getAs[Int]("k"),
       s"upsert k=$k does not match the index's build k=${m.getAs[Int]("k")} " +
         "(a smaller k would silently truncate every stored adjacency list)")
-    require(dupN == 0L,
-      s"upsert requires disjoint vec_ids: $dupN already indexed " +
-        "(the insert-only FAISS-add contract; updates need delete+insert)")
-    val (dn, dfp, ddim) = fp
-    require(ddim == m.getAs[Int]("dim"),
-      s"upsert delta dimension $ddim does not match the index's " +
-        s"dim=${m.getAs[Int]("dim")}")
     val all = nodes.select(col("vec_id"), col("embedding")).unionByName(pts)
     val deltaRows = org.apache.spark.sql.graft.TopKJoin.knn(
       pts.repartition(col("vec_id")), all, k)
     val patchCand = org.apache.spark.sql.graft.TopKJoin.knn(
       nodes.repartition(col("vec_id")), pts, k)
-    val existing = spark.read.parquet(s"$dir/edges")
-    val patched = existing.unionByName(patchCand)
-      .select(col("id"), struct(col("dist"), col("nbr")).as("c"))
-      .groupBy(col("id")).agg(slice(sort_array(collect_list(col("c"))), 1, k)
-        .as("topk"))
-      .select(col("id"), explode(col("topk")).as("c"))
-      .select(col("id"), col("c.nbr").as("nbr"), col("c.dist").as("dist"))
+    val patched = graft.agg.TopKByWeight.perId(
+      spark.read.parquet(s"$dir/edges").unionByName(patchCand), k)
     val newEdges = patched.unionByName(
       deltaRows.select(col("id"), col("nbr"), col("dist"))).localCheckpoint()
-    // the edge set is materialized above BEFORE any file mutation (a
-    // failure cannot leave a half-written index); meta below stays the
-    // commit point
-    pts.write.mode("append").parquet(s"$dir/nodes")
-    newEdges.write.mode("overwrite").parquet(s"$dir/edges")
-    import spark.implicits._
-    Seq((m.getAs[Long]("n_vectors") + dn, m.getAs[Int]("dim"),
-        m.getAs[Int]("k"), m.getAs[Int]("nlist"),
-        m.getAs[Int]("kmeans_iters"), m.getAs[Long]("fingerprint") ^ dfp,
-        m.getAs[Int]("train_sample_mod"), m.getAs[Long]("train_n"),
-        m.getAs[Int]("seeds_per_list")))
-      .toDF(MetaCols: _*)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    IndexManifest.chain(spark, dir, m, fp) {
+      pts.write.mode("append").parquet(s"$dir/nodes")
+      newEdges.write.mode("overwrite").parquet(s"$dir/edges")
+    }
   }
 
   /** The q227 declared cycle: build the exact graph on the 75% base
@@ -420,22 +352,19 @@ object GraphIndexStore {
     * post-upsert adjacency — which the oracle states as the rebuild:
     * the exact kNN graph over ALL embeddings (knn_bruteforce's SQL).
     * upsert(graph(base), Δ) ≡ rebuild(base ∪ Δ), driver-diffed. */
-  def upsertCycle(s: SparkSession, sfDir: String, k: Int = K): DataFrame = {
-    val emb = Tables.load(s, sfDir, "embeddings")
-    val base = emb.filter(col("vec_id") % 4 =!= 3)
-    val delta = emb.filter(col("vec_id") % 4 === 3)
-    val dir = Files.createTempDirectory("graft-gidx-up-").toString
-    write(base, org.apache.spark.sql.graft.TopKJoin.knn(
-      base.repartition(col("vec_id")), base, k), dir,
-      routerFor = Some(sharedBaseRouter(s, sfDir)))
-    upsert(s, dir, delta, k)
-    require(isFreshFor(s, dir, emb),
-      "chained fingerprint must validate base + delta as the combined corpus")
-    val res = s.read.parquet(s"$dir/edges")
-      .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint()
-    deleteIndexDir(dir)
-    res
-  }
+  def upsertCycle(s: SparkSession, sfDir: String, k: Int = K): DataFrame =
+    ScratchDirs.withTempDir("graft-gidx-up-") { dir =>
+      val emb = Tables.load(s, sfDir, "embeddings")
+      val base = emb.filter(col("vec_id") % 4 =!= 3)
+      write(base, org.apache.spark.sql.graft.TopKJoin.knn(
+        base.repartition(col("vec_id")), base, k), dir,
+        routerFor = Some(sharedBaseRouter(s, sfDir)))
+      upsert(s, dir, emb.filter(col("vec_id") % 4 === 3), k)
+      require(isFreshFor(s, dir, emb),
+        "chained fingerprint must validate base + delta as the combined corpus")
+      s.read.parquet(s"$dir/edges")
+        .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint()
+    }
 
   /** APPROXIMATE persisted-index ingest of one arriving batch — the
     * scale path behind [[graft.streaming.StreamGraphIngest]]'s
@@ -445,42 +374,24 @@ object GraphIndexStore {
     * from the dir — the artifacts `write` persisted exactly so arrivals
     * never rescan the corpus) and patches via [[patchGraphApprox]]'s
     * beam-candidate + symmetric-reverse + delta-delta machinery. Same
-    * durability discipline as `upsert`: delta validated against meta
-    * (dim, duplicate ids), edge set fully materialized before any file
-    * is touched, write order nodes → edges → meta so `meta/` is the
-    * commit point and the xor chain stays the freshness proof. */
+    * durability discipline as `upsert`: the delta validated by
+    * [[IndexManifest.validateDelta]], the edge set fully materialized
+    * before any file is touched, nodes → edges → the meta commit. */
   def ingestBatchApprox(spark: SparkSession, dir: String, delta: DataFrame,
       beam: Int = 8, hops: Int = 4, nprobe: Int = Nprobe): Unit = {
     val pts = delta.select(col("vec_id"), col("embedding")).localCheckpoint()
     val nodes = spark.read.parquet(s"$dir/nodes")
-    // validation jobs (meta row included), as in [[upsert]]
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val dupN = nodes.select(col("vec_id"))
-      .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
-    val fp = fingerprintOf(pts)
-    val k = m.getAs[Int]("k")
-    require(dupN == 0L,
-      s"ingest requires disjoint vec_ids: $dupN already indexed")
-    val (dn, dfp, ddim) = fp
-    require(ddim == m.getAs[Int]("dim"),
-      s"ingest delta dimension $ddim does not match the index's " +
-        s"dim=${m.getAs[Int]("dim")}")
+    val (m, fp) = IndexManifest.validateDelta(spark, dir, pts, nodes)
     val cent = spark.read.parquet(s"$dir/centroids")
     val cseeds = spark.read.parquet(s"$dir/cseeds")
     val edges = spark.read.parquet(s"$dir/edges")
-    val patched = patchGraphApprox(nodes, edges, pts, k, beam, hops,
-      router = Some((cent, cseeds)), nprobe = nprobe).localCheckpoint()
-    // materialize-before-mutate as in [[upsert]]
-    pts.write.mode("append").parquet(s"$dir/nodes")
-    patched.write.mode("overwrite").parquet(s"$dir/edges")
-    import spark.implicits._
-    Seq((m.getAs[Long]("n_vectors") + dn, m.getAs[Int]("dim"),
-        m.getAs[Int]("k"), m.getAs[Int]("nlist"),
-        m.getAs[Int]("kmeans_iters"), m.getAs[Long]("fingerprint") ^ dfp,
-        m.getAs[Int]("train_sample_mod"), m.getAs[Long]("train_n"),
-        m.getAs[Int]("seeds_per_list")))
-      .toDF(MetaCols: _*)
-      .write.mode("overwrite").parquet(s"$dir/meta")
+    val patched = patchGraphApprox(nodes, edges, pts, m.getAs[Int]("k"),
+      beam, hops, router = Some((cent, cseeds)), nprobe = nprobe)
+      .localCheckpoint()
+    IndexManifest.chain(spark, dir, m, fp) {
+      pts.write.mode("append").parquet(s"$dir/nodes")
+      patched.write.mode("overwrite").parquet(s"$dir/edges")
+    }
   }
 
   /** APPROXIMATE graph patch for the served (MRDF-built) graph — the
@@ -516,14 +427,9 @@ object GraphIndexStore {
       pts.repartition(col("vec_id")), pts, k)
     val reverse = cand.select(col("nbr").as("id"), col("id").as("nbr"),
       col("dist"))
-    val all = baseEdges.select(col("id"), col("nbr"), col("dist"))
-      .unionByName(cand).unionByName(deltaDelta).unionByName(reverse)
-    all
-      .select(col("id"), struct(col("dist"), col("nbr")).as("c"))
-      .groupBy(col("id")).agg(slice(sort_array(collect_set(col("c"))), 1, k)
-        .as("topk"))
-      .select(col("id"), explode(col("topk")).as("c"))
-      .select(col("id"), col("c.nbr").as("nbr"), col("c.dist").as("dist"))
+    graft.agg.TopKByWeight.perId(
+      baseEdges.select(col("id"), col("nbr"), col("dist"))
+        .unionByName(cand).unionByName(deltaDelta).unionByName(reverse), k)
   }
 
   /** knn_bruteforce's oracle text (the exact graph over ALL

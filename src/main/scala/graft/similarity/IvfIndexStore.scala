@@ -1,12 +1,10 @@
 package graft.similarity
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Declared, Tables}
+import graft.{Declared, IndexManifest, ScratchDirs, Tables}
 import graft.linalg.Distances
 
 /** Persistent ANN index: the portable IVF quantizer written as parquet
@@ -21,9 +19,8 @@ import graft.linalg.Distances
   *    nearest-centroid inverted list (the index is self-contained:
   *    search never touches the original table);
   *  - `meta/`      one row (n_vectors, dim, nlist, kmeans_iters,
-  *    fingerprint) — fingerprint = bit_xor of xxhash64(vec_id,
-  *    embedding), order-independent, so staleness against a claimed
-  *    corpus is CHECKABLE instead of assumed.
+  *    fingerprint) — the [[IndexManifest]] row: its fingerprint, delta
+  *    checks, xor chain and meta-last commit rule.
   *
   * Losslessness is driver-PROVEN, not asserted: q218 builds, writes,
   * reloads and searches, and its oracle is the SAME generated SQL as
@@ -85,34 +82,18 @@ object IvfIndexStore {
     val cent = trainedCent.getOrElse(
       Kmeans.centroids(emb, nlist, kmeansIters, portable = true))
     val pts = emb.select(col("vec_id"), col("embedding"))
-    val lists = assignToCentroids(pts, cent)
-    // coalesce: bit_xor over zero rows is NULL — an empty corpus must
-    // produce a definite (0-row, fingerprint 0) index, not a null meta
-    // that makes isFreshFor throw later (round-11 advice).
-    val meta = pts.agg(
-      count(lit(1)).as("n_vectors"),
-      max(size(col("embedding"))).cast("int").as("dim"),
-      coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L))
-        .as("fingerprint"))
+    val meta = IndexManifest.fingerprintRow(pts)
       .select(col("n_vectors"), col("dim"), lit(nlist).as("nlist"),
         lit(kmeansIters).as("kmeans_iters"), col("fingerprint"))
-    // meta stays strictly last as the commit point (no meta ⇒ never a
-    // readable index)
-    cent.write.mode("overwrite").parquet(s"$dir/centroids")
-    lists.write.mode("overwrite").parquet(s"$dir/lists")
-    meta.write.mode("overwrite").parquet(s"$dir/meta")
+    IndexManifest.commit(dir, meta) {
+      cent.write.mode("overwrite").parquet(s"$dir/centroids")
+      assignToCentroids(pts, cent).write.mode("overwrite").parquet(s"$dir/lists")
+    }
   }
 
-  /** True iff the index under `dir` was built over exactly `emb`
-    * (count + order-independent content fingerprint). */
-  def isFreshFor(spark: SparkSession, dir: String, emb: DataFrame): Boolean = {
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    val c = emb.agg(count(lit(1)),
-      coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)))
-      .collect()(0)
-    m.getAs[Long]("n_vectors") == c.getLong(0) &&
-      m.getAs[Long]("fingerprint") == c.getLong(1)
-  }
+  /** True iff the index under `dir` was built over exactly `emb`. */
+  def isFreshFor(spark: SparkSession, dir: String, emb: DataFrame): Boolean =
+    IndexManifest.isFresh(spark, dir, emb)
 
   /** Search the PERSISTED index: `queries` = (vec_id, embedding) rows;
     * output (qid, nbr, sim, rn) — identical contract (and, for the
@@ -139,58 +120,36 @@ object IvfIndexStore {
 
   /** Full persisted cycle for the declared row: build → write → load →
     * search, a FRESH index dir per invocation so every bench/verify
-    * run pays the whole cycle (no cross-run cache can stale).
-    *
-    * `indexDir`: any Hadoop-path string — on a cluster the index MUST
-    * live on shared storage (executors don't see the driver's /tmp);
-    * the driver-local temp default exists only for local-mode
-    * bench/verify runs, and that ephemeral dir is recursively deleted
-    * once the search result is materialized (round-11 advice: the old
-    * deleteOnExit could never remove a non-empty dir, so every
-    * invocation leaked a full corpus copy). */
-  def buildAndSearch(emb: DataFrame, k: Int = K, nprobe: Int = 3,
-                     indexDir: Option[String] = None,
-                     trainedCent: Option[DataFrame] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val (dir, ephemeral) = indexDir match {
-      case Some(d) => (d, false)
-      case None => (Files.createTempDirectory("graft-ivfidx-").toString, true)
+    * run pays the whole cycle (no cross-run cache can stale). The
+    * result is materialized off the index files (localCheckpoint)
+    * before the dir is deleted. */
+  def buildAndSearch(emb: DataFrame,
+                     trainedCent: Option[DataFrame] = None): DataFrame =
+    ScratchDirs.withTempDir("graft-ivfidx-") { dir =>
+      val spark = emb.sparkSession
+      write(emb, dir, trainedCent = trainedCent)
+      require(isFreshFor(spark, dir, emb),
+        "index fingerprint must match the corpus it was just built from")
+      search(spark, dir, emb.filter(col("vec_id") < 20)).localCheckpoint()
     }
-    write(emb, dir, trainedCent = trainedCent)
-    require(isFreshFor(spark, dir, emb),
-      "index fingerprint must match the corpus it was just built from")
-    val res = search(spark, dir, emb.filter(col("vec_id") < 20), k, nprobe)
-    if (ephemeral) {
-      // localCheckpoint materializes the result off the parquet files,
-      // so the temp index dir can be reclaimed immediately
-      val out = res.localCheckpoint()
-      graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
-      out
-    } else res
-  }
 
   /** Upsert `delta` into the persisted index at `dir` WITHOUT a
     * rebuild (round-11 verdict #3 / SURVEY frontier #2): each new
     * vector is assigned to its nearest EXISTING centroid (the coarse
     * quantizer is not retrained — the standard IVF maintenance
     * contract; FAISS's `add` after `train` does exactly this), the
-    * assignments APPEND to `lists/`, and the meta fingerprint CHAINS:
-    * bit_xor is associative and commutative, so
-    * `old_fp XOR fp(delta) = fp(base ∪ delta)` EXACTLY — `isFreshFor`
-    * validates the combined corpus without ever rescanning base.
+    * assignments APPEND to `lists/`, and the meta fingerprint CHAINS
+    * ([[IndexManifest.chain]]) — `isFreshFor` validates the combined
+    * corpus without ever rescanning base.
     *
     * `maxListSize > 0` additionally splits any inverted list that grew
     * past the bound ([[splitOversized]]).
     *
-    * INSERT-ONLY (round-12 advice): upsert refuses vec_ids already in
-    * the index — a silent re-upsert would append duplicate list rows
-    * (duplicate nbr rows in search output) AND the xor chain could not
-    * see it (duplicate xxhash64 values cancel pairwise, so isFreshFor
-    * would validate the doubled corpus). Updates are delete + insert,
-    * the FAISS `add` contract. The guard costs one id-column scan of
-    * lists/ (a single pruned Long column, not a corpus rescan). A delta
-    * that repeats an id is refused too: the assignment emits one list
-    * row per input row, so the id would land in lists/ twice.
+    * INSERT-ONLY: [[IndexManifest.validateDelta]] refuses a delta that
+    * repeats an id, reuses one already in lists/, or has another
+    * dimension — a repeated id would land in lists/ twice (duplicate
+    * nbr rows in search output) while the xor chain cancelled it, and
+    * a wrong-dim vector would be scored over the shorter length.
     *
     * Scale shape: one codegen-argmin pass over delta only (base
     * vectors are never re-read — the whole point), an append write
@@ -200,26 +159,12 @@ object IvfIndexStore {
              maxListSize: Long = 0L): Unit = {
     val cent = spark.read.parquet(s"$dir/centroids")
     val pts = delta.select(col("vec_id"), col("embedding"))
-    val d = pts.agg(count(lit(1)), countDistinct(col("vec_id")),
-        coalesce(bit_xor(xxhash64(col("vec_id"), col("embedding"))), lit(0L)))
-      .collect()(0)
-    require(d.getLong(0) == d.getLong(1),
-      s"upsert requires unique vec_ids within the delta: ${d.getLong(0)} " +
-        s"rows carry ${d.getLong(1)} distinct ids")
-    val dupN = spark.read.parquet(s"$dir/lists").select(col("vec_id"))
-      .join(pts.select(col("vec_id")), Seq("vec_id"), "left_semi").count()
-    require(dupN == 0L,
-      s"upsert requires disjoint vec_ids: $dupN already indexed " +
-        "(insert-only contract; updates need delete+insert)")
-    val m = spark.read.parquet(s"$dir/meta").collect()(0)
-    assignToCentroids(pts, cent).write.mode("append").parquet(s"$dir/lists")
-    import spark.implicits._
-    Seq((m.getAs[Long]("n_vectors") + d.getLong(0), m.getAs[Int]("dim"),
-        m.getAs[Int]("nlist"), m.getAs[Int]("kmeans_iters"),
-        m.getAs[Long]("fingerprint") ^ d.getLong(2)))
-      .toDF("n_vectors", "dim", "nlist", "kmeans_iters", "fingerprint")
-      .write.mode("overwrite").parquet(s"$dir/meta")
-    if (maxListSize > 0L) splitOversized(spark, dir, maxListSize)
+    val (m, fp) = IndexManifest.validateDelta(spark, dir, pts,
+      spark.read.parquet(s"$dir/lists"))
+    IndexManifest.chain(spark, dir, m, fp) {
+      assignToCentroids(pts, cent).write.mode("append").parquet(s"$dir/lists")
+      if (maxListSize > 0L) splitOversized(spark, dir, maxListSize)
+    }
   }
 
   /** Split every inverted list larger than `maxListSize`: the list's
@@ -312,18 +257,16 @@ object IvfIndexStore {
     * built over the combined corpus with the same base-trained
     * quantizer, which is exactly what the oracle replays in SQL. */
   def upsertCycle(emb: DataFrame, k: Int = K, nprobe: Int = 3,
-                  baseCent: Option[DataFrame] = None): DataFrame = {
-    val spark = emb.sparkSession
-    val dir = Files.createTempDirectory("graft-ivfidx-up-").toString
-    write(emb.filter(col("vec_id") % 4 =!= 3), dir, trainedCent = baseCent)
-    upsert(spark, dir, emb.filter(col("vec_id") % 4 === 3))
-    require(isFreshFor(spark, dir, emb),
-      "chained fingerprint must validate base + delta as the combined corpus")
-    val res = search(spark, dir, emb.filter(col("vec_id") < 20), k, nprobe)
-      .localCheckpoint()
-    graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
-    res
-  }
+                  baseCent: Option[DataFrame] = None): DataFrame =
+    ScratchDirs.withTempDir("graft-ivfidx-up-") { dir =>
+      val spark = emb.sparkSession
+      write(emb.filter(col("vec_id") % 4 =!= 3), dir, trainedCent = baseCent)
+      upsert(spark, dir, emb.filter(col("vec_id") % 4 === 3))
+      require(isFreshFor(spark, dir, emb),
+        "chained fingerprint must validate base + delta as the combined corpus")
+      search(spark, dir, emb.filter(col("vec_id") < 20), k, nprobe)
+        .localCheckpoint()
+    }
 
   /** Per-(process, sfDir) SERVED index for the q218b search-only row:
     * built and written once, then every invocation only reads the
@@ -335,15 +278,11 @@ object IvfIndexStore {
     * measures the full cycle every invocation; this cache follows the
     * streaming replay-source precedent (one build per process, the
     * dir reclaimed at JVM exit). */
-  private val servedIdx =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def servedIndexDir(spark: SparkSession, dir: String): String =
-    servedIdx.getOrElseUpdate(dir, {
-      val d = graft.ScratchDirs.cleanedOnExit("graft-ivfidx-served-")
+    ScratchDirs.onceFor("graft-ivfidx-served-", dir) { d =>
       write(Tables.load(spark, dir, "embeddings"), d,
         trainedCent = Some(fullCorpusCent(spark, dir)))
-      d
-    })
+    }
 
   /** The shared (nlist=8, iters=5) portable router over the FULL
     * embeddings table / the 75% base slice — one training per

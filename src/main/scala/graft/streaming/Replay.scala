@@ -66,14 +66,14 @@ object Replay {
     * batch k sorting strictly before batch k+1, so a refused mtime
     * change must fail loudly, not silently reorder the batches. */
   private def writeBatch(part: DataFrame, dir: String, n: Int): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-replay-stage")
-    part.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val f = tmp.toFile.listFiles()
-      .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part file under $tmp"))
     val dest = java.nio.file.Paths.get(dir, s"batch$n.parquet")
-    java.nio.file.Files.move(f.toPath, dest)
-    graft.ScratchDirs.deleteRecursively(tmp.toFile)
+    graft.ScratchDirs.withTempDir("graft-replay-stage") { tmp =>
+      part.coalesce(1).write.mode("overwrite").parquet(tmp)
+      val f = new java.io.File(tmp).listFiles()
+        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+        .getOrElse(sys.error(s"no parquet part file under $tmp"))
+      java.nio.file.Files.move(f.toPath, dest)
+    }
     if (!dest.toFile.setLastModified(n * 1000000000L))
       sys.error(s"setLastModified failed for $dest; replay batch order not guaranteed")
   }

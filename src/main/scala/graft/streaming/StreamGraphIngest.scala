@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{Declared, Tables}
+import graft.{Declared, ScratchDirs, Tables}
 import graft.knn.GraphIndexStore
 
 /** STREAMED graph-index ingest (round-13 verdict #3): arriving vectors
@@ -56,32 +54,30 @@ object StreamGraphIngest {
     * as [[Waves]] single-file arrivals (wave = (vec_id / 4) mod Waves —
     * disjoint, deterministic; empty waves skipped like the q228
     * replay). */
-  def ingestAvailableNow(spark: SparkSession, sfDir: String): DataFrame = {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val base = emb.filter(col("vec_id") % 4 =!= 3)
-    val delta = emb.filter(col("vec_id") % 4 === 3)
-    val idxDir = Files.createTempDirectory("graft-gidx-stream-").toString
-    GraphIndexStore.write(base, org.apache.spark.sql.graft.TopKJoin.knn(
-      base.repartition(col("vec_id")), base, K), idxDir, k = K,
-      routerFor = Some(GraphIndexStore.sharedBaseRouter(spark, sfDir)))
-    val src = Replay.stage(Some(("gidx-delta", sfDir)))(Replay.Arrivals(
-      (0 until Waves).map { w =>
-        delta.filter(pmod(floor(col("vec_id") / 4), lit(Waves.toLong)) === w)
-          .select(col("vec_id"), col("embedding"))
-      }))
-    // the foreachBatch stream's durability lives in the INDEX
-    // transaction (meta/ commit point), not in the replay checkpoint
-    Replay.run(Replay.read(spark, src), src, Replay.PerBatch((batch, _) =>
-      if (!batch.isEmpty)
-        GraphIndexStore.upsert(batch.sparkSession, idxDir, batch, k = K)))
-    require(GraphIndexStore.isFreshFor(spark, idxDir, emb),
-      "after the final wave the batch-chained fingerprint must validate " +
-        "the full corpus (base + every streamed delta)")
-    val res = spark.read.parquet(s"$idxDir/edges")
-      .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint()
-    GraphIndexStore.deleteIndexDir(idxDir)
-    res
-  }
+  def ingestAvailableNow(spark: SparkSession, sfDir: String): DataFrame =
+    ScratchDirs.withTempDir("graft-gidx-stream-") { idxDir =>
+      val emb = Tables.load(spark, sfDir, "embeddings")
+      val base = emb.filter(col("vec_id") % 4 =!= 3)
+      val delta = emb.filter(col("vec_id") % 4 === 3)
+      GraphIndexStore.write(base, org.apache.spark.sql.graft.TopKJoin.knn(
+        base.repartition(col("vec_id")), base, K), idxDir, k = K,
+        routerFor = Some(GraphIndexStore.sharedBaseRouter(spark, sfDir)))
+      val src = Replay.stage(Some(("gidx-delta", sfDir)))(Replay.Arrivals(
+        (0 until Waves).map { w =>
+          delta.filter(pmod(floor(col("vec_id") / 4), lit(Waves.toLong)) === w)
+            .select(col("vec_id"), col("embedding"))
+        }))
+      // the foreachBatch stream's durability lives in the INDEX
+      // transaction (meta/ commit point), not in the replay checkpoint
+      Replay.run(Replay.read(spark, src), src, Replay.PerBatch((batch, _) =>
+        if (!batch.isEmpty)
+          GraphIndexStore.upsert(batch.sparkSession, idxDir, batch, k = K)))
+      require(GraphIndexStore.isFreshFor(spark, idxDir, emb),
+        "after the final wave the batch-chained fingerprint must validate " +
+          "the full corpus (base + every streamed delta)")
+      spark.read.parquet(s"$idxDir/edges")
+        .orderBy(col("id"), col("dist"), col("nbr")).localCheckpoint()
+    }
 
   val declared: Seq[Declared] = Seq(
     Declared(

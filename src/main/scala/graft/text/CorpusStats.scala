@@ -264,7 +264,6 @@ object CorpusStats {
     * enters the contract. */
   def vocabGrowth(docs: DataFrame, buckets: Int = 10): DataFrame = {
     val s = docs.sparkSession
-    import s.implicits._
     val mm = docs.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
     val cuts = s.range(1, buckets + 1).toDF("b")
       .crossJoin(broadcast(mm))

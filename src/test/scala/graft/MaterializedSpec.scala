@@ -48,4 +48,27 @@ class MaterializedSpec extends SparkSpec {
     }
     assert(again.collect().map(_.getLong(0)).toSeq == Seq(7L))
   }
+
+  test("reset deletes the snapshots it drops") {
+    import spark.implicits._
+    val t = Materialized.table(spark, "/spec/dirE", "matspec-d") { Seq(1L).toDF("id") }
+    val files = t.inputFiles.map(f => new java.io.File(new java.net.URI(f)))
+    assert(files.nonEmpty && files.forall(_.exists))
+    Materialized.reset()
+    assert(files.forall(!_.exists), s"snapshot left after reset: ${files.filter(_.exists).toSeq}")
+    val rebuilt = Materialized.table(spark, "/spec/dirE", "matspec-d") { Seq(2L).toDF("id") }
+    assert(rebuilt.collect().map(_.getLong(0)).toSeq == Seq(2L))
+  }
+
+  test("withTempDir deletes its dir when the body throws") {
+    var seen: java.io.File = null
+    intercept[IllegalStateException] {
+      ScratchDirs.withTempDir("graft-withtmp-spec-") { d =>
+        seen = new java.io.File(d)
+        java.nio.file.Files.write(seen.toPath.resolve("f"), Array[Byte](1))
+        throw new IllegalStateException("body failed")
+      }
+    }
+    assert(seen != null && !seen.exists, s"$seen survived the failed body")
+  }
 }

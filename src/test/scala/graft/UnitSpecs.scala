@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.agg.{EdgeList, ReservoirSample, TopKBuf, TopKByWeight, WEdge}
+import graft.agg.{ReservoirSample, TopKBuf, TopKByWeight, WEdge}
 import graft.io.Fvecs
 
 /** Pure-JVM unit + property tests (SURVEY.md §5.1/§5.2; properties are

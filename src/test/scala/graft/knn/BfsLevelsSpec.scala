@@ -1,6 +1,5 @@
 package graft.knn
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class BfsLevelsSpec extends SparkSpec {

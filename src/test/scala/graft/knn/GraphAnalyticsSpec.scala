@@ -1,7 +1,5 @@
 package graft.knn
 
-import org.apache.spark.sql.functions.col
-
 import graft.SparkSpec
 
 class GraphAnalyticsSpec extends SparkSpec {

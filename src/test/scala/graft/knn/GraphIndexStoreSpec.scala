@@ -1,5 +1,6 @@
 package graft.knn
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -246,5 +247,78 @@ class GraphIndexStoreSpec extends SparkSpec {
     // the valid delta still lands (the guards reject only mismatches)
     GraphIndexStore.upsert(spark, dir, delta, k = 5)
     assert(GraphIndexStore.isFreshFor(spark, dir, vecs.unionByName(delta)))
+  }
+
+  /** nodes/ ids and the meta row: what a refused insert must not touch. */
+  private def indexState(dir: String) =
+    (spark.read.parquet(s"$dir/nodes").select(col("vec_id")).collect()
+      .map(_.getLong(0)).sorted.toSeq,
+     spark.read.parquet(s"$dir/meta").collect().toSeq)
+
+  test("upsert and ingestBatchApprox refuse a delta that repeats a new id, leaving nodes/ and meta/ untouched") {
+    val vecs = plantedCorpus(200, 16, clusters = 4, seed = 24L)
+    val base = vecs.filter(col("vec_id") % 5 =!= 4)
+    val delta = vecs.filter(col("vec_id") % 5 === 4)
+    // every id is new to the index, but one arrives twice: the xor chain
+    // would cancel the pair and still validate base + delta
+    val repeated = delta.unionByName(delta.orderBy(col("vec_id")).limit(1))
+    val dir = java.nio.file.Files.createTempDirectory("graft-gis-dupdelta").toString
+    GraphIndexStore.write(base,
+      org.apache.spark.sql.graft.TopKJoin.knn(base, base, 5), dir, k = 5)
+    val before = indexState(dir)
+    val eU = intercept[IllegalArgumentException] {
+      GraphIndexStore.upsert(spark, dir, repeated, k = 5)
+    }
+    assert(eU.getMessage.contains("unique vec_ids"), eU.getMessage)
+    assert(indexState(dir) == before)
+    val eI = intercept[IllegalArgumentException] {
+      GraphIndexStore.ingestBatchApprox(spark, dir, repeated)
+    }
+    assert(eI.getMessage.contains("unique vec_ids"), eI.getMessage)
+    assert(indexState(dir) == before)
+    assert(GraphIndexStore.isFreshFor(spark, dir, base))
+  }
+
+  /** patchGraphApprox's per-id top-k as the former hand-rolled
+    * expression: `slice(sort_array(collect_set(struct(dist, nbr))), 1, k)`
+    * over the same candidate union. */
+  private def patchByCollectSet(base: DataFrame, edges: DataFrame,
+      delta: DataFrame, k: Int, beam: Int, hops: Int, nSeeds: Int) = {
+    val pts = delta.select(col("vec_id"), col("embedding"))
+    val cand = GraphSearch.beamSearch(base, edges, pts, k, beam, hops, nSeeds)
+      .select(col("qid").as("id"), col("nbr"), col("dist"))
+    val deltaDelta = org.apache.spark.sql.graft.TopKJoin.knn(
+      pts.repartition(col("vec_id")), pts, k)
+    val reverse = cand.select(col("nbr").as("id"), col("id").as("nbr"), col("dist"))
+    edges.select(col("id"), col("nbr"), col("dist"))
+      .unionByName(cand).unionByName(deltaDelta).unionByName(reverse)
+      .select(col("id"), struct(col("dist"), col("nbr")).as("c"))
+      .groupBy(col("id")).agg(slice(sort_array(collect_set(col("c"))), 1, k)
+        .as("topk"))
+      .select(col("id"), explode(col("topk")).as("c"))
+      .select(col("id"), col("c.nbr").as("nbr"), col("c.dist").as("dist"))
+  }
+
+  test("patchGraphApprox's per-id top-k returns the rows of the former collect_set expression") {
+    def rows(df: DataFrame) = df.select(col("id"), col("nbr"), col("dist"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    def check(base: DataFrame, delta: DataFrame, k: Int, beam: Int,
+              hops: Int, nSeeds: Int): Unit = {
+      val edges = org.apache.spark.sql.graft.TopKJoin.knn(base, base, k)
+        .localCheckpoint()
+      val got = rows(GraphIndexStore.patchGraphApprox(base, edges, delta,
+        k = k, beam = beam, hops = hops, nSeeds = nSeeds))
+      val old = rows(patchByCollectSet(base, edges, delta, k, beam, hops, nSeeds))
+      assert(got.nonEmpty && got == old,
+        s"extra=${(got -- old).take(5)}, missing=${(old -- got).take(5)}")
+    }
+    // the PlanSpecs input (the q227 split of sf0.001)
+    val emb = graft.Tables.load(spark, sf0001, "embeddings")
+    check(emb.filter(col("vec_id") % 4 =!= 3), emb.filter(col("vec_id") % 4 === 3),
+      k = 10, beam = 4, hops = 1, nSeeds = 4)
+    // a planted corpus under the default beam shape
+    val vecs = plantedCorpus(400, 16, clusters = 8, seed = 25L)
+    check(vecs.filter(col("vec_id") % 10 =!= 7), vecs.filter(col("vec_id") % 10 === 7),
+      k = 10, beam = 8, hops = 4, nSeeds = 64)
   }
 }

@@ -24,7 +24,6 @@ class KCoreSpec extends SparkSpec {
   }
 
   test("3-core of a triangle is empty; one-way edges are not mutual") {
-    import spark.implicits._
     val tri = sym((1L, 2L), (2L, 3L), (1L, 3L))
     assert(run(3, tri).values.forall(!_._2))
     // one-way edges only → mutual graph empty → nothing in any core

@@ -41,7 +41,7 @@ class MrdfSpec extends SparkSpec {
     // A path absent from the centroid map is a caller bug; round-9
     // advice: the failure must carry the path and map size — on a real
     // cluster the executor stack trace is the whole debugging surface.
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.unsafe.types.UTF8String
     val cmap = new java.util.HashMap[UTF8String, Array[Array[Float]]]()
     cmap.put(UTF8String.fromString("present"), Array(Array(0f, 0f)))

@@ -15,7 +15,6 @@ class DataQualitySpec extends SparkSpec {
 
   test("audit surfaces violations on a corrupted orders slice") {
     import org.apache.spark.sql.functions._
-    import spark.implicits._
     // duplicate one order key and orphan one custkey, write to a temp
     // dir mirroring the table layout, then audit that dir
     val dir = java.nio.file.Files.createTempDirectory("graft-dq").toString

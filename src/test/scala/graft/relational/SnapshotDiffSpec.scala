@@ -1,6 +1,5 @@
 package graft.relational
 
-import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 class SnapshotDiffSpec extends SparkSpec {

@@ -149,6 +149,25 @@ class IvfIndexStoreSpec extends SparkSpec {
       "a refused upsert must not touch lists/ or meta/")
   }
 
+  test("upsert refuses a wrong-dimension delta and leaves the index untouched") {
+    import spark.implicits._
+    val emb = Tables.load(spark, sf0001, "embeddings")
+    val dir = Files.createTempDirectory("graft-ivfidx-spec-baddim-")
+    dir.toFile.deleteOnExit()
+    IvfIndexStore.write(emb, dir.toString)
+    def state = (spark.read.parquet(s"${dir.toString}/lists").count(),
+      spark.read.parquet(s"${dir.toString}/meta").collect().toSeq)
+    val before = state
+    // new ids, half the dimension: the argmin would score it over the
+    // shorter length and land it silently
+    val badDim = Seq((100000L, Seq.fill(32)(0.5f)), (100001L, Seq.fill(32)(1.5f)))
+      .toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException](
+      IvfIndexStore.upsert(spark, dir.toString, badDim))
+    assert(e.getMessage.contains("dimension"), e.getMessage)
+    assert(state == before, "a refused upsert must not touch lists/ or meta/")
+  }
+
   test("list split: oversized list splits in two, corpus and fingerprint unchanged, full-probe search identical") {
     import spark.implicits._
     // two planted clusters but nlist=1: one giant list that must split

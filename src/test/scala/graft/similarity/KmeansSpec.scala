@@ -2,7 +2,6 @@ package graft.similarity
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
-import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 

@@ -65,6 +65,6 @@ class StreamGraphIngestSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       GraphIndexStore.ingestBatchApprox(spark, dir, b1)
     }
-    GraphIndexStore.deleteIndexDir(dir)
+    graft.ScratchDirs.deleteRecursively(new java.io.File(dir))
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
 import graft.{Registry, SparkSpec, Tables}
 
 /** Gates for the streaming exact-substring span operator (q222): the

@@ -11,7 +11,6 @@ import graft.{SparkSpec, Tables}
 class StreamingSpec extends SparkSpec {
 
   private def eventsBatch() = {
-    import spark.implicits._
     Tables.load(spark, sf0001, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -292,7 +291,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("two-batch event-time sessionization equals the batch emission rule") {
-    import spark.implicits._
     val got = StreamingPipelines.sessionizeAvailableNow(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     // Independent batch mirror of the q193 oracle: gaps-and-islands on
@@ -355,7 +353,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("two-batch native session_window equals the batch closed-session rule") {
-    import spark.implicits._
     val got = StreamingPipelines.sessionNativeAvailableNow(spark, sf0001)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // batch mirror: q23b sessions restricted to end_us <= wm_us
@@ -383,7 +380,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming semi join emits each matched purchase exactly once") {
-    import spark.implicits._
     val got = StreamingPipelines.semiJoinAvailableNow(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // the same plan on the batch frame (withWatermark is a no-op there)

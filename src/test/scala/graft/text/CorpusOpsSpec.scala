@@ -1,7 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.functions.col
-
 import graft.SparkSpec
 
 class CorpusOpsSpec extends SparkSpec {

@@ -1,7 +1,5 @@
 package graft.text
 
-import org.apache.spark.sql.functions._
-
 import graft.SparkSpec
 
 class LanguageModelSpec extends SparkSpec {

@@ -5,7 +5,6 @@ import graft.SparkSpec
 class RetrievalSpec extends SparkSpec {
 
   test("rboArms: RBO laws — bounded, depth-monotone, overlap within depth") {
-    import org.apache.spark.sql.functions.col
     val rows = Retrieval.rboArms(
         graft.Tables.load(spark, sf0001, "documents"),
         graft.Tables.load(spark, sf0001, "embeddings"),
