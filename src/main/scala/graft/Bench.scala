@@ -161,7 +161,7 @@ object Bench {
           if (qn == null || !qn.isObject || !sfOk || !wholeRun) None
           else {
             val m = scala.collection.mutable.Map.empty[String, Double]
-            qn.fields().forEachRemaining(e => m(e.getKey) = e.getValue.asDouble())
+            qn.properties().forEach(e => m(e.getKey) = e.getValue.asDouble())
             val cleanN = Option(root.get("published_clean_n"))
               .orElse(Option(root.get("clean_n"))).map(_.asInt()).getOrElse(0)
             val n = Option(root.get("n")).map(_.asInt()).getOrElse(m.size)
@@ -406,7 +406,7 @@ object Bench {
     def evalRecallGate(): Option[(Double, Boolean)] =
       if (only.forall(_.exists("mrdf_recall".startsWith(_)))) {
         try {
-          val v = SparkEntry.queries("mrdf_recall")(spark, sfDir).head.getDouble(0)
+          val v = SparkEntry.queries("mrdf_recall")(spark, sfDir).head().getDouble(0)
           if (v < recallMin)
             errors.getOrElseUpdate("mrdf_recall_gate",
               f"recall $v%.4f below gate $recallMin%.2f")

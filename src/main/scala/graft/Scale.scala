@@ -309,8 +309,7 @@ object Scale {
     val base = vecs.filter(col("vec_id") < cut).localCheckpoint()
     val delta = vecs.filter(col("vec_id") >= cut).localCheckpoint()
     val k = SweepParams.k
-    val (baseEdges, baseBuildSec) =
-      timed(Mrdf.buildGraph(base, SweepParams).localCheckpoint())
+    val (baseEdges, baseBuildSec) = timed(Mrdf.buildGraph(base, SweepParams))
     // the router is an index-build artifact, reused by every patch
     val ((cent, cseeds), routerSec) = timed {
       val c = Kmeans.centroids(base, Nlist, RouterIters, portable = false)
@@ -321,18 +320,20 @@ object Scale {
         k = k, beam = 8, hops = 4, router = Some((cent, cseeds))).localCheckpoint()
       (p, p.count())
     }
-    val (rebuilt, rebuildSec) =
-      timed(Mrdf.buildGraph(vecs, SweepParams).localCheckpoint())
+    Checkpoints.release(baseEdges)
+    val (rebuilt, rebuildSec) = timed(Mrdf.buildGraph(vecs, SweepParams))
     val baseQs = sampledQueries(base, n).localCheckpoint()
     val deltaQs = delta.filter(col("vec_id") % 7 === 0).limit(256).localCheckpoint()
     def recallOf(g: DataFrame, qs: DataFrame) =
       recallAt(g.select(col("id"), col("nbr")), qs, vecs, k)
-    Seq("base_build_sec" -> baseBuildSec, "router_sec" -> routerSec,
+    val row = Seq("base_build_sec" -> baseBuildSec, "router_sec" -> routerSec,
       "patch_sec" -> patchSec, "rebuild_sec" -> rebuildSec, "edges" -> nPatched,
       "delta_recall_patched" -> recallOf(patched, deltaQs),
       "base_recall_patched" -> recallOf(patched, baseQs),
       "delta_recall_rebuilt" -> recallOf(rebuilt, deltaQs),
       "base_recall_rebuilt" -> recallOf(rebuilt, baseQs))
+    Seq(patched, rebuilt).foreach(Checkpoints.release(_))
+    row
   }
 
   /** Recall decay under repeated approximate patches: an `n`-vector
@@ -349,44 +350,47 @@ object Scale {
     val vecs = pinnedCorpus(spark, nBase + steps * deltaN, 1000).localCheckpoint()
     val base = vecs.filter(col("vec_id") < nBase).localCheckpoint()
     val k = SweepParams.k
-    val (baseEdges, baseBuildSec) =
-      timed(Mrdf.buildGraph(base, SweepParams).localCheckpoint())
+    val (baseEdges, baseBuildSec) = timed(Mrdf.buildGraph(base, SweepParams))
     val cent = Kmeans.centroids(base, Nlist, RouterIters, portable = false)
     val cseeds = GraphSearch.clusterSeeds(base, cent, seedsPerList = 8)
       .localCheckpoint()
     val baseQs = sampledQueries(base, nBase).localCheckpoint()
     def recallOf(g: DataFrame, qs: DataFrame, corpus: DataFrame) =
       recallAt(g.select(col("id"), col("nbr")), qs, corpus, k)
-    var edges = baseEdges
-    var grown = base
-    val perStep = (1 to steps).map { s =>
+    val deltas = (1 to steps).map { s =>
       val lo = nBase + (s - 1) * deltaN
-      val delta = vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + deltaN)
-        .localCheckpoint()
-      val ((patched, nEdges), patchSec) = timed {
-        val p = GraphIndexStore.patchGraphApprox(grown, edges, delta,
-          k = k, beam = 8, hops = 4, router = Some((cent, cseeds))).localCheckpoint()
-        (p, p.count())
-      }
-      Checkpoints.release(edges)
-      edges = patched
-      grown = grown.unionByName(delta).localCheckpoint()
-      val allQs = sampledQueries(grown, nBase).localCheckpoint()
-      (nBase + s * deltaN, nEdges, patchSec,
-        recallOf(edges, baseQs, grown), recallOf(edges, allQs, grown))
+      vecs.filter(col("vec_id") >= lo && col("vec_id") < lo + deltaN).localCheckpoint()
     }
-    val (rebuilt, rebuildSec) = timed {
-      val r = Mrdf.buildGraph(grown, SweepParams).localCheckpoint()
-      r.count()
-      r
-    }
-    val allQs = sampledQueries(grown, nBase).localCheckpoint()
-    Seq("base_build_sec" -> baseBuildSec, "corpus" -> perStep.map(_._1),
-      "edges" -> perStep.map(_._2), "patch_sec" -> perStep.map(_._3),
-      "base_recall" -> perStep.map(_._4), "all_recall" -> perStep.map(_._5),
+    // the corpus after step s: a union of pinned slices, never a copy
+    def grown(s: Int) = deltas.take(s).foldLeft(base)(_ unionByName _)
+    val perStep = ArrayBuffer.empty[(Long, Long, Double, Double, Double)]
+    var t0 = 0L
+    val edges = Checkpoints.iterate[Long](baseEdges, steps, start = Some(0L)) {
+      (patched, _) =>
+        val nEdges = patched.count()
+        val patchSec = (System.nanoTime() - t0) / 1e9
+        val s = perStep.size + 1
+        perStep += ((nBase + s * deltaN, nEdges, patchSec,
+          recallOf(patched, baseQs, grown(s)),
+          recallOf(patched, sampledQueries(grown(s), nBase), grown(s))))
+        nEdges
+    } { (edges, _, s) =>
+      t0 = System.nanoTime()
+      Some(GraphIndexStore.patchGraphApprox(grown(s - 1), edges, deltas(s - 1),
+        k = k, beam = 8, hops = 4, router = Some((cent, cseeds))))
+    }.state
+    Checkpoints.release(baseEdges)
+    val (rebuilt, rebuildSec) = timed(Mrdf.buildGraph(grown(steps), SweepParams))
+    val allQs = sampledQueries(grown(steps), nBase)
+    val row = Seq("base_build_sec" -> baseBuildSec, "corpus" -> perStep.map(_._1).toSeq,
+      "edges" -> perStep.map(_._2).toSeq, "patch_sec" -> perStep.map(_._3).toSeq,
+      "base_recall" -> perStep.map(_._4).toSeq, "all_recall" -> perStep.map(_._5).toSeq,
       "rebuild_sec" -> rebuildSec,
-      "rebuild_base_recall" -> recallOf(rebuilt, baseQs, grown),
-      "rebuild_all_recall" -> recallOf(rebuilt, allQs, grown))
+      "rebuild_base_recall" -> recallOf(rebuilt, baseQs, grown(steps)),
+      "rebuild_all_recall" -> recallOf(rebuilt, allQs, grown(steps)))
+    (Seq(edges, rebuilt, baseQs, cseeds, base, vecs) ++ deltas)
+      .foreach(Checkpoints.release(_))
+    row
   }
 
   /** Streamed ingest into a persisted graph index: an `n`-vector index
@@ -402,8 +406,7 @@ object Scale {
     val deltaN = nBase * deltaPct / 100
     val vecs = pinnedCorpus(spark, nBase + waves * deltaN, 1000).localCheckpoint()
     val base = vecs.filter(col("vec_id") < nBase).localCheckpoint()
-    val (edges, buildSec) =
-      timed(Mrdf.buildGraph(base, SweepParams).localCheckpoint())
+    val (edges, buildSec) = timed(Mrdf.buildGraph(base, SweepParams))
     ScratchDirs.withTempDir("graft-sgi-scale-") { dir =>
       val (_, writeSec) = timed(GraphIndexStore.write(base, edges, dir, k = 10,
         nlist = Nlist, kmeansIters = RouterIters, seedsPerList = 8))

@@ -1,6 +1,6 @@
 package graft.knn
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.{Checkpoints, Declared, DuckSql}
@@ -17,41 +17,16 @@ import graft.{Checkpoints, Declared, DuckSql}
   * summation order. The DuckDB mirror is a recursive CTE.
   *
   * Scale: one shuffle join (edges ⋈ ranks, both hash-partitioned on
-  * id) + one partial-agg'd groupBy per iteration; ranks checkpoint per
-  * round (lineage stays O(1)) and superseded rounds release their
-  * blocks — MRDF's iteration hygiene (SURVEY §9). */
+  * id) + one partial-agg'd groupBy per iteration; every loop here runs
+  * on [[Checkpoints.iterate]] (SURVEY §9). */
 object GraphAnalytics {
 
   /** Fixed-iteration damped PageRank. `edges` must be the k-regular
     * KNN edge table (every id has exactly `outDeg` out-edges). */
-  def pageRank(edges: DataFrame, outDeg: Int = 10, iters: Int = 10): DataFrame = {
-    val nodes = edges.select(col("id")).distinct().localCheckpoint()
-    val n = nodes.count() // driver scalar (loop constant), legit
-    val base = 150000000L / n
-    // Checkpointed so each round's release frees only its OWN superseded
-    // blocks — releasing a plan whose leaf is the `nodes` checkpoint
-    // would unpersist `nodes` out from under the remaining iterations.
-    var ranks = nodes.withColumn("r", lit(1000000000L / n)).localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contribs = edges.join(ranks, Seq("id"))
-        .groupBy(col("nbr"))
-        .agg(sum(floor(col("r") / outDeg.toDouble)).cast("long").as("s"))
-        .withColumnRenamed("nbr", "id")
-      val next = nodes.join(contribs, Seq("id"), "left")
-        .withColumn("r", lit(base)
-          + floor(lit(85L) * coalesce(col("s"), lit(0L)) / 100.0).cast("long"))
-        .select(col("id"), col("r"))
-        .localCheckpoint()
-      Checkpoints.release(ranks)
-      ranks = next
-    }
-    val out = ranks
-      .select(col("id"), col("r").as("rank_nano"),
-        round(col("r") / 1e9, 6).as("rank"))
+  def pageRank(edges: DataFrame, outDeg: Int = 10, iters: Int = 10): DataFrame =
+    teleportRank(edges, outDeg, iters, lit(true), "pageRank: empty graph")
+      .select(col("id"), col("r").as("rank_nano"), round(col("r") / 1e9, 6).as("rank"))
       .orderBy(col("id"))
-    Checkpoints.release(nodes)
-    out
-  }
 
   /** Seed-expansion relevance — personalized PageRank over the KNN
     * graph: the teleport mass returns to a SEED SET (deterministic
@@ -60,43 +35,43 @@ object GraphAnalytics {
     * ranks every document by random-walk proximity to the seeds. This
     * is the curation primitive behind seed-based corpus selection:
     * grow a quality subset outward from hand-verified examples.
-    *
-    * Same integer-nano arithmetic as [[pageRank]] (all floors mirrored
-    * in the oracle's recursive CTE — nothing to drift), same per-round
-    * shape: one co-partitioned join + hash-agg per iteration, ranks
-    * checkpointed so each round frees only its own superseded blocks.
     * Non-seed nodes start at 0 and receive mass only through edges. */
   def seedExpansion(edges: DataFrame, outDeg: Int = 10, iters: Int = 8,
                     seedMod: Int = 20): DataFrame = {
-    val nodes = edges.select(col("id")).distinct().localCheckpoint()
     val isSeed = col("id") % seedMod === 0
-    val nSeeds = nodes.filter(isSeed).count() // driver scalar (loop constant)
-    require(nSeeds > 0,
+    teleportRank(edges, outDeg, iters, isSeed,
       s"seedExpansion: no seed nodes (id % $seedMod == 0) in graph — " +
         "relevance mass has no source to start from")
-    val seedBase = 150000000L / nSeeds
-    var ranks = nodes
-      .withColumn("r", when(isSeed, lit(1000000000L / nSeeds)).otherwise(lit(0L)))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val contribs = edges.join(ranks, Seq("id"))
-        .groupBy(col("nbr"))
-        .agg(sum(floor(col("r") / outDeg.toDouble)).cast("long").as("s"))
-        .withColumnRenamed("nbr", "id")
-      val next = nodes.join(contribs, Seq("id"), "left")
-        .withColumn("r", when(isSeed, lit(seedBase)).otherwise(lit(0L))
-          + floor(lit(85L) * coalesce(col("s"), lit(0L)) / 100.0).cast("long"))
-        .select(col("id"), col("r"))
-        .localCheckpoint()
-      Checkpoints.release(ranks)
-      ranks = next
-    }
-    val out = ranks
       .select(col("id"), col("r").as("rel_nano"),
         round(col("r") / 1e9, 6).as("relevance"), isSeed.as("is_seed"))
       .orderBy(col("id"))
-    Checkpoints.release(nodes)
-    out
+  }
+
+  /** (id, r): damped random-walk rank in integer nanos whose teleport
+    * mass (0.15) and starting mass return only to `teleport` nodes —
+    * every node for PageRank, the seed set for seed expansion. Every
+    * step is floor()'d integer math, mirrored in the oracles' recursive
+    * CTEs; per round one co-partitioned join + hash-agg. */
+  private def teleportRank(edges: DataFrame, outDeg: Int, iters: Int,
+      teleport: Column, noTeleport: String): DataFrame = {
+    val nodes = edges.select(col("id")).distinct().localCheckpoint(eager = false)
+    try {
+      val nT = nodes.filter(teleport).count() // driver scalar (loop constant)
+      require(nT > 0, noTeleport)
+      val base = when(teleport, lit(150000000L / nT)).otherwise(lit(0L))
+      Checkpoints.rounds(
+        nodes.withColumn("r", when(teleport, lit(1000000000L / nT)).otherwise(lit(0L))),
+        iters) { ranks =>
+        val contribs = edges.join(ranks, Seq("id"))
+          .groupBy(col("nbr"))
+          .agg(sum(floor(col("r") / outDeg.toDouble)).cast("long").as("s"))
+          .withColumnRenamed("nbr", "id")
+        nodes.join(contribs, Seq("id"), "left")
+          .select(col("id"),
+            (base + floor(lit(85L) * coalesce(col("s"), lit(0L)) / 100.0).cast("long"))
+              .as("r"))
+      }
+    } finally Checkpoints.release(nodes)
   }
 
   /** Mutual-kNN symmetry profile: per node, how many of its k edges are
@@ -187,24 +162,19 @@ object GraphAnalytics {
       .join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
         Seq("id", "nbr"), "left_semi")
       .select(col("id").as("u"), col("nbr").as("v"))
-    var e = und.localCheckpoint()
-    var nEdges = e.count()
-    var converged = nEdges == 0L
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
-      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("u"))
-      val next = e.join(keep, Seq("u"), "left_semi")
-        .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .localCheckpoint(eager = false)
-      val nNext = next.count()
-      converged = nNext == nEdges
-      graft.Checkpoints.release(e)
-      e = next
-      nEdges = nNext
-    }
-    val inCore = e.select(col("u").as("id")).distinct()
+    val core = Checkpoints.iterate[(Long, Boolean)](und, maxIter)((e, prev) => {
+      val n = e.count()
+      (n, n == 0L || prev.exists(_._1 == n))
+    }) { (e, m, _) =>
+      if (m._2) None
+      else {
+        val keep = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("u"))
+        Some(e.join(keep, Seq("u"), "left_semi")
+          .join(keep.select(col("u").as("v")), Seq("v"), "left_semi"))
+      }
+    }.state
+    val inCore = core.select(col("u").as("id")).distinct()
       .withColumn("in_core", lit(true))
     edges.groupBy(col("id")).agg(count(lit(1)).as("k_out"))
       .join(und.groupBy(col("u").as("id")).agg(count(lit(1)).as("mutual_deg")),
@@ -225,72 +195,40 @@ object GraphAnalytics {
     *
     * Per round: one co-partitioned edge⋈label join + two hash
     * aggregations (label counts, then per-node argmax via min(struct)
-    * — map-side partials, never a window over the edge stream).
-    * Labels checkpoint per round, superseded rounds release blocks
-    * (the repo-wide iteration hygiene). */
+    * — map-side partials, never a window over the edge stream). */
   def labelPropagation(edges: DataFrame, rounds: Int = 5): DataFrame = {
     val und = edges
       .join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
         Seq("id", "nbr"), "left_semi")
-      .localCheckpoint() // scanned every round
-    var lab = edges.select(col("id")).distinct()
-      .withColumn("lab", col("id")).localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val counts = und
-        .join(lab.select(col("id").as("nbr"), col("lab")), Seq("nbr"))
-        .groupBy(col("id"), col("lab")).agg(count(lit(1)).as("c"))
-      // argmax with min-label tie-break: min(struct(-c, lab))
-      val pick = counts
-        .groupBy(col("id"))
-        .agg(min(struct((-col("c")).as("nc"), col("lab").as("l"))).as("m"))
-        .select(col("id"), col("m.l").as("newlab"))
-      val next = lab.join(pick, Seq("id"), "left")
-        .select(col("id"), coalesce(col("newlab"), col("lab")).as("lab"))
-        .localCheckpoint()
-      Checkpoints.release(lab)
-      lab = next
-    }
-    val out = lab.orderBy(col("id"))
-    Checkpoints.release(und)
-    out
+      .localCheckpoint(eager = false) // scanned every round
+    try {
+      Checkpoints.rounds(
+        edges.select(col("id")).distinct().withColumn("lab", col("id")), rounds) { lab =>
+        val counts = und
+          .join(lab.select(col("id").as("nbr"), col("lab")), Seq("nbr"))
+          .groupBy(col("id"), col("lab")).agg(count(lit(1)).as("c"))
+        // argmax with min-label tie-break: min(struct(-c, lab))
+        val pick = counts
+          .groupBy(col("id"))
+          .agg(min(struct((-col("c")).as("nc"), col("lab").as("l"))).as("m"))
+          .select(col("id"), col("m.l").as("newlab"))
+        lab.join(pick, Seq("id"), "left")
+          .select(col("id"), coalesce(col("newlab"), col("lab")).as("lab"))
+      }.orderBy(col("id"))
+    } finally Checkpoints.release(und)
   }
 
   /** Multi-source BFS levels over the directed KNN graph: every node
     * whose id ≡ 0 (mod `sourceMod`) is a 0-level source; level h =
     * fewest hops to any source (NULL if unreached within `maxHops`).
-    * Per hop: one co-partitioned frontier⋈edges join + a distinct on
-    * the (small, shrinking) newly-reached set + a left join back —
-    * the frontier never exceeds the node table and the level column
-    * is write-once, so rounds never rewrite settled state. Levels
-    * checkpoint per hop, superseded rounds release blocks (repo-wide
-    * iteration hygiene). All-integer ⇒ engine-exact. */
+    * This is [[ssspMicro]] at unit weight: a node first reached at hop
+    * h can never improve, so the relaxation frontier is exactly BFS's
+    * newly-reached set. All-integer ⇒ engine-exact. */
   def bfsLevels(edges: DataFrame, sourceMod: Long = 100L,
-                maxHops: Int = 4): DataFrame = {
-    val e = edges.select(col("id"), col("nbr")).localCheckpoint()
-    var levels = e.select(col("id"))
-      .union(e.select(col("nbr").as("id"))).distinct()
-      .withColumn("lvl",
-        when(pmod(col("id"), lit(sourceMod)) === 0L, lit(0))
-          .otherwise(lit(null).cast("int")))
-      .localCheckpoint()
-    for (h <- 1 to maxHops) {
-      val newly = levels.filter(col("lvl") === (h - 1))
-        .join(e, Seq("id"))
-        .select(col("nbr").as("id")).distinct()
-        .withColumn("hit", lit(1))
-      val next = levels.join(newly, Seq("id"), "left")
-        .select(col("id"),
-          when(col("lvl").isNotNull, col("lvl"))
-            .when(col("hit").isNotNull, lit(h))
-            .otherwise(lit(null).cast("int")).as("lvl"))
-        .localCheckpoint()
-      Checkpoints.release(levels)
-      levels = next
-    }
-    val out = levels.orderBy(col("id"))
-    Checkpoints.release(e)
-    out
-  }
+                maxHops: Int = 4): DataFrame =
+    relax(edges.select(col("id"), col("nbr"), lit(1L).as("w")), sourceMod, maxHops)
+      .select(col("id"), col("d").cast("int").as("lvl"))
+      .orderBy(col("id"))
 
   /** Multi-source weighted shortest paths (≤ `maxHops` edges) over the
     * directed KNN graph — Bellman-Ford relaxation, the weighted sibling
@@ -298,47 +236,47 @@ object GraphAnalytics {
     * round can IMPROVE a settled distance through a cheaper longer
     * path (the spec plants one). Edge weights are the 6-dp distances
     * in exact integer micros, so every relaxation is integer addition
-    * + integer min — engine-exact with no float-summation order issue.
-    *
-    * Scale per round: one co-partitioned frontier⋈edges join + one
-    * min-aggregation + one left join back — and the frontier holds
-    * only nodes whose distance CHANGED last round (relaxing from an
-    * unchanged node re-offers candidates already beaten, so dropping
-    * them is provably result-identical; the oracle relaxes from ALL
+    * + integer min — engine-exact with no float-summation order issue. */
+  def ssspMicro(edges: DataFrame, sourceMod: Long = 100L,
+                maxHops: Int = 4): DataFrame =
+    relax(edges.select(col("id"), col("nbr"),
+      round(col("dist") * 1e6).cast("long").as("w")), sourceMod, maxHops)
+      .select(col("id"), col("d").as("dist_micro"))
+      .orderBy(col("id"))
+
+  /** (id, d, improved): `maxHops` rounds of Bellman-Ford relaxation
+    * over the weighted edges (id, nbr, w) from every id ≡ 0 (mod
+    * `sourceMod`). Scale per round: one co-partitioned frontier⋈edges
+    * join + one min-aggregation + one left join back — and the frontier
+    * holds only nodes whose distance CHANGED last round (relaxing from
+    * an unchanged node re-offers candidates already beaten, so dropping
+    * them is provably result-identical; the oracles relax from ALL
     * settled nodes and must agree). Frontiers shrink toward
     * convergence, so late rounds are near-free at any graph size. */
-  def ssspMicro(edges: DataFrame, sourceMod: Long = 100L,
-                maxHops: Int = 4): DataFrame = {
-    val e = edges.select(col("id"), col("nbr"),
-      round(col("dist") * 1e6).cast("long").as("w")).localCheckpoint()
-    var state = e.select(col("id"))
-      .union(e.select(col("nbr").as("id"))).distinct()
-      .withColumn("d",
-        when(pmod(col("id"), lit(sourceMod)) === 0L, lit(0L))
-          .otherwise(lit(null).cast("long")))
-      .withColumn("improved", col("d").isNotNull)
-      .localCheckpoint()
-    for (_ <- 1 to maxHops) {
-      val cand = state.filter(col("improved"))
-        .join(e, Seq("id"))
-        .groupBy(col("nbr"))
-        .agg(min(col("d") + col("w")).as("nd"))
-        .withColumnRenamed("nbr", "id")
-      val next = state.join(cand, Seq("id"), "left")
-        .select(col("id"),
-          when(col("d").isNull, col("nd"))
-            .when(col("nd").isNull, col("d"))
-            .otherwise(least(col("d"), col("nd"))).as("d"),
-          (col("nd").isNotNull && (col("d").isNull || col("nd") < col("d")))
-            .as("improved"))
-        .localCheckpoint()
-      Checkpoints.release(state)
-      state = next
-    }
-    val out = state.select(col("id"), col("d").as("dist_micro"))
-      .orderBy(col("id"))
-    Checkpoints.release(e)
-    out
+  private def relax(weighted: DataFrame, sourceMod: Long, maxHops: Int): DataFrame = {
+    val e = weighted.localCheckpoint(eager = false)
+    try {
+      Checkpoints.rounds(
+        e.select(col("id")).union(e.select(col("nbr").as("id"))).distinct()
+          .withColumn("d",
+            when(pmod(col("id"), lit(sourceMod)) === 0L, lit(0L))
+              .otherwise(lit(null).cast("long")))
+          .withColumn("improved", col("d").isNotNull),
+        maxHops) { state =>
+        val cand = state.filter(col("improved"))
+          .join(e, Seq("id"))
+          .groupBy(col("nbr"))
+          .agg(min(col("d") + col("w")).as("nd"))
+          .withColumnRenamed("nbr", "id")
+        state.join(cand, Seq("id"), "left")
+          .select(col("id"),
+            when(col("d").isNull, col("nd"))
+              .when(col("nd").isNull, col("d"))
+              .otherwise(least(col("d"), col("nd"))).as("d"),
+            (col("nd").isNotNull && (col("d").isNull || col("nd") < col("d")))
+              .as("improved"))
+      }
+    } finally Checkpoints.release(e)
   }
 
   private def ssspOracle(sourceMod: Long, maxHops: Int): String = {

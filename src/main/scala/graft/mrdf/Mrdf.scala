@@ -33,8 +33,8 @@ import graft.linalg.Distances
   *    the driver and looped sequentially, mrdf.py:148-153);
   *  - graph merge is union + the per-id `TaggedTopKByWeight` top-k
   *    aggregate; convergence Δ is one count of its `!is_old` rows (the
-  *    edges new to the graph). `localCheckpoint` truncates lineage per round
-  *    (replacing collect+parallelize at mrdf.py:159,192).
+  *    edges new to the graph), the round's [[graft.Checkpoints.iterate]]
+  *    probe (replacing collect+parallelize at mrdf.py:159,192).
   *
   * At 100 TB the same plan holds: division is O(iterations) broadcast
   * joins + shuffles on `path`, NN-Descent is embarrassingly parallel
@@ -101,51 +101,55 @@ object Mrdf {
     log.info(s"[mrdf] start n=$n k=${p.k} rho=${p.rho} alpha=${p.alpha} " +
       s"tau=${p.tau} seed=${p.seed} maxIter=${p.maxIter}")
 
-    var g: DataFrame = spark.emptyDataset[(Long, Long, Double)]
-      .toDF("id", "nbr", "dist")
-    val stats = Seq.newBuilder[IterStat]
-    var ratio = 1.0
-    var iter = 0
-    while (ratio > p.tau && iter < p.maxIter) {
-      iter += 1
-      val t0 = System.nanoTime()
-      val (assigned, pinned) = divide(pts, p, iter, dim)
-      val t1 = System.nanoTime()
-      // merge materialization also runs the lazy block NN-Descent.
-      // The merge carries per-edge provenance (is_old = the (id, nbr)
-      // existed in the previous graph), so the convergence Δ is a
-      // column scan of the checkpointed merge output — the former
-      // left_anti join against the previous graph re-shuffled both
-      // |E|-sized tables once per iteration. The checkpoint is LAZY
-      // (round-15): the Δ count below is its consuming action, so the
-      // descent + merge + checkpoint + count collapse into ONE job per
-      // round instead of an eager-materialize job plus a count job.
-      val blockEdges = localGraphs(assigned, p, iter)
-      val mergedTagged = mergeGraphs(g, blockEdges, p.k)
-        .localCheckpoint(eager = false)
-      val t2 = System.nanoTime()
-      val changedEdges =
-        mergedTagged.filter(!col("is_old")).count()
-      // the count materialized the checkpoint, so the division caches
-      // are no longer needed; the old graph's checkpoint is dead too.
+    // Division caches of the round in flight, released once its merge
+    // has materialized (or the round throws).
+    var pinned: Seq[DataFrame] = Nil
+    var t0, t1 = 0L
+    val stats = scala.collection.mutable.ArrayBuffer.empty[IterStat]
+    try {
+      val empty = spark.emptyDataset[(Long, Long, Double, Boolean)]
+        .toDF("id", "nbr", "dist", "is_old")
+      val done = graft.Checkpoints.iterate[Double](empty, p.maxIter, start = Some(1.0)) {
+        (merged, _) =>
+          // The merge carries per-edge provenance (is_old = the (id, nbr)
+          // existed in the previous graph), so the convergence Δ is one
+          // column scan of the merge output, and that count is the job
+          // that runs the round's block NN-Descent + merge + checkpoint.
+          val t2 = System.nanoTime()
+          val changedEdges = merged.filter(!col("is_old")).count()
+          pinned.foreach(_.unpersist(blocking = false))
+          pinned = Nil
+          val t3 = System.nanoTime()
+          val ratio = changedEdges.toDouble / (n.toDouble * p.k)
+          val rt = Runtime.getRuntime
+          val stat = IterStat(stats.size + 1, changedEdges, ratio,
+            (t3 - t0) / 1e9, (rt.totalMemory() - rt.freeMemory()) >> 20,
+            (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
+          stats += stat
+          log.info(f"[mrdf] iter=${stat.iter} changed=${stat.changedEdges} " +
+            f"ratio=${stat.ratio}%.4f sec=${stat.seconds}%.2f heapMb=${stat.heapUsedMb} " +
+            f"divide=${stat.divideSec}%.2f merge+descent=${stat.mergeSec}%.2f " +
+            f"delta=${stat.deltaSec}%.2f")
+          ratio
+      } { (g, ratio, iter) =>
+        if (ratio <= p.tau) None
+        else {
+          t0 = System.nanoTime()
+          val (assigned, levels) = divide(pts, p, iter, dim)
+          pinned = levels
+          t1 = System.nanoTime()
+          // round 1 merges into the empty local relation itself, which
+          // the optimizer prunes from the merge's union
+          val old = if (iter == 1) empty else g
+          Some(mergeGraphs(old.select(col("id"), col("nbr"), col("dist")),
+            localGraphs(assigned, p, iter), p.k))
+        }
+      }
+      (done.state.select(col("id"), col("nbr"), col("dist")), stats.toSeq)
+    } finally {
       pinned.foreach(_.unpersist(blocking = false))
-      val t3 = System.nanoTime()
-      graft.Checkpoints.release(g)
-      val merged = mergedTagged.select(col("id"), col("nbr"), col("dist"))
-      ratio = changedEdges.toDouble / (n.toDouble * p.k)
-      val rt = Runtime.getRuntime
-      val stat = IterStat(iter, changedEdges, ratio,
-        (t3 - t0) / 1e9, (rt.totalMemory() - rt.freeMemory()) >> 20,
-        (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9)
-      stats += stat
-      log.info(f"[mrdf] iter=${stat.iter} changed=${stat.changedEdges} " +
-        f"ratio=${stat.ratio}%.4f sec=${stat.seconds}%.2f heapMb=${stat.heapUsedMb} " +
-        f"divide=${stat.divideSec}%.2f merge+descent=${stat.mergeSec}%.2f " +
-        f"delta=${stat.deltaSec}%.2f")
-      g = merged
+      pts.unpersist()
     }
-    pts.unpersist()
-    (g, stats.result())
   }
 
   /** Partition phase: split every block with > α members into ≤ ρ
@@ -308,9 +312,7 @@ object Mrdf {
         settled ::= work
         anyOversized = false
       } else {
-        val isOver =
-          if (oversized.length <= 1000) col("path").isin(oversized.toIndexedSeq: _*)
-          else col("path").isInCollection(oversized.toIndexedSeq)
+        val isOver = col("path").isInCollection(oversized.toIndexedSeq)
         if (oversized.length < counts.length) settled ::= work.filter(!isOver)
         val over = work.filter(isOver)
         val next = assign(over, oversized).persist()

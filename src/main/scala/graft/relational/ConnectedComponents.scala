@@ -27,9 +27,8 @@ import org.apache.spark.sql.functions._
   * into a hash aggregate keyed by node (partial aggregation reduces
   * map-side first) plus one co-partitioned join on the same key. No
   * driver data path; the only driver value is a per-round edge-set
-  * fingerprint (count + xor-hash, one scalar agg). Lineage is truncated
-  * per round via localCheckpoint; superseded checkpoints are released
-  * eagerly.
+  * fingerprint (count + xor-hash, one scalar agg), which is also the
+  * round's [[graft.Checkpoints.iterate]] probe.
   */
 object ConnectedComponents {
 
@@ -54,58 +53,46 @@ object ConnectedComponents {
       val r = df.agg(count(lit(1)), bit_xor(xxhash64(col("hi"), col("lo")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    // Canonical directed form: (hi, lo) with lo < hi, deduped.
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
-    def stamp(what: String, t0: Long): Unit =
-      if (log.isDebugEnabled)
-        log.debug(f"[cc] $what ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-    val tInit = System.nanoTime()
-    var e = edges
-      .select(greatest(col("a"), col("b")).as("hi"),
-        least(col("a"), col("b")).as("lo"))
-      .filter(col("hi") =!= col("lo"))
-      .distinct()
-      .localCheckpoint()
-    var eFp = fp(e)
-    stamp("init", tInit)
-    var converged = eFp._1 == 0L
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      iter += 1
-      val tRound = System.nanoTime()
-      // Large-star over the full (undirected) neighborhood of u.
-      val und = e.select(col("hi").as("u"), col("lo").as("v"))
-        .unionByName(e.select(col("lo").as("u"), col("hi").as("v")))
-      val mins = und.groupBy("u").agg(min("v").as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      // No distinct here: small-star's min-agg is duplicate-insensitive
-      // and its final distinct dedups the round's output — dropping the
-      // intermediate dedup removes a full |E| exchange per round.
-      val ls = und.join(mins, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-      // Small-star over the lo-neighbors of each hi node. m = min
-      // lo-neighbor; link the other lo-neighbors and hi itself to m.
-      val smins = ls.groupBy("hi").agg(min("lo").as("m"))
-      val joined = ls.join(smins, "hi")
-      // Lazy checkpoint: the fingerprint aggregate below is the action
-      // that materializes the round's blocks — one job per round, not a
-      // separate eager-checkpoint job followed by the fp scan.
-      val ss = joined.filter(col("lo") =!= col("m"))
-        .select(col("lo").as("hi"), col("m").as("lo"))
-        .unionByName(joined.select(col("hi"), col("m").as("lo")))
-        .distinct()
-        .localCheckpoint(eager = false)
-      // Fixpoint test: fingerprints equal ⇒ equal sets (labels are
-      // monotone non-increasing; see fp()).
-      val ssFp = fp(ss)
-      converged = ssFp == eFp
-      graft.Checkpoints.release(e)
-      e = ss
-      eFp = ssFp
-      stamp(s"round $iter", tRound)
+    // Fixpoint test: fingerprints equal ⇒ equal sets (labels are
+    // monotone non-increasing; see fp()). An empty edge set is final.
+    val done = graft.Checkpoints.iterate[((Long, Long), Boolean)](
+      // Canonical directed form: (hi, lo) with lo < hi, deduped.
+      edges
+        .select(greatest(col("a"), col("b")).as("hi"),
+          least(col("a"), col("b")).as("lo"))
+        .filter(col("hi") =!= col("lo"))
+        .distinct(),
+      maxIter) { (e, prev) =>
+      val f = fp(e)
+      (f, f._1 == 0L || prev.exists(_._1 == f))
+    } { (e, m, _) =>
+      if (m._2) None
+      else {
+        // Large-star over the full (undirected) neighborhood of u.
+        val und = e.select(col("hi").as("u"), col("lo").as("v"))
+          .unionByName(e.select(col("lo").as("u"), col("hi").as("v")))
+        val mins = und.groupBy("u").agg(min("v").as("mn"))
+          .select(col("u"), least(col("mn"), col("u")).as("m"))
+        // No distinct here: small-star's min-agg is duplicate-insensitive
+        // and its final distinct dedups the round's output — dropping the
+        // intermediate dedup removes a full |E| exchange per round.
+        val ls = und.join(mins, "u")
+          .filter(col("v") > col("u"))
+          .select(col("v").as("hi"), col("m").as("lo"))
+        // Small-star over the lo-neighbors of each hi node. m = min
+        // lo-neighbor; link the other lo-neighbors and hi itself to m.
+        val smins = ls.groupBy("hi").agg(min("lo").as("m"))
+        val joined = ls.join(smins, "hi")
+        Some(joined.filter(col("lo") =!= col("m"))
+          .select(col("lo").as("hi"), col("m").as("lo"))
+          .unionByName(joined.select(col("hi"), col("m").as("lo")))
+          .distinct())
+      }
     }
-    log.debug(s"[cc] rounds=$iter edges=${eFp._1} converged=$converged")
+    val ((nEdges, _), converged) = done.probe
+    org.slf4j.LoggerFactory.getLogger(getClass)
+      .debug(s"[cc] rounds=${done.rounds} edges=$nEdges converged=$converged")
+    val e = done.state
     // At the fixpoint every edge is (member, component-min).
     val labels = nodes
       .join(e.select(col("hi").as("id"), col("lo").as("comp")), Seq("id"), "left")

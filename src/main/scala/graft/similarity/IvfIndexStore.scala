@@ -230,8 +230,8 @@ object IvfIndexStore {
     if (oversized.isEmpty) return maxListSize
     val cent = spark.read.parquet(s"$dir/centroids")
     var nextCid = cent.agg(max(col("cid"))).collect()(0).getInt(0) + 1
-    var keepLists = lists.filter(!col("cid").isin(oversized.map(Int.box): _*))
-    var keepCent = cent.filter(!col("cid").isin(oversized.map(Int.box): _*))
+    var keepLists = lists.filter(!col("cid").isin(oversized.map(Int.box).toIndexedSeq: _*))
+    var keepCent = cent.filter(!col("cid").isin(oversized.map(Int.box).toIndexedSeq: _*))
     oversized.foreach { cid =>
       val members = lists.filter(col("cid") === cid)
         .select(col("vec_id"), col("embedding"))

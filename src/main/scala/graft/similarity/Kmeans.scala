@@ -80,7 +80,7 @@ object Kmeans {
       .orderBy(rank(portable), col("id")).limit(k)
       .collect().map(_.get(0))
     val order = ids.zipWithIndex.toMap
-    pts.filter(col("id").isin(ids: _*))
+    pts.filter(col("id").isin(ids.toIndexedSeq: _*))
       .select(key, col("grp"), col("id"), col("vec")).collect()
       .groupBy(_.getString(0)).map { case (kk, rs) =>
         kk -> ((rs.head.get(1),

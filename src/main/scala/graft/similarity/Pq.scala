@@ -63,7 +63,7 @@ object Pq {
   private def subDists(vec: Column, books: Array[Array[Array[Float]]],
       j: Int, subDim: Int): Column = {
     val sub = slice(vec, j * subDim + 1, subDim)
-    array(books(j).map(c =>
+    array(books(j).toIndexedSeq.map(c =>
       Distances.squaredEuclideanCol(sub, typedlit(c.toSeq))): _*)
   }
 

@@ -736,7 +736,7 @@ object StreamingPipelines {
     val cent = graft.similarity.Kmeans
       .centroids(static, nlist, kmeansIters, portable = true)
     val centRows = cent.orderBy(col("cid")).collect()
-    val centArr = array(centRows.map { r =>
+    val centArr = array(centRows.toIndexedSeq.map { r =>
       struct(lit(r.getInt(0)).as("cid"),
         array(r.getSeq[Float](1).map(lit(_)): _*).as("cvec"))
     }: _*)

@@ -33,20 +33,17 @@ object Bpe {
     // DISTINCT word, not once per token occurrence. The char-split is
     // injective on words, so grouping by w vs by its spaced form is the
     // same partition.
-    var vocab = docs
+    val vocab = docs
       .select(explode(split(lower(col("text")), " ")).as("w"))
       .filter(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
       .select(trim(regexp_replace(col("w"), "(.)", "$1 ")).as("t"), col("n"))
-      .localCheckpoint()
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var r = 0
-    var done = false
-    while (r < rounds && !done) {
-      r += 1
-      // pre-projected split: an inline split inside the lambda would
-      // re-evaluate per element (the measured 8× shingle trap)
-      val tops = vocab
+    // The round's probe is its winning pair, None once every word is a
+    // single token — nothing left to merge.
+    def topPair(v: DataFrame): Option[(String, Long)] =
+      v
+        // pre-projected split: an inline split inside the lambda would
+        // re-evaluate per element (the measured 8× shingle trap)
         .select(col("n"), split(col("t"), " ").as("ws"))
         .filter(size(col("ws")) >= 2)
         .select(col("n"), explode(transform(
@@ -55,30 +52,25 @@ object Bpe {
             element_at(col("ws"), i + lit(1))))).as("p"))
         .groupBy(col("p")).agg(sum(col("n")).as("c"))
         .orderBy(col("c").desc, col("p")).limit(1)
-        .collect()
-      if (tops.isEmpty) {
-        // every word is a single token — nothing left to merge
-        done = true
-      } else {
-        val pair = tops(0).getString(0)
-        val c = tops(0).getLong(1)
+        .collect().headOption.map(r => (r.getString(0), r.getLong(1)))
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    val last = graft.Checkpoints.iterate[Option[(String, Long)]](vocab, rounds)(
+      (v, _) => topPair(v)) { (v, top, r) =>
+      top.map { case (pair, c) =>
         val Array(a, b) = pair.split(" ", 2)
+        merges += ((r, a, b, c))
         // literal (non-regex) replace: same left-to-right
         // non-overlapping semantics as regexp_replace on a literal
         // pattern, without per-row regex-engine cost
         val pat = lit(" " + a + " " + b + " ")
         val rep = lit(" " + a + b + " ")
-        val next = vocab.withColumn("t", trim(
+        v.withColumn("t", trim(
           replace(
             replace(concat(lit(" "), col("t"), lit(" ")), pat, rep),
             pat, rep)))
-          .localCheckpoint()
-        graft.Checkpoints.release(vocab)
-        vocab = next
-        merges += ((r, a, b, c))
       }
     }
-    graft.Checkpoints.release(vocab)
+    graft.Checkpoints.release(last.state)
     spark.createDataset(merges.result())
       .toDF("round", "mleft", "mright", "pair_count")
       .orderBy(col("round"))

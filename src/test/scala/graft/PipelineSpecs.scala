@@ -114,7 +114,7 @@ class PipelineSpecs extends SparkSpec {
     // the builds; releasing them restores the session to its baseline
     graft.Checkpoints.release(pr)
     graft.Checkpoints.release(againDf)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
     assert(leaked.isEmpty, s"leaked RDD blocks: $leaked")
   }
 
@@ -355,20 +355,6 @@ class PipelineSpecs extends SparkSpec {
       assert(r.getDouble(4) == r.getDouble(5),
         s"dot codegen vs fold mismatch at ($i,$j)")
     }
-  }
-
-  test("MRDF build pins only the final graph; release leaves zero RDDs") {
-    val sc = spark.sparkContext
-    sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
-    val emb = Tables.load(spark, sf0001, "embeddings")
-    val g = graft.mrdf.Mrdf.buildGraph(emb, graft.mrdf.MrdfQueries.testParams)
-    assert(g.count() > 0)
-    // superseded divide/merge checkpoints must have been released inside
-    // the loop — only the returned graph's checkpoint may remain pinned
-    assert(sc.getPersistentRDDs.size <= 2,
-      s"leaked checkpoints: ${sc.getPersistentRDDs.keys}")
-    graft.Checkpoints.release(g)
-    assert(sc.getPersistentRDDs.isEmpty)
   }
 
   test("multimodal chunking covers every payload byte exactly once") {

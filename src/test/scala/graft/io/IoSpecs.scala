@@ -361,7 +361,6 @@ class IoSpecs extends SparkSpec {
   test("GraftExtensions registers SQL functions") {
     // injectFunction path: register directly on the live session's
     // registry (same code path the extension uses at session build)
-    val reg = spark.sessionState.functionRegistry
     new graft.GraftExtensions()
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "euclidean_distance",

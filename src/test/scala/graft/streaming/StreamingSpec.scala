@@ -301,7 +301,7 @@ class StreamingSpec extends SparkSpec {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val wmMs = eventsBatch()
-      .selectExpr("max(unix_micros(ts)) div 1000 - 7200000").head.getLong(0)
+      .selectExpr("max(unix_micros(ts)) div 1000 - 7200000").head().getLong(0)
     val sess = e
       .withColumn("brk", when(lag(col("sec"), 1).over(w).isNull
         || col("sec") - lag(col("sec"), 1).over(w) > 1800, 1).otherwise(0))
@@ -357,7 +357,7 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     // batch mirror: q23b sessions restricted to end_us <= wm_us
     val wmUs = (eventsBatch()
-      .selectExpr("max(unix_micros(ts)) div 1000 - 7200000").head.getLong(0)) * 1000L
+      .selectExpr("max(unix_micros(ts)) div 1000 - 7200000").head().getLong(0)) * 1000L
     val e = eventsBatch().selectExpr("user_id", "ts", "event_id",
       "unix_micros(ts) as us")
     val w = org.apache.spark.sql.expressions.Window

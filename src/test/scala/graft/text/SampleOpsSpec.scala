@@ -73,8 +73,8 @@ class SampleOpsSpec extends SparkSpec {
     // heavier docs should be overrepresented: the sampled docs' mean
     // n_chars must exceed the corpus mean (w-proportional inclusion)
     val sampledMean = docs.join(SampleOps.weightedSample(docs).select("doc_id"), "doc_id")
-      .agg(avg(col("n_chars"))).head.getDouble(0)
-    val corpusMean = docs.agg(avg(col("n_chars"))).head.getDouble(0)
+      .agg(avg(col("n_chars"))).head().getDouble(0)
+    val corpusMean = docs.agg(avg(col("n_chars"))).head().getDouble(0)
     assert(sampledMean > corpusMean,
       s"weighted sample mean $sampledMean vs corpus $corpusMean")
     val again = SampleOps.weightedSample(docs.repartition(7, col("doc_id")))
