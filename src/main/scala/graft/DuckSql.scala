@@ -7,7 +7,7 @@ package graft
 object DuckSql {
 
   /** Σ (a_i − b_i)² as a strict left fold — mirrors
-    * [[graft.linalg.Distances.squaredL2]]. */
+    * [[graft.linalg.Distances.squaredEuclideanCol]]. */
   def squaredL2(a: String, b: String): String =
     s"list_reduce(list_transform(range(len($a)), i -> " +
       s"(CAST($a[i+1] AS DOUBLE) - CAST($b[i+1] AS DOUBLE)) * " +

@@ -72,15 +72,10 @@ object Scale {
     * here to `queries` — against the exact top-k of each query over
     * `corpus`: the share of true (query, neighbour) pairs found. */
   def recallAt(got: DataFrame, queries: DataFrame, corpus: DataFrame,
-      k: Int): Double = {
-    val found = got.toDF("id", "nbr")
-      .join(queries.select(col("vec_id").as("id")), Seq("id"), "left_semi")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val truth = TopKJoin.knn(queries, corpus, k)
-      .select(col("id"), col("nbr")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    truth.count(found.contains).toDouble / truth.length
-  }
+      k: Int): Double =
+    Recall.recall(BruteForceKnn.asAdjacency(TopKJoin.knn(queries, corpus, k)),
+      got.toDF("id", "nbr").groupBy(col("id")).agg(collect_set(col("nbr")).as("nbrs")))
+      .collect()(0).getDouble(0)
 
   /** `f`'s value and its wall in seconds. */
   def timed[T](f: => T): (T, Double) = {
@@ -94,17 +89,11 @@ object Scale {
     * TopKJoin, N·256 distance evals). Bench's pinned recall gates
     * stamp this value. */
   private[graft] def recallVsTruth(vecs: DataFrame, edges: DataFrame,
-      k: Int, n: Int): Double = {
-    val truth =
-      if (n <= 4000)
-        BruteForceKnn.asAdjacency(BruteForceKnn.knnGraph(vecs, k))
-      else {
-        val step = math.max(1L, n / 256L)
-        val queries = vecs.filter(col("vec_id") % step === 0)
-        BruteForceKnn.asAdjacency(TopKJoin.knn(queries, vecs, k))
-      }
-    Recall.recall(truth, Mrdf.asAdjacency(edges)).collect()(0).getDouble(0)
-  }
+      k: Int, n: Int): Double =
+    if (n <= 4000)
+      Recall.recall(BruteForceKnn.asAdjacency(BruteForceKnn.knnGraph(vecs, k)),
+        Mrdf.asAdjacency(edges)).collect()(0).getDouble(0)
+    else recallAt(edges.select(col("id"), col("nbr")), sampledQueries(vecs, n), vecs, k)
 
   /** The "quote web" stress corpus: `sfDir`'s documents plus `nDerived`
     * synthetic docs, each quoting a hash-chosen 55–200-token slice of a

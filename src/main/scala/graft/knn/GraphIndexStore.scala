@@ -43,7 +43,7 @@ import graft.{Declared, IndexManifest, ScratchDirs, Tables}
   * rebalances lists. */
 object GraphIndexStore {
 
-  /** REBUILD-AS-COMPACTION policy (round-13 verdict #4), derived from
+  /* REBUILD-AS-COMPACTION policy (round-13 verdict #4), derived from
     * the measured decay curve (SCALING `round14_patch_decay`, 200k base
     * + five successive 2% approximate patches through the stored
     * router):
@@ -55,8 +55,8 @@ object GraphIndexStore {
     * Decay is ~0.7 recall points per 2% growth, near-linear — each
     * patch is exact for the ARRIVING vectors' own lists but the base
     * lists only receive beam-found symmetric candidates, so damage
-    * accumulates with every wave. Against [[RebuildRecallFloor]] =
-    * 0.98 the curve crosses after the SECOND 2% patch: the policy is
+    * accumulates with every wave. Against a 0.98 recall floor the
+    * curve crosses after the SECOND 2% patch: the policy is
     * "rebuild once cumulative approximate growth reaches ~4–5% of the
     * indexed corpus" (at 200k: two ~30 s patches absorb arrivals, then
     * one 223 s rebuild restores 0.998 — amortized ~12% of always-
@@ -65,11 +65,6 @@ object GraphIndexStore {
     * [[upsert]] path never decays (it IS the rebuild grain) — the
     * policy applies to the approximate [[ingestBatchApprox]] /
     * [[patchGraphApprox]] arms only. */
-  private[knn] val RebuildRecallFloor = 0.98
-  /** Cumulative approximate-growth fraction at which a rebuild is due
-    * under the 0.98 floor (the measured crossing, see
-    * [[RebuildRecallFloor]]). */
-  private[knn] val RebuildGrowthFraction = 0.05
 
   private val K = 10
   // router-training params shared with the q223 routed search (advice

@@ -221,8 +221,9 @@ object GraphSearch {
     * persistable next to the router like IVF lists. */
   def clusterSeeds(vectors: DataFrame, cent: DataFrame,
       seedsPerList: Int): DataFrame =
-    graft.similarity.IvfIndexStore.assignIdsToCentroids(
+    graft.similarity.Kmeans.assign(
         vectors.select(col("vec_id"), col("embedding")), cent)
+      .select(col("cid"), col("vec_id"))
       .withColumn("hk", conv(substring(
         md5(concat(lit("gs|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
         .cast("long"))
@@ -272,13 +273,9 @@ object GraphSearch {
       nprobe: Int = 2): DataFrame = {
     val vecs = vectors.select(col("vec_id").as("node"), col("embedding").as("nvec"))
     val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
-      .filter(col("pr") <= nprobe)
+    val entries = graft.similarity.Kmeans.probe(q, cent, nprobe)
       .select(col("qid"), col("cid"))
-    val entries = probes.join(broadcast(cseeds), "cid")
+      .join(broadcast(cseeds), "cid")
       .select(col("qid"), col("node")).distinct()
     val state0 = scored(entries, vecs, q).withColumn("exp", lit(false))
     runHops(state0, edges, vectors, queries, k, beam, hops)

@@ -3,9 +3,13 @@ package graft.linalg
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector distance/similarity as pure Catalyst columns — higher-order
-  * functions (`zip_with` + `aggregate`), no UDFs, so the expressions
-  * stay inside whole-stage codegen.
+/** Vector distance/similarity as Catalyst columns, plus their JVM
+  * mirrors for per-partition local algorithms. Every hot path —
+  * Euclidean, squared Euclidean, dot, cosine — is a custom codegen
+  * expression ([[org.apache.spark.sql.graft.VectorExpressions]]), no
+  * UDF, so it stays inside whole-stage codegen; the two fold-form
+  * columns ([[dotSql]], [[l2Norm]]) are higher-order `zip_with` /
+  * `transform` + `aggregate` expressions.
   *
   * Rebuilds the reference's scalar distance (`utilities.py:11-13`,
   * `np.linalg.norm(u1-u2)`) Spark-first.
@@ -23,11 +27,6 @@ object Distances {
     * exactly, matching DuckDB list_reduce's first-element init). */
   private def foldSum(arr: Column): Column =
     aggregate(arr, lit(0.0), (acc, v) => acc + v)
-
-  /** Σ (a_i − b_i)², left fold (declarative form — kept for docs/tests;
-    * the hot path uses the codegen expression below). */
-  def squaredL2(a: Column, b: Column): Column =
-    foldSum(zip_with(a, b, (x, y) => (dbl(x) - dbl(y)) * (dbl(x) - dbl(y))))
 
   /** Euclidean distance via the custom codegen Catalyst expression
     * ([[VectorExpressions]]) — ~30× the declarative fold on the KNN
@@ -66,13 +65,6 @@ object Distances {
     CB.column(org.apache.spark.sql.graft.CosineSimilarity(
       CB.expression(a), CB.expression(b)))
   }
-
-  /** Declarative cosine (fold form) — reference shape for the oracle. */
-  def cosineSimilaritySql(a: Column, b: Column): Column =
-    dotSql(a, b) / (l2Norm(a) * l2Norm(b))
-
-  def cosineDistance(a: Column, b: Column): Column =
-    lit(1.0) - cosineSimilarity(a, b)
 
   /** JVM mirror of [[euclidean]] for per-partition local algorithms
     * (MRDF block-local NN-Descent). Same fold order ⇒ same doubles. */

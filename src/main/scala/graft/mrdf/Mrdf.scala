@@ -257,14 +257,9 @@ object Mrdf {
               // NearestCentroidIdx's scaladoc and the arm-equivalence
               // spec.
               val overSet = oversized.toSet
-              val cmap = new java.util.HashMap[
-                org.apache.spark.unsafe.types.UTF8String, Array[Array[Float]]]()
-              stats.iterator
-                .filter { case (path, _) => overSet(path) }
-                .foreach { case (path, s) =>
-                  cmap.put(org.apache.spark.unsafe.types.UTF8String.fromString(path),
-                    s.items.map(_.vec).toArray)
-                }
+              val cmap = graft.similarity.Kmeans.centroidMap(stats.collect {
+                case (path, s) if overSet(path) => path -> s.items.map(_.vec).toArray
+              })
               val cidx = org.apache.spark.sql.graft.VectorExpressions
                 .nearestCentroidIdx(cmap, col("vec"), col("path"))
               over.select(col("id"), col("vec"),

@@ -3,7 +3,6 @@ package graft.similarity
 import scala.util.Random
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.linalg.Distances
@@ -16,8 +15,9 @@ import graft.linalg.Distances
   *  - LSH: random-hyperplane sign bits, banded so a query meets only
   *    docs sharing a band value — at 100 TB the join is bucket-local,
   *    no N² pairs, no broadcast of the big side.
-  *  - IVF: per-label centroids (the coarse quantizer); queries probe
-  *    the nprobe nearest centroids and scan only those inverted lists.
+  *  - IVF: k-means or per-label centroids (the coarse quantizer);
+  *    queries probe the nprobe nearest centroids and scan only those
+  *    inverted lists ([[ivfSearch]]).
   * Seeded hyperplanes ⇒ deterministic, but not SQL-mirrorable (no
   * oracle); recall vs brute force is asserted in ScalaTest.
   */
@@ -98,8 +98,8 @@ object Ann {
     }
 
   /** IVF with the k-means quantizer ([[Kmeans]]): inverted lists by
-    * nearest centroid ([[IvfIndexStore.assignToCentroids]]), the nprobe
-    * nearest lists probed per query, exact re-rank. `portable` = true is
+    * nearest centroid ([[Kmeans.assign]]), the nprobe nearest lists
+    * probed per query, exact re-rank. `portable` = true is
     * the variant the q175 oracle replays end to end (init, every
     * Lloyd's round, list assignment, probes, re-rank); false is the
     * order-free scale form (q36b). `cent0` supplies a precomputed
@@ -110,21 +110,8 @@ object Ann {
       portable: Boolean = false, cent0: Option[DataFrame] = None): DataFrame = {
     val cent = cent0.getOrElse(
       Kmeans.centroids(emb, nlist, kmeansIters, portable))
-    val lists = IvfIndexStore
-      .assignToCentroids(emb.select(col("vec_id"), col("embedding")), cent)
-      .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val q = emb.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    val cands = probes.join(lists, Seq("cid"))
-      .filter(col("qid") =!= col("nbr"))
-      .select(col("qid"), col("qv"), col("nbr"), col("cv"))
-    rerank(cands, k)
+    ivfSearch(emb.filter(queryPred), cent,
+      Kmeans.assign(emb.select(col("vec_id"), col("embedding")), cent), nprobe, k)
   }
 
   /** IVF-style ANN: coarse centroids from the label column (the
@@ -139,22 +126,9 @@ object Ann {
       .agg(avg(col("x")).as("m"))
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("s"))
-      .select(col("label").as("clabel"),
+      .select(col("label").as("cid"),
         transform(col("s"), e => e("m").cast("float")).as("cvec"))
-    val q = emb.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("clabel"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("clabel"))
-    val cands = probes.join(
-        emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"), col("label")),
-        col("clabel") === col("label"))
-      .filter(col("qid") =!= col("nbr"))
-      .select(col("qid"), col("qv"), col("nbr"), col("cv"))
-    rerank(cands, k)
+    ivfSearch(emb.filter(queryPred), cent, labelLists(emb), nprobe, k)
   }
 
   /** [[ivfTopK]] with cross-engine-exact centroids: the per-(label, dim)
@@ -180,19 +154,25 @@ object Ann {
         "aggregate(s, CAST(0 AS DOUBLE), (acc, e) -> acc + CAST(e.x AS DOUBLE)) / n"))
       .groupBy(col("label"))
       .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("dims"))
-      .select(col("label").as("clabel"),
+      .select(col("label").as("cid"),
         transform(col("dims"), e => e("m").cast("float")).as("cvec"))
-    val q = emb.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("clabel"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("clabel"))
-    val cands = probes.join(
-        emb.select(col("vec_id").as("nbr"), col("embedding").as("cv"), col("label")),
-        col("clabel") === col("label"))
+    ivfSearch(emb.filter(queryPred), cent, labelLists(emb), nprobe, k)
+  }
+
+  /** The label variants' inverted lists: every vector under its label. */
+  private def labelLists(emb: DataFrame): DataFrame =
+    emb.select(col("label").as("cid"), col("vec_id"), col("embedding"))
+
+  /** The IVF search body: each `(vec_id, embedding)` query probes its
+    * `nprobe` nearest `(cid, cvec)` centroids ([[Kmeans.probe]]), gathers
+    * the probed `(cid, vec_id, embedding)` lists by one equi-join on
+    * cid, drops itself, and keeps its exact cosine top-k ([[rerank]]). */
+  def ivfSearch(queries: DataFrame, cent: DataFrame, lists: DataFrame,
+      nprobe: Int, k: Int): DataFrame = {
+    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val cands = Kmeans.probe(q, cent, nprobe)
+      .join(lists.select(col("cid"), col("vec_id").as("nbr"),
+        col("embedding").as("cv")), Seq("cid"))
       .filter(col("qid") =!= col("nbr"))
       .select(col("qid"), col("qv"), col("nbr"), col("cv"))
     rerank(cands, k)
@@ -211,15 +191,10 @@ object Ann {
   def ivfBlockedPairs(emb: DataFrame, threshold: Double, nlist: Int = 16,
                       nassign: Int = 2, kmeansIters: Int = 5): DataFrame = {
     val cent = Kmeans.centroids(emb, nlist, kmeansIters, portable = false)
-    val pts = emb.select(col("vec_id").as("id"), col("embedding").as("v"))
-    val assign = pts.join(broadcast(cent))
-      .withColumn("d", Distances.euclidean(col("v"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("id")).orderBy(col("d"), col("cid"))))
-      .filter(col("pr") <= nassign)
-      .select(col("cid"), col("id"), col("v"))
-    val a = assign.select(col("cid"), col("id").as("d1"), col("v").as("va"))
-    val b = assign.select(col("cid"), col("id").as("d2"), col("v").as("vb"))
+    val assign = Kmeans.probe(
+      emb.select(col("vec_id").as("qid"), col("embedding").as("qv")), cent, nassign)
+    val a = assign.select(col("cid"), col("qid").as("d1"), col("qv").as("va"))
+    val b = assign.select(col("cid"), col("qid").as("d2"), col("qv").as("vb"))
     a.join(b, Seq("cid"))
       .filter(col("d1") < col("d2"))
       .withColumn("sim", round(Distances.cosineSimilarity(col("va"), col("vb")), 6))

@@ -1,11 +1,9 @@
 package graft.similarity
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{Declared, IndexManifest, ScratchDirs, Tables}
-import graft.linalg.Distances
 
 /** Persistent ANN index: the portable IVF quantizer written as parquet
   * artifacts and served back WITHOUT the training corpus — the
@@ -28,46 +26,16 @@ import graft.linalg.Distances
   * so the persisted search must hash-match the never-persisted one.
   *
   * Scale shape: build = the [[Kmeans]] rounds + one codegen-argmin
-  * assignment over the corpus (both the q36b/q175 shapes); the lists
-  * sink partitions by cid naturally; search broadcasts the nlist-row
-  * centroid table, probes explode to nprobe equi-join keys against
-  * the lists, and the re-rank is the TopKByWeight partial aggregation
-  * (≤ k rows per query cross the shuffle). */
+  * assignment over the corpus ([[Kmeans.assign]]; both the q36b/q175
+  * shapes); the lists sink partitions by cid naturally; search is
+  * [[Ann.ivfSearch]] over the stored centroids and lists — the
+  * nlist-row centroid table broadcasts, probes explode to nprobe
+  * equi-join keys against the lists, and the re-rank is the
+  * TopKByWeight partial aggregation (≤ k rows per query cross the
+  * shuffle). */
 object IvfIndexStore {
 
   private val K = 10
-
-  /** Nearest-centroid assignment of (vec_id, embedding) points — shared
-    * by build, upsert, list splits, the IVF/SemDeDup lists and the
-    * graph router's cluster seeds — as ONE narrow codegen projection.
-    * Round-15, measured at 1M×1024 (`graft.Scale graph_index`): the former
-    * broadcast-join + per-id argmin aggregation streamed N×nlist
-    * candidate rows (cluster_seeds 851.8 s of a 937.5 s index write
-    * with the vector inside each candidate struct; 471.7 s with the
-    * struct narrowed to (d, cid)). [[org.apache.spark.sql.graft.NearestCentroidIdx]]
-    * loops the bounded centroid array inside codegen instead — no
-    * join, no aggregation, no shuffle. Assignments are bit-identical:
-    * the expression computes the same strict-fold Euclidean doubles as
-    * [[Distances.euclidean]] and its first-wins-on-tie rule over the
-    * cid-sorted array equals the lowest-(d, cid) tie-break (the
-    * MRDF divide-arm equivalence, asserted in PlanSpecs). */
-  private[graft] def assignToCentroids(pts: DataFrame,
-      cent: DataFrame): DataFrame = {
-    val (cids, cmap) = Kmeans.centArgminPayload(cent)
-    if (cids.isEmpty)
-      return pts.filter(lit(false))
-        .select(lit(0).as("cid"), col("vec_id"), col("embedding"))
-    val idx = org.apache.spark.sql.graft.VectorExpressions
-      .nearestCentroidIdx(cmap, col("embedding"), lit(""))
-    pts.select(element_at(typedlit(cids), idx + 1).as("cid"),
-      col("vec_id"), col("embedding"))
-  }
-
-  /** [[assignToCentroids]] when the caller needs only (cid, vec_id) —
-    * the cluster-seeds build. */
-  private[graft] def assignIdsToCentroids(pts: DataFrame,
-      cent: DataFrame): DataFrame =
-    assignToCentroids(pts, cent).select(col("cid"), col("vec_id"))
 
   /** Build the portable IVF index over `emb` and write it under `dir`.
     * Deterministic for a given corpus (the portable [[Kmeans]]: md5
@@ -87,7 +55,7 @@ object IvfIndexStore {
         lit(kmeansIters).as("kmeans_iters"), col("fingerprint"))
     IndexManifest.commit(dir, meta) {
       cent.write.mode("overwrite").parquet(s"$dir/centroids")
-      assignToCentroids(pts, cent).write.mode("overwrite").parquet(s"$dir/lists")
+      Kmeans.assign(pts, cent).write.mode("overwrite").parquet(s"$dir/lists")
     }
   }
 
@@ -101,22 +69,9 @@ object IvfIndexStore {
     * [[Ann.ivfKmeansTopK]] with `portable` = true. Reads only the
     * index dir. */
   def search(spark: SparkSession, dir: String, queries: DataFrame,
-             k: Int = K, nprobe: Int = 3): DataFrame = {
-    val cent = spark.read.parquet(s"$dir/centroids")
-    val lists = spark.read.parquet(s"$dir/lists")
-      .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
-    val q = queries.select(col("vec_id").as("qid"), col("embedding").as("qv"))
-    val probes = q.join(broadcast(cent))
-      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
-      .withColumn("pr", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
-      .filter(col("pr") <= nprobe)
-      .select(col("qid"), col("qv"), col("cid"))
-    val cands = probes.join(lists, Seq("cid"))
-      .filter(col("qid") =!= col("nbr"))
-      .select(col("qid"), col("qv"), col("nbr"), col("cv"))
-    Ann.rerank(cands, k)
-  }
+             k: Int = K, nprobe: Int = 3): DataFrame =
+    Ann.ivfSearch(queries, spark.read.parquet(s"$dir/centroids"),
+      spark.read.parquet(s"$dir/lists"), nprobe, k)
 
   /** Full persisted cycle for the declared row: build → write → load →
     * search, a FRESH index dir per invocation so every bench/verify
@@ -162,7 +117,7 @@ object IvfIndexStore {
     val (m, fp) = IndexManifest.validateDelta(spark, dir, pts,
       spark.read.parquet(s"$dir/lists"))
     IndexManifest.chain(spark, dir, m, fp) {
-      assignToCentroids(pts, cent).write.mode("append").parquet(s"$dir/lists")
+      Kmeans.assign(pts, cent).write.mode("append").parquet(s"$dir/lists")
       if (maxListSize > 0L) splitOversized(spark, dir, maxListSize)
     }
   }
@@ -237,7 +192,7 @@ object IvfIndexStore {
         .select(col("vec_id"), col("embedding"))
       val sub = Kmeans.centroids(members, 2, iters = 3, portable = true)
         .withColumn("cid", col("cid") + lit(nextCid))
-      keepLists = keepLists.unionByName(assignToCentroids(members, sub))
+      keepLists = keepLists.unionByName(Kmeans.assign(members, sub))
       keepCent = keepCent.unionByName(sub.select(col("cid"), col("cvec")))
       nextCid += 2
     }

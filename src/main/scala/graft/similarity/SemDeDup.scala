@@ -32,8 +32,7 @@ object SemDeDup {
   def semDedup(emb: DataFrame, tau: Double = 0.35,
                nlist: Int = 16, iters: Int = 3): DataFrame = {
     val cent = Kmeans.centroids(emb, nlist, iters, portable = true)
-    val lists = IvfIndexStore
-      .assignToCentroids(emb.select(col("vec_id"), col("embedding")), cent)
+    val lists = Kmeans.assign(emb.select(col("vec_id"), col("embedding")), cent)
       .select(col("cid"), col("vec_id").as("id"), col("embedding").as("vec"))
       .localCheckpoint() // feeds the pair join twice + the output join
     val dropped = lists.as("a").join(lists.as("b"),

@@ -716,11 +716,12 @@ object StreamingPipelines {
     * over the rest of the corpus), and each arrival is routed and
     * matched entirely without streaming state:
     *
-    *  - nearest-centroid routing is a MAP-SIDE fold over the centroid
-    *    table embedded as an array literal (nlist × dim floats — the
-    *    broadcast-dimension scale, collected once from the seeded
-    *    quantizer build), so no aggregation or window touches the
-    *    stream — append mode needs no watermark;
+    *  - nearest-centroid routing is [[graft.similarity.Kmeans.assign]]
+    *    on the arrivals: the codegen argmin over the task-shipped
+    *    centroid table (nlist × dim floats, collected once from the
+    *    seeded quantizer build) — a MAP-SIDE projection, so no
+    *    aggregation or window touches the stream and append mode
+    *    needs no watermark;
     *  - candidates come from ONE stream-static equi-join on the list
     *    id; similarity is rounded row-locally before the sink.
     *
@@ -735,28 +736,16 @@ object StreamingPipelines {
     val static = emb.filter(col("vec_id") % 10 =!= 0)
     val cent = graft.similarity.Kmeans
       .centroids(static, nlist, kmeansIters, portable = true)
-    val centRows = cent.orderBy(col("cid")).collect()
-    val centArr = array(centRows.toIndexedSeq.map { r =>
-      struct(lit(r.getInt(0)).as("cid"),
-        array(r.getSeq[Float](1).map(lit(_)): _*).as("cvec"))
-    }: _*)
-    val lists = graft.similarity.IvfIndexStore
-      .assignToCentroids(static.select(col("vec_id"), col("embedding")), cent)
+    val lists = graft.similarity.Kmeans
+      .assign(static.select(col("vec_id"), col("embedding")), cent)
       .select(col("cid"), col("vec_id").as("nbr"), col("embedding").as("cv"))
       .localCheckpoint() // the static index the stream probes
     // the embeddings table as ONE single-file arrival
     val src = Replay.stage(Some(("embeddings", dir)))(Replay.Arrivals(Seq(
       graft.Tables.load(spark, dir, "embeddings").select(col("vec_id"), col("embedding")))))
     val arrivals = Replay.read(spark, src).filter(col("vec_id") % 10 === 0)
-    val zero = struct(lit(Double.MaxValue).as("d"), lit(-1).as("cid"))
-    val routed = arrivals.withColumn("route",
-        aggregate(centArr, zero, (acc, c) => {
-          val d = graft.linalg.Distances.euclidean(col("embedding"), c("cvec"))
-          when(d < acc("d"), struct(d.as("d"), c("cid").as("cid")))
-            .otherwise(acc) // centroids iterate cid-ascending: ties keep the smaller cid
-        }))
-      .select(col("vec_id").as("qid"), col("embedding").as("qv"),
-        col("route.cid").as("cid"))
+    val routed = graft.similarity.Kmeans.assign(arrivals, cent)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"), col("cid"))
     val cands = routed.join(lists, Seq("cid"))
       .select(col("qid"), col("nbr"),
         round(graft.linalg.Distances.cosineSimilarity(col("qv"), col("cv")), 6)
@@ -1408,7 +1397,7 @@ object StreamingPipelines {
           |  FROM cand)
           |WHERE rn <= 5 ORDER BY qid, rn""".stripMargin
       },
-      doc = "Streaming ANN ingest: arriving vectors routed to the static portable-IVF index by a map-side literal-centroid fold, matched through one stream-static list join - no streaming state, append mode; routing, index build and top-5 all replayed in the oracle",
+      doc = "Streaming ANN ingest: arriving vectors routed to the static portable-IVF index by the map-side codegen nearest-centroid argmin, matched through one stream-static list join - no streaming state, append mode; routing, index build and top-5 all replayed in the oracle",
       streamingExecuted = true),
 
     graft.Declared(

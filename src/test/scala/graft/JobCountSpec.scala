@@ -4,25 +4,56 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.graft.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
-/** Spark jobs per call of each iterative loop, call plus one collect of
-  * its output, at the fixed toy inputs of [[IterativeLoops]], and per
-  * run of the `patch_decay` scale point at toy size. Each ceiling is
-  * the count measured before the loops moved onto
-  * [[Checkpoints.iterate]]; a count above its ceiling fails. */
+import graft.knn.GraphIndexStore
+import graft.similarity.{Ann, IvfIndexStore}
+import graft.streaming.StreamingPipelines
+
+/** Spark jobs per call, call plus one collect of its output, of each
+  * iterative loop at the fixed toy inputs of [[IterativeLoops]] and of
+  * each coarse-quantizer caller at sf0.001, and per run of the
+  * `patch_decay` scale point at toy size. Each ceiling is the count
+  * measured (three times) at those inputs; a count above its ceiling
+  * fails. */
 class JobCountSpec extends SparkSpec {
 
   private val ceilings: Map[String, Int] = Map(
     "mrdf" -> 57,
-    "connected_components" -> 73,
-    "page_rank" -> 56,
-    "seed_expansion" -> 48,
-    "k_core" -> 121,
-    "label_propagation" -> 37,
-    "bfs_levels" -> 26,
-    "sssp_micro" -> 26,
-    "bpe_merges" -> 20,
+    "connected_components" -> 73, // measured 73, 72, 72: the count varies
+    "page_rank" -> 54,
+    "seed_expansion" -> 46,
+    "k_core" -> 119,
+    "label_propagation" -> 35,
+    "bfs_levels" -> 24,
+    "sssp_micro" -> 24,
+    "bpe_merges" -> 16,
+    "ivf_kmeans_topk" -> 20,
+    "ivf_build_and_search" -> 31,
+    "ann_ingest" -> 21,
+    "graph_index_search" -> 45,
     "scale_patch_decay" -> 440)
+
+  private def emb(s: SparkSession): DataFrame = Tables.load(s, sf0001, "embeddings")
+
+  /** A graph index over sf0.001's embeddings, written once. */
+  private lazy val graphIndex: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-jobcount-gidx-")
+    dir.toFile.deleteOnExit()
+    GraphIndexStore.write(emb(spark),
+      org.apache.spark.sql.graft.TopKJoin.knn(emb(spark), emb(spark), 10), dir.toString)
+    dir.toString
+  }
+
+  /** The callers of `Kmeans.assign`, `Kmeans.probe` and `Ann.ivfSearch`. */
+  private val calls: Seq[(String, SparkSession => DataFrame)] = Seq(
+    "ivf_kmeans_topk" -> (s =>
+      Ann.ivfKmeansTopK(emb(s), 10, col("vec_id") < 20, portable = true)),
+    "ivf_build_and_search" -> (s => IvfIndexStore.buildAndSearch(emb(s))),
+    "ann_ingest" -> (s => StreamingPipelines.annIngestAvailableNow(s, sf0001)),
+    "graph_index_search" -> (s =>
+      GraphIndexStore.search(s, graphIndex, emb(s).filter(col("vec_id") < 20))))
 
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
@@ -42,14 +73,16 @@ class JobCountSpec extends SparkSpec {
     assert(jobs <= ceilings(name), s"$name ran $jobs jobs, ceiling ${ceilings(name)}")
   }
 
+  private val runs = IterativeLoops.all(sf0001).map(l => l.name -> l.run) ++ calls
+
   test("every iterative loop has a ceiling") {
-    assert(ceilings.keySet == IterativeLoops.all(sf0001).map(_.name).toSet + "scale_patch_decay")
+    assert(ceilings.keySet == runs.map(_._1).toSet + "scale_patch_decay")
   }
 
-  IterativeLoops.all(sf0001).foreach { loop =>
-    test(s"${loop.name}: jobs per call no higher than its ceiling") {
-      loop.run(spark).collect() // warm: first-use planning may add jobs
-      check(loop.name, jobsOf { loop.run(spark).collect(); () })
+  runs.foreach { case (name, run) =>
+    test(s"$name: jobs per call no higher than its ceiling") {
+      run(spark).collect() // warm: first-use planning may add jobs
+      check(name, jobsOf { run(spark).collect(); () })
     }
   }
 

@@ -307,8 +307,7 @@ class PlanSpecs extends SparkSpec {
   test("q218/q220 centroid assignment: one narrow codegen projection, no join, no shuffle") {
     val emb = Tables.load(spark, sf0001, "embeddings")
     val cent = graft.similarity.Kmeans.centroids(emb, 8, 2, portable = true)
-    val df = graft.similarity.IvfIndexStore
-      .assignToCentroids(emb.select("vec_id", "embedding"), cent)
+    val df = graft.similarity.Kmeans.assign(emb.select("vec_id", "embedding"), cent)
     val p = df.queryExecution.executedPlan.toString
     // round-15: the bounded (nlist-row) quantizer rides task-shipped
     // inside the codegen argmin expression — the former broadcast-join
@@ -339,6 +338,33 @@ class PlanSpecs extends SparkSpec {
     val b = joined.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq.sorted
     assert(a.size == emb.count(), "one assignment row per point")
     assert(a == b, "expression argmin must equal the join-form argmin")
+  }
+
+  test("q191 routing: the codegen argmin on the stream, no lambda over a centroid array") {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => starts.add(s); ()
+        case _ => ()
+      }
+    }
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    try {
+      graft.streaming.StreamingPipelines.annIngestAvailableNow(spark, sf0001).collect()
+      org.apache.spark.graft.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(l)
+    // the micro-batch executions carry the streaming batch description
+    import scala.jdk.CollectionConverters._
+    val batches = starts.asScala.toSeq.filter(_.description.contains("batch = "))
+      .map(_.physicalPlanDescription)
+    assert(batches.nonEmpty, "no micro-batch execution was seen")
+    assert(batches.exists(_.contains("nearest_centroid_idx")),
+      s"arrivals must be routed by the codegen argmin:\n${batches.mkString("\n")}")
+    assert(!batches.exists(_.contains("lambdafunction")),
+      s"routing must not fold a lambda over a centroid array:\n${batches.mkString("\n")}")
   }
 
   test("q217 collapse: per-group top-m is the k-min aggregation over the pair stream, not a window") {

@@ -2,8 +2,11 @@ package graft.similarity
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.linalg.Distances
 
 class KmeansSpec extends SparkSpec {
 
@@ -77,5 +80,45 @@ class KmeansSpec extends SparkSpec {
         s"a round has no join and no broadcast:\n$p")
       assert(round.collect().nonEmpty)
     }
+  }
+
+  /** The windowed n-nearest probe as each IVF search, the graph router
+    * and the blocked pairs wrote it out before [[Kmeans.probe]]: the
+    * reference its rows must equal. */
+  private def windowedProbe(q: DataFrame, cent: DataFrame, n: Int): DataFrame =
+    q.join(broadcast(cent))
+      .withColumn("cd", Distances.euclidean(col("qv"), col("cvec")))
+      .withColumn("pr", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("cd"), col("cid"))))
+      .filter(col("pr") <= n)
+      .select(col("qid"), col("qv"), col("cid"))
+
+  private def probeRows(df: DataFrame): Seq[(Long, Int, Seq[Float])] =
+    df.select(col("qid"), col("cid"), col("qv")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Float](2))).toSeq
+      .sortBy(t => (t._1, t._2))
+
+  for (n <- 1 to 3)
+    test(s"Kmeans.probe: n = $n returns the windowed probe's exact rows at sf0.001") {
+      val emb = graft.Tables.load(spark, sf0001, "embeddings")
+      val cent = Kmeans.centroids(emb, 8, 3, portable = true)
+      val q = emb.select(col("vec_id").as("qid"), col("embedding").as("qv"))
+      val got = probeRows(Kmeans.probe(q, cent, n))
+      assert(got.size == emb.count() * n, "n rows per query")
+      assert(got == probeRows(windowedProbe(q, cent, n)))
+    }
+
+  test("Kmeans.probe and Kmeans.assign: equidistant centroids go to the lower cid") {
+    import spark.implicits._
+    // the query sits exactly halfway between cids 5 and 2; cid 9 is far
+    val cent = Seq((5, Seq(1f, 0f)), (9, Seq(0f, 3f)), (2, Seq(-1f, 0f)))
+      .toDF("cid", "cvec")
+    val q = Seq((7L, Seq(0f, 0f))).toDF("qid", "qv")
+    assert(probeRows(Kmeans.probe(q, cent, 1)).map(_._2) == Seq(2))
+    assert(probeRows(Kmeans.probe(q, cent, 2)).map(_._2) == Seq(2, 5))
+    assert(probeRows(windowedProbe(q, cent, 1)).map(_._2) == Seq(2))
+    val assigned = Kmeans.assign(q.toDF("vec_id", "embedding"), cent)
+      .select(col("cid")).as[Int].collect().toSeq
+    assert(assigned == Seq(2))
   }
 }

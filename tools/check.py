@@ -7,11 +7,16 @@ output (columns sorted by name, values compared row-by-row after the
 query's own ORDER BY).
 
 Usage: tools/check.py [sfdir] [--no-run] [--only q01,...] [--time]
+                      [--hashes FILE]
 
 --time prints per-oracle DuckDB wall seconds and a slowest-10 table so
 oracle-cost regressions (the round-4 driver-timeout killer) are visible.
+
+--hashes FILE writes one `name<TAB>rows<TAB>sha256` line for every Verify
+output, oracled or rows-only (columns sorted by name, rows sorted by
+value), so two checkouts' outputs compare with `diff` on two such files.
 """
-import duckdb, json, math, os, subprocess, sys, glob, time
+import duckdb, hashlib, json, math, os, subprocess, sys, glob, time
 
 # sbt runs in this script's own checkout, whatever the caller's cwd
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -19,12 +24,15 @@ sf_dir = "/root/testdata/sf0.01"
 only = None
 run = True
 timing = False
+hashes = None
 args = iter(sys.argv[1:])
 for a in args:
     if a == "--no-run":
         run = False
     elif a == "--time":
         timing = True
+    elif a == "--hashes":
+        hashes = next(args)
     elif a == "--only":
         only = set(next(args).split(","))
     elif a.startswith("--only="):
@@ -127,6 +135,27 @@ for name in sorted(oracle):
     else:
         print(f"PASS {name} ({len(g)} rows)")
         n_pass += 1
+
+def output_hash(name):
+    """(rows, sha256) of one output: the column names and types, then
+    every row as JSON text, the rows sorted by that text."""
+    tbl = con.execute(f"SELECT * FROM read_parquet('{out}/{name}/*.parquet')").arrow()
+    order = sorted(range(tbl.num_columns), key=lambda i: tbl.column_names[i])
+    head = json.dumps([(tbl.column_names[i], str(tbl.schema.field(i).type))
+                       for i in order])
+    rows = sorted(json.dumps([norm(v) for v in r], default=str)
+                  for r in zip(*(tbl.column(i).to_pylist() for i in order)))
+    return len(rows), hashlib.sha256("\n".join([head] + rows).encode()).hexdigest()
+
+if hashes:
+    names = sorted(d for d in os.listdir(out)
+                   if glob.glob(f"{out}/{d}/*.parquet")
+                   and (not only or d in only))
+    with open(hashes, "w") as f:
+        for name in names:
+            n, h = output_hash(name)
+            f.write(f"{name}\t{n}\t{h}\n")
+    print(f"wrote {len(names)} output hashes to {hashes}")
 
 if timing and oracle_secs:
     worst = sorted(oracle_secs.items(), key=lambda kv: -kv[1])[:10]
