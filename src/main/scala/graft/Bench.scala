@@ -861,7 +861,9 @@ object Bench {
     spark.stop()
   }
 
-  /** JSON string literal. */
+  /** JSON string literal: backslash, quote and every control char below
+    * U+0020 escaped. A raw tab or CR in an oracle's SQL would otherwise
+    * make `oracle_sql.json` invalid JSON, and no oracle could be read. */
   private[graft] def jq(s: String): String =
     "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
       .flatMap(c => if (c < ' ') f"\\u${c.toInt}%04x" else c.toString) + "\""

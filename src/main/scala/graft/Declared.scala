@@ -14,7 +14,8 @@ final case class Declared(
     // True for queries whose run() executes a full Structured
     // Streaming pipeline (AvailableNow replay) and returns a
     // memory-sink read: there is no lazy batch plan to audit, so
-    // PlanAudit keys off this flag — not a name convention.
+    // PlanAuditSpec skips the queries with this flag — not by a name
+    // convention.
     streamingExecuted: Boolean = false,
     // True for queries whose timed window is storage-commit-bound for
     // a NON-streaming reason — the persisted-index family writes +

@@ -80,16 +80,21 @@ object GraphAnalytics {
     * directed — `nndescent.py:102-113`); it is also the input to
     * mutual-kNN clustering. One self left-semi join on the flipped key
     * pair — co-partitioned, no N² anywhere. */
-  def mutualEdges(edges: DataFrame): DataFrame = {
-    val flipped = edges.select(col("nbr").as("id"), col("id").as("nbr"))
-    edges.join(flipped, Seq("id", "nbr"), "left_semi")
+  def mutualEdges(edges: DataFrame): DataFrame =
+    reciprocated(edges)
       .groupBy(col("id")).agg(count(lit(1)).as("n_mutual"))
       .join(edges.groupBy(col("id")).agg(count(lit(1)).as("k")), Seq("id"), "right")
       .select(col("id"), col("k"), coalesce(col("n_mutual"), lit(0L)).as("n_mutual"),
         round(coalesce(col("n_mutual"), lit(0L)).cast("double") / col("k"), 4)
           .as("mutual_frac"))
       .orderBy(col("id"))
-  }
+
+  /** The (id, nbr) edges whose flip (nbr, id) is also an edge: the
+    * mutual (undirected) kNN graph, both directions, from one self
+    * left-semi join on the flipped key pair. */
+  private def reciprocated(edges: DataFrame): DataFrame =
+    edges.join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
+      Seq("id", "nbr"), "left_semi")
 
   /** Per-node triangle count on the mutual (undirected) KNN graph —
     * the local clustering signal that separates genuine tight clusters
@@ -100,10 +105,12 @@ object GraphAnalytics {
     * graph every vertex has ≤ k mutual edges, so the wedge table is
     * ≤ |V|·k² rows and every join shuffles on a vertex key — the
     * textbook bounded-degree plan that survives any |V|. */
-  def triangleCounts(edges: DataFrame): DataFrame = {
-    val und = edges
-      .join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
-        Seq("id", "nbr"), "left_semi")
+  def triangleCounts(edges: DataFrame): DataFrame =
+    trianglesOn(edges, reciprocated(edges))
+
+  /** [[triangleCounts]] over `mutual`, the reciprocated edges of `edges`. */
+  private def trianglesOn(edges: DataFrame, mutual: DataFrame): DataFrame = {
+    val und = mutual
       .filter(col("id") < col("nbr"))
       .select(col("id").as("a"), col("nbr").as("b"))
     // a<b and b<c ⇒ each triangle appears exactly once as (a,b,c).
@@ -130,12 +137,9 @@ object GraphAnalytics {
     * floor-quantized to ppm (the q130 idiom — floor of an identical
     * binary double is engine-independent, unlike decimal rounding). */
   def clusteringCoefficient(edges: DataFrame): DataFrame = {
-    val und = edges
-      .join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
-        Seq("id", "nbr"), "left_semi")
+    val und = reciprocated(edges)
     val deg = und.groupBy(col("id")).agg(count(lit(1)).as("deg"))
-    val tri = triangleCounts(edges)
-    tri
+    trianglesOn(edges, und)
       .join(deg, Seq("id"), "left")
       .select(col("id"), coalesce(col("deg"), lit(0L)).as("deg"), col("n_tri"),
         when(coalesce(col("deg"), lit(0L)) < 2, lit(0L))
@@ -158,9 +162,7 @@ object GraphAnalytics {
     * an `in_core` flag — deterministic (the k-core is unique), but the
     * iterative deletion has no ANSI mirror ⇒ rows-only, spec-gated. */
   def kCore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
-    val und = edges
-      .join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
-        Seq("id", "nbr"), "left_semi")
+    val und = reciprocated(edges)
       .select(col("id").as("u"), col("nbr").as("v"))
     val core = Checkpoints.iterate[(Long, Boolean)](und, maxIter)((e, prev) => {
       val n = e.count()
@@ -197,9 +199,7 @@ object GraphAnalytics {
     * aggregations (label counts, then per-node argmax via min(struct)
     * — map-side partials, never a window over the edge stream). */
   def labelPropagation(edges: DataFrame, rounds: Int = 5): DataFrame = {
-    val und = edges
-      .join(edges.select(col("nbr").as("id"), col("id").as("nbr")),
-        Seq("id", "nbr"), "left_semi")
+    val und = reciprocated(edges)
       .localCheckpoint(eager = false) // scanned every round
     try {
       Checkpoints.rounds(

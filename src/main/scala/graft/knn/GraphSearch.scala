@@ -1,6 +1,6 @@
 package graft.knn
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,13 +41,18 @@ object GraphSearch {
   private val Hops = 3
   private val NSeeds = 4
 
+  /** The portable md5 rank of `vec_id` that orders every seed and hub
+    * choice: the first 15 hex digits of md5("gs|" + vec_id) as a long,
+    * mirrored by the oracles' `substr(md5('gs|' || …), 1, 15)`. */
+  private def seedRank: Column =
+    conv(substring(md5(concat(lit("gs|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
+      .cast("long")
+
   /** Deterministic global entry points: bottom-`n` vec_ids by the
     * portable md5 rank — query-independent, k-row broadcast. */
   def entrySeeds(vectors: DataFrame, n: Int): DataFrame =
     vectors
-      .withColumn("hk", conv(substring(
-        md5(concat(lit("gs|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"))
+      .withColumn("hk", seedRank)
       .orderBy(col("hk"), col("vec_id")).limit(n)
       .select(col("vec_id").as("node"))
 
@@ -122,9 +127,7 @@ object GraphSearch {
     * equi-join on the pool index. */
   def longLinks(vectors: DataFrame, poolSize: Int, perNode: Int): DataFrame = {
     val pool = vectors
-      .withColumn("hk", conv(substring(
-        md5(concat(lit("gs|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"))
+      .withColumn("hk", seedRank)
       .orderBy(col("hk"), col("vec_id")).limit(poolSize)
       .withColumn("pi",
         row_number().over(Window.orderBy(col("hk"), col("vec_id"))) - 1)
@@ -224,9 +227,7 @@ object GraphSearch {
     graft.similarity.Kmeans.assign(
         vectors.select(col("vec_id"), col("embedding")), cent)
       .select(col("cid"), col("vec_id"))
-      .withColumn("hk", conv(substring(
-        md5(concat(lit("gs|"), col("vec_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long"))
+      .withColumn("hk", seedRank)
       .withColumn("srn", row_number().over(
         Window.partitionBy(col("cid")).orderBy(col("hk"), col("vec_id"))))
       .filter(col("srn") <= seedsPerList)

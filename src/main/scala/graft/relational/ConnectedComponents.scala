@@ -1,6 +1,7 @@
 package graft.relational
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed connected components — the step a dedup pipeline needs
@@ -13,9 +14,9 @@ import org.apache.spark.sql.functions._
   * "Connected Components in MapReduce and Beyond", SoCC'14).
   * Maintaining edges directed high→low id:
   *  - large-star: each node u links every strictly-larger neighbor to
-  *    `m = min(Γ(u) ∪ u)` — one groupBy(u) + join;
+  *    `m = min(Γ(u) ∪ u)` — one window partitioned by u;
   *  - small-star: each node u links its smaller neighbors and itself
-  *    to its minimum neighbor — one groupBy + join.
+  *    to its minimum neighbor — one window partitioned by the node.
   * The edge set's fixpoint is a star per component centered on the
   * component-minimum node, reached in O(log n) rounds for ANY graph
   * shape — unlike plain min-label propagation, which needs O(component
@@ -24,8 +25,8 @@ import org.apache.spark.sql.functions._
   * callers can fail loudly instead of using a partial labeling.
   *
   * Scale shape (the 100 TB story): each half-round shuffles |E| rows
-  * into a hash aggregate keyed by node (partial aggregation reduces
-  * map-side first) plus one co-partitioned join on the same key. No
+  * once, hash-partitioned by node, into a window over each node's
+  * own edges, with no join back. No
   * driver data path; the only driver value is a per-round edge-set
   * fingerprint (count + xor-hash, one scalar agg), which is also the
   * round's [[graft.Checkpoints.iterate]] probe.
@@ -71,18 +72,20 @@ object ConnectedComponents {
         // Large-star over the full (undirected) neighborhood of u.
         val und = e.select(col("hi").as("u"), col("lo").as("v"))
           .unionByName(e.select(col("lo").as("u"), col("hi").as("v")))
-        val mins = und.groupBy("u").agg(min("v").as("mn"))
-          .select(col("u"), least(col("mn"), col("u")).as("m"))
-        // No distinct here: small-star's min-agg is duplicate-insensitive
+        // Per-node minimums are windows over the node's own edges, not
+        // an aggregate joined back: AQE re-plans such a join from
+        // whichever of its two shuffle stages finishes first, so the
+        // round's job count would vary from run to run.
+        // No distinct here: small-star's min is duplicate-insensitive
         // and its final distinct dedups the round's output — dropping the
         // intermediate dedup removes a full |E| exchange per round.
-        val ls = und.join(mins, "u")
+        val ls = und
+          .withColumn("m", least(min(col("v")).over(Window.partitionBy(col("u"))), col("u")))
           .filter(col("v") > col("u"))
           .select(col("v").as("hi"), col("m").as("lo"))
         // Small-star over the lo-neighbors of each hi node. m = min
         // lo-neighbor; link the other lo-neighbors and hi itself to m.
-        val smins = ls.groupBy("hi").agg(min("lo").as("m"))
-        val joined = ls.join(smins, "hi")
+        val joined = ls.withColumn("m", min(col("lo")).over(Window.partitionBy(col("hi"))))
         Some(joined.filter(col("lo") =!= col("m"))
           .select(col("lo").as("hi"), col("m").as("lo"))
           .unionByName(joined.select(col("hi"), col("m").as("lo")))

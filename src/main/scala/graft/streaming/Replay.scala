@@ -39,8 +39,8 @@ object Replay {
   final case class PerBatch(f: (DataFrame, Long) => Unit) extends Sink
 
   /** Staged sources, one per full parameter key per process: repeated
-    * declared-query invocations (Verify + Bench + PlanAudit, bench
-    * passes, session restarts) read the same files. */
+    * declared-query invocations (Verify + Bench, bench passes,
+    * session restarts) read the same files. */
   private val staged = TrieMap.empty[Product, Staged]
 
   /** Stage `arrivals` once per process for `key` (every parameter the

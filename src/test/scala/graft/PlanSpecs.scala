@@ -120,10 +120,7 @@ class PlanSpecs extends SparkSpec {
 
   test("q69 sentence-dedup window is hash-partitioned, never global") {
     val qe = Registry.byName("q69_line_dedup").run(spark, sf0001).queryExecution
-    val global = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.forall(_.foldable) => w
-    }
+    val global = PlanAudit.globalWindows(qe.optimizedPlan)
     assert(global.isEmpty, "sentence-frequency window must partition by the hash")
   }
 
@@ -137,10 +134,7 @@ class PlanSpecs extends SparkSpec {
       // no collect_list postings ship — the occurrence filter is a
       // COUNT aggregate (partial-agg'd map-side)
       assert(!p.contains("collect_list"), s"$name must not build posting lists")
-      val global = qe.optimizedPlan.collect {
-        case w: org.apache.spark.sql.catalyst.plans.logical.Window
-          if w.partitionSpec.forall(_.foldable) => w
-      }
+      val global = PlanAudit.globalWindows(qe.optimizedPlan)
       assert(global.isEmpty, s"$name island windows must partition by doc")
     }
   }
@@ -177,10 +171,7 @@ class PlanSpecs extends SparkSpec {
     assert(!p.contains("collect_list"), "no posting lists ship")
     // chain-merge windows partition by (doc_a, doc_b, d) — bounded by
     // document length, never global
-    val global = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.forall(_.foldable) => w
-    }
+    val global = PlanAudit.globalWindows(qe.optimizedPlan)
     assert(global.isEmpty, "diagonal chain windows must partition by pair+diagonal")
     // the declared q213 reads the shared snapshot: one scan, no rebuild
     val declared = Registry.byName("q213_shared_substrings")
@@ -215,10 +206,7 @@ class PlanSpecs extends SparkSpec {
     assert(p.contains("LeftAnti"), "span cut must be an anti join")
     assert(!p.contains("BroadcastNestedLoopJoin LeftAnti"),
       "anti join must key on doc_id (hash/broadcast-hash), not scan all ranges per token")
-    val global = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.forall(_.foldable) => w
-    }
+    val global = PlanAudit.globalWindows(qe.optimizedPlan)
     assert(global.isEmpty, "range-merge windows must partition by doc_id")
   }
 
@@ -270,10 +258,7 @@ class PlanSpecs extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"hop expansion must be equi-joins only (the one crossJoin lives in " +
         s"the seeds init, not the per-hop path):\n$p")
-    val global = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.forall(_.foldable) => w
-    }
+    val global = PlanAudit.globalWindows(qe.optimizedPlan)
     assert(global.isEmpty, "frontier ranking must partition by qid")
   }
 
@@ -294,10 +279,7 @@ class PlanSpecs extends SparkSpec {
     val p = qe.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"the patch path must never go all-pairs:\n$p")
-    val global = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.forall(_.foldable) => w
-    }
+    val global = PlanAudit.globalWindows(qe.optimizedPlan)
     assert(global.isEmpty, "re-ranking must partition by id, never globally")
     assert(p.contains("ObjectHashAggregate") || p.contains("SortAggregate") ||
       p.contains("HashAggregate"),
@@ -399,10 +381,7 @@ class PlanSpecs extends SparkSpec {
     val qe = graft.similarity.VectorSearch.mmrRerank(emb, kCand = 5,
       kSel = 3, queryPred = org.apache.spark.sql.functions.col("vec_id") < 5)
       .queryExecution
-    val global = qe.optimizedPlan.collect {
-      case w: org.apache.spark.sql.catalyst.plans.logical.Window
-        if w.partitionSpec.forall(_.foldable) => w
-    }
+    val global = PlanAudit.globalWindows(qe.optimizedPlan)
     assert(global.isEmpty, "MMR argmax windows must partition by qid")
     // every greedy step replans over the CHECKPOINTED shortlist — the
     // ANN join must not reappear in the final plan

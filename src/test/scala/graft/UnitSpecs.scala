@@ -142,4 +142,19 @@ class UnitSpecs extends AnyFunSuite {
     assert(Fvecs.decodeFvecs(Fvecs.encodeFvecs(vecs)).map(_._2.toSeq)
       == vecs.map(_.toSeq))
   }
+
+  // --- oracle_sql.json (the oracle compare parses it as JSON) ---
+
+  test("oracle_sql.json parses back to the same name → SQL map") {
+    val sql = Map(
+      "q_quote" -> "SELECT 'a\"b' AS \"c\"",
+      "q_backslash" -> "SELECT '\\d+\\' AS re",
+      "q_ws\tname" -> "SELECT 1\r\nFROM t\tWHERE x = '\n'",
+      "q_ctl" -> "SELECT '\u0001\u001f' AS c",
+      "q_unicode" -> "SELECT 'naïve – 日本語 \ud83d\ude00' AS t")
+    val parsed = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readValue(Verify.oracleJson(sql), classOf[java.util.Map[String, String]])
+    import scala.jdk.CollectionConverters._
+    assert(parsed.asScala.toMap == sql)
+  }
 }
