@@ -148,8 +148,9 @@ object Scale {
     * "default" the paper's (k=30, ρ=15, α=150000) and adds recall vs
     * exact truth; ":alpha=N" caps the block size (on one machine the
     * paper α leaves every N < α in one serial block); ":driverBytes=N"
-    * caps the divide's per-level driver sample so the distributed
-    * centroid arm runs. */
+    * caps the driver payload: below N·(4d+32) the per-level arms divide
+    * instead of the local arm, and below a level's sample the
+    * distributed centroid arm runs. */
   private def mrdfPoint(spark: SparkSession,
       a: Map[String, String]): Seq[(String, Any)] = {
     val counts = a("counts").split(",").map(_.trim.toInt).toSeq

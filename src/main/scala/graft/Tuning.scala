@@ -29,6 +29,15 @@ object Tuning {
     try f finally prev.foreach { case (k, v) => set(k, v) }
   }
 
+  private val AdaptiveKey = "spark.sql.adaptive.enabled"
+
+  /** Run `f` with adaptive execution off: for work whose every shuffle
+    * size is known before it is planned, AQE's runtime re-planning only
+    * splits each action into one job per shuffle stage. MRDF's local
+    * arm ([[graft.mrdf.Mrdf]]) runs its rounds in this scope. */
+  def withAdaptiveOff[T](spark: SparkSession)(f: => T): T =
+    withConf(spark, AdaptiveKey -> Some("false"))(f)
+
   /** Scope for a BOUNDED-SIZE iterative build (the declared-query test
     * harness shape: router training on the TrainTargetN sample, MRDF at
     * test α): fixed small shuffle width AND adaptive execution off.
@@ -36,11 +45,14 @@ object Tuning {
     * shuffle rounds; at the harness's 32 partitions each round pays 32
     * task setups for kilobytes of data, and AQE re-plans after every
     * shuffle stage — pure driver latency when each round's data is
-    * bounded and sub-MB by construction. Scoped at the declared-query
-    * layer only: the library's scale path (paper α, full-corpus builds)
-    * runs under the cluster's own AQE/partition settings. */
+    * bounded and sub-MB by construction. The width is scoped at the
+    * declared-query layer only: the library's scale path (paper α,
+    * full-corpus builds) runs under the cluster's own partition
+    * setting. The library scopes adaptive execution off by itself only
+    * where it knows every size in advance: MRDF's startup aggregate and
+    * the rounds of its local arm (see [[withAdaptiveOff]]). */
   def withIterativeBuild[T](spark: SparkSession)(f: => T): T =
     withConf(spark,
-      "spark.sql.adaptive.enabled" -> Some("false"),
+      AdaptiveKey -> Some("false"),
       "spark.sql.shuffle.partitions" -> Some(IterativeBuildPartitions.toString))(f)
 }

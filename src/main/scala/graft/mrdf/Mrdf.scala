@@ -1,8 +1,13 @@
 package graft.mrdf
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.NearestCentroidIdx
+import org.apache.spark.sql.types.LongType
 
+import graft.agg.{KeyedVecList, VecSample}
 import graft.linalg.Distances
 
 /** Multiway Random Division Forest (Kim & Park, KDD 2023) — distributed
@@ -17,28 +22,45 @@ import graft.linalg.Distances
   * B3 (non-uniform reservoir, mrdf.py:116).
   *
   * Spark-native design (SURVEY.md §7 step 6):
-  *  - points stay a DataFrame (id, vec, path); every phase is a
-  *    declarative plan (Catalyst prunes/pushes/broadcasts);
   *  - centroid sampling is a deterministic per-path bottom-ρ by
-  *    xxhash64(seed, iter, id) — order-independent, cluster-safe,
-  *    replacing the reference's driver-side reservoir;
-  *  - nearest-centroid assignment extends each oversized row's path:
-  *    on small levels by the `NearestCentroidIdx` codegen map over the
-  *    driver-collected centroids (narrow, no join), past the driver
-  *    payload bound by a join + per-id `min(struct(d, cidx, …))` hash
-  *    aggregate (the centroid set is ≤ ρ × #oversized-paths rows);
-  *  - block-local NN-Descent runs inside `flatMapGroups` per path —
-  *    blocks ≤ α by construction, so they fit an executor, and all
-  *    blocks run in parallel (the reference collected every block to
-  *    the driver and looped sequentially, mrdf.py:148-153);
+  *    (splitmix64(id + level seed), id) — the [[VecSample]] aggregator:
+  *    order-independent, cluster-safe, replacing the reference's
+  *    driver-side reservoir;
+  *  - nearest-centroid assignment extends each oversized row's path
+  *    with the index of its nearest sample, argmin on (d, cidx) with d
+  *    the strict-fold Euclidean ([[NearestCentroidIdx.nearest]]);
+  *  - the division has three routings of that one algorithm, chosen by
+  *    a-priori bounds against `driverSampleBytes` before anything is
+  *    collected, and bit-identical in output:
+  *     - local arm, when the corpus fits the bound (N·(4d+32) bytes):
+  *       the corpus is collected once and each round's whole division
+  *       runs on the driver ([[dividePaths]]); the id → block map is a
+  *       broadcast variable read by a typed map over the points;
+  *     - per-level driver arm: one fused count+sample aggregation job
+  *       per level, its sample collected, and the assignment a
+  *       `NearestCentroidIdx` codegen map over the driver's centroids
+  *       (narrow, no join);
+  *     - distributed arm, past the per-level payload bound: the samples
+  *       stay in a persisted frame, and the assignment is a join + per-id
+  *       `min(struct(d, cidx, …))` hash aggregate;
+  *  - block-local NN-Descent runs per block — blocks ≤ α by
+  *    construction, so they fit an executor, and all blocks run in
+  *    parallel (the reference collected every block to the driver and
+  *    looped sequentially, mrdf.py:148-153). On the local arm the driver
+  *    knows every block's size and packs the blocks longest first into
+  *    min(#blocks, shuffle partitions) tasks; on the level arms they are
+  *    `flatMapGroups` groups by path;
   *  - graph merge is union + the per-id `TaggedTopKByWeight` top-k
   *    aggregate; convergence Δ is one count of its `!is_old` rows (the
   *    edges new to the graph), the round's [[graft.Checkpoints.iterate]]
-  *    probe (replacing collect+parallelize at mrdf.py:159,192).
+  *    probe (replacing collect+parallelize at mrdf.py:159,192). On the
+  *    local arm the rounds run with adaptive execution off, so a round —
+  *    descent, merge and Δ count — is one job of four stages.
   *
-  * At 100 TB the same plan holds: division is O(iterations) broadcast
-  * joins + shuffles on `path`, NN-Descent is embarrassingly parallel
-  * over blocks, and the merge shuffles once per round on `id`.
+  * At 100 TB the same plan holds on the level arms: division is
+  * O(iterations) aggregations + narrow maps or joins on `path`,
+  * NN-Descent is embarrassingly parallel over blocks, and the merge
+  * shuffles once per round on `id`.
   *
   * Design note (measured): warm-starting each round's block NN-Descent
   * with the running graph's intra-block edges does NOT accelerate
@@ -60,14 +82,17 @@ object Mrdf {
       maxIter: Int = 10,
       precision: Double = 0.001,
       maxDivideIter: Int = 20,
-      // Ceiling on sample payload routed through the driver per divide
-      // level (see divide's adaptive-routing comment). Non-default only
-      // in specs, to force the distributed-centroid arm at test N.
+      // Ceiling on the payload routed through the driver: the whole
+      // corpus on the local arm, one level's samples on the per-level
+      // arm (see divide's adaptive-routing comment). Non-default only
+      // in specs and scale points, to force the level arms at test N.
       driverSampleBytes: Long = 64L << 20)
 
   /** Per-outer-iteration run telemetry — the Spark-side equivalent of
     * the reference's `write_out_mrdf_details` (`mrdf.py:217-226`:
-    * params + per-iteration memory/progress log). */
+    * params + per-iteration memory/progress log). On the local arm the
+    * block NN-Descent and merge run in the Δ count's job, so their time
+    * is in `deltaSec` and `mergeSec` is planning only. */
   final case class IterStat(iter: Int, changedEdges: Long, ratio: Double,
                             seconds: Double, heapUsedMb: Long,
                             divideSec: Double, mergeSec: Double, deltaSec: Double)
@@ -90,26 +115,36 @@ object Mrdf {
 
     val pts = points.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
       .persist()
-    // ONE startup job: the count and the dimensionality (which feeds
-    // divide's a-priori driver-payload bound) share the aggregation
-    // that also materializes the persist (round-15: the loop is
-    // latency-bound at test scale — every saved job counts).
-    val nd = pts.agg(count(lit(1)),
-      coalesce(max(size(col("vec"))), lit(0))).collect()(0)
-    val n = nd.getLong(0)
-    val dim = nd.getInt(1)
-    log.info(s"[mrdf] start n=$n k=${p.k} rho=${p.rho} alpha=${p.alpha} " +
-      s"tau=${p.tau} seed=${p.seed} maxIter=${p.maxIter}")
-
-    // Division caches of the round in flight, released once its merge
+    // Division resources of the round in flight (the per-level arms'
+    // level caches, the local arm's broadcast), released once its merge
     // has materialized (or the round throws).
-    var pinned: Seq[DataFrame] = Nil
-    var t0, t1 = 0L
-    val stats = scala.collection.mutable.ArrayBuffer.empty[IterStat]
+    var held: () => Unit = () => ()
+    def release(): Unit = { val h = held; held = () => (); h() }
     try {
+      // ONE startup job: the count and the dimensionality (which feed
+      // the a-priori driver-payload bounds) share the aggregation that
+      // also materializes the persist.
+      val nd = graft.Tuning.withAdaptiveOff(spark) {
+        pts.agg(count(lit(1)), coalesce(max(size(col("vec"))), lit(0))).collect()(0)
+      }
+      val n = nd.getLong(0)
+      val dim = nd.getInt(1)
+      // The local arm, decided from (n, dim) BEFORE anything is
+      // collected. Duplicate ids, which an id → block map cannot route,
+      // leave the division to the level arms.
+      val corpus = Option.when(n * (4L * dim + 32L) <= p.driverSampleBytes) {
+        val c = pts.as[(Long, Array[Float])].collect().sortBy(_._1)
+        (c.map(_._1), c.map(_._2))
+      }.filter { case (ids, _) => ids.indices.drop(1).forall(i => ids(i - 1) < ids(i)) }
+      log.info(s"[mrdf] start n=$n k=${p.k} rho=${p.rho} alpha=${p.alpha} " +
+        s"tau=${p.tau} seed=${p.seed} maxIter=${p.maxIter} " +
+        s"arm=${if (corpus.isDefined) "local" else "levels"}")
+
+      var t0, t1 = 0L
+      val stats = scala.collection.mutable.ArrayBuffer.empty[IterStat]
       val empty = spark.emptyDataset[(Long, Long, Double, Boolean)]
         .toDF("id", "nbr", "dist", "is_old")
-      val done = graft.Checkpoints.iterate[Double](empty, p.maxIter, start = Some(1.0)) {
+      def loop() = graft.Checkpoints.iterate[Double](empty, p.maxIter, start = Some(1.0)) {
         (merged, _) =>
           // The merge carries per-edge provenance (is_old = the (id, nbr)
           // existed in the previous graph), so the convergence Δ is one
@@ -117,8 +152,7 @@ object Mrdf {
           // that runs the round's block NN-Descent + merge + checkpoint.
           val t2 = System.nanoTime()
           val changedEdges = merged.filter(!col("is_old")).count()
-          pinned.foreach(_.unpersist(blocking = false))
-          pinned = Nil
+          release()
           val t3 = System.nanoTime()
           val ratio = changedEdges.toDouble / (n.toDouble * p.k)
           val rt = Runtime.getRuntime
@@ -135,21 +169,144 @@ object Mrdf {
         if (ratio <= p.tau) None
         else {
           t0 = System.nanoTime()
-          val (assigned, levels) = divide(pts, p, iter, dim)
-          pinned = levels
+          val fresh = corpus match {
+            case Some((ids, vecs)) =>
+              val blocks = spark.sparkContext.broadcast(
+                Blocks(ids, dividePaths(ids, vecs, p, iter),
+                  spark.conf.get("spark.sql.shuffle.partitions").toInt))
+              held = () => blocks.destroy()
+              packedGraphs(pts, blocks, p, iter)
+            case None =>
+              val (assigned, levels) = divide(pts, p, iter, dim)
+              held = () => levels.foreach(_.unpersist(blocking = false))
+              localGraphs(assigned, p, iter)
+          }
           t1 = System.nanoTime()
           // round 1 merges into the empty local relation itself, which
           // the optimizer prunes from the merge's union
           val old = if (iter == 1) empty else g
-          Some(mergeGraphs(old.select(col("id"), col("nbr"), col("dist")),
-            localGraphs(assigned, p, iter), p.k))
+          Some(mergeGraphs(old.select(col("id"), col("nbr"), col("dist")), fresh, p.k))
         }
       }
+      // Every size on the local arm is known before its round is
+      // planned, so AQE has nothing to add but one job per stage.
+      val done = if (corpus.isDefined) graft.Tuning.withAdaptiveOff(spark)(loop()) else loop()
       (done.state.select(col("id"), col("nbr"), col("dist")), stats.toSeq)
     } finally {
-      pinned.foreach(_.unpersist(blocking = false))
+      release()
       pts.unpersist()
     }
+  }
+
+  /** The level seed of divide level `level` of round `iter`: the rank
+    * seed of its bottom-ρ sample. */
+  private def levelSeed(p: Params, iter: Int, level: Int): Long =
+    p.seed ^ (iter.toLong << 40) ^ (level.toLong << 20)
+
+  /** The NN-Descent seed of the block at `path` in round `iter`. */
+  private def blockSeed(p: Params, iter: Int, path: String): Long =
+    p.seed ^ (iter.toLong << 32) ^ path.hashCode.toLong
+
+  /** Round `iter`'s division of a driver-held corpus (`ids` ascending):
+    * every point's block path, bit-identical to [[divide]]'s. Each level
+    * folds the oversized paths' members through the same [[VecSample]]
+    * (count and bottom-ρ by (rank, id)), extends each oversized member's
+    * path with [[NearestCentroidIdx.nearest]] over its path's sample, and
+    * after `maxDivideIter` levels hash-splits the paths still > α with
+    * the same `pmod(xxhash64(seed, id), ⌈count/α⌉)` valve. */
+  private[mrdf] def dividePaths(ids: Array[Long], vecs: Array[Array[Float]],
+      p: Params, iter: Int): Array[String] = {
+    val path = Array.fill(ids.length)("")
+    var work = ids.indices.toArray
+    var level = 0
+    var oversized = true
+    while (oversized && level < p.maxDivideIter) {
+      level += 1
+      val sampler = new VecSample(p.rho, levelSeed(p, iter, level))
+      val samples = scala.collection.mutable.HashMap.empty[String, KeyedVecList]
+      work.foreach { i =>
+        samples(path(i)) = sampler.reduce(samples.getOrElse(path(i), sampler.zero), (ids(i), vecs(i)))
+      }
+      val cents = samples.collect {
+        case (k, s) if s.cnt > p.alpha => k -> s.items.map(_.vec).toArray
+      }
+      oversized = cents.nonEmpty
+      work = work.filter(i => cents.contains(path(i)))
+      work.foreach { i => path(i) = path(i) + "," + NearestCentroidIdx.nearest(vecs(i), cents(path(i))) }
+    }
+    if (oversized) {
+      val counts = work.groupMapReduce(path(_))(_ => 1L)(_ + _)
+      val h0 = XxHash64Function.hash(p.seed, LongType, 42L) // xxhash64's default seed
+      work.foreach { i =>
+        val c = counts(path(i))
+        if (c > p.alpha) path(i) = path(i) + "#" +
+          java.lang.Math.floorMod(XxHash64Function.hash(ids(i), LongType, h0),
+            math.ceil(c / p.alpha.toDouble).toLong)
+      }
+    }
+    path
+  }
+
+  /** A round's division as the executors read it: the corpus ids
+    * ascending with each one's block, and each block's path and task. */
+  private final case class Blocks(ids: Array[Long], block: Array[Int],
+      paths: Array[String], task: Array[Int], tasks: Int) {
+    def blockOf(id: Long): Int = {
+      val i = java.util.Arrays.binarySearch(ids, id)
+      if (i < 0) throw new IllegalStateException(
+        s"mrdf: id $id is not in the corpus the driver divided")
+      block(i)
+    }
+  }
+
+  private object Blocks {
+    /** Number the blocks of `paths` (in first-member order) and pack
+      * them longest first, each into the least-loaded of
+      * min(#blocks, `width`) tasks. */
+    def apply(ids: Array[Long], paths: Array[String], width: Int): Blocks = {
+      val names = paths.distinct
+      val index = names.zipWithIndex.toMap
+      val block = paths.map(index)
+      val sizes = new Array[Long](names.length)
+      block.foreach(b => sizes(b) += 1)
+      val load = new Array[Long](math.max(1, math.min(names.length, width)))
+      val task = new Array[Int](names.length)
+      names.indices.sortBy(b => (-sizes(b), b)).foreach { b =>
+        val t = load.indices.minBy(load(_))
+        task(b) = t
+        load(t) += sizes(b)
+      }
+      Blocks(ids, block, names, task, load.length)
+    }
+  }
+
+  /** The local arm's block NN-Descent: a typed map over `pts` reads each
+    * point's block and task from the broadcast division, one shuffle
+    * routes every block to its packed task, and each task runs its
+    * blocks in turn. */
+  private def packedGraphs(pts: DataFrame, blocks: Broadcast[Blocks],
+      p: Params, iter: Int): DataFrame = {
+    val spark = pts.sparkSession
+    import spark.implicits._
+    pts.as[(Long, Array[Float])]
+      .map { case (id, v) =>
+        val b = blocks.value.blockOf(id)
+        (blocks.value.task(b), b, id, v)
+      }
+      .repartitionById(blocks.value.tasks, col("_1"))
+      .mapPartitions { rows =>
+        val members = scala.collection.mutable.LinkedHashMap
+          .empty[Int, scala.collection.mutable.ArrayBuffer[NnDescentLocal.Pt]]
+        rows.foreach { case (_, b, id, v) =>
+          members.getOrElseUpdate(b, scala.collection.mutable.ArrayBuffer.empty) +=
+            NnDescentLocal.Pt(id, v)
+        }
+        members.iterator.flatMap { case (b, m) =>
+          NnDescentLocal.run(m.toArray, p.k,
+            seed = blockSeed(p, iter, blocks.value.paths(b)), precision = p.precision)
+        }
+      }
+      .toDF("id", "nbr", "dist")
   }
 
   /** Partition phase: split every block with > α members into ≤ ρ
@@ -167,7 +324,7 @@ object Mrdf {
     * Returns the assignment plus the still-persisted level DataFrames
     * backing it — the caller unpersists them once its consumer (the
     * block NN-Descent + merge) has materialized. */
-  private def divide(pts: DataFrame, p: Params, iter: Int,
+  private[mrdf] def divide(pts: DataFrame, p: Params, iter: Int,
       dim: Int): (DataFrame, Seq[DataFrame]) = {
     val spark = pts.sparkSession
     // Settled slices: a path that drops to ≤ α can never grow again,
@@ -205,8 +362,7 @@ object Mrdf {
       // a scale trap here — at level 0 `path` is the constant "",
       // Catalyst folds the partition spec away, and WindowExec funnels
       // the ENTIRE level through one task.)
-      val roundSeed = p.seed ^ (iter.toLong << 40) ^ (divideIter.toLong << 20)
-      val sampler = new graft.agg.VecSample(p.rho, roundSeed)
+      val sampler = new VecSample(p.rho, levelSeed(p, iter, divideIter))
       val aggPlan = work.select(col("path"), col("id"), col("vec"))
         .as[(String, Long, Array[Float])]
         .groupByKey(_._1)
@@ -354,8 +510,7 @@ object Mrdf {
       .groupByKey(_._1)
       .flatMapGroups { (path, rows) =>
         val block = rows.map(t => NnDescentLocal.Pt(t._2, t._3)).toArray
-        NnDescentLocal.run(block, p.k,
-          seed = p.seed ^ (iter.toLong << 32) ^ path.hashCode.toLong,
+        NnDescentLocal.run(block, p.k, seed = blockSeed(p, iter, path),
           precision = p.precision)
       }
       .toDF("id", "nbr", "dist")

@@ -31,11 +31,12 @@ object MrdfQueries {
     * so the materialization is observationally identical to a rerun —
     * the fixed-seed spec asserts exactly that).
     *
-    * The divide/descend/merge loop at test α runs ~40 sub-MB shuffle
-    * rounds; scoping the build to the shared iterative-build width
-    * ([[graft.Tuning.IterativeBuildPartitions]]) cuts per-round
-    * task-setup overhead without touching the algorithm — at the
-    * paper's α the same code runs under the cluster's own setting.
+    * The divide/descend/merge loop at test α runs one job of sub-MB
+    * shuffles per round; scoping the build to the shared
+    * iterative-build width ([[graft.Tuning.IterativeBuildPartitions]])
+    * cuts per-round task-setup overhead without touching the
+    * algorithm — at the paper's α the same code runs under the
+    * cluster's own setting.
     * Output is partition-count independent: sampling is deterministic
     * bottom-ρ by hash, the merge is an order-free top-k with a total
     * (w, nbr) tie-break, and NN-Descent blocks are keyed by path, not

@@ -214,17 +214,18 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * distance loop that stays inside whole-stage codegen (no join, no
   * shuffle, no Dataset encode/decode — the typed-mapPartitions form of
   * this paid per-row deserialization that outweighed the saved shuffle
-  * at 200k+ vectors). Distance is the same strict left-fold Euclidean
-  * as [[EuclideanDistance]]; iteration in centroid-index order with
-  * strict `<` replays the `min(struct(d, cidx))` tie-break, so
-  * assignments are bit-identical to the join form.
+  * at 200k+ vectors). The argmin is [[NearestCentroidIdx.nearest]]:
+  * the strict left-fold Euclidean of [[EuclideanDistance]] in
+  * centroid-index order with strict `<`, which replays the
+  * `min(struct(d, cidx))` tie-break, so assignments are bit-identical
+  * to the join form.
   *
   * The centroid map rides the expression as a task-binary reference
   * object (`addReferenceObj`) — bounded by the caller's
   * driver-payload routing, and shipped once per executor like any
   * plan literal. Keys are [[UTF8String]] so the probe needs no per-row
   * String conversion. A path absent from the map is a caller bug ⇒
-  * NullPointerException, never a silent wrong assignment. */
+  * an exception naming the path, never a silent wrong assignment. */
 case class NearestCentroidIdx(left: Expression, right: Expression,
     cmap: java.util.HashMap[UTF8String, Array[Array[Float]]])
     extends BinaryExpression with ExpectsInputTypes {
@@ -235,27 +236,9 @@ case class NearestCentroidIdx(left: Expression, right: Expression,
   override def prettyName: String = "nearest_centroid_idx"
 
   override def nullSafeEval(vecAny: Any, pathAny: Any): Any = {
-    val vec = vecAny.asInstanceOf[ArrayData]
     val cents = cmap.get(pathAny.asInstanceOf[UTF8String])
     if (cents == null) throw NearestCentroidIdx.missingPath(pathAny, cmap.size())
-    var bi = 0
-    var bd = Double.PositiveInfinity
-    var ci = 0
-    while (ci < cents.length) {
-      val c = cents(ci)
-      val n = math.min(vec.numElements(), c.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val d = vec.getFloat(i).toDouble - c(i).toDouble
-        s += d * d
-        i += 1
-      }
-      val dist = math.sqrt(s)
-      if (dist < bd) { bd = dist; bi = ci }
-      ci += 1
-    }
-    bi
+    NearestCentroidIdx.nearest(vecAny.asInstanceOf[ArrayData].toFloatArray(), cents)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -263,35 +246,14 @@ case class NearestCentroidIdx(left: Expression, right: Expression,
       classOf[java.util.HashMap[UTF8String, Array[Array[Float]]]].getName)
     nullSafeCodeGen(ctx, ev, (vec, path) => {
       val cents = ctx.freshName("cents")
-      val bi = ctx.freshName("bi")
-      val bd = ctx.freshName("bd")
-      val ci = ctx.freshName("ci")
-      val c = ctx.freshName("c")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val i = ctx.freshName("i")
-      val d = ctx.freshName("d")
-      val dist = ctx.freshName("dist")
       s"""
          |float[][] $cents = (float[][]) $mapRef.get($path);
          |if ($cents == null) {
          |  throw org.apache.spark.sql.graft.NearestCentroidIdx
          |    .missingPath($path, $mapRef.size());
          |}
-         |int $bi = 0;
-         |double $bd = Double.POSITIVE_INFINITY;
-         |for (int $ci = 0; $ci < $cents.length; $ci++) {
-         |  float[] $c = $cents[$ci];
-         |  int $n = java.lang.Math.min($vec.numElements(), $c.length);
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    double $d = (double) $vec.getFloat($i) - (double) $c[$i];
-         |    $s += $d * $d;
-         |  }
-         |  double $dist = java.lang.Math.sqrt($s);
-         |  if ($dist < $bd) { $bd = $dist; $bi = $ci; }
-         |}
-         |${ev.value} = $bi;
+         |${ev.value} = org.apache.spark.sql.graft.NearestCentroidIdx
+         |  .nearest($vec.toFloatArray(), $cents);
        """.stripMargin
     })
   }
@@ -302,6 +264,33 @@ case class NearestCentroidIdx(left: Expression, right: Expression,
 }
 
 object NearestCentroidIdx {
+
+  /** Index of the nearest of `cents` to `vec`: the strict left-fold
+    * Euclidean of [[EuclideanDistance]], centroids in index order, and a
+    * strict `<`, so a tie goes to the lowest index. The one argmin of
+    * the interpreted and the generated expression and of MRDF's
+    * driver-side divide. */
+  def nearest(vec: Array[Float], cents: Array[Array[Float]]): Int = {
+    var bi = 0
+    var bd = Double.PositiveInfinity
+    var ci = 0
+    while (ci < cents.length) {
+      val c = cents(ci)
+      val n = math.min(vec.length, c.length)
+      var s = 0.0
+      var i = 0
+      while (i < n) {
+        val d = vec(i).toDouble - c(i).toDouble
+        s += d * d
+        i += 1
+      }
+      val dist = math.sqrt(s)
+      if (dist < bd) { bd = dist; bi = ci }
+      ci += 1
+    }
+    bi
+  }
+
   /** A path absent from the centroid map is a caller bug (the caller
     * built both the map and the path column); fail with the offending
     * path and the map size instead of a bare NPE — on a real cluster

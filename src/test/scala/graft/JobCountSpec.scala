@@ -20,7 +20,7 @@ import graft.streaming.StreamingPipelines
 class JobCountSpec extends SparkSpec {
 
   private val ceilings: Map[String, Int] = Map(
-    "mrdf" -> 57,
+    "mrdf" -> 13,
     "connected_components" -> 35,
     "page_rank" -> 54,
     "seed_expansion" -> 46,
@@ -31,10 +31,11 @@ class JobCountSpec extends SparkSpec {
     "bpe_merges" -> 16,
     "ivf_kmeans_topk" -> 20,
     "ivf_build_and_search" -> 31,
-    "ann_ingest" -> 21,
+    "ann_ingest" -> 18,
     "graph_index_search" -> 45,
-    // Measured 413–422 over 16 runs. AQE re-plans each search hop's
-    // frontier ⋈ edges join (GraphSearch.expand) as a broadcast join
+    // Measured 413–422 over 16 runs, and 385–388 over four since the
+    // point's MRDF builds take the local arm. AQE re-plans each search
+    // hop's frontier ⋈ edges join (GraphSearch.expand) as a broadcast join
     // from whichever of its two shuffle stages finishes first; one
     // build side costs one more job than the other.
     "scale_patch_decay" -> 440)
