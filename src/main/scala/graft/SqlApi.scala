@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** The pure-SQL user surface: everything the engine exposes through
   * the DataFrame API is equally reachable via `spark.sql(...)` —
   * tables as temp views, graft's custom codegen expressions as SQL
-  * functions (the same constructors [[GraftExtensions]] injects at
-  * session build, registered idempotently here for sessions built
+  * functions (the table [[GraftExtensions]] injects at session build,
+  * registered idempotently here for sessions built
   * without the extension, e.g. the driver harness's). q75 runs one
   * multi-feature SQL text end-to-end — join + custom expression +
   * ranking window + aggregate — and oracle-matches it, proving API
@@ -16,14 +16,9 @@ object SqlApi {
   /** Idempotent: temp functions replace on re-registration. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("euclidean_distance",
-      es => org.apache.spark.sql.graft.EuclideanDistance(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("cosine_similarity",
-      es => org.apache.spark.sql.graft.CosineSimilarity(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("dot_product",
-      es => org.apache.spark.sql.graft.DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("squared_euclidean",
-      es => org.apache.spark.sql.graft.SquaredEuclidean(es(0), es(1)), "built-in")
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      reg.createOrReplaceTempFunction(name, es => build(es(0), es(1)), "built-in")
+    }
   }
 
   /** Within-label 3-NN in one SQL text (the label bound keeps the

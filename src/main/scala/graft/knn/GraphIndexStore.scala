@@ -427,24 +427,6 @@ object GraphIndexStore {
         .unionByName(cand).unionByName(deltaDelta).unionByName(reverse), k)
   }
 
-  /** knn_bruteforce's oracle text (the exact graph over ALL
-    * embeddings) — q227's rebuild-equivalence statement, shared by the
-    * streamed-ingest row (q230): batch upsert and streamed ingest both
-    * state their result as the full rebuild. */
-  private[graft] def rebuildOracle(k: Int): String = {
-    val d = graft.DuckSql.euclidean("a.embedding", "b.embedding")
-    s"""WITH pairs AS (
-       |  SELECT a.vec_id AS id, b.vec_id AS nbr, round($d, 6) AS dist
-       |  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id
-       |), ranked AS (
-       |  SELECT id, nbr, dist,
-       |         row_number() OVER (PARTITION BY id ORDER BY dist, nbr) AS rn
-       |  FROM pairs
-       |)
-       |SELECT id, nbr, dist FROM ranked WHERE rn <= $k
-       |ORDER BY id, dist, nbr""".stripMargin
-  }
-
   val declared: Seq[Declared] = Seq(
     Declared(
       "q225_graph_index_persist",
@@ -468,7 +450,7 @@ object GraphIndexStore {
     Declared(
       "q227_graph_index_upsert",
       (s, dir) => upsertCycle(s, dir),
-      Some(rebuildOracle(K)),
+      Some(KnnQueries.knnOracle(K)),
       doc = "Incremental GRAPH index maintenance (round-12 verdict #3): build the exact graph on the 75% base slice, persist, upsert the delta via two fused TopKJoin passes (delta-vs-all + base-vs-delta list patch, |D|*N + N*|D| evals instead of the rebuild's N^2) with the xor-chained fingerprint REQUIREd over base+delta - oracled at the exact-graph grain: the post-upsert adjacency must equal the rebuild over ALL embeddings row-for-row (knn_bruteforce's SQL). meta/ is the upsert's commit point (nodes -> edges -> meta), so any tear fails the freshness proof",
       diskSensitive = true),
 

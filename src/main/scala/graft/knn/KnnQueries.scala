@@ -28,8 +28,10 @@ object KnnQueries {
         vecs.repartition(col("vec_id")), vecs, K)
     }
 
-  /** DuckDB mirror of BruteForceKnn.knnGraph on `embeddings`. */
-  private val knnOracle: String = {
+  /** DuckDB mirror of BruteForceKnn.knnGraph on `embeddings`: the one
+    * exact-kNN oracle text, also the rebuild-equivalence statement of
+    * the graph index's upsert (q227) and streamed ingest (q230). */
+  private[graft] def knnOracle(k: Int): String = {
     val d = DuckSql.euclidean("a.embedding", "b.embedding")
     s"""WITH pairs AS (
        |  SELECT a.vec_id AS id, b.vec_id AS nbr, round($d, 6) AS dist
@@ -39,7 +41,7 @@ object KnnQueries {
        |         row_number() OVER (PARTITION BY id ORDER BY dist, nbr) AS rn
        |  FROM pairs
        |)
-       |SELECT id, nbr, dist FROM ranked WHERE rn <= $K
+       |SELECT id, nbr, dist FROM ranked WHERE rn <= $k
        |ORDER BY id, dist, nbr""".stripMargin
   }
 
@@ -114,7 +116,7 @@ object KnnQueries {
       "knn_bruteforce",
       (s, dir) => knn10(s, dir)
         .orderBy(col("id"), col("dist"), col("nbr")),
-      Some(knnOracle),
+      Some(knnOracle(K)),
       doc = "Exact k-NN edge table over embeddings (flagship; knn.py:4-26)"),
 
     Declared(
@@ -126,7 +128,7 @@ object KnnQueries {
         .knn(Tables.load(s, dir, "embeddings").repartition(col("vec_id")),
           Tables.load(s, dir, "embeddings"), K)
         .orderBy(col("id"), col("dist"), col("nbr")),
-      Some(knnOracle),
+      Some(knnOracle(K)),
       doc = "Fused top-k join (custom LogicalPlan + SparkStrategy + SparkPlan): broadcast KNN without the N·M pair stream"),
 
     Declared(

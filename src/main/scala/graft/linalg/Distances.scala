@@ -3,22 +3,23 @@ package graft.linalg
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector distance/similarity as Catalyst columns, plus their JVM
-  * mirrors for per-partition local algorithms. Every hot path —
-  * Euclidean, squared Euclidean, dot, cosine — is a custom codegen
-  * expression ([[org.apache.spark.sql.graft.VectorExpressions]]), no
-  * UDF, so it stays inside whole-stage codegen; the two fold-form
-  * columns ([[dotSql]], [[l2Norm]]) are higher-order `zip_with` /
-  * `transform` + `aggregate` expressions.
+/** Vector distance and similarity: the one home of each metric's fold.
+  * The `*Local` functions are the folds over `Array[Float]`; the
+  * Catalyst columns (Euclidean, squared Euclidean, dot, cosine) are
+  * codegen expressions ([[org.apache.spark.sql.graft.VectorExpressions]])
+  * whose interpreted path calls these folds and whose generated path
+  * inlines the same loop, so they stay inside whole-stage codegen. The
+  * two fold-form columns ([[dotSql]], [[l2Norm]]) are higher-order
+  * `zip_with` / `transform` + `aggregate` expressions.
   *
   * Rebuilds the reference's scalar distance (`utilities.py:11-13`,
   * `np.linalg.norm(u1-u2)`) Spark-first.
   *
   * Determinism contract: every reduction is a strict left-to-right
-  * IEEE-754 double fold over the array in storage order. DuckDB's
-  * `list_reduce` on the same array folds in the same order, so the
-  * oracle's doubles are bit-identical (sqrt is correctly rounded per
-  * IEEE-754, so it preserves the guarantee).
+  * IEEE-754 double fold over the first min(|a|, |b|) coordinates in
+  * storage order. DuckDB's `list_reduce` on the same array folds in the
+  * same order, so the oracle's doubles are bit-identical (sqrt is
+  * correctly rounded per IEEE-754, so it preserves the guarantee).
   */
 object Distances {
   private def dbl(x: Column): Column = x.cast("double")
@@ -66,49 +67,65 @@ object Distances {
       CB.expression(a), CB.expression(b)))
   }
 
-  /** JVM mirror of [[euclidean]] for per-partition local algorithms
-    * (MRDF block-local NN-Descent). Same fold order ⇒ same doubles. */
-  def euclideanLocal(a: Array[Float], b: Array[Float]): Double = {
+  /** Σ (aᵢ − bᵢ)² over the first min(|a|, |b|) coordinates: the one
+    * squared-L2 fold, which `EuclideanDistance`, `SquaredEuclidean`,
+    * the centroid argmin, NN-Descent and the fused top-k join all run.
+    * Returns `Double.PositiveInfinity` as soon as the partial sum
+    * exceeds `limit` — sound, because squared terms only ever grow the
+    * sum. A NaN partial sum never compares above `limit`, so a NaN
+    * coordinate met before the exit gives NaN. */
+  def squaredEuclideanLocal(a: Array[Float], b: Array[Float],
+      limit: Double = Double.PositiveInfinity): Double = {
+    val n = math.min(a.length, b.length)
     var s = 0.0
     var i = 0
-    while (i < a.length) {
+    while (i < n) {
       val d = a(i).toDouble - b(i).toDouble
       s += d * d
+      if (s > limit) return Double.PositiveInfinity
       i += 1
     }
-    math.sqrt(s)
+    s
   }
+
+  /** Euclidean distance on two float arrays; the value of [[euclidean]]. */
+  def euclideanLocal(a: Array[Float], b: Array[Float]): Double =
+    math.sqrt(squaredEuclideanLocal(a, b))
 
   /** [[euclideanLocal]] with an early-exit bound: returns the EXACT
     * distance when it is ≤ `bound`, or `Double.PositiveInfinity` as
-    * soon as the partial squared sum proves dist > bound. Callers that
-    * discard candidates above `bound` (k-NN pruning) get identical
-    * decisions at a fraction of the flops — the partial-sum exit is
-    * sound because squared terms only ever grow the sum. */
-  def euclideanLocalBounded(a: Array[Float], b: Array[Float], bound: Double): Double = {
-    if (bound.isInfinite) return euclideanLocal(a, b)
-    val b2 = bound * bound
+    * soon as the partial squared sum passes bound², which proves
+    * dist > bound. NaN passes through. Callers that discard candidates
+    * above `bound` (k-NN pruning, the argmin) get identical decisions at
+    * a fraction of the flops. */
+  def euclideanLocalBounded(a: Array[Float], b: Array[Float], bound: Double): Double =
+    math.sqrt(squaredEuclideanLocal(a, b, bound * bound))
+
+  /** Σ aᵢ·bᵢ over the first min(|a|, |b|) coordinates; the value of [[dot]]. */
+  def dotLocal(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
     var s = 0.0
     var i = 0
-    while (i < a.length) {
-      val d = a(i).toDouble - b(i).toDouble
-      s += d * d
-      if (s > b2) return Double.PositiveInfinity
+    while (i < n) {
+      s += a(i).toDouble * b(i).toDouble
       i += 1
     }
-    math.sqrt(s)
+    s
   }
 
+  /** Cosine similarity in one pass over the first min(|a|, |b|)
+    * coordinates: the dot and both squared norms each fold left to
+    * right from 0.0, so the result equals the three-fold
+    * `dot / (sqrt(na) * sqrt(nb))` bit for bit; the value of
+    * [[cosineSimilarity]]. A zero-norm side gives NaN. */
   def cosineSimilarityLocal(a: Array[Float], b: Array[Float]): Double = {
-    // min-length bound, matching the CosineSimilarity codegen exactly
-    // (a.length alone would AIOOBE on a shorter right-hand vector)
     val n = math.min(a.length, b.length)
     var dot = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     while (i < n) {
-      dot += a(i).toDouble * b(i).toDouble
-      na += a(i).toDouble * a(i).toDouble
-      nb += b(i).toDouble * b(i).toDouble
+      val x = a(i).toDouble
+      val y = b(i).toDouble
+      dot += x * y; na += x * x; nb += y * y
       i += 1
     }
     dot / (math.sqrt(na) * math.sqrt(nb))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Declared, ScratchDirs, Tables}
-import graft.knn.GraphIndexStore
+import graft.knn.{GraphIndexStore, KnnQueries}
 
 /** STREAMED graph-index ingest (round-13 verdict #3): arriving vectors
   * flow INTO the persisted graph index — the missing online half of
@@ -83,7 +83,7 @@ object StreamGraphIngest {
     Declared(
       "q230_graph_index_stream_ingest",
       (s, dir) => ingestAvailableNow(s, dir),
-      Some(GraphIndexStore.rebuildOracle(K)),
+      Some(KnnQueries.knnOracle(K)),
       doc = "STREAMED graph-index ingest (round-13 verdict #3): the delta slice ARRIVES as a real file-source stream in 3 single-file waves (micro-batch count asserted), each micro-batch applied to the PERSISTED base index via foreachBatch -> the exact upsert transaction (nodes -> edges -> meta commit point, xor fingerprint chained batch-over-batch, isFreshFor(base+all deltas) REQUIREd after the final wave); exactness is compositional, so the post-ingest adjacency is oracled as the one-shot rebuild over ALL embeddings (q227's SQL)",
       streamingExecuted = true,
       diskSensitive = true)

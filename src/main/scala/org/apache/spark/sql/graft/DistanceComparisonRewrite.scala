@@ -26,43 +26,29 @@ import org.apache.spark.sql.types.DoubleType
   * radius expression. */
 object DistanceComparisonRewrite extends Rule[LogicalPlan] {
 
-  private def sq(r: Literal): Literal = {
-    val v = r.value.asInstanceOf[Double]
-    Literal(v * v, DoubleType)
+  /** `<`, `<=`, `>` or `>=`: the comparisons squaring preserves on
+    * non-negative sides. */
+  private object Inequality {
+    def unapply(e: Expression): Option[(Expression, Expression)] = e match {
+      case c @ (_: LessThan | _: LessThanOrEqual | _: GreaterThan | _: GreaterThanOrEqual) =>
+        Some((c.children(0), c.children(1)))
+      case _ => None
+    }
   }
 
-  private def nonNeg(r: Literal): Boolean = r.value match {
-    case v: java.lang.Double => v >= 0.0
-    case _ => false
+  /** A non-negative DOUBLE literal radius, as its square. */
+  private object SquaredRadius {
+    def unapply(e: Expression): Option[Literal] = e match {
+      case Literal(r: Double, DoubleType) if r >= 0.0 => Some(Literal(r * r, DoubleType))
+      case _ => None
+    }
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformAllExpressions {
-      // distance on the left of the comparison
-      case LessThan(EuclideanDistance(a, b), r: Literal)
-          if r.dataType == DoubleType && nonNeg(r) =>
-        LessThan(SquaredEuclidean(a, b), sq(r))
-      case LessThanOrEqual(EuclideanDistance(a, b), r: Literal)
-          if r.dataType == DoubleType && nonNeg(r) =>
-        LessThanOrEqual(SquaredEuclidean(a, b), sq(r))
-      case GreaterThan(EuclideanDistance(a, b), r: Literal)
-          if r.dataType == DoubleType && nonNeg(r) =>
-        GreaterThan(SquaredEuclidean(a, b), sq(r))
-      case GreaterThanOrEqual(EuclideanDistance(a, b), r: Literal)
-          if r.dataType == DoubleType && nonNeg(r) =>
-        GreaterThanOrEqual(SquaredEuclidean(a, b), sq(r))
-      // literal on the left
-      case LessThan(r: Literal, EuclideanDistance(a, b))
-          if r.dataType == DoubleType && nonNeg(r) =>
-        LessThan(sq(r), SquaredEuclidean(a, b))
-      case LessThanOrEqual(r: Literal, EuclideanDistance(a, b))
-          if r.dataType == DoubleType && nonNeg(r) =>
-        LessThanOrEqual(sq(r), SquaredEuclidean(a, b))
-      case GreaterThan(r: Literal, EuclideanDistance(a, b))
-          if r.dataType == DoubleType && nonNeg(r) =>
-        GreaterThan(sq(r), SquaredEuclidean(a, b))
-      case GreaterThanOrEqual(r: Literal, EuclideanDistance(a, b))
-          if r.dataType == DoubleType && nonNeg(r) =>
-        GreaterThanOrEqual(sq(r), SquaredEuclidean(a, b))
+      case c @ Inequality(EuclideanDistance(a, b), SquaredRadius(r2)) =>
+        c.withNewChildren(Seq(SquaredEuclidean(a, b), r2))
+      case c @ Inequality(SquaredRadius(r2), EuclideanDistance(a, b)) =>
+        c.withNewChildren(Seq(r2, SquaredEuclidean(a, b)))
     }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{AbstractDataType, ArrayType, DataType, DoubleType, FloatType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.linalg.Distances
+
 /** Custom codegen Catalyst expressions for the vector hot path —
   * the SURVEY.md §4 "perf slice" upgrade of the distance function
   * (reference `utilities.py:11-13`).
@@ -15,49 +17,58 @@ import org.apache.spark.unsafe.types.UTF8String
   * scalar queries, ~30× too slow for the N×k pair stream of KNN/MRDF.
   * These emit a tight primitive loop inside whole-stage codegen.
   *
-  * Determinism contract is preserved bit-for-bit: the loop is the same
-  * strict left-to-right IEEE-754 double accumulation as the fold and as
-  * DuckDB's `list_reduce`, so oracle hashes are unchanged.
+  * Each metric's fold is written once per representation: over
+  * `Array[Float]` in [[graft.linalg.Distances]] (the interpreted path
+  * calls it on the copied arrays) and as Java in
+  * [[VectorExpressions.foldCode]] (the generated path inlines it at the
+  * call site). Both are the same strict left-to-right IEEE-754 double
+  * accumulation over the first min(|a|, |b|) coordinates as the
+  * declarative fold and DuckDB's `list_reduce`, so oracle hashes hold.
   */
-case class EuclideanDistance(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+sealed trait VectorPairExpression extends BinaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] =
     Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
-  override def prettyName: String = "euclidean_distance"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      s += d * d
-      i += 1
-    }
-    math.sqrt(s)
-  }
+  /** The metric's [[graft.linalg.Distances]] fold. */
+  protected def kernel(x: Array[Float], y: Array[Float]): Double
+  /** The same fold for [[VectorExpressions.foldCode]]: one Java term per
+    * accumulator over the coordinate doubles, and the result as a Java
+    * expression over the accumulators. */
+  protected def terms: Seq[(String, String) => String]
+  protected def result(sums: Seq[String]): String
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    kernel(a.asInstanceOf[ArrayData].toFloatArray(),
+      b.asInstanceOf[ArrayData].toFloatArray())
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);
-       """.stripMargin
+      val (code, sums) = VectorExpressions.foldCode(ctx, a, b, terms)
+      s"$code\n${ev.value} = ${result(sums)};"
     })
+}
 
+/** Squared L2 with or without the final sqrt: the one body of
+  * [[EuclideanDistance]] and [[SquaredEuclidean]]. */
+sealed trait L2Expression extends VectorPairExpression {
+  /** Whether the result is the distance (sqrt of the sum) or its square. */
+  protected def root: Boolean
+  override protected def kernel(x: Array[Float], y: Array[Float]): Double = {
+    val s = Distances.squaredEuclideanLocal(x, y)
+    if (root) math.sqrt(s) else s
+  }
+  override protected def terms: Seq[(String, String) => String] =
+    Seq((x, y) => s"($x - $y) * ($x - $y)")
+  override protected def result(sums: Seq[String]): String =
+    if (root) s"java.lang.Math.sqrt(${sums.head})" else sums.head
+}
+
+case class EuclideanDistance(left: Expression, right: Expression)
+    extends L2Expression {
+  override protected def root: Boolean = true
+  override def prettyName: String = "euclidean_distance"
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): EuclideanDistance =
     copy(left = newLeft, right = newRight)
@@ -68,44 +79,9 @@ case class EuclideanDistance(left: Expression, right: Expression)
   * [[DistanceComparisonRewrite]]; also registered as SQL
   * `squared_euclidean`. */
 case class SquaredEuclidean(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
+    extends L2Expression {
+  override protected def root: Boolean = false
   override def prettyName: String = "squared_euclidean"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      s += d * d
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SquaredEuclidean =
     copy(left = newLeft, right = newRight)
@@ -116,41 +92,13 @@ case class SquaredEuclidean(left: Expression, right: Expression)
   * strict left-to-right double fold as the declarative
   * `aggregate(zip_with(...))` shape, so results are bit-identical. */
 case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
+    extends VectorPairExpression {
   override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      s += x.getFloat(i).toDouble * y.getFloat(i).toDouble
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $s += (double) $a.getFloat($i) * (double) $b.getFloat($i);
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
+  override protected def kernel(x: Array[Float], y: Array[Float]): Double =
+    Distances.dotLocal(x, y)
+  override protected def terms: Seq[(String, String) => String] =
+    Seq((x, y) => s"$x * $y")
+  override protected def result(sums: Seq[String]): String = sums.head
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
@@ -161,49 +109,16 @@ case class DotProduct(left: Expression, right: Expression)
   * `dot / (sqrt(na) * sqrt(nb))` matches the declarative shape — so
   * results are bit-identical with the oracle's three-fold formula). */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] =
-    Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
+    extends VectorPairExpression {
   override def prettyName: String = "cosine_similarity"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xv = x.getFloat(i).toDouble
-      val yv = y.getFloat(i).toDouble
-      dot += xv * yv; na += xv * xv; nb += yv * yv
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
+  override protected def kernel(x: Array[Float], y: Array[Float]): Double =
+    Distances.cosineSimilarityLocal(x, y)
+  override protected def terms: Seq[(String, String) => String] =
+    Seq((x, y) => s"$x * $y", (x, _) => s"$x * $x", (_, y) => s"$y * $y")
+  override protected def result(sums: Seq[String]): String = {
+    val Seq(dot, na, nb) = sums
+    s"$dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb))"
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $xv = (double) $a.getFloat($i);
-         |  double $yv = (double) $b.getFloat($i);
-         |  $dot += $xv * $yv; $na += $xv * $xv; $nb += $yv * $yv;
-         |}
-         |${ev.value} = $dot / (java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb));
-       """.stripMargin
-    })
-
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSimilarity =
     copy(left = newLeft, right = newRight)
@@ -215,7 +130,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   * shuffle, no Dataset encode/decode — the typed-mapPartitions form of
   * this paid per-row deserialization that outweighed the saved shuffle
   * at 200k+ vectors). The argmin is [[NearestCentroidIdx.nearest]]:
-  * the strict left-fold Euclidean of [[EuclideanDistance]] in
+  * the Euclidean fold of [[graft.linalg.Distances]] in
   * centroid-index order with strict `<`, which replays the
   * `min(struct(d, cidx))` tie-break, so assignments are bit-identical
   * to the join form.
@@ -265,8 +180,8 @@ case class NearestCentroidIdx(left: Expression, right: Expression,
 
 object NearestCentroidIdx {
 
-  /** Index of the nearest of `cents` to `vec`: the strict left-fold
-    * Euclidean of [[EuclideanDistance]], centroids in index order, and a
+  /** Index of the nearest of `cents` to `vec`: the Euclidean fold of
+    * [[graft.linalg.Distances]], centroids in index order, and a
     * strict `<`, so a tie goes to the lowest index. The one argmin of
     * the interpreted and the generated expression and of MRDF's
     * driver-side divide. */
@@ -275,16 +190,9 @@ object NearestCentroidIdx {
     var bd = Double.PositiveInfinity
     var ci = 0
     while (ci < cents.length) {
-      val c = cents(ci)
-      val n = math.min(vec.length, c.length)
-      var s = 0.0
-      var i = 0
-      while (i < n) {
-        val d = vec(i).toDouble - c(i).toDouble
-        s += d * d
-        i += 1
-      }
-      val dist = math.sqrt(s)
+      // bounded by the best so far: a centroid past it comes back +∞,
+      // which the strict `<` rejects exactly as it would its distance
+      val dist = Distances.euclideanLocalBounded(vec, cents(ci), bd)
       if (dist < bd) { bd = dist; bi = ci }
       ci += 1
     }
@@ -303,8 +211,36 @@ object NearestCentroidIdx {
         "path column from different block sets")
 }
 
-/** Column front-ends for expressions with non-column state. */
 object VectorExpressions {
+
+  /** The generated form of the [[graft.linalg.Distances]] folds: one
+    * inline loop over the first min(|a|, |b|) coordinates of the
+    * ArrayData values `a` and `b` that adds each term (Java over the
+    * coordinate doubles) to its own accumulator, left to right from
+    * 0.0. Returns the code and the accumulators' names. Every call site
+    * gets its own loop, so the `getFloat` calls stay monomorphic there
+    * (no shared ArrayData method, no array copy). */
+  def foldCode(ctx: CodegenContext, a: String, b: String,
+      terms: Seq[(String, String) => String]): (String, Seq[String]) = {
+    val i = ctx.freshName("i")
+    val n = ctx.freshName("n")
+    val x = ctx.freshName("x")
+    val y = ctx.freshName("y")
+    val sums = terms.map(_ => ctx.freshName("s"))
+    val code =
+      s"""
+         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |${sums.map(s => s"double $s = 0.0;").mkString(" ")}
+         |for (int $i = 0; $i < $n; $i++) {
+         |  double $x = (double) $a.getFloat($i);
+         |  double $y = (double) $b.getFloat($i);
+         |  ${sums.zip(terms).map { case (s, t) => s"$s += ${t(x, y)};" }.mkString(" ")}
+         |}""".stripMargin
+    (code, sums)
+  }
+
+  /** Column front-end for [[NearestCentroidIdx]], whose centroid map is
+    * not a column. */
   def nearestCentroidIdx(cmap: java.util.HashMap[UTF8String, Array[Array[Float]]],
                          vec: org.apache.spark.sql.Column,
                          path: org.apache.spark.sql.Column): org.apache.spark.sql.Column =

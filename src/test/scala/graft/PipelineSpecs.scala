@@ -336,24 +336,88 @@ class PipelineSpecs extends SparkSpec {
 
   test("codegen distance expressions are bit-identical to the JVM fold") {
     import graft.linalg.Distances
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, FloatType, StructField, StructType}
     val emb = Tables.load(spark, sf0001, "embeddings").limit(50)
-    val rows = emb.select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    val viaSql = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
-        Distances.euclidean(col("a.embedding"), col("b.embedding")).as("d"),
-        Distances.cosineSimilarity(col("a.embedding"), col("b.embedding")).as("c"),
-        Distances.dot(col("a.embedding"), col("b.embedding")).as("dp"),
-        Distances.dotSql(col("a.embedding"), col("b.embedding")).as("dpSql"))
-      .collect()
-    viaSql.foreach { r =>
-      val (i, j) = (r.getLong(0), r.getLong(1))
-      assert(r.getDouble(2) == Distances.euclideanLocal(rows(i), rows(j)),
-        s"euclidean mismatch at ($i,$j)")
-      assert(r.getDouble(3) == Distances.cosineSimilarityLocal(rows(i), rows(j)),
-        s"cosine mismatch at ($i,$j)")
-      assert(r.getDouble(4) == r.getDouble(5),
-        s"dot codegen vs fold mismatch at ($i,$j)")
+    // real pairs: the expressions inside a join over the parquet scan
+    def realPairs = emb.as("a").join(emb.as("b"), col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.embedding").as("va"), col("b.embedding").as("vb"))
+    // edge pairs: a NaN coordinate; an infinite coordinate, the only way
+    // a float pair's double sum reaches +∞; a shorter right-hand vector;
+    // and Float.MaxValue coordinates, large but finite. RDD-backed, so
+    // the projection is not folded into a local relation at planning.
+    val edges = Seq(
+      Array(1f, Float.NaN, 2f) -> Array(0.5f, 1f, 2f),
+      Array(Float.PositiveInfinity, 1f) -> Array(0f, 1f),
+      Array(1f, 2f, 3f, 4f) -> Array(4f, 3f),
+      Array(Float.MaxValue, -Float.MaxValue) -> Array(-Float.MaxValue, Float.MaxValue))
+    val vec = ArrayType(FloatType, containsNull = false)
+    def edgePairs = spark.createDataFrame(
+      spark.sparkContext.parallelize(edges.map { case (a, b) => Row(a.toSeq, b.toSeq) }, 2),
+      StructType(Seq(StructField("va", vec), StructField("vb", vec))))
+
+    // the array kernels on the edge pairs: min-length rule, NaN passes
+    // through, an infinite coordinate gives +∞ (cosine ∞/∞ = NaN)
+    val (nan, inf, short, big) = (edges(0), edges(1), edges(2), edges(3))
+    assert(Distances.euclideanLocal(nan._1, nan._2).isNaN)
+    assert(Distances.euclideanLocalBounded(nan._1, nan._2, 10.0).isNaN)
+    assert(Distances.dotLocal(nan._1, nan._2).isNaN)
+    assert(Distances.cosineSimilarityLocal(nan._1, nan._2).isNaN)
+    assert(Distances.squaredEuclideanLocal(inf._1, inf._2) == Double.PositiveInfinity)
+    assert(Distances.euclideanLocal(inf._1, inf._2) == Double.PositiveInfinity)
+    assert(Distances.euclideanLocalBounded(inf._1, inf._2, 10.0) == Double.PositiveInfinity)
+    assert(Distances.dotLocal(inf._1, inf._2).isNaN) // ∞ · 0
+    assert(Distances.cosineSimilarityLocal(inf._1, inf._2).isNaN)
+    assert(Distances.squaredEuclideanLocal(short._1, short._2) == 9.0 + 1.0)
+    assert(Distances.euclideanLocalBounded(short._1, short._2, 1.0) == Double.PositiveInfinity)
+    assert(Distances.euclideanLocalBounded(short._1, short._2, 10.0) == math.sqrt(10.0))
+    assert(Distances.dotLocal(short._1, short._2) == 4.0 + 6.0)
+    assert(Distances.cosineSimilarityLocal(short._1, short._2) ==
+      10.0 / (math.sqrt(5.0) * math.sqrt(25.0)))
+    val m = Float.MaxValue.toDouble
+    assert(Distances.squaredEuclideanLocal(big._1, big._2) == 4 * m * m + 4 * m * m)
+
+    def bits(x: Double): Long = java.lang.Double.doubleToLongBits(x)
+    /** Each expression equals its array kernel bit for bit (NaN too). */
+    def check(pairs: org.apache.spark.sql.DataFrame, mode: String): Int = {
+      val got = pairs.select(col("va"), col("vb"),
+        Distances.euclidean(col("va"), col("vb")),
+        Distances.squaredEuclideanCol(col("va"), col("vb")),
+        Distances.dot(col("va"), col("vb")),
+        Distances.cosineSimilarity(col("va"), col("vb"))).collect()
+      got.foreach { r =>
+        val (a, b) = (r.getSeq[Float](0).toArray, r.getSeq[Float](1).toArray)
+        Seq(Distances.euclideanLocal(a, b), Distances.squaredEuclideanLocal(a, b),
+          Distances.dotLocal(a, b), Distances.cosineSimilarityLocal(a, b))
+          .zip(Seq("euclidean", "squared_euclidean", "dot", "cosine")).zipWithIndex
+          .foreach { case ((want, what), c) =>
+            assert(bits(r.getDouble(2 + c)) == bits(want),
+              s"$mode $what mismatch on ${a.toSeq} / ${b.toSeq}: ${r.getDouble(2 + c)} vs $want")
+          }
+      }
+      got.length
+    }
+
+    // generated code, then the interpreted evals (no whole-stage
+    // codegen, and every projection built by the interpreted factory)
+    assert(check(realPairs, "codegen") == 50 * 49 / 2)
+    assert(check(edgePairs, "codegen") == edges.length)
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val prev = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      assert(check(realPairs, "interpreted") == 50 * 49 / 2)
+      assert(check(edgePairs, "interpreted") == edges.length)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+
+    // the codegen dot still equals the declarative fold on real pairs
+    realPairs.select(Distances.dot(col("va"), col("vb")),
+      Distances.dotSql(col("va"), col("vb"))).collect().foreach { r =>
+      assert(r.getDouble(0) == r.getDouble(1), s"dot codegen vs fold mismatch: $r")
     }
   }
 

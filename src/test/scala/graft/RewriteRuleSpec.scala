@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.{DistanceComparisonRewrite, EuclideanDistance, SquaredEuclidean}
 
@@ -15,10 +16,12 @@ class RewriteRuleSpec extends SparkSpec {
       .filter(col("a") < col("b"))
   }
 
-  test("euclidean<=r rewrites to sqrt-free squared form with identical rows") {
+  /** `pred` rewrites to the sqrt-free squared form, and the rows it
+    * keeps are the same before and after the rule. */
+  private def rewritesWithIdenticalRows(pred: => Column): Unit = {
     // Dataset#queryExecution memoizes: build a fresh frame per phase so
     // the second one is optimized WITH the installed rule.
-    def q = pairs.filter(dist <= lit(1.2)).select(col("a"), col("b"))
+    def q = pairs.filter(pred).select(col("a"), col("b"))
     val before = q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ DistanceComparisonRewrite
@@ -43,6 +46,23 @@ class RewriteRuleSpec extends SparkSpec {
         spark.experimental.extraOptimizations
           .filterNot(_ == DistanceComparisonRewrite)
     }
+  }
+
+  test("euclidean<=r rewrites to sqrt-free squared form with identical rows") {
+    rewritesWithIdenticalRows(dist <= lit(1.2))
+  }
+
+  test("<, > and >= with the distance on the left rewrite with identical rows") {
+    rewritesWithIdenticalRows(dist < lit(1.2))
+    rewritesWithIdenticalRows(dist > lit(1.2))
+    rewritesWithIdenticalRows(dist >= lit(1.2))
+  }
+
+  test("a radius on the left of the comparison rewrites with identical rows") {
+    rewritesWithIdenticalRows(lit(1.2) < dist)
+    rewritesWithIdenticalRows(lit(1.2) <= dist)
+    rewritesWithIdenticalRows(lit(1.2) > dist)
+    rewritesWithIdenticalRows(lit(1.2) >= dist)
   }
 
   test("negative radius is left untouched (squaring would invert it)") {

@@ -359,31 +359,35 @@ class IoSpecs extends SparkSpec {
   }
 
   test("GraftExtensions registers SQL functions") {
-    // injectFunction path: register directly on the live session's
-    // registry (same code path the extension uses at session build)
-    new graft.GraftExtensions()
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "euclidean_distance",
-      es => org.apache.spark.sql.graft.EuclideanDistance(es(0), es(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_similarity",
-      es => org.apache.spark.sql.graft.CosineSimilarity(es(0), es(1)),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product",
-      es => org.apache.spark.sql.graft.DotProduct(es(0), es(1)),
-      "built-in")
-    val r = spark.sql(
+    import org.apache.spark.sql.graft._
+    // the real extension on fresh SparkSessionExtensions; its functions
+    // go into a new session's registry, so the shared session's stays as
+    // it was and every name below resolves through the extension
+    val session = spark.newSession()
+    val (rules, strategies) = ExtensionsProbe(session, new graft.GraftExtensions())
+    assert(rules == Seq(DistanceComparisonRewrite))
+    assert(strategies == Seq(TopKJoinStrategy))
+    val q = session.sql(
       """SELECT euclidean_distance(array(CAST(0.0 AS FLOAT), CAST(0.0 AS FLOAT)),
         |                          array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d,
+        |       squared_euclidean(array(CAST(0.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+        |                         array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS s,
         |       cosine_similarity(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
         |                         array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
         |       dot_product(array(CAST(2.0 AS FLOAT), CAST(3.0 AS FLOAT)),
         |                   array(CAST(4.0 AS FLOAT), CAST(5.0 AS FLOAT))) AS p
-        |""".stripMargin).collect()(0)
+        |""".stripMargin)
+    val resolved = q.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case e @ (_: EuclideanDistance | _: SquaredEuclidean | _: CosineSimilarity |
+          _: DotProduct) => e.prettyName
+    })
+    assert(resolved.toSet ==
+      Set("euclidean_distance", "squared_euclidean", "cosine_similarity", "dot_product"))
+    val r = q.collect()(0)
     assert(r.getDouble(0) === 5.0)
-    assert(math.abs(r.getDouble(1) - 1.0) < 1e-12)
-    assert(r.getDouble(2) === 23.0)
+    assert(r.getDouble(1) === 25.0)
+    assert(math.abs(r.getDouble(2) - 1.0) < 1e-12)
+    assert(r.getDouble(3) === 23.0)
   }
+
 }

@@ -102,13 +102,34 @@ class TopKJoinSpec extends SparkSpec {
       (1L, Array(0.0f, 0.0f)), // zero vector: NaN similarity to everything
       (2L, Array(1.0f, 0.0f)),
       (3L, Array(0.9f, 0.1f)),
-      (4L, Array(0.0f, 1.0f))).toDF("vec_id", "embedding")
+      (4L, Array(0.0f, 1.0f)),
+      (5L, Array(Float.PositiveInfinity, 1.0f))) // ∞/∞ or ∞·0: NaN
+      .toDF("vec_id", "embedding")
     val got = TopKJoin.cosineTopK(vecs.filter(col("vec_id") =!= 99), vecs, 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    // no crash; no pair involves a NaN similarity (id 1 as probe finds
-    // nothing, and no probe ranks id 1 as a neighbor)
-    assert(!got.exists { case (q, n) => q == 1L || n == 1L })
+    // no crash; no pair involves a NaN similarity (ids 1 and 5 as probe
+    // find nothing, and no probe ranks them as a neighbor)
+    assert(!got.exists { case (q, n) => Set(1L, 5L)(q) || Set(1L, 5L)(n) })
     assert(got.nonEmpty)
+  }
+
+  test("knn excludes NaN and infinite vectors instead of throwing") {
+    import spark.implicits._
+    val vecs = Seq(
+      (1L, Array(0.0f, 0.0f)),
+      (2L, Array(1.0f, 0.0f)),
+      (3L, Array(Float.NaN, 0.0f)), // NaN distance to everything
+      (4L, Array(Float.PositiveInfinity, 0.0f)), // +∞ squared sum, or NaN
+      (5L, Array(0.0f, 2.0f))).toDF("vec_id", "embedding")
+    val r5 = 2.236068 // sqrt(5) to 6 dp
+    // k = 4 scans unbounded; k = 1 bounds every scan after the first hit
+    Seq(4 -> Set((1L, 2L, 1.0), (1L, 5L, 2.0), (2L, 1L, 1.0), (2L, 5L, r5),
+        (5L, 1L, 2.0), (5L, 2L, r5)),
+      1 -> Set((1L, 2L, 1.0), (2L, 1L, 1.0), (5L, 1L, 2.0))).foreach { case (k, want) =>
+      val got = TopKJoin.knn(vecs, vecs, k).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      assert(got == want, s"k=$k")
+    }
   }
 
   test("early-exit pruning cannot change results near the rounding boundary") {
